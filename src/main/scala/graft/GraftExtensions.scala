@@ -927,7 +927,7 @@ object RewriteJaccardThresholdJoin {
       }
       // The stopped-context purge cannot see CHILD sessions of a live
       // context — and the query surface mints one per similarity-join
-      // call (`newSession()` to scope the rewrite flag), so a
+      // call (an `Iterate.scoped` session carries the rewrite flag), so a
       // long-lived service would still accumulate an entry (plan keys
       // + trained models) per call. The memo is a cache, eviction
       // costs only a recompute: bound the map at 64 sessions and evict

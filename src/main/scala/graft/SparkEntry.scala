@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.operators.Iterate
 import graft.operators.Iterate.MaterializeOps
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -243,22 +244,16 @@ object SparkEntry {
     // string comparisons to UTF8_LCASE collation at analysis time
     // (MySqlCiCollation rule) — this query returns ZERO rows without
     // the flag and the ci row set with it; the oracle replays MySQL's
-    // semantics with lower()-wrapped comparisons.
-    //
-    // The flag is scoped to an ISOLATED child session (own SQLConf +
-    // sessionState over the shared SparkContext — newSession is
-    // exactly Spark's mechanism for per-tenant conf): setting it on
-    // the caller's session would leak ci semantics into every query
-    // a concurrent thread analyzes in the window (Verify runs the
-    // gate through a thread pool).
-    val ci = s.newSession()
-    ci.conf.set("spark.graft.mysqlCollation", "ci")
-    Tables.register(ci, dir)
-    new Engine(ci, dir).getData(MySqlDialect.translate(
-      """SELECT `c_custkey`, `c_name`, `c_mktsegment`
-        |FROM `customer`
-        |WHERE `c_mktsegment` = "building" AND `c_acctbal` >= 0
-        |ORDER BY `c_custkey` LIMIT 0, 50""".stripMargin))
+    // semantics with lower()-wrapped comparisons. The scope's temp
+    // views are the caller's, so `ci.sql` is Engine.getData over them.
+    Tables.register(s, dir)
+    Iterate.scoped(s, "spark.graft.mysqlCollation" -> "ci") { ci =>
+      ci.sql(MySqlDialect.translate(
+        """SELECT `c_custkey`, `c_name`, `c_mktsegment`
+          |FROM `customer`
+          |WHERE `c_mktsegment` = "building" AND `c_acctbal` >= 0
+          |ORDER BY `c_custkey` LIMIT 0, 50""".stripMargin))
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -2301,27 +2296,21 @@ object SparkEntry {
     // optimizer rule plans the banded-LSH hash join (plan shape pinned
     // by GraftExtensionsSpec). The oracle re-derives the banded
     // semantics — signature, band collision, canonical first band,
-    // residual cosine filter — independently in DuckDB.
-    // the opt-in rewrite flag is scoped to an ISOLATED child session
-    // (own SQLConf over the shared SparkContext): setting it on the
-    // caller's session raced every concurrently-optimizing query —
-    // measured at the sf1 gate, where the semantic-pairs join (whose
-    // pushed-down condition contains cosine_sim >= t) silently planned
-    // as the recall-losing banded join while this query held the flag,
-    // desyncing dedup_semantic_decisions from its own pair set
-    val iso = s.newSession()
-    iso.conf.set("spark.graft.cosineRewrite.enabled", "true")
-    val e = t(iso, dir, "embeddings")
-    val a = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    import graft.functions.VectorFunctions.cosine_sim
-    val df = a.join(b,
-        cosine_sim(col("emb_a"), col("emb_b")) >= 0.4 &&
-          col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine_sim(col("emb_a"), col("emb_b")).as("cosine"))
-      .orderBy("id_a", "id_b")
-    df.materialized()
+    // residual cosine filter — independently in DuckDB. The flag is
+    // scoped (Iterate.scoped) and the join executes inside the scope.
+    Iterate.scoped(s, "spark.graft.cosineRewrite.enabled" -> "true") { iso =>
+      val e = t(s, dir, "embeddings").on(iso)
+      val a = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
+      val b = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
+      import graft.functions.VectorFunctions.cosine_sim
+      val df = a.join(b,
+          cosine_sim(col("emb_a"), col("emb_b")) >= 0.4 &&
+            col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          cosine_sim(col("emb_a"), col("emb_b")).as("cosine"))
+        .orderBy("id_a", "id_b")
+      df.materialized()
+    }
   }
 
   private def qJoinJaccardThreshold(s: SparkSession, dir: String)
@@ -2334,19 +2323,18 @@ object SparkEntry {
     // discipline as qCosineThresholdJoin: execute eagerly while the
     // flag is on.
     import graft.functions.VectorFunctions.text_jaccard
-    // isolated child session for the flag — see qCosineThresholdJoin
-    val iso = s.newSession()
-    iso.conf.set("spark.graft.jaccardRewrite.enabled", "true")
-    val d = t(iso, dir, "documents")
-    val a = d.select(col("doc_id").as("id_a"), col("text").as("text_a"))
-    val b = d.select(col("doc_id").as("id_b"), col("text").as("text_b"))
-    val df = a.join(b,
-        text_jaccard(col("text_a"), col("text_b"), 8) >= 0.7 &&
-          col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        text_jaccard(col("text_a"), col("text_b"), 8).as("jaccard"))
-      .orderBy("id_a", "id_b")
-    df.materialized()
+    Iterate.scoped(s, "spark.graft.jaccardRewrite.enabled" -> "true") { iso =>
+      val d = t(s, dir, "documents").on(iso)
+      val a = d.select(col("doc_id").as("id_a"), col("text").as("text_a"))
+      val b = d.select(col("doc_id").as("id_b"), col("text").as("text_b"))
+      val df = a.join(b,
+          text_jaccard(col("text_a"), col("text_b"), 8) >= 0.7 &&
+            col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          text_jaccard(col("text_a"), col("text_b"), 8).as("jaccard"))
+        .orderBy("id_a", "id_b")
+      df.materialized()
+    }
   }
 
   private def qDedupSortedNbr(s: SparkSession, dir: String): DataFrame =
@@ -2369,20 +2357,19 @@ object SparkEntry {
     // STRICT equivalence by pigeonhole (3 < 8 bands), so the oracle is
     // the naive full pairwise Hamming join.
     import graft.functions.VectorFunctions.simhash64
-    // isolated child session for the flag — see qCosineThresholdJoin
-    val iso = s.newSession()
-    iso.conf.set("spark.graft.hammingRewrite.enabled", "true")
-    val d = t(iso, dir, "documents").select(col("doc_id"),
-      simhash64(TextFunctions.tokens(col("text"))).as("sig"))
-    val a = d.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val b = d.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    val df = a.join(b,
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 3 &&
-          col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .orderBy("id_a", "id_b")
-    df.materialized()
+    Iterate.scoped(s, "spark.graft.hammingRewrite.enabled" -> "true") { iso =>
+      val d = t(s, dir, "documents").on(iso).select(col("doc_id"),
+        simhash64(TextFunctions.tokens(col("text"))).as("sig"))
+      val a = d.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
+      val b = d.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
+      val df = a.join(b,
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 3 &&
+            col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
+        .orderBy("id_a", "id_b")
+      df.materialized()
+    }
   }
 
   private def qStreamMinhashPairs(s: SparkSession, dir: String)

@@ -653,7 +653,7 @@ object Dedup {
       .join(hint(docs.select(col("doc_id").as("src"))), Seq("src"),
         "left_semi")
       .materialized() // re-read every round
-    var labels = docs.select(col("doc_id"), col("doc_id").as("comp"))
+    val labels0 = docs.select(col("doc_id"), col("doc_id").as("comp"))
       .materialized()
     // decimal sum: overflow-proof fixpoint metric at any corpus size
     // (empty input sums to null → normalize to 0 so an empty docs
@@ -663,7 +663,7 @@ object Dedup {
         .collect()(0).getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    var prevSum = labelSum(labels)
+    var prevSum = labelSum(labels0)
     var iter = 0
     var converged = false
     // loop-only static scope: prep above (pair union, semi-join,
@@ -671,7 +671,8 @@ object Dedup {
     // is hinted broadcast, so each round's exchanges are the two
     // N-bounded min aggregates — plan them once at the state-derived
     // width (see Iterate.staticBoundedLoop)
-    def loopBody(): Unit = {
+    def loop(edges: DataFrame, labels0: DataFrame): DataFrame = {
+    var labels = labels0
     // maxIter label-CHANGING rounds plus one confirming round: a graph
     // whose path diameter is exactly maxIter changes the sum in every
     // budgeted round and needs round maxIter+1 to observe no change —
@@ -695,10 +696,14 @@ object Dedup {
       labels = next
       iter += 1
     }
+    labels
     }
-    if (small)
-      Iterate.staticBoundedLoop(docs.sparkSession, docsSizeEst)(loopBody())
-    else loopBody()
+    val labels =
+      if (small)
+        Iterate.staticBoundedLoop(docs.sparkSession, docsSizeEst) { sc =>
+          loop(edges.on(sc), labels0.on(sc))
+        }.on(docs.sparkSession)
+      else loop(edges, labels0)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: min-label propagation did not converge " +
@@ -934,7 +939,7 @@ object Dedup {
     // would pick the same width this derivation does.
     def histOf(p: DataFrame): Array[(Int, Long, Double, Double)] =
       Iterate.staticBoundedLoop(p.sparkSession,
-        p.queryExecution.optimizedPlan.stats.sizeInBytes) { p
+        p.queryExecution.optimizedPlan.stats.sizeInBytes) { sc => p.on(sc)
       .groupBy("g").agg(count(lit(1)).as("m"))
       .select(floor(log2(col("m"))).cast("int").as("b"), col("m"))
       // m casts to double BEFORE the square: a long m·m overflows past
@@ -998,7 +1003,9 @@ object Dedup {
     // DF-CAP NOTE (round 14 — the "grams above a df cap generate no
     // candidates, pairs route to a residual tier" hypothesis,
     // examined and REFUTED for this generator; DedupSpec pins the
-    // classification, GramDfDiag's capDiag measures the masses):
+    // classification; the measured masses are in BASELINE.md's
+    // round-14 df-cap decomposition, the diagnostic that took them in
+    // git history, commit 350458e):
     //  1. OCCUPANCY IDENTITY — a bucket's occupancy occ(g) = #docs
     //     whose prefix contains g is a pure function of the global
     //     order and the threshold. A df cap only decides whether a
@@ -1181,18 +1188,26 @@ object Dedup {
     // broadcast map lookup — the shuffle-verify path joins the
     // corpus-wide gram-set table and must keep AQE's runtime sizing.
     val pairs = if (setsSmall) {
-      val kCpu = math.min(Int.MaxValue.toDouble,
-        estPairs(effCap) / (1 << 20)).toInt + 1
-      Iterate.staticWidth(docs.sparkSession, kCpu) {
-        verifiedJaccardPairs(base, candidates, threshold, setsSmall,
-          textVerify = Some((docs, n)))
-      }
+      Iterate.staticWidth(docs.sparkSession,
+          pairCheckWidth(estPairs(effCap))) { sc =>
+        verifiedJaccardPairs(base.on(sc), candidates.on(sc), threshold,
+          setsSmall, textVerify = Some((docs.on(sc), n)))
+      }.on(docs.sparkSession)
     } else verifiedJaccardPairs(base, candidates, threshold, setsSmall,
       textVerify = Some((docs, n)))
     exactPersisted.foreach(_.unpersist(false))
     base.unpersist(false)
     pairs
   }
+
+  /** [[ngramJaccard]]'s candidate-exchange width for `estPairs`
+    * estimated pair checks: ~2²⁰ per task, at least 1 (staticWidth
+    * clamps to the session setting). Double arithmetic, clamped after
+    * the `+ 1`: an Int sum wrapped to Int.MinValue at ≥ 2.25e15 pairs,
+    * which ran the most CPU-dense exchange at width 1. */
+  private[graft] def pairCheckWidth(estPairs: Double): Int =
+    math.min(math.floor(estPairs / (1 << 20)) + 1, Int.MaxValue.toDouble)
+      .toInt
 
   /** Embedding near-dup: each vector's nearest neighbor by cosine, via
     * hyperplane-LSH blocking (16-bit signature, band-split 4×4 bits);

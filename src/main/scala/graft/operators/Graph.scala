@@ -98,15 +98,19 @@ object Graph {
       // count is AQE's own coalescing answer without the per-round
       // re-planning jobs (see Iterate.staticBoundedLoop).
       val (e, ranks0) = prepareRankBroadcast(nodes, edges, scale / n)
-      Iterate.staticBoundedLoop(nodes.sparkSession, BigInt(n) * 24) {
-        loop(e, ranks0, rankStepBroadcast(_, _, base), big = false)
-      }.select(col("id"), col("rank"))
-    } else Iterate.pinnedLayout(nodes.sparkSession) {
+      Iterate.staticBoundedLoop(nodes.sparkSession, BigInt(n) * 24) { sc =>
+        loop(e.on(sc), ranks0.on(sc), rankStepBroadcast(_, _, base),
+          big = false)
+      }.on(nodes.sparkSession).select(col("id"), col("rank"))
+    } else {
       // pinned regime ⇒ the rank frame crossed the broadcast
       // threshold ⇒ the frames this loop materializes are big: store
-      // their blocks serialized (see Iterate.materialize's big doc)
+      // their blocks serialized (see Iterate.materialize's big doc).
+      // prepareRank's frames come bound to its AQE-off scope, so the
+      // rounds built on them plan there too.
       val (eDeg, ranks0) = prepareRank(nodes, edges, scale / n)
       loop(eDeg, ranks0, rankStep(_, _, base), big = true)
+        .on(nodes.sparkSession)
     }
   }
 
@@ -207,13 +211,13 @@ object Graph {
     * uniform initial ranks, both materialized once with the loop
     * join's exact layout (edge side hash-partitioned AND sorted by
     * `src`, rank side hash-partitioned by `id`, equal partition
-    * counts) so no iteration re-shuffles them. Callers wrap in
-    * [[Iterate.pinnedLayout]]; this method wraps itself too so the
-    * plan pin can call it directly. */
+    * counts) so no iteration re-shuffles them. Both come back bound
+    * to an [[Iterate.pinnedLayout]] scope, so the loop rounds (and the
+    * plan pin) built on them plan with AQE off. */
   private[graft] def prepareRank(nodes: DataFrame, edges: DataFrame,
       initRank: Long): (DataFrame, DataFrame) =
-    Iterate.pinnedLayout(nodes.sparkSession) {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    Iterate.pinnedLayout(nodes.sparkSession) { sc =>
+    val parts = sc.sessionState.conf.numShufflePartitions
     // Edge ⋈ out-degree is ROUND-INVARIANT: built once, outside the
     // loop, in ONE edge pass — the edge frame crosses exactly one
     // exchange (the layout repartition by `src`), and the out-degree
@@ -234,13 +238,13 @@ object Graph {
     // [[rankStep]] (an N-row co-partitioned join the round needs
     // anyway): a phantom-dst edge costs one combined row in the
     // per-round inflow exchange instead of a full-width prep shuffle.
-    val eDeg = edges
+    val eDeg = edges.on(sc)
       .select(col("src").cast("long"), col("dst").cast("long"))
       .repartition(parts, col("src"))
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("src")))
       .materialized(big = true) // pinned regime ⇒ 2|E|-row frame
-    val nodeIds = nodes.select(col("id").cast("long"))
+    val nodeIds = nodes.on(sc).select(col("id").cast("long"))
     val ranks0 = nodeIds
       .withColumn("rank", lit(initRank))
       .repartition(parts, col("id"))
@@ -394,19 +398,25 @@ object Graph {
     // zero-count skeleton rows, so a src outside `nodes` must never
     // mint a group. (dst confinement stays implicit: the label join
     // is inner against the node-universe label frame.)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val eRaw = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .join(hint(nodeIds.select(col("id").as("src"))), Seq("src"),
         "left_semi")
-      .materialized()
-    var labels = nodeIds
+    // estimated before the checkpoint: a checkpointed frame can report
+    // the huge default size
+    val edgesSizeEst = eRaw.queryExecution.optimizedPlan.stats.sizeInBytes
+    val e = eRaw.materialized()
+    val labels0 = nodeIds
       .withColumn("lbl", col("id"))
       .materialized()
     // loop-only static scope: prep above (edge construction, initial
     // labels) keeps AQE; with `small` every loop join is hinted
-    // broadcast, so the rounds' only exchanges are the N-bounded
-    // argmax aggregates — plan them once at the state-derived width
+    // broadcast, so the rounds' exchanges are the (node, label) count
+    // and the argmax aggregates. The count's keys grow with the EDGES
+    // (a node with d in-neighbors can carry d distinct labels), so the
+    // static width follows the larger of the node and edge estimates
     // (see Iterate.staticBoundedLoop)
-    def loopBody(): Unit = {
+    def loop(e: DataFrame, labels0: DataFrame): DataFrame = {
+    var labels = labels0
     var it = 0
     while (it < iters) {
       val counts = e
@@ -432,11 +442,14 @@ object Graph {
         it)
       it += 1
     }
+    labels
     }
     if (small)
-      Iterate.staticBoundedLoop(nodes.sparkSession, nodesSizeEst)(loopBody())
-    else loopBody()
-    labels
+      Iterate.staticBoundedLoop(nodes.sparkSession,
+          nodesSizeEst.max(edgesSizeEst)) { sc =>
+        loop(e.on(sc), labels0.on(sc))
+      }.on(nodes.sparkSession)
+    else loop(e, labels0)
     }
     run()
   }
@@ -477,7 +490,39 @@ object Graph {
     val minId = if (nStats.isNullAt(1)) 1L else nStats.getLong(1)
     val maxId = if (nStats.isNullAt(2)) 1L else nStats.getLong(2)
     val nodesSmall = bcastThreshold > 0 && n * 16 <= bcastThreshold
-    def run(pinned: Boolean): DataFrame = {
+    // Dense-frontier regime (pinned only): once the frontier's
+    // expected expansion (|frontier|·avgdeg) dwarfs the whole
+    // bitmap universe, the per-round reached-set `distinct` is the
+    // measured scale-killer — each map task sees most of the dst
+    // universe, so partial aggregation barely reduces and the
+    // exchange ships ~(tasks × |V|) rows (sf30: 5.5× for 3× data,
+    // heap-insensitive). Instead, reached-dst state is folded
+    // map-side into bounded 2^18-bit bucket bitmaps via the
+    // hash-aggregable [[graft.functions.BitmapAgg]] (NOT the builtin
+    // bitmap_construct_agg, whose binary-buffer ImperativeAggregate
+    // can only plan as SortAggregateExec — sorting the whole
+    // expansion per round cost almost everything the bitmap shape
+    // saves; see BitmapAgg's scaladoc for the measured delta), so
+    // the exchange ships at most tasks × ⌈maxId/2^18⌉ bitmap rows —
+    // O(maxId/8) bytes per task, not O(|V|) rows — and the
+    // visited-set anti-join collapses to an AND-NOT against a
+    // ⌈maxId/2^18⌉-row visited mask. Ids decode back out of the
+    // reduced bitmaps ([[VectorFunctions.BitmapPositions]]). Sparse
+    // rounds (early small frontiers) keep the row path: a
+    // mostly-empty 32 KB bucket bitmap per touched bucket per task
+    // would ship ~1365× MORE bytes than the rows it replaces — the
+    // crossover below is exactly that byte ratio (32768-byte bucket
+    // over a ~24 B id row), overridable so rehearsals (and the
+    // spec) can measure both sides of the boundary; negative
+    // disables the bitmap machinery entirely (no edge count, no
+    // visited mask).
+    val denseFactor = edges.sparkSession.conf
+      .get("spark.graft.bfs.denseFactor", "1365").toLong
+    val bShift = 18
+    val bBits = 1 << bShift
+    val bitmapRows = (maxId - 1) / bBits + 1
+    def run(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
+        pinned: Boolean): DataFrame = {
       val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
       // dst confined to the node universe once, round-invariantly —
       // an edge target outside `nodes` must not seed phantom traversal
@@ -498,41 +543,10 @@ object Graph {
           e0.repartition(parts, col("src")).sortWithinPartitions("src")
         else e0)
         .materialized(big = pinned)
-      // Dense-frontier regime (pinned only): once the frontier's
-      // expected expansion (|frontier|·avgdeg) dwarfs the whole
-      // bitmap universe, the per-round reached-set `distinct` is the
-      // measured scale-killer — each map task sees most of the dst
-      // universe, so partial aggregation barely reduces and the
-      // exchange ships ~(tasks × |V|) rows (sf30: 5.5× for 3× data,
-      // heap-insensitive). Instead, reached-dst state is folded
-      // map-side into bounded 2^18-bit bucket bitmaps via the
-      // hash-aggregable [[graft.functions.BitmapAgg]] (NOT the builtin
-      // bitmap_construct_agg, whose binary-buffer ImperativeAggregate
-      // can only plan as SortAggregateExec — sorting the whole
-      // expansion per round cost almost everything the bitmap shape
-      // saves; see BitmapAgg's scaladoc for the measured delta), so
-      // the exchange ships at most tasks × ⌈maxId/2^18⌉ bitmap rows —
-      // O(maxId/8) bytes per task, not O(|V|) rows — and the
-      // visited-set anti-join collapses to an AND-NOT against a
-      // ⌈maxId/2^18⌉-row visited mask. Ids decode back out of the
-      // reduced bitmaps ([[VectorFunctions.BitmapPositions]]). Sparse
-      // rounds (early small frontiers) keep the row path: a
-      // mostly-empty 32 KB bucket bitmap per touched bucket per task
-      // would ship ~1365× MORE bytes than the rows it replaces — the
-      // crossover below is exactly that byte ratio (32768-byte bucket
-      // over a ~24 B id row), overridable so rehearsals (and the
-      // spec) can measure both sides of the boundary; negative
-      // disables the bitmap machinery entirely (no edge count, no
-      // visited mask).
-      val denseFactor = edges.sparkSession.conf
-        .get("spark.graft.bfs.denseFactor", "1365").toLong
       val useBitmaps = pinned && minId >= 1L && denseFactor >= 0L
       val eCount = if (useBitmaps) e.count() else 0L
       val avgDeg =
         if (useBitmaps) math.max(1L, eCount / math.max(1L, n)) else 1L
-      val bShift = 18
-      val bBits = 1 << bShift
-      val bitmapRows = (maxId - 1) / bBits + 1
       // bk = (id-1) >> 18, pos = (id-1) & (2^18 - 1), both codegen'd;
       // decode is id = bk·2^18 + pos + 1
       def bkOf(c: org.apache.spark.sql.Column) =
@@ -559,29 +573,15 @@ object Graph {
       // dense round can engage regardless of what earlier rounds did
       var visitedBm =
         if (useBitmaps) toMask(visited).materialized() else null
-      // ObjectHashAggregateExec falls back to sort-based aggregation
-      // past spark.sql.objectHashAggregate.sortBased.fallbackThreshold
-      // DISTINCT KEYS per task (default 128) — a partial bitmap
-      // aggregate sees every bucket, so a graph with maxId past
-      // 128·2^18 ≈ 33 M would silently re-pay the input sort the
-      // typed aggregate exists to avoid. Scope the threshold to the
-      // loop (the buffers are bounded: bitmapRows × 32 KB per task).
-      val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-      val conf = edges.sparkSession.conf
-      // The raise is SESSION-scoped for the loop's duration (Spark has
-      // no per-plan seam for this conf): a concurrent query on the same
-      // session sees the inflated threshold until the finally below —
-      // worst case it keeps hash-aggregating where it would have
-      // sort-spilled, bounded by its own buffer sizes. Restore exactly:
-      // set back if the user had set it, UNSET if they hadn't (so we
-      // never convert an unset default into an explicit setting).
-      val fbWasSet = useBitmaps && conf.getAll.contains(fbKey)
-      val savedFb = if (fbWasSet) Some(conf.get(fbKey)) else None
-      val fbRaised = useBitmaps &&
-        bitmapRows * 2 > conf.get(fbKey, "128").toLong
-      if (fbRaised) conf.set(fbKey, (bitmapRows * 2).toString)
-      try {
-      def rounds(): Unit = {
+      // NOTE (measured, r16): static-planning this loop via
+      // Iterate.staticBoundedLoop — as pageRank/labelProp/cc do —
+      // was tried and LOST on alternated A/B at sf0.1 (min-of-3
+      // 4.68 s AQE vs 5.22 s static; 6 alternated rounds across two
+      // measurement sessions, static +0.5 s in 5 of 6). Unlike the
+      // other loops, BFS's per-round broadcast builds (the visited
+      // union grows by one frame per round) measured ~0.5 s slower
+      // without AQE's runtime re-planning, eating the barrier
+      // savings. AQE stays on here.
       var frontier = visited
       var round = 1
       while (round <= maxHops) {
@@ -655,26 +655,31 @@ object Graph {
         frontier = reached
         round += 1
       }
-      }
-      // NOTE (measured, r16): static-planning this loop via
-      // Iterate.staticBoundedLoop — as pageRank/labelProp/cc do —
-      // was tried and LOST on alternated A/B at sf0.1 (min-of-3
-      // 4.68 s AQE vs 5.22 s static; 6 alternated rounds across two
-      // measurement sessions, static +0.5 s in 5 of 6). Unlike the
-      // other loops, BFS's per-round broadcast builds (the visited
-      // union grows by one frame per round) measured ~0.5 s slower
-      // without AQE's runtime re-planning, eating the barrier
-      // savings. AQE stays on here.
-      rounds()
-      } finally if (fbRaised) savedFb match {
-        case Some(v) => conf.set(fbKey, v)
-        case None => conf.unset(fbKey)
-      }
       nodes.select(col("id").cast("long"))
         .join(nHint(visited), Seq("id"), "left")
         .select(col("id"), col("hops"))
     }
-    if (nodesSmall) run(pinned = false)
-    else Iterate.pinnedLayout(nodes.sparkSession) { run(pinned = true) }
+    if (nodesSmall) run(nodes, edges, seeds, pinned = false)
+    else {
+      // ObjectHashAggregateExec falls back to sort-based aggregation
+      // past spark.sql.objectHashAggregate.sortBased.fallbackThreshold
+      // DISTINCT KEYS per task (default 128) — a partial bitmap
+      // aggregate sees every bucket, so a graph with maxId past
+      // 128·2^18 ≈ 33 M would silently re-pay the input sort the
+      // typed aggregate exists to avoid. The pinned scope raises the
+      // threshold past the bucket count (the buffers are bounded:
+      // bitmapRows × 32 KB per task).
+      val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+      val raise =
+        if (minId >= 1L && denseFactor >= 0L && bitmapRows * 2 >
+            nodes.sparkSession.conf.get(fbKey, "128").toLong)
+          Seq(fbKey -> (bitmapRows * 2).toString)
+        else Nil
+      Iterate.pinnedLayout(nodes.sparkSession) { pl =>
+        Iterate.scoped(pl, raise: _*) { sc =>
+          run(nodes.on(sc), edges.on(sc), seeds.on(sc), pinned = true)
+        }
+      }.on(nodes.sparkSession)
+    }
   }
 }

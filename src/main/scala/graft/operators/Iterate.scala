@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.SQLConf
 
 /** Materialization policy for iterative operators (pageRank, label
   * propagation, BFS, connected components): every round's state frame
@@ -30,6 +32,7 @@ object Iterate {
 
   private[graft] val ReliableKey = "spark.graft.reliableCheckpoint"
   private[graft] val IntervalKey = "spark.graft.reliableCheckpoint.interval"
+  private val AqeKey = "spark.sql.adaptive.enabled"
 
   /** Eagerly materialize round `round`'s state frame under the
     * session's checkpoint policy. `round` counts from 0; pass 0 for
@@ -80,13 +83,48 @@ object Iterate {
   implicit class MaterializeOps(private val df: DataFrame) {
     def materialized(round: Int = 0, big: Boolean = false): DataFrame =
       materialize(df, round, big)
+
+    /** The same frame bound to session `s`: plans built on it read
+      * `s`'s conf (see [[scoped]]). */
+    def on(s: SparkSession): DataFrame = bridge.ofRows(s, bridge.planOf(df))
   }
 
-  /** Run a BROADCAST-REGIME loop statically: AQE off AND
-    * `spark.sql.shuffle.partitions` set to the partition count AQE's
+  /** Run `body` in a query scope whose conf is `s`'s conf plus
+    * `overrides`. `body` receives the scope: a clone of `s` with the
+    * same SparkContext, cached data and executor classloader, a copy of
+    * its temp views, functions and listeners, and a conf of its own
+    * (see [[bridge.cloneSession]]). The overrides reach exactly the frames
+    * bound to the scope — re-bind inputs with `df.on(scope)`; frames
+    * derived from them stay in it — and `s` is never written. So
+    * queries on `s` from any other thread (the Service's handler pool,
+    * Verify's thread pool) keep the session's conf while a scope is
+    * open, overlapping scopes on different threads cannot leave an
+    * override behind, and scopes nest (`scoped(scope, …)`). Hand a
+    * frame back with `df.on(s)` when later plans built on it must
+    * leave the scope.
+    *
+    * Each scope plans, executes and reads its conf through its own
+    * session, so keys read at execution time also take effect: on
+    * broadcast threads, on executors (SQL execution propagates the
+    * executing session's conf), and in `SparkPlan.conf` reads such as
+    * the object-hash-aggregate fallback threshold, which a thread-local
+    * `SQLConf.withExistingConf` override never reaches.
+    *
+    * Keys: runtime SQL confs (`spark.sql.*` settable on a live
+    * session) and the `spark.graft.*` rule and operator flags. Static
+    * and core confs are shared with `s` and cannot be overridden. */
+  def scoped[T](s: SparkSession, overrides: (String, String)*)(
+      body: SparkSession => T): T = {
+    val scope = bridge.cloneSession(s)
+    overrides.foreach { case (k, v) => scope.conf.set(k, v) }
+    body(scope)
+  }
+
+  /** Plan a BROADCAST-REGIME loop statically: AQE off and
+    * `spark.sql.shuffle.partitions` at the partition count AQE's
     * coalescing would have chosen anyway — ⌈stateBytes / advisory
-    * partition size⌉, clamped to [1, current setting] — for the
-    * duration of `body`, restoring both confs after.
+    * partition size⌉, clamped to [1, session setting] — in the scope
+    * `body` receives (see [[scoped]]).
     *
     * Motivation (measured, r15/r16): with every loop join explicitly
     * broadcast-hinted, AQE's only contribution inside a bounded-state
@@ -105,47 +143,29 @@ object Iterate {
     * Broadcast regime only: the pinned regime needs [[pinnedLayout]]
     * (AQE off for layout capture, partition count = the layout's own),
     * and an UNBOUNDED state frame must keep AQE's runtime sizing. */
-  def staticBoundedLoop[T](s: org.apache.spark.sql.SparkSession,
-      stateBytes: BigInt)(body: => T): T = {
-    val advisory = BigInt(s.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val cur = s.sessionState.conf.numShufflePartitions
-    val k = ((stateBytes.max(BigInt(1)) + advisory - 1) / advisory)
-      .min(BigInt(cur)).max(BigInt(1)).toInt
-    staticWidth(s, k)(body)
+  def staticBoundedLoop[T](s: SparkSession, stateBytes: BigInt)(
+      body: SparkSession => T): T = {
+    val advisory = BigInt(
+      s.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val k = (stateBytes.max(BigInt(1)) + advisory - 1) / advisory
+    staticWidth(s, k.min(BigInt(Int.MaxValue)).toInt)(body)
   }
 
   /** [[staticBoundedLoop]]'s core: AQE off and
-    * `spark.sql.shuffle.partitions` = `k` (clamped to [1, current
-    * setting]) for the duration of `body`, both confs restored after —
-    * for callers whose driver-known bound is NOT a byte size (e.g. a
-    * candidate-pair mass bounding a CPU-dense exchange, where byte-
-    * based coalescing under-parallelizes by the CPU-per-byte ratio). */
-  private[graft] def staticWidth[T](s: org.apache.spark.sql.SparkSession,
-      width: Int)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val cur = s.sessionState.conf.numShufflePartitions
-    val k = math.max(1, math.min(width, cur))
-    val savedAqe =
-      if (s.conf.getAll.contains(aqeKey)) Some(s.conf.get(aqeKey)) else None
-    val savedSp =
-      if (s.conf.getAll.contains(spKey)) Some(s.conf.get(spKey)) else None
-    s.conf.set(aqeKey, "false")
-    s.conf.set(spKey, k.toString)
-    try body finally {
-      savedAqe match {
-        case Some(v) => s.conf.set(aqeKey, v)
-        case None    => s.conf.unset(aqeKey)
-      }
-      savedSp match {
-        case Some(v) => s.conf.set(spKey, v)
-        case None    => s.conf.unset(spKey)
-      }
-    }
+    * `spark.sql.shuffle.partitions` = `width` clamped to [1, session
+    * setting], for callers whose driver-known bound is NOT a byte size
+    * (e.g. a candidate-pair mass bounding a CPU-dense exchange, where
+    * byte-based coalescing under-parallelizes by the CPU-per-byte
+    * ratio). */
+  private[graft] def staticWidth[T](s: SparkSession, width: Int)(
+      body: SparkSession => T): T = {
+    val k = math.max(1, math.min(width,
+      s.sessionState.conf.numShufflePartitions))
+    scoped(s, AqeKey -> "false",
+      "spark.sql.shuffle.partitions" -> k.toString)(body)
   }
 
-  /** Run `body` with AQE disabled, restoring the session conf after.
+  /** Run `body` in a scope with AQE disabled (see [[scoped]]).
     *
     * The iterative operators pin their physical layouts deliberately:
     * the big round-invariant frame is hash-partitioned + sorted on the
@@ -159,16 +179,6 @@ object Iterate {
     * inside a fixed-layout loop is the standard iterative-graph trade
     * (AQE's wins — skew joins, dynamic coalescing — target one-shot
     * queries, not a loop whose layout is already chosen). */
-  def pinnedLayout[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    // restore exactly: set back if the caller had set it, UNSET if it
-    // was riding the default (never convert an unset default into an
-    // explicit setting — same discipline as Graph.bfsHops)
-    val saved = if (s.conf.getAll.contains(key)) Some(s.conf.get(key)) else None
-    s.conf.set(key, "false")
-    try body finally saved match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def pinnedLayout[T](s: SparkSession)(body: SparkSession => T): T =
+    scoped(s, AqeKey -> "false")(body)
 }

@@ -35,6 +35,28 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A new session over `spark`'s SparkContext and shared state with
+    * a copy of its conf, temp views, functions and listeners
+    * (package-private `cloneSession`), whose jobs run under `spark`'s
+    * job-artifact state. Spark 4 runs each isolated session's tasks in
+    * an executor classloader of its own and keys the codegen cache by
+    * classloader, so a clone with a state of its own recompiles and
+    * re-JITs every generated class the parent already has (measured
+    * on 4 vCPUs at `local[32]`: warm graph_label_prop at sf0.1 took
+    * 3.9 s instead of 2.3 s). The clone's artifacts are a copy of the
+    * parent's, so the parent's classloader serves both. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = {
+    val parent = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val clone = parent.cloneSession()
+    val state = classOf[org.apache.spark.sql.artifact.ArtifactManager]
+      .getDeclaredField("state")
+    state.setAccessible(true)
+    state.set(clone.sessionState.artifactManager,
+      parent.sessionState.artifactManager.state)
+    clone
+  }
+
   /** True iff a string type still compares binary (UTF8_BINARY) —
     * `StringType.supportsBinaryEquality` is private[sql]; graft's
     * ci-collation rule needs it to wrap each comparison exactly once. */

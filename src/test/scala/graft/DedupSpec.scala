@@ -518,4 +518,18 @@ class DedupSpec extends AnyFunSuite {
       .otherwise(lit(null).cast("boolean"))
     assert(run(d3).map(_._1) === Seq(2L, 3L, 4L, 5L, 6L))
   }
+
+  test("pairCheckWidth: a candidate mass past 2^51 pair checks runs at " +
+      "the session width, not 1") {
+    val cap = spark.sessionState.conf.numShufflePartitions
+    for (est <- Seq(2.26e15, 1e18, Double.MaxValue)) {
+      val w = graft.operators.Iterate.staticWidth(spark,
+          Dedup.pairCheckWidth(est)) { sc =>
+        sc.sessionState.conf.numShufflePartitions
+      }
+      assert(w === cap, s"estPairs=$est")
+    }
+    assert(Dedup.pairCheckWidth(0) === 1)
+    assert(Dedup.pairCheckWidth(3.0 * (1 << 20)) === 4)
+  }
 }

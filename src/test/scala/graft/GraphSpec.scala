@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Graph
+import graft.operators.{Graph, Iterate}
+import graft.operators.Iterate.MaterializeOps
 
 /** Exact-integer PageRank: the distributed rank flow must agree
   * value-for-value with a sequential reference that applies the same
@@ -372,47 +377,185 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  /** Widths of the shuffle exchanges in `plan`; fails on a plan that
+    * AQE wraps. */
+  private def staticWidths(
+      plan: org.apache.spark.sql.execution.SparkPlan): Seq[Int] = {
+    assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty,
+      s"expected a static plan:\n$plan")
+    plan.collect { case x: ShuffleExchangeExec =>
+      x.outputPartitioning.numPartitions }
+  }
+
+  /** A one-exchange query bound to `s`. */
+  private def groupedOn(s: org.apache.spark.sql.SparkSession) =
+    spark.range(100).toDF().on(s).groupBy(col("id") % 7).count()
+
+  /** Run `a` and `b` on two threads, joining both; rethrows a failure. */
+  private def onTwoThreads(a: => Unit, b: => Unit): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = Seq(() => a, () => b).map { f =>
+      new Thread(() => try f() catch { case t: Throwable => failures.add(t) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    Option(failures.peek).foreach(t => throw t)
+  }
+
+  private def await(l: CountDownLatch): Unit =
+    assert(l.await(30, TimeUnit.SECONDS), "latch timed out")
+
   test("staticBoundedLoop: body runs with AQE off at the state-derived " +
       "shuffle width; both confs restore afterward, including the " +
       "unset-stays-unset case") {
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
-    val hadAqe = spark.conf.getAll.contains(aqeKey)
+    val savedAqe = spark.conf.getOption(aqeKey)
     val savedSp = spark.conf.get(spKey)
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    // tiny state → width clamps to 1; state wider than advisory×2 → 3
-    var seen = (false, -1)
-    graft.operators.Iterate.staticBoundedLoop(spark, BigInt(1)) {
-      seen = (spark.conf.get(aqeKey).toBoolean,
-        spark.sessionState.conf.numShufflePartitions)
-    }
-    assert(seen === ((false, 1)))
-    graft.operators.Iterate.staticBoundedLoop(
-        spark, BigInt(advisory) * 2 + 1) {
-      seen = (spark.conf.get(aqeKey).toBoolean,
-        spark.sessionState.conf.numShufflePartitions)
-    }
-    assert(seen === ((false, 3)))
-    // never wider than the session setting (scale-adaptive, but the
-    // session count is the cap)
-    graft.operators.Iterate.staticBoundedLoop(
-        spark, BigInt(advisory) * 10000) {
-      seen = (spark.conf.get(aqeKey).toBoolean,
-        spark.sessionState.conf.numShufflePartitions)
-    }
-    assert(seen === ((false, savedSp.toInt)))
-    assert(spark.conf.get(spKey) === savedSp)
-    assert(spark.conf.getAll.contains(aqeKey) === hadAqe,
-      "an unset conf must stay unset after the loop (never convert a " +
-        "default into an explicit setting)")
-    // a throwing body must still restore
-    intercept[RuntimeException] {
-      graft.operators.Iterate.staticBoundedLoop(spark, BigInt(1)) {
-        throw new RuntimeException("boom")
+    spark.conf.unset(aqeKey)
+    try {
+      // the plan the body builds: tiny state → width 1; state wider
+      // than advisory×2 → 3; never wider than the session setting
+      def widths(stateBytes: BigInt): Seq[Int] =
+        Iterate.staticBoundedLoop(spark, stateBytes) { sc =>
+          val q = groupedOn(sc)
+          assert(q.count() == 7)
+          staticWidths(q.queryExecution.executedPlan)
+        }
+      assert(widths(BigInt(1)) === Seq(1))
+      assert(widths(BigInt(advisory) * 2 + 1) === Seq(3))
+      assert(widths(BigInt(advisory) * 10000) === Seq(savedSp.toInt))
+      assert(spark.conf.get(spKey) === savedSp)
+      assert(!spark.conf.getAll.contains(aqeKey),
+        "an unset conf must stay unset after the loop (never convert a " +
+          "default into an explicit setting)")
+      // a throwing body leaves the session as it was too
+      intercept[RuntimeException] {
+        Iterate.staticBoundedLoop(spark, BigInt(1)) { _ =>
+          throw new RuntimeException("boom")
+        }
       }
+      assert(spark.conf.get(spKey) === savedSp)
+      assert(!spark.conf.getAll.contains(aqeKey))
+    } finally savedAqe.foreach(spark.conf.set(aqeKey, _))
+  }
+
+  test("overlapping static scopes on two threads (A enters, B enters, " +
+      "A exits, B exits) leave AQE unset and the partition count as it " +
+      "was") {
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val spKey = "spark.sql.shuffle.partitions"
+    val savedAqe = spark.conf.getOption(aqeKey)
+    val savedSp = spark.conf.get(spKey)
+    spark.conf.unset(aqeKey)
+    try {
+      val aIn, bIn, aOut = new CountDownLatch(1)
+      onTwoThreads(
+        { Iterate.staticWidth(spark, 1) { _ => aIn.countDown(); await(bIn) }
+          aOut.countDown() },
+        { await(aIn)
+          Iterate.staticWidth(spark, 2) { _ => bIn.countDown(); await(aOut) } })
+      assert(!spark.conf.getAll.contains(aqeKey))
+      assert(spark.conf.get(spKey) === savedSp)
+    } finally savedAqe.foreach(spark.conf.set(aqeKey, _))
+  }
+
+  test("a query planned on another thread while a static scope is open " +
+      "keeps AQE at the session width") {
+    val inScope, planned = new CountDownLatch(1)
+    var plan: org.apache.spark.sql.execution.SparkPlan = null
+    onTwoThreads(
+      Iterate.staticWidth(spark, 1) { _ =>
+        inScope.countDown(); await(planned) },
+      { await(inScope)
+        plan = groupedOn(spark).queryExecution.executedPlan
+        planned.countDown() })
+    plan match {
+      case a: AdaptiveSparkPlanExec =>
+        assert(staticWidths(a.executedPlan) ===
+          Seq(spark.sessionState.conf.numShufflePartitions))
+      case other => fail(s"expected an adaptive plan:\n$other")
     }
-    assert(spark.conf.get(spKey) === savedSp)
-    assert(spark.conf.getAll.contains(aqeKey) === hadAqe)
+  }
+
+  test("a new scope reuses the code its session already compiled") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Iterate.scoped(spark)(sc => groupedOn(sc).collect())
+    val before = compilations
+    Iterate.scoped(spark)(sc => groupedOn(sc).collect())
+    assert(compilations == before)
+  }
+
+  test("BFS bitmap regime past 128 buckets per task: the scoped " +
+      "fallback-threshold raise keeps every bitmap aggregate hashed") {
+    // one node per 2^18-id bucket → 300 buckets, > 128 per map task
+    // once the frontier is dense
+    val ids = (0L until 300L).map(_ * (1L << 18) + 1)
+    val rnd = new scala.util.Random(3)
+    val edges = (1 to 3000)
+      .map(_ => (ids(rnd.nextInt(300)), ids(rnd.nextInt(300))))
+      .filter(e => e._1 != e._2)
+    val aggs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec]
+    val marker = new CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = {
+        qe.executedPlan.foreach {
+          case a: org.apache.spark.sql.execution.aggregate
+              .ObjectHashAggregateExec => aggs.add(a)
+          case _ =>
+        }
+        if (funcName == "collect" &&
+            qe.analyzed.toString.contains("bfs-marker")) marker.countDown()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // no broadcast → pinned regime; denseFactor 0 → every round dense
+      Iterate.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.graft.bfs.denseFactor" -> "0") { sc =>
+        Graph.bfsHops(ids.toDF("id").on(sc), edges.toDF("src", "dst").on(sc),
+          Seq(ids.head).toDF("id").on(sc), 4).collect()
+      }
+      // listener events arrive in order: once this query's end is seen,
+      // every BFS execution's has been too
+      spark.range(1).select(lit("bfs-marker")).collect()
+      await(marker)
+    } finally spark.listenerManager.unregister(listener)
+    val bitmapAggs = aggs.toArray(Array.empty[
+      org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec])
+      .filter(_.aggregateExpressions.exists(
+        _.aggregateFunction.isInstanceOf[graft.functions.BitmapAgg]))
+    assert(bitmapAggs.nonEmpty, "the dense rounds never ran")
+    assert(bitmapAggs.map(_.metrics("numTasksFallBacked").value).toSeq
+      .forall(_ == 0L), "a bitmap aggregate fell back to sort")
+  }
+
+  test("labelPropagation sizes its static loop from the edge estimate " +
+      "when a dense graph's edges outweigh its nodes") {
+    val nodes = (1L to 40L).toDF("id")
+    val edges = (for (a <- 1L to 40L; b <- 1L to 40L if a != b)
+      yield (a, b)).toDF("src", "dst")
+    def bytes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    // an advisory size that fits the node frame once and the edge
+    // frame three times
+    val advisory = (bytes(edges) + 2) / 3
+    assert(bytes(nodes) <= advisory)
+    def run(s: org.apache.spark.sql.SparkSession) =
+      Graph.labelPropagation(nodes.on(s), edges.on(s), 3)
+    val labels = Iterate.scoped(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+          advisory.toString)(run)
+    assert(labels.rdd.getNumPartitions == 3)
+    assert(labels.collect().toSet === run(spark).collect().toSet)
   }
 }
