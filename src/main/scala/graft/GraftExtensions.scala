@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{CosineSimilarity, JaccardSim}
+import graft.operators.PrefixFilter
 import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
 
 /** The library's cluster-wide integration point: set
@@ -112,7 +113,8 @@ case class MySqlCiCollation(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 }
 
-/** Shared by the three similarity-join rewrites: pin SHUFFLE_MERGE on
+/** Shared by the three similarity-join rewrites and
+  * [[graft.operators.PrefixFilter]]: pin SHUFFLE_MERGE on
   * the banded/gram equi-join the rewrite introduced (identified by its
   * __graft_ key columns), directly on the Join node's JoinHint — these
   * rules run AFTER EliminateResolvedHint, so a DataFrame-level .hint()
@@ -276,22 +278,16 @@ case class RewriteHammingThresholdJoin(spark: SparkSession)
 /** OPT-IN rewrite of a declarative text-similarity join into its
   * prefix-filtered physical shape: an inner join whose condition
   * contains `text_jaccard(a, b, n) >= t` (a from the left, b from the
-  * right) becomes a hash equi-join on AllPairs prefix grams — each
-  * side normalizes, hashes and sorts its n-gram set at scan time,
-  * keeps only the `|d| − ⌈t·|d|⌉ + 1` smallest grams (the prefix
-  * bound), and explodes those; only rows sharing a prefix gram are
-  * ever paired, with the original condition left as the residual
-  * filter. A pair sharing several prefix grams is emitted exactly
-  * once, at the SMALLEST shared gram (the canonical-gram conjunct).
+  * right) becomes [[graft.operators.PrefixFilter]]'s candidate
+  * generation over the distinct texts of both sides, with the original
+  * condition re-evaluated on the back-joined rows.
   *
-  * Unlike the LSH cosine rewrite this is a STRICT equivalence: by the
-  * prefix-filtering theorem (Bayardo et al., WWW'07 — any pair with
-  * Jaccard ≥ t shares a gram within both prefixes under ANY consistent
-  * global gram order; plain gram-value order is used here), the
-  * rewritten join returns exactly the rows of the nested-loop
-  * original. Opt-in (`spark.graft.jaccardRewrite.enabled=true`)
-  * because replanning a user's predicate should still be a visible
-  * choice, not magic. */
+  * Unlike the LSH cosine rewrite this is a STRICT equivalence: the
+  * prefix-filter contract (see [[graft.operators.PrefixFilter]]) loses
+  * no pair at a loss-free bucket cap, so the rewritten join returns
+  * exactly the rows of the nested-loop original. Opt-in
+  * (`spark.graft.jaccardRewrite.enabled=true`) because replanning a
+  * user's predicate should still be a visible choice, not magic. */
 case class RewriteJaccardThresholdJoin(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper with ShuffleJoinPin {
 
@@ -423,23 +419,15 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
       n: Int, t: Double): LogicalPlan = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graft.bridge
-    // Stop-gram df model, trained HERE with one bounded job before the
-    // rewritten plan is returned (the optimizer runs once per
-    // execution; the __graft_ guard keeps the rule from re-firing on
-    // its own output). The PPJoin global order this model induces —
-    // rarest grams first, unknown grams df=1, ties by gram value — is
-    // what makes the rewrite survive scale: under the former EMPTY
-    // model a corpus-hot gram whose hash lands in the low percentiles
-    // sits in the prefix of nearly every doc containing it, and one
-    // such gram contributes |docs(g)|² candidate pairs (measured at
-    // the sf1 gate: the 50k-doc corpus ground for 25+ minutes and
-    // starved every query queued behind it; with the trained model the
-    // same query answers in seconds). Exact recall is UNAFFECTED: the
-    // prefix-filter lemma holds for ANY consistent global total order,
-    // both sides share this one model, and df only shapes candidate
-    // volume. The 1-in-4 content-hash doc sample + df>=2 floor +
-    // 64k-row cap bound the job and the collected model at any corpus
-    // size (same shape as Dedup.ngramJaccard's trainer).
+    def grams(text: Expression) =
+      bridge.toColumn(VectorFunctions.CharNgramHashes(
+        VectorFunctions.NormalizeText(text), n, distinctSorted = true))
+    // Stop-gram model, trained HERE with one bounded job before the
+    // rewritten plan is returned, on the left input's rows. Measured
+    // at the sf1 gate: under an EMPTY model the 50k-doc corpus ground
+    // for 25+ minutes (a corpus-hot gram whose hash lands low sits in
+    // nearly every prefix and contributes |docs(g)|² candidates); with
+    // the trained model the same query answers in seconds.
     // Model capacity: fixed 64k in production; conf-overridable so
     // unit-scale specs can SATURATE the model (a handful of docs
     // never reaches 64k grams) and drive the auto crossover gate.
@@ -450,32 +438,19 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
       if (modelCache.size > 32) modelCache.clear()
       modelCache.getOrElseUpdate(
         (j.left.canonicalized, aText.canonicalized, n, modelSize,
-          dataFingerprint(j.left)), {
-        val gramsL = VectorFunctions.CharNgramHashes(
-          VectorFunctions.NormalizeText(aText), n, distinctSorted = true)
-        bridge.ofRows(spark, j.left)
-          .filter(pmod(xxhash64(bridge.toColumn(aText)), lit(4)) === 0)
-          .select(bridge.toColumn(gramsL).as("__graft_gs"))
-          .filter(col("__graft_gs").isNotNull)
-          .select(explode(col("__graft_gs")).as("g"))
-          .groupBy("g").agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2)
-          .orderBy(col("df").desc, col("g"))
-          .limit(modelSize)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      })
+          dataFingerprint(j.left)),
+        PrefixFilter.stopGramModel(bridge.ofRows(spark, j.left),
+          bridge.toColumn(aText), grams(aText), modelSize))
     }
     // The rewritten shape is the operator family's fused-bucket
     // pipeline, generalized to arbitrary join inputs through CONTENT
     // identity — because the naive alternative measurably dies: a
     // posting-level equi-join enumerates Σ_g df(g)² row pairs
-    // (5.6e9 at the sf1 gate even with the trained model; this
-    // corpus's bounded vocabulary keeps thousands of postings on
-    // "rare" prefix grams), and a join operator cannot iterate pairs
-    // anywhere near the ~1e8/s/core an in-memory bucket loop gets —
-    // the former join shape ground for 25+ minutes at sf1 while
-    // the fused loop below covers the same 2.8e9 candidate checks in
-    // under 30 s measured. Shape:
+    // (5.6e9 at the sf1 gate even with the trained model), and a join
+    // operator cannot iterate pairs anywhere near the ~1e8/s/core an
+    // in-memory bucket loop gets — the former join shape ground for
+    // 25+ minutes at sf1 while the bucket loop covers the same 2.8e9
+    // candidate checks in under 30 s measured. Shape:
     //   1. id := xxhash64(join text) per side — CONTENT identity, so
     //      the candidate stage runs once per distinct text while the
     //      back-join restores full row multiplicity exactly (every
@@ -485,16 +460,13 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     //      could only DROP pairs of one of the colliding texts
     //      (~n²/2⁶⁵ for n distinct texts — negligible below billions
     //      of distinct texts; the operator API is the knob past that).
-    //   2. distinct (text) docs from BOTH sides → sorted distinct
-    //      gram sets → df-ordered prefix postings (PrefixGrams with
-    //      the trained model) → ONE groupBy(gram) shuffle → the m²/2
-    //      bucket loop with fused length + positional prunes, in one
-    //      of two measured regimes (chosen by an exact candidate-mass
-    //      histogram — see below): SPARSE buckets collect skinny
-    //      (id, rn, sz) postings and defer verification to the
-    //      original-predicate filter in step 3; DENSE buckets carry
-    //      the gram arrays so VerifiedBucketPairs rejects inline and
-    //      only true pairs reach step 3.
+    //   2. distinct (text) docs from BOTH sides → [[PrefixFilter]]
+    //      prefix postings → the bucket loop, in one of two measured
+    //      regimes (chosen by the candidate-mass histogram — see
+    //      below): SPARSE buckets collect skinny postings and defer
+    //      verification to step 3; DENSE buckets carry the gram arrays
+    //      so VerifiedBucketPairs rejects inline and only true pairs
+    //      reach step 3.
     //   3. verified id pairs (+ both orientations + the identity
     //      pairs id→id, which cover equal-text row pairs the
     //      id_a < id_b generator never emits) back-join to the
@@ -522,25 +494,12 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
       .select(xxhash64(col("__graft_text")).as("__graft_id"),
         col("__graft_text"))
     val base = docs.select(col("__graft_id"),
-      bridge.toColumn(VectorFunctions.CharNgramHashes(
-        VectorFunctions.NormalizeText(
-          bridge.toExpression(col("__graft_text"))), n,
-        distinctSorted = true)).as("__graft_gs"))
+        grams(bridge.toExpression(col("__graft_text"))).as("__graft_gs"))
       .filter(col("__graft_gs").isNotNull)
-    // SKINNY prefix postings — (id, rn, sz), no gram-array payload.
-    // Both candidate regimes below start here; only the dense one
-    // rebuilds the gs-carrying variant.
-    val skinny = base.select(col("__graft_id"),
-        size(col("__graft_gs")).cast("int").as("__graft_sz"),
-        posexplode(VectorFunctions.prefix_grams(
-          col("__graft_gs"), hotDf, t)))
-      .select(col("__graft_id"),
-        (col("pos") + 1).cast("int").as("__graft_rn"),
-        col("__graft_sz"), col("col").as("__graft_g"))
-    // Candidate-mass stats: ONE skinny map-side-combined aggregate
-    // (the same exact-histogram discipline as Dedup.ngramJaccard's
-    // guard), collected to a single driver row. Decides which of two
-    // exact-recall candidate shapes ships less data:
+    val skinny = PrefixFilter.modelPostings(base, hotDf, t)
+    // Candidate-mass stats, collected from the shared histogram (one
+    // bounded driver job, memoized). Decides which of two exact-recall
+    // candidate shapes ships less data:
     //
     //  - SPARSE (realistic gram entropy): postings shuffle skinny,
     //    buckets emit length+position-PRUNED candidate pairs with no
@@ -567,6 +526,10 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     // dense shuffle's 8 bytes/gram per posting — risk-balanced at
     // estPairs ≤ 16·postings, overridable for rehearsals/specs via
     // spark.graft.jaccardRewrite.estFactor (0 forces dense).
+    def statsOf(hist: Array[PrefixFilter.MassBand]) =
+      (hist.map(_.sm1).sum.toLong,
+        PrefixFilter.estPairs(hist, Long.MaxValue),
+        PrefixFilter.maxOccupancy(hist))
     val (nPostings, estPairs, maxOcc) = {
       if (statsCache.size > 32) statsCache.clear()
       // modelSize is part of the key: skinny postings are built from
@@ -576,78 +539,14 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
       statsCache.getOrElseUpdate(
         (j.left.canonicalized, j.right.canonicalized,
           aText.canonicalized, bText.canonicalized, n, t, modelSize,
-          dataFingerprint(j.left, j.right)), {
-        val r = skinny.groupBy("__graft_g").agg(count(lit(1)).as("m"))
-          .agg(sum(col("m")).as("p"),
-            sum(col("m").cast("double") * (col("m") - 1) / 2).as("est"),
-            max(col("m")).as("mx"))
-          .collect()(0)
-        if (r.isNullAt(0)) (0L, 0.0, 2)
-        else (r.getLong(0), r.getDouble(1),
-          math.max(2L, math.min(r.getLong(2), Int.MaxValue.toLong)).toInt)
-      })
+          dataFingerprint(j.left, j.right)),
+        statsOf(PrefixFilter.collectBands(
+          PrefixFilter.massHistogram(skinny))))
     }
     val estFactor = spark.conf
       .get("spark.graft.jaccardRewrite.estFactor", "16").toDouble
-
-    // Exact-df global order when the bounded hot-gram model LEAKS
-    // candidate mass: grams below the model's admission df rank as
-    // df=1 in hash order, so mid-frequency grams land in prefixes
-    // their true rank would exclude. Measured at sf10-he: model order
-    // 2.15e8 est pairs vs 3.69e7 under the TRUE global (df asc, gram
-    // asc) order — 5.8× less bucket-loop work for the SAME posting
-    // count (prefix length per doc is order-independent; only bucket
-    // shape changes). The exact order costs two skinny corpus-wide
-    // shuffles (df groupBy + join + per-doc window rank), so it is
-    // gated on the two conditions under which it can pay off: the
-    // model is SATURATED (vocabulary beyond its 64k reach — below
-    // that it ranks every df≥2 gram and exact ≈ model order, measured
-    // mass-identical at sf0.1), and the model-order mass estimate is
-    // super-linear in the postings. Recall unchanged under any
-    // consistent total order (df is a pure function of the gram).
-    // `spark.graft.jaccardRewrite.exactDfOrder`: auto (default,
-    // gated) | off (never — A/B pin) | on (force — spec coverage).
-    val exactDfMode = spark.conf
-      .get("spark.graft.jaccardRewrite.exactDfOrder", "auto")
-    val modelSaturated = hotDf.size >= modelSize
-    def wantExactDf(quadratic: Boolean): Boolean = exactDfMode match {
-      case "off" => false
-      case "on" => true
-      case _ => modelSaturated && quadratic
-    }
-    // (id, rn, sz, g) skinny postings ranked under the exact order.
-    // The df join is SHUFFLE-pinned via pinShuffleJoin (a JoinHint set
-    // directly on the Join node — a DataFrame `.hint()` would plant a
-    // ResolvedHint, which is an internal error in a plan built after
-    // the EliminateResolvedHint batch): the df table is a 30M+-row
-    // aggregate at the rehearsal scales, and a plan-time size guess
-    // once chose broadcast and shipped 1.6 GB of build side through
-    // the driver (maxResultSize abort). The pin also covers the
-    // bounded maxOcc driver job below, which runs this plan OUTSIDE
-    // the rule's final pinShuffleJoin pass.
-    def rankedExact(): org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.expressions.{Window => W}
-      val dfExact = base
-        .select(explode(col("__graft_gs")).as("__graft_g"))
-        .groupBy("__graft_g")
-        .agg(count(lit(1)).as("__graft_df"))
-      val ranked = base.select(col("__graft_id"),
-          size(col("__graft_gs")).cast("int").as("__graft_sz"),
-          explode(col("__graft_gs")).as("__graft_g"))
-        .join(dfExact, Seq("__graft_g"))
-        .withColumn("__graft_rn", row_number().over(
-          W.partitionBy("__graft_id")
-            .orderBy(col("__graft_df").asc, col("__graft_g").asc))
-          .cast("int"))
-        // same EPS-relaxed prefix-length bound as PrefixGrams
-        .filter(col("__graft_rn") <=
-          greatest(least(col("__graft_sz") -
-            ceil(lit(t) * col("__graft_sz") - 1e-9) + 1,
-            col("__graft_sz")), lit(1)))
-        .select(col("__graft_id"), col("__graft_rn"),
-          col("__graft_sz"), col("__graft_g"))
-      bridge.ofRows(spark, pinShuffleJoin(bridge.planOf(ranked)))
-    }
+    def wantExactDf(quadratic: Boolean): Boolean = PrefixFilter.exactOrder(
+      spark, saturated = hotDf.size >= modelSize, overBudget = quadratic)
     // The sparse branch's bucket cap is a CORRECTNESS bound (it must
     // be ≥ the true max bucket occupancy or the collect truncates and
     // drops candidates) — the memoized maxOcc was measured on the
@@ -657,35 +556,26 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     // TWICE — once for this plan-time cap job and again by the query
     // itself — paying the corpus-wide df groupBy + join + per-doc
     // window shuffles both times. So the cold path persists the frame
-    // across both consumers and releases it after the session's next
-    // completed query execution (the rule itself has no
-    // post-execution hook; a one-shot listener is the release point —
-    // worst case an unrelated query fires it first and ours
-    // recomputes, which is exactly the pre-persist behavior).
+    // across both consumers and releases it after the triggering
+    // query's execution (the rule itself has no post-execution hook; a
+    // one-shot listener is the release point — see
+    // [[RewriteJaccardThresholdJoin.unpersistAfterNextExecution]]).
     def exactPostsAndCap(): (org.apache.spark.sql.DataFrame, Int) = {
       val key = ("__graft_exactDf", j.left.canonicalized,
         j.right.canonicalized, aText.canonicalized, bText.canonicalized,
         n, t, dataFingerprint(j.left, j.right))
       statsCache.get(key) match {
-        case Some(hit) => (rankedExact(), hit._3)
+        case Some(hit) => (PrefixFilter.exactPostings(base, t), hit._3)
         case None =>
-          val rx = rankedExact().persist(
+          val rx = PrefixFilter.exactPostings(base, t).persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val capDf = rx.groupBy("__graft_g")
-            .agg(count(lit(1)).as("m")).agg(max(col("m")))
-          val r = capDf.collect()(0)
-          val mx = if (r.isNullAt(0)) 2L
-            else math.max(2L, math.min(r.getLong(0), Int.MaxValue.toLong))
-          statsCache.putIfAbsent(key, (mx, 0.0, mx.toInt))
-          // release on the TRIGGERING query's own completion or any
-          // execution newer than the cap job (see the helper's
-          // scaladoc: stale queued end events from OLDER executions —
-          // this rule's own plan-time driver jobs included — must not
-          // fire the one-shot before the rewritten query consumes the
-          // persist). The trigger's QueryExecution is resolved from
-          // the EXECUTION_ID_KEY local property, which the action
-          // that invoked this rule set around its planning; the cap
-          // job's collect above restored it on exit.
+          val capDf = PrefixFilter.massHistogram(rx)
+          val stats = statsOf(PrefixFilter.collectBands(capDf))
+          statsCache.putIfAbsent(key, stats)
+          // The trigger's QueryExecution is resolved from the
+          // EXECUTION_ID_KEY local property, which the action that
+          // invoked this rule set around its planning; the cap job's
+          // collect above restored it on exit.
           val triggerId = Option(spark.sparkContext.getLocalProperty(
               org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY))
             .flatMap(s => Option(org.apache.spark.sql.execution
@@ -693,7 +583,7 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
             .map(_.id)
           RewriteJaccardThresholdJoin.unpersistAfterNextExecution(
             spark, rx, capDf.queryExecution.id, triggerId)
-          (rx, mx.toInt)
+          (rx, stats._3)
       }
     }
 
@@ -718,10 +608,9 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
         //    ranking. At 100 TB this crossover is the difference
         //    between a bounded stage and a spill storm.
         // Auto engages the exact order when the model is saturated
-        // (below saturation both orders are mass-identical) AND the
-        // model-order estimate crosses sparseExactRatio × postings —
-        // default 6, the geometric midpoint of the measured bracket
-        // (4.9 no-pay, 7.9 pay); overridable per session for A/Bs.
+        // AND the model-order estimate crosses sparseExactRatio ×
+        // postings — default 6, the geometric midpoint of the measured
+        // bracket (4.9 no-pay, 7.9 pay); overridable per session.
         val sparseExactRatio = spark.conf
           .get("spark.graft.jaccardRewrite.sparseExactRatio", "6")
           .toDouble
@@ -729,15 +618,7 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
           if (wantExactDf(estPairs > sparseExactRatio * nPostings))
             exactPostsAndCap()
           else (skinny, maxOcc)
-        posts.groupBy("__graft_g")
-          .agg(graft.functions.BoundedMinCollect.bounded_min_collect(
-            struct(col("__graft_id").as("id"),
-              col("__graft_rn").as("rn"),
-              col("__graft_sz").as("sz")), cap).as("__graft_ps"))
-          .select(explode(VectorFunctions.bucket_pairs(
-            col("__graft_ps"), cap, t)).as("__graft_p"))
-          .select(col("__graft_p.id_a").as("__graft_id_a"),
-            col("__graft_p.id_b").as("__graft_id_b"))
+        PrefixFilter.bucketPairs(posts, cap, t)
       } else {
         // DENSE regime (mass ≫ postings by construction — wantExactDf
         // needs no extra mass condition): every posting carries its
@@ -747,18 +628,9 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
         // content id — the round-9 quadratic-mass cliff stays closed.
         val densePosts =
           if (wantExactDf(quadratic = true))
-            rankedExact()
-              .select(col("__graft_id"), col("__graft_rn"),
-                col("__graft_g"))
-              .join(base.select(col("__graft_id"), col("__graft_gs")),
-                Seq("__graft_id"))
-          else
-            base.select(col("__graft_id"), col("__graft_gs"),
-                posexplode(VectorFunctions.prefix_grams(
-                  col("__graft_gs"), hotDf, t)))
-              .select(col("__graft_id"),
-                (col("pos") + 1).cast("int").as("__graft_rn"),
-                col("__graft_gs"), col("col").as("__graft_g"))
+            PrefixFilter.exactPostings(base, t)
+              .join(base, Seq("__graft_id"))
+          else PrefixFilter.modelPostings(base, hotDf, t, "__graft_gs")
         densePosts
           .groupBy("__graft_g")
           .agg(collect_list(struct(col("__graft_id").as("id"),
@@ -854,11 +726,6 @@ object RewriteJaccardThresholdJoin {
       scala.collection.concurrent.TrieMap[Any, (Long, Double, Int)],
       java.util.concurrent.atomic.AtomicLong)]()
 
-  /** Release a plan-time persist after the session's NEXT completed
-    * query execution: the rewrite rule has no post-execution hook of
-    * its own, so a one-shot listener is the release point. Firing on
-    * an unrelated query merely restores the pre-persist behavior (the
-    * rewritten query recomputes); unpersist is idempotent. */
   /** Release `df`'s persisted blocks on the TRIGGERING query's own
     * completion (`triggerId` — the execution whose optimization ran
     * the rewrite rule, i.e. the persist's intended consumer) or any

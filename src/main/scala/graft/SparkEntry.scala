@@ -2317,8 +2317,8 @@ object SparkEntry {
       : DataFrame = {
     // The declarative TEXT similarity join: the user writes the O(n²)
     // text_jaccard predicate; the opt-in RewriteJaccardThresholdJoin
-    // rule replans it as the AllPairs prefix-filtered equi-join with
-    // exactly-once canonical-gram emission — a STRICT equivalence
+    // rule replans it through dedup_ngram_jaccard's prefix-filter
+    // candidate generation (PrefixFilter) — a STRICT equivalence
     // (exact recall), unlike the LSH cosine rewrite. Same flag-scoping
     // discipline as qCosineThresholdJoin: execute eagerly while the
     // flag is on.

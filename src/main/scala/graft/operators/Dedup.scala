@@ -815,17 +815,10 @@ object Dedup {
   }
 
   /** Character-n-gram Jaccard near-dup pairs with EXACT-recall candidate
-    * generation by prefix filtering (AllPairs / PPJoin, Bayardo et al.
-    * WWW'07): each doc's gram set is sorted by the canonical global
-    * order (document frequency asc, gram asc — rarest first) and only
-    * its first `|d| - ceil(t*|d|) + 1` grams are indexed. Any pair with
-    * Jaccard ≥ t must share a gram inside BOTH prefixes (pigeonhole on
-    * the canonical order: the smallest shared gram has at most
-    * |d| - |a∩b| ≤ |d| - t*|d| grams before it in either doc), so the
-    * prefix join loses nothing, while the inverted index shrinks to the
-    * ~(1-t) rarest fraction of each doc — this is what replaces the old
-    * absolute df-cutoff (df ≤ 50), which silently lost recall on short
-    * docs made of common grams once the corpus outgrew the constant.
+    * generation by prefix filtering (see [[PrefixFilter]] for the
+    * recall contract). Prefix filtering replaced the old absolute
+    * df-cutoff (df ≤ 50), which silently lost recall on short docs made
+    * of common grams once the corpus outgrew the constant.
     *
     * `pairBudget` bounds the TOTAL candidate mass the job may emit
     * (not just per-task): a degenerate low-entropy corpus — bounded
@@ -856,13 +849,8 @@ object Dedup {
       maxPrefixBucket: Int = 5000,
       stopGramModelSize: Int = 1 << 16,
       pairBudget: Long = 100000000L): DataFrame = {
-    // EPS guards the float evaluation of the exact-recall bounds:
-    // ceil(0.7 * 60) evaluates to 43 in doubles (0.7*60 =
-    // 42.000000000000007) where the true bound is 42 — without the
-    // epsilon the prefix would be one gram too short and could miss a
-    // real pair. 1e-9 is far below any meaningful bound gap for any
-    // realistic doc size, and erring DOWN only admits extra candidates.
-    val EPS = 1e-9
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0, 1], got $threshold")
     // Per-doc DISTINCT gram array built inside the scan stage
     // (array_distinct hashes 64-bit elements — no corpus-wide distinct
     // shuffle). Persisted because it feeds the stop-gram model, prefix
@@ -872,30 +860,11 @@ object Dedup {
       char_ngram_set(normalize_text(col("text")), n).as("gs"))
       .filter(col("gs").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hotDf = PrefixFilter.stopGramModel(base, col("doc_id"), col("gs"),
+      stopGramModelSize)
+    val keyed = base.select(col("doc_id").as("__graft_id"),
+      col("gs").as("__graft_gs"))
 
-    // Stop-gram model: df counts for the HOTTEST grams, estimated on a
-    // deterministic 1-in-4 doc sample (xxhash64 of the key — seeded and
-    // order-independent) then one skinny map-side aggregate +
-    // TakeOrdered. The model only has to RANK grams for the prefix
-    // order; the exact-recall proof holds for ANY consistent global
-    // total order, so sampled (even misranked) df can only change the
-    // candidate count, never the verified output — and hot grams, the
-    // only ranks that matter, are exactly the ones a uniform doc sample
-    // cannot miss. Unknown grams rank df=1 with ties by gram value.
-    // Bounded size ⇒ driver/executor-safe at any corpus scale (the same
-    // shape as an IVF centroid model).
-    val hotDf: Map[Long, Long] = base
-      .filter(pmod(xxhash64(col("doc_id")), lit(4)) === 0)
-      .select(explode(col("gs")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
-      .orderBy(col("df").desc, col("g"))
-      .limit(stopGramModelSize)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    // prefix postings straight out of the scan stage: per-row sort by
-    // (df, g) + truncate inside PrefixGrams — no corpus-wide df join,
-    // no per-doc window shuffle
     // NOT persisted (tried r16, reverted): the histogram job and the
     // candidates job both consume these postings, but caching them
     // only converts a shuffle-free scan-stage recompute (explode +
@@ -903,24 +872,13 @@ object Dedup {
     // write + read — measured a wash at sf0.1 AND sf1 (mins 7.25 vs
     // 7.18 / 15.3 vs 14.5, inside the box's wave band), and at corpus
     // scale a TB-wide postings spill costs more than the CPU pass it
-    // saves. The exact-df branch's pEx persist below is different in
-    // kind: ITS recompute re-pays corpus-wide shuffles (df groupBy +
-    // join + window), which is why it stays cached.
-    val prefixModel = base
-      .select(col("doc_id"), size(col("gs")).as("sz"),
-        posexplode(prefix_grams(col("gs"), hotDf, threshold)))
-      .select(col("doc_id"), col("col").as("g"),
-        (col("pos") + 1).as("rn"), col("sz"))
+    // saves. The exact-order postings below are different in kind:
+    // THEIR recompute re-pays corpus-wide shuffles, so they stay cached.
+    val prefixModel = PrefixFilter.modelPostings(keyed, hotDf, threshold)
     // Candidate-volume guard: the per-bucket cap alone bounds a TASK,
-    // not the JOB — on a degenerate low-entropy corpus (a bounded gram
-    // universe shared by millions of docs: every "rare" prefix gram
-    // still has thousands of postings) the emitted pair mass is
-    // ~(#capped buckets)·cap²/2, which at the sf10 rehearsal reached
-    // ~10¹¹ rows and filled an 80 GB disk with shuffle spill before the
-    // distinct. So the TOTAL candidate mass is estimated FIRST, from an
-    // exact per-gram posting-count histogram — one skinny map-side-
-    // combined aggregate over the prefix postings, log2-bucketed to
-    // ≤64 driver rows — and the effective cap halves until the bound
+    // not the JOB (see pairBudget above), so the TOTAL candidate mass
+    // is estimated FIRST from the exact candidate-mass histogram, and
+    // the effective cap halves until the bound
     // Σ_g min(m_g, cap)(min(m_g, cap) − 1)/2 fits `pairBudget`, with a
     // rarest-first df-ceiling as the second degrade stage when halving
     // alone cannot fit (see dMax below). On healthy corpora the
@@ -937,68 +895,19 @@ object Dedup {
     // driver barrier per exchange (measured r16: the hist cascade was
     // 4 jobs and ~0.5 s of gaps at sf0.1) and its runtime coalescing
     // would pick the same width this derivation does.
-    def histOf(p: DataFrame): Array[(Int, Long, Double, Double)] =
+    def histOf(p: DataFrame): Array[PrefixFilter.MassBand] =
       Iterate.staticBoundedLoop(p.sparkSession,
-        p.queryExecution.optimizedPlan.stats.sizeInBytes) { sc => p.on(sc)
-      .groupBy("g").agg(count(lit(1)).as("m"))
-      .select(floor(log2(col("m"))).cast("int").as("b"), col("m"))
-      // m casts to double BEFORE the square: a long m·m overflows past
-      // m ≈ 3e9 postings and a negative sm2 would make the guard
-      // under-count exactly on the pathological corpora it exists for
-      .groupBy("b").agg(count(lit(1)).as("ng"),
-        sum(col("m").cast("double") * col("m")).as("sm2"),
-        sum(col("m").cast("double")).as("sm1"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      .sortBy(_._1)
+          p.queryExecution.optimizedPlan.stats.sizeInBytes) { sc =>
+        PrefixFilter.collectBands(PrefixFilter.massHistogram(p.on(sc)))
       }
     val histModel = histOf(prefixModel)
-    // per-bucket pair mass under cap c: grams with m postings generate
-    // min(m, c)·(min(m, c) − 1)/2 pairs — the m(m−1)/2 form (not m²/2)
-    // so the single-posting grams that dominate a healthy corpus's
-    // gram universe contribute ZERO, exactly like the generator itself
-    def bucketMass(c: Long)(h: (Int, Long, Double, Double)): Double = {
-      val (b, ng, sm2, sm1) = h
-      // bucket holds grams with m in [2^b, 2^(b+1)); if the whole range
-      // is under the cap the exact Σ m(m−1)/2 applies, else cap each
-      // list (straddling buckets take the min of both bounds — still an
-      // upper bound on Σ min(m, c)(min(m, c) − 1)/2)
-      if ((2L << b) - 1 <= c) (sm2 - sm1) / 2.0
-      else math.min(sm2 - sm1, ng.toDouble * c * (c - 1)) / 2.0
-    }
-    def estPairsOf(h: Array[(Int, Long, Double, Double)], c: Long): Double =
-      h.map(bucketMass(c)).sum
 
-    // Exact-df prefix order when the bounded model leaks: the hot-gram
-    // model covers only its top `stopGramModelSize` grams — every gram
-    // below its admission df ranks as df=1, ties by gram VALUE, i.e.
-    // hash order. On high-entropy corpora (gram vocabulary ∝ corpus,
-    // the realistic 100 TB regime) that is almost every gram: measured
-    // at the sf10-he rehearsal the model ranks 0.3 % of the 20.8 M
-    // df≥2 grams (admission df 121) and the prefix-posting candidate
-    // mass lands at 2.15e8, where the TRUE df-ascending order yields
-    // 3.69e7 — 5.8× less, with the same posting count (prefix LENGTH
-    // is order-independent; only bucket shape changes). So when the
-    // model-order estimate would engage the degrade machinery, pay the
-    // two skinny corpus-wide shuffles the model exists to avoid (df
-    // groupBy + join + per-doc window rank) and re-derive the prefix
-    // under the exact global (df asc, gram asc) order — recall is
-    // unaffected (the prefix lemma holds for ANY consistent total
-    // order; df is a pure function of the gram so the order is one
-    // total order shared by all docs), and the smaller true mass
-    // often needs NO degrade at all where the model order would have
-    // dropped bands. Healthy corpora never enter this branch (their
-    // model-order estimate is far under budget, and both orders were
-    // measured mass-identical at sf0.1 where the model covers the
-    // whole vocabulary). `spark.graft.ngram.exactDfOrder=off` pins
-    // the old path for A/Bs.
-    // Gated like the join rewrite: only when the model is SATURATED
-    // (hit its size limit — below that it ranks every df≥2 gram and
-    // exact ≈ model order, so the two extra shuffles buy nothing; the
-    // fixed-vocabulary sf1 corpus lands here: its mass is real, the
-    // degrade is the correct answer, and re-ranking cannot shrink it)
-    // AND the model-order estimate would engage the degrade machinery.
-    // `spark.graft.ngram.exactDfOrder`: auto | off | on (force).
+    // The exact order, when the model order's estimate would engage the
+    // degrade machinery: its smaller true mass often needs NO degrade
+    // where the model order would have dropped bands. Gated on a
+    // SATURATED model as well — the fixed-vocabulary sf1 corpus has
+    // real mass, the degrade is the correct answer there, and
+    // re-ranking cannot shrink it.
     //
     // DF-CAP NOTE (round 14 — the "grams above a df cap generate no
     // candidates, pairs route to a residual tier" hypothesis,
@@ -1030,45 +939,24 @@ object Dedup {
     //     residualDocs ≈ 0 — the real mass sits in MEDIUM-df buckets,
     //     the intrinsic Σ C(df,2) that pairBudget bounds. Under the
     //     MODEL order the hot mass is mis-RANKING (unknown grams at
-    //     df=1-by-hash), which the exact-order switch above already
+    //     df=1-by-hash), which the exact-order switch already
     //     removes. The constructive lever this math leaves: the
     //     sparse-branch order crossover at high density (bucket mass
     //     grows superlinearly, ranking cost linearly in postings) —
     //     see the rewrite's gate and BASELINE round-14.
-    val exactDfMode = docs.sparkSession.conf
-      .get("spark.graft.ngram.exactDfOrder", "auto")
     val (prefix, hist, exactPersisted) =
-      if (exactDfMode == "on" ||
-          (exactDfMode != "off" && hotDf.size >= stopGramModelSize &&
-            estPairsOf(histModel, maxPrefixBucket) > pairBudget)) {
-        val dfExact = base.select(explode(col("gs")).as("g"))
-          .groupBy("g").agg(count(lit(1)).as("df"))
-        // shuffle-pinned: dfExact is a multi-million-row aggregate on
-        // the corpora that reach this branch; a plan-time broadcast
-        // guess would ship the whole build side through the driver
-        val pEx = base
-          .select(col("doc_id"), size(col("gs")).as("sz"),
-            explode(col("gs")).as("g"))
-          .join(dfExact.hint("shuffle_merge"), "g")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("doc_id")
-              .orderBy(col("df").asc, col("g").asc)))
-          // same prefix-length bound as PrefixGrams, EPS-relaxed in the
-          // admit direction (see EPS above)
-          .filter(col("rn") <=
-            greatest(least(col("sz") -
-              ceil(lit(threshold) * col("sz") - EPS) + 1,
-              col("sz")), lit(1)))
-          .select(col("doc_id"), col("g"), col("rn"), col("sz"))
-          // persisted: the ranked postings cost a corpus-wide df
-          // groupBy + join + per-doc window — exactly the shuffles
-          // this branch pays once, not once for the histogram job and
-          // again for the candidates job. Safe to release at the end
-          // with `base` (the verifier materializes pairs eagerly).
+      if (PrefixFilter.exactOrder(docs.sparkSession,
+          saturated = hotDf.size >= stopGramModelSize,
+          overBudget = PrefixFilter.estPairs(histModel, maxPrefixBucket) >
+            pairBudget)) {
+        // persisted: the ranked postings feed both the histogram job
+        // and the candidates job; released at the end with `base` (the
+        // verifier materializes pairs eagerly)
+        val pEx = PrefixFilter.exactPostings(keyed, threshold)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (pEx, histOf(pEx), Some(pEx))
       } else (prefixModel, histModel, None)
-    def estPairs(c: Long): Double = estPairsOf(hist, c)
+    def estPairs(c: Long): Double = PrefixFilter.estPairs(hist, c)
     // Measured decision curve on the rehearsal corpora — the binding
     // cost is the VERIFY join, whose rows carry both docs' full gram
     // arrays (~KB each), so the budget must bound candidates tightly
@@ -1119,11 +1007,11 @@ object Dedup {
         var ppm = 0L
         var stop = false
         for (h <- hist if !stop) {
-          val mass = bucketMass(effCap)(h)
-          if (cum + mass <= pairBudget) { cum += mass; d = (2L << h._1) - 1 }
+          val mass = PrefixFilter.bandMass(effCap)(h)
+          if (cum + mass <= pairBudget) { cum += mass; d = (2L << h.b) - 1 }
           else {
             if (mass > 0) {
-              hi = (2L << h._1) - 1
+              hi = (2L << h.b) - 1
               // floor at 1 ppm: when the overflowing band's mass exceeds
               // 1e6× the remaining budget the truncation would admit
               // NOTHING, re-creating (at extreme degeneracy) the
@@ -1140,34 +1028,20 @@ object Dedup {
         (d, hi, ppm)
       }
 
-    // Candidate generation + verification. ONE shuffle (groupBy gram)
-    // builds each inverted-index bucket, then a bucket generator emits
-    // the surviving (id_a < id_b) pairs with every exact
-    // AllPairs/PPJoin prune — bucket cap, size filter, positional
-    // filter — fused in (see BucketPairs for the recall proofs). This
-    // replaces the former row_number cap window (a second full posting
-    // sort-shuffle) plus posting self-join plus per-edge filtering:
-    // postings cross the wire once instead of three times. The cap
-    // keeps one degenerate gram from exploding a task (observed max
+    // Candidate generation: the shared bucket loop (observed max
     // prefix bucket on the driver testdata at sf0.1: 263 vs the 5000
-    // cap) and bounds the per-bucket pair array at effCap²/2.
+    // cap), with the df-ceiling as its bucket admission — it reads the
+    // posting count out of the SAME aggregate that builds the bucket,
+    // zero extra jobs or shuffles.
     //
     // Verification via the shared size-guarded verifier; the guard can
     // use the REAL materialized cache stats here, because the hotDf
     // model job above has already materialized `base`.
-    // the df-ceiling filter reads the posting count out of the SAME
-    // aggregate that builds the bucket — zero extra jobs or shuffles
-    val candidates = prefix
-      .groupBy("g")
-      .agg(bounded_min_collect(
-        struct(col("doc_id").as("doc_id"), col("rn"), col("sz")),
-        effCap).as("ps"), count(lit(1)).as("m"))
-      .filter(col("m") <= dMax ||
-        (col("m") <= bandHi &&
-          pmod(xxhash64(col("g")), lit(1000000L)) < bandPpm))
-      .select(explode(
-        bucket_pairs(col("ps"), effCap, threshold)).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+    val m = col("__graft_m")
+    val candidates = PrefixFilter.bucketPairs(prefix, effCap, threshold,
+        admit = m <= dMax || (m <= bandHi &&
+          pmod(xxhash64(col("__graft_g")), lit(1000000L)) < bandPpm))
+      .select(col("__graft_id_a").as("id_a"), col("__graft_id_b").as("id_b"))
       .distinct()
     val setsSmall = !forceShuffleVerify(docs.sparkSession) &&
       base.queryExecution.optimizedPlan.stats.sizeInBytes < (256L << 20)

@@ -146,8 +146,8 @@ class DedupSpec extends AnyFunSuite {
         .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
         .toSeq.sorted
     def withOrder[A](mode: String)(f: => A): A = {
-      spark.conf.set("spark.graft.ngram.exactDfOrder", mode)
-      try f finally spark.conf.unset("spark.graft.ngram.exactDfOrder")
+      spark.conf.set("spark.graft.jaccard.exactDfOrder", mode)
+      try f finally spark.conf.unset("spark.graft.jaccard.exactDfOrder")
     }
     // 1) No degrade: forced exact order must emit the model order's
     //    exact output, pairs AND values (the order is a candidate-
@@ -195,6 +195,29 @@ class DedupSpec extends AnyFunSuite {
         stopGramModelSize = 4, pairBudget = 10000L))
     }
     assert(autoOut === forcedOut)
+  }
+
+  test("ngram jaccard rejects a threshold outside (0, 1] before it " +
+      "caches or trains anything") {
+    // the operator's own gram-set frame: cached, it would be found by
+    // the cache manager under this equivalent plan
+    val gramSets = docs.select(col("doc_id"),
+      graft.functions.VectorFunctions.char_ngram_set(
+        graft.functions.VectorFunctions.normalize_text(col("text")), 8)
+        .as("gs"))
+      .filter(col("gs").isNotNull)
+    for (t <- Seq(0.0, 1.5, Double.NaN)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException] {
+        Dedup.ngramJaccard(docs, n = 8, threshold = t)
+      }
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before,
+        s"threshold $t left an RDD persisted")
+      assert(gramSets.storageLevel ===
+        org.apache.spark.storage.StorageLevel.NONE,
+        s"threshold $t left the gram-set frame in the cache manager")
+      assert(e.getMessage.contains("threshold"), e.getMessage)
+    }
   }
 
   test("df-cap residual classification (the round-14 df-cap " +

@@ -299,22 +299,22 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // forced ON (df join + window rank): the global gram order is a
       // candidate-volume heuristic, so the verified output must be
       // invariant to it in BOTH physical shapes
-      s.conf.set("spark.graft.jaccardRewrite.exactDfOrder", "off")
+      s.conf.set("spark.graft.jaccard.exactDfOrder", "off")
       val denseModelOrder = q.collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      s.conf.set("spark.graft.jaccardRewrite.exactDfOrder", "on")
+      s.conf.set("spark.graft.jaccard.exactDfOrder", "on")
       val denseExactOrder = q.collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      s.conf.unset("spark.graft.jaccardRewrite.exactDfOrder")
+      s.conf.unset("spark.graft.jaccard.exactDfOrder")
       s.conf.set("spark.graft.jaccardRewrite.estFactor", "1e18")
       val sparse = q.collect().map(r => (r.getLong(0), r.getLong(1)))
         .sorted.toSeq
       // sparse + forced exact order (ranked skinny postings + the
       // exact-order bucket cap)
-      s.conf.set("spark.graft.jaccardRewrite.exactDfOrder", "on")
+      s.conf.set("spark.graft.jaccard.exactDfOrder", "on")
       val sparseExactOrder = q.collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      s.conf.unset("spark.graft.jaccardRewrite.exactDfOrder")
+      s.conf.unset("spark.graft.jaccard.exactDfOrder")
       // AUTO density-crossover gate (sparse branch): saturate the
       // model with a tiny test-only capacity and zero the crossover
       // ratio so auto itself (no forced mode) must pick the exact
@@ -361,6 +361,70 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(autoExactRows === exact)
       assert(autoModelRows === exact)
       assert(exact.nonEmpty)
+    }
+  }
+
+  test("Dedup.ngramJaccard and the text_jaccard rewrite emit the same " +
+      "(id_a, id_b, jaccard) set under both gram orders") {
+    withExtSession { s =>
+      import s.implicits._
+      import graft.functions.VectorFunctions.text_jaccard
+      import graft.operators.{Dedup, PrefixFilter}
+      // the sparse/dense spec's corpus: candidates outnumber true pairs
+      val base = "the quick brown fox jumps over the lazy dog while " +
+        "the cat watches from the fence with great interest today"
+      val docs = (Seq(
+        (1L, base),
+        (2L, base.replace("lazy", "sleepy")),
+        (3L, base.toUpperCase),
+        (4L, base.replace("today", "tonight")),
+        (5L, "completely different text about catalyst optimizer " +
+          "rules and distributed shuffle execution with partitions"),
+        (6L, "another unrelated document mentioning brown fox once " +
+          "inside a much longer passage of filler words and phrases")) ++
+        (7L to 24L).map(i => (i, s"filler document number $i with " +
+          s"some shared vocabulary about foxes and dogs and fences")))
+        .toDF("doc_id", "text")
+      val t = 0.6
+      val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
+      val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("id_a", "id_b", "jaccard").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .toSeq.sorted
+      def rewritten = a.join(b,
+          text_jaccard(col("text_a"), col("text_b"), 8) >= t &&
+            col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          text_jaccard(col("text_a"), col("text_b"), 8).as("jaccard"))
+      var pairs = 0
+      s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
+      try {
+        for (mode <- Seq("off", "on")) {
+          s.conf.set("spark.graft.jaccard.exactDfOrder", mode)
+          val op = rows(Dedup.ngramJaccard(docs, n = 8, threshold = t,
+            pairBudget = Long.MaxValue))
+          val q = rewritten
+          val rw = rows(q)
+          assert(!q.queryExecution.executedPlan.toString
+            .contains("BroadcastNestedLoopJoin"), s"rewrite off ($mode)")
+          assert(rw === op, s"exactDfOrder=$mode")
+          assert(op.nonEmpty)
+          pairs = op.size
+        }
+        // non-vacuous: the prefix candidates include non-pairs
+        val keyed = docs.select(col("doc_id").as("__graft_id"),
+          graft.functions.VectorFunctions.char_ngram_set(
+            graft.functions.VectorFunctions.normalize_text(col("text")),
+            8).as("__graft_gs"))
+        val cands = PrefixFilter.bucketPairs(
+          PrefixFilter.modelPostings(keyed, Map.empty, t), 1 << 20, t)
+          .distinct().count()
+        assert(cands > pairs, s"candidates $cands vs pairs $pairs")
+      } finally {
+        s.conf.unset("spark.graft.jaccard.exactDfOrder")
+        s.conf.unset("spark.graft.jaccardRewrite.enabled")
+      }
     }
   }
 
@@ -584,7 +648,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val before = s.sparkContext.getPersistentRDDs.keySet
       s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
       s.conf.set("spark.graft.jaccardRewrite.estFactor", "1e18") // sparse
-      s.conf.set("spark.graft.jaccardRewrite.exactDfOrder", "on")
+      s.conf.set("spark.graft.jaccard.exactDfOrder", "on")
       try {
         q.collect() // the triggering query; its completion must release
         // the listener bus is asynchronous — poll for the persisted
@@ -599,7 +663,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       } finally {
         s.conf.unset("spark.graft.jaccardRewrite.enabled")
         s.conf.unset("spark.graft.jaccardRewrite.estFactor")
-        s.conf.unset("spark.graft.jaccardRewrite.exactDfOrder")
+        s.conf.unset("spark.graft.jaccard.exactDfOrder")
       }
     }
   }
