@@ -29,7 +29,10 @@ import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
   *  - [[PushFilterThroughAsOfJoin]], the optimizer rule that restores
   *    predicate pushdown across the custom join operator (Catalyst's
   *    own pushdown rules don't know the node, so without this a filter
-  *    above an as-of join would scan both sides in full).
+  *    above an as-of join would scan both sides in full);
+  *  - a codegen cache sized for the engine's working set
+  *    ([[org.apache.spark.sql.graft.bridge.sizeCodegenCache]]), unless
+  *    `spark.sql.codegen.cache.maxEntries` is set.
   *
   * This is the (reference-free) Spark-idiomatic packaging of what the
   * reference wires by hand at site boot
@@ -38,6 +41,7 @@ import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graft.bridge.sizeCodegenCache()
     VectorFunctions.sqlFunctionBuilders.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft", name), builder))

@@ -44,7 +44,8 @@ object bridge {
     * re-JITs every generated class the parent already has (measured
     * on 4 vCPUs at `local[32]`: warm graph_label_prop at sf0.1 took
     * 3.9 s instead of 2.3 s). The clone's artifacts are a copy of the
-    * parent's, so the parent's classloader serves both. */
+    * parent's, so the parent's classloader serves both. This is the
+    * same classloader-keyed cache that [[sizeCodegenCache]] sizes. */
   def cloneSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession = {
     val parent = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -56,6 +57,42 @@ object bridge {
       parent.sessionState.artifactManager.state)
     clone
   }
+
+  /** Capacity the engine gives Spark's compiled-class cache,
+    * `spark.sql.codegen.cache.maxEntries` (Spark's default: 100).
+    *
+    * The cache is one LRU per JVM keyed by (context classloader,
+    * source), so each whole-stage class is held twice: once under the
+    * driver's loader (`WholeStageCodegenExec.doExecute` compiles it to
+    * check it) and once under the session's executor loader (the
+    * tasks). The five queries of the benchmark's batch need about 135
+    * entries per pass, so at 100 every class was evicted before its
+    * next use and each warm pass recompiled (and re-JITted) 3–43
+    * classes per query. At 1000 warm passes compile nothing. The
+    * Service mix, whose int/long literals each compile classes of
+    * their own, compiled 424 classes in its timed phase at 1000, 424
+    * at 4000 and 603 at 300. Entries are small: generated source
+    * averages 4.6 K chars (p95 15.5 K, max 40.6 K) and bytecode
+    * 2.1 KB (p95 7.1 KB). */
+  val CodegenCacheEntries = 1000
+
+  /** Size the codegen cache of the JVM the active SparkContext runs
+    * in: set [[CodegenCacheEntries]] on the context's own conf unless
+    * `spark.sql.codegen.cache.maxEntries` is already set there, so a
+    * value given at launch wins. `GraftExtensions` calls this before
+    * the session's `SharedState` copies the context conf; Spark's
+    * `CodeGenerator` reads the static key once per JVM, through
+    * `SQLConf.get`, when it first generates code. A JVM that generated
+    * code before its first graft session keeps the capacity it read
+    * then (Spark's 100 unless set). */
+  def sizeCodegenCache(): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(sc =>
+      sizeCodegenCache(sc.conf))
+
+  def sizeCodegenCache(conf: org.apache.spark.SparkConf): Unit =
+    conf.setIfMissing(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      CodegenCacheEntries.toString)
 
   /** True iff a string type still compares binary (UTF8_BINARY) —
     * `StringType.supportsBinaryEquality` is private[sql]; graft's

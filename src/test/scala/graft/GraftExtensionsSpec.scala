@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -713,5 +716,42 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(!posted.storageLevel.useMemory,
         "triggering query's completion did not release the persist")
     }
+  }
+
+  test("a warm query reuses its generated code after more than Spark's " +
+      "default 100 other classes compiled since its last run") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    withExtSession { s =>
+      import s.implicits._
+      assert(s.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) ===
+        bridge.CodegenCacheEntries.toString)
+      def queryA() = s.range(0, 2000, 1, 2)
+        .groupBy(($"id" % 7).as("k")).agg(sum($"id")).collect()
+      queryA()
+      // a long literal is inlined into the generated Java, so every
+      // variant compiles classes of its own
+      val beforeVariants = compiles
+      (1 to 150).foreach(k =>
+        s.range(0, 100, 1, 1).where($"id" === k.toLong).collect())
+      val variantCompiles = compiles - beforeVariants
+      assert(variantCompiles > 100,
+        s"only $variantCompiles compiles: the default cache is not overrun")
+      val beforeRerun = compiles
+      queryA()
+      assert(compiles - beforeRerun === 0,
+        "query A recompiled classes evicted from the codegen cache")
+    }
+  }
+
+  test("the codegen cache capacity is set only where the conf leaves " +
+      "it unset") {
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val unset = new SparkConf(false)
+    bridge.sizeCodegenCache(unset)
+    assert(unset.get(key) === "1000")
+    val userSet = new SparkConf(false).set(key, "64")
+    bridge.sizeCodegenCache(userSet)
+    assert(userSet.get(key) === "64")
   }
 }
