@@ -6,12 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, BitwiseCoun
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{CosineSimilarity, JaccardSim}
 import graft.operators.PrefixFilter
 import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
+import graft.plans.StableCodegen
 
 /** The library's cluster-wide integration point: set
   *
@@ -32,7 +34,11 @@ import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
   *    above an as-of join would scan both sides in full);
   *  - a codegen cache sized for the engine's working set
   *    ([[org.apache.spark.sql.graft.bridge.sizeCodegenCache]]), unless
-  *    `spark.sql.codegen.cache.maxEntries` is set.
+  *    `spark.sql.codegen.cache.maxEntries` is set;
+  *  - [[graft.plans.StableCodegen]], the physical rule that keeps
+  *    filter comparison literals and limit counters out of the
+  *    generated Java, so requests of one shape with different keys
+  *    share compiled classes (plan text and pushdown unchanged).
   *
   * This is the (reference-free) Spark-idiomatic packaging of what the
   * reference wires by hand at site boot
@@ -47,6 +53,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name), builder))
     }
     ext.injectPlannerStrategy(_ => AsOfStrategy)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = StableCodegen
+    })
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     ext.injectOptimizerRule(_ => PruneColumnsThroughAsOfJoin)
     ext.injectOptimizerRule(sp => RewriteCosineThresholdJoin(sp))

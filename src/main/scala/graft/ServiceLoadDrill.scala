@@ -3,6 +3,7 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Sustained-concurrency load drill for the HTTP delivery surface —
   * the axis the reference actually shipped (an ASP.NET query service,
@@ -38,7 +39,9 @@ import java.nio.charset.StandardCharsets
   * Usage: ServiceLoadDrill <sfDir> [clients] [perClient] [poolSize]
   *        [cpuPhaseReqs (default 100, 0 disables)]
   * Emits one JSON line (route percentiles, QPS, validation counts,
-  * per-route CPU-per-request);
+  * per-route CPU-per-request, and `compiles`: the classes Spark's
+  * codegen compiled during the concurrent phase, and per route during
+  * the CPU phase — a shape that compiles per key shows here);
   * exits 1 on any validation failure or HTTP/transport error. */
 object ServiceLoadDrill {
 
@@ -151,7 +154,9 @@ object ServiceLoadDrill {
     val warmClient = HttpClient.newHttpClient()
     (0 until 8).foreach(i => fire(warmClient, 0, i, timed = false))
 
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
+    val compiles0 = compiles
     val t0 = System.nanoTime()
     val tasks = (0 until clients).map { c =>
       pool.submit(new Runnable {
@@ -168,6 +173,7 @@ object ServiceLoadDrill {
     }
     tasks.foreach(_.get())
     val wallSec = (System.nanoTime() - t0) / 1e9
+    val concurrentCompiles = compiles - compiles0
     pool.shutdown()
 
     // --- per-route CPU attribution phase (single-client, one shape
@@ -179,7 +185,8 @@ object ServiceLoadDrill {
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val routeLabels =
       Seq("point_spj", "key_agg", "dialect_page", "explain_join")
-    val routeCpu: Seq[(String, Double, Double)] =
+    // (route, cpu ms, wall ms, classes compiled over both samples)
+    val routeCpu: Seq[(String, Double, Double, Long)] =
       if (cpuPhaseReqs <= 0) Seq.empty
       else {
         val cl = HttpClient.newHttpClient()
@@ -202,18 +209,20 @@ object ServiceLoadDrill {
         // with lower CPU) rather than independent minima, so the
         // reported (cpu, wall) corresponds to a run that actually
         // happened.
-        def sample(): Seq[(String, Double, Double)] =
+        def sample(): Seq[(String, Double, Double, Long)] =
           routeLabels.zipWithIndex.map { case (label, shape) =>
             val w0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
+            val k0 = compiles
             (0 until cpuPhaseReqs).foreach(j =>
               fire(cl, 1 + shape, shape + 4 * j, timed = false))
             val wall = (System.nanoTime() - w0) / 1e9
             val cpu = (osBean.getProcessCpuTime - c0) - idlePerSec * wall
-            (label, cpu / cpuPhaseReqs / 1e6, wall * 1000 / cpuPhaseReqs)
+            (label, cpu / cpuPhaseReqs / 1e6, wall * 1000 / cpuPhaseReqs,
+              compiles - k0)
           }
         val (s1, s2) = (sample(), sample())
-        s1.zip(s2).map { case ((l, c1, w1), (_, c2, w2)) =>
-          if (c2 < c1) (l, c2, w2) else (l, c1, w1)
+        s1.zip(s2).map { case ((l, c1, w1, k1), (_, c2, w2, k2)) =>
+          if (c2 < c1) (l, c2, w2, k1 + k2) else (l, c1, w1, k1 + k2)
         }
       }
 
@@ -242,8 +251,8 @@ object ServiceLoadDrill {
         f""""max_ms":${a.last / 1e6}%.1f$drift}"""
     }.mkString(",")
     val total = clients * perClient
-    val cpuJson = routeCpu.map { case (label, cpuMs, wallMs) =>
-      f""""$label":{"n":$cpuPhaseReqs,"samples":2,""" +
+    val cpuJson = routeCpu.map { case (label, cpuMs, wallMs, compiled) =>
+      f""""$label":{"n":$cpuPhaseReqs,"samples":2,"compiles":$compiled,""" +
         f""""cpu_ms_per_req":$cpuMs%.1f,""" +
         f""""wall_ms_per_req":$wallMs%.1f}"""
     }.mkString(",")
@@ -252,7 +261,8 @@ object ServiceLoadDrill {
         f""""per_client":$perClient,"pool_size":$poolSize,""" +
         f""""requests":$total,"wall_sec":$wallSec%.1f,""" +
         f""""qps":${total / wallSec}%.1f,"validated":${stats.size()},""" +
-        f""""failures":${failures.size()},"routes":{$routesJson},""" +
+        f""""failures":${failures.size()},"compiles":$concurrentCompiles,""" +
+        f""""routes":{$routesJson},""" +
         f""""route_cpu":{$cpuJson}}""")
     failures.asScala.take(5).foreach(f => System.err.println(s"[drill] $f"))
     spark.stop()
