@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{CosineSimilarity, JaccardSim}
-import graft.operators.PrefixFilter
+import graft.operators.{Banding, PrefixFilter}
 import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
 import graft.plans.StableCodegen
 
@@ -39,6 +39,10 @@ import graft.plans.StableCodegen
   *    filter comparison literals and limit counters out of the
   *    generated Java, so requests of one shape with different keys
   *    share compiled classes (plan text and pushdown unchanged).
+  *  - the opt-in similarity-join rewrites: Hamming and cosine
+  *    threshold joins plan as banded equi-joins through
+  *    [[graft.operators.Banding]], Jaccard threshold joins through
+  *    [[graft.operators.PrefixFilter]].
   *
   * This is the (reference-free) Spark-idiomatic packaging of what the
   * reference wires by hand at site boot
@@ -126,14 +130,14 @@ case class MySqlCiCollation(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 }
 
-/** Shared by the three similarity-join rewrites and
+/** Shared by the Jaccard join rewrite and
   * [[graft.operators.PrefixFilter]]: pin SHUFFLE_MERGE on
-  * the banded/gram equi-join the rewrite introduced (identified by its
+  * the gram equi-join the rewrite introduced (identified by its
   * __graft_ key columns), directly on the Join node's JoinHint — these
   * rules run AFTER EliminateResolvedHint, so a DataFrame-level .hint()
   * would survive as an unprocessed ResolvedHint and fail planning. The
-  * pin exists because the explode each rewrite performs multiplies the
-  * real row count by the prefix/band factor while Catalyst keeps the
+  * pin exists because the prefix explode multiplies the real row count
+  * by the prefix factor while Catalyst keeps the
   * pre-explode sizeInBytes, so an autoBroadcastJoinThreshold decision
   * is made on stats wrong by that factor (measured: a "64 MB" build
   * side that was actually GBs OOMed the broadcast build at the sf1
@@ -150,14 +154,53 @@ private[graft] trait ShuffleJoinPin {
     }
 }
 
+/** The Hamming and cosine join rewrites: each matches one predicate
+  * shape in an inner join's condition, and [[Banding.thresholdJoin]]
+  * plans the banded equi-join for both. A rule keeps its opt-in flag,
+  * its matcher and its band geometry; the `__graft_` guard keeps it
+  * from re-matching its own output on the optimizer's next fixed-point
+  * iteration. */
+private[graft] abstract class BandedThresholdJoin
+    extends Rule[LogicalPlan] with PredicateHelper {
+  protected def spark: SparkSession
+  protected def flag: String
+  protected def bands: Int
+  protected def bandBits: Int
+  protected def signature(operand: Expression): Expression
+  /** (left operand, right operand) of the first conjunct the rule
+    * rewrites, or None. */
+  protected def operands(cond: Expression, left: LogicalPlan,
+      right: LogicalPlan): Option[(Expression, Expression)]
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!spark.conf.get(flag, "false").toBoolean) plan
+    else plan.transformUp {
+      case j @ Join(left, right, Inner, Some(cond), _)
+          if !cond.references.exists(_.name.startsWith("__graft_")) =>
+        operands(cond, left, right)
+          .map { case (a, b) => Banding.thresholdJoin(spark, j, a, b,
+            signature, bands, bandBits) }
+          .getOrElse(j)
+    }
+
+  /** (x, y) ordered as (left, right) when they split cleanly across
+    * the join inputs. */
+  protected def oriented(x: Expression, y: Expression, left: LogicalPlan,
+      right: LogicalPlan): Option[(Expression, Expression)] =
+    if (x.references.subsetOf(left.outputSet) &&
+        y.references.subsetOf(right.outputSet)) Some((x, y))
+    else if (y.references.subsetOf(left.outputSet) &&
+        x.references.subsetOf(right.outputSet)) Some((y, x))
+    else None
+}
+
 /** OPT-IN rewrite of a declarative Hamming-distance join into its
-  * banded physical shape — the third of the similarity-join trio, and
-  * the only one whose predicate is PURE BUILTINS: an inner join whose
-  * condition contains `bit_count(a ^ b) <= k` (one 64-bit signature
-  * per side — SimHash, dHash, any locality-sensitive long) becomes a
-  * hash equi-join on 8 × 8-bit band keys, the original condition kept
-  * as the residual filter. A pair colliding in several bands is
-  * emitted exactly once, at its smallest shared band.
+  * banded physical shape, the only similarity-join rewrite whose
+  * predicate is PURE BUILTINS: an inner join whose condition contains
+  * `bit_count(a ^ b) <= k` (one 64-bit signature per side — SimHash,
+  * dHash, any locality-sensitive long) becomes a hash equi-join on
+  * 8 × 8-bit band keys, the original condition kept as the residual
+  * filter, each pair emitted once at its smallest shared band.
   *
   * STRICT equivalence by the pigeonhole principle whenever the
   * effective threshold is < 8 (a pair within Hamming k < bands must
@@ -165,38 +208,21 @@ private[graft] trait ShuffleJoinPin {
   * than silently losing recall. Opt-in:
   * `spark.graft.hammingRewrite.enabled=true`. */
 case class RewriteHammingThresholdJoin(spark: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper with ShuffleJoinPin {
-  private val bands = 8
-  private val bandBits = 8
-  private val bandMask = 255L
+    extends BandedThresholdJoin {
+  protected val flag = "spark.graft.hammingRewrite.enabled"
+  protected val bands = 8
+  protected val bandBits = 8
+  protected def signature(sig: Expression): Expression = sig
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf
-        .get("spark.graft.hammingRewrite.enabled", "false").toBoolean) plan
-    else plan.transformUp {
-      case j @ Join(left, right, Inner, Some(cond), _)
-          if !cond.references.exists(_.name.startsWith("__graft_")) =>
-        hammingParts(cond, left, right)
-          .map { case (a, b) => rewrite(j, a, b) }
-          .getOrElse(j)
-    }
-  }
-
-  /** (leftSig, rightSig) of the first conjunct shaped
-    * `bit_count(x ^ y) <= k` / `< k` with long signatures splitting
-    * cleanly across the join inputs and an effective threshold the
-    * banding covers exactly (k_eff in [0, bands)). */
-  private def hammingParts(cond: Expression, left: LogicalPlan,
+  /** `bit_count(x ^ y) <= k` / `< k` with long signatures and an
+    * effective threshold the banding covers exactly (k_eff in
+    * [0, bands)). */
+  protected def operands(cond: Expression, left: LogicalPlan,
       right: LogicalPlan): Option[(Expression, Expression)] = {
-    def sides(x: Expression, y: Expression, kEff: Int)
-        : Option[(Expression, Expression)] =
+    def sides(x: Expression, y: Expression, kEff: Int) =
       if (kEff < 0 || kEff >= bands ||
           x.dataType != LongType || y.dataType != LongType) None
-      else if (x.references.subsetOf(left.outputSet) &&
-          y.references.subsetOf(right.outputSet)) Some((x, y))
-      else if (y.references.subsetOf(left.outputSet) &&
-          x.references.subsetOf(right.outputSet)) Some((y, x))
-      else None
+      else oriented(x, y, left, right)
     splitConjunctivePredicates(cond).iterator.flatMap {
       case LessThanOrEqual(BitwiseCount(BitwiseXor(x, y)),
           Literal(k, IntegerType)) =>
@@ -207,85 +233,49 @@ case class RewriteHammingThresholdJoin(spark: SparkSession)
       case _ => None
     }.nextOption()
   }
+}
 
-  private def rewrite(j: Join, aSig: Expression,
-      bSig: Expression): LogicalPlan = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.bridge
-    def banded(plan: LogicalPlan, sigE: Expression, side: String) =
-      bridge.ofRows(spark, plan)
-        .withColumn(s"__graft_hsig_$side", bridge.toColumn(sigE))
-        .withColumn(s"__graft_bk_$side",
-          explode(array((0 until bands).map(bb =>
-            struct(lit(bb).as("band"),
-              shiftright(col(s"__graft_hsig_$side"), bb * bandBits)
-                .bitwiseAND(bandMask).as("key"))): _*)))
-        .withColumn(s"__graft_band_$side", col(s"__graft_bk_$side.band"))
-        .withColumn(s"__graft_key_$side", col(s"__graft_bk_$side.key"))
-    val lb = banded(j.left, aSig, "l")
-    val rb = banded(j.right, bSig, "r")
-    // canonical band — emit a pair only at its smallest shared band —
-    // in PURE integer arithmetic. The former exists() over a generated
-    // sequence is a higher-order expression: it has no codegen, and an
-    // interpreted conjunct forces the ENTIRE join condition (residual
-    // predicate included) onto the interpreted row-at-a-time path.
-    // Measured at the sf10 rehearsal (~4e9 candidate evaluations) that
-    // was the difference between an unfinishable join and a ~minute
-    // one. Arithmetic: fold each 8-bit band of sig_l^sig_r down to a
-    // "differs" flag bit at position 8*band, then "all earlier bands
-    // differ" is one mask compare — (256^band − 1)/255 is the
-    // 0x0101…01 pattern with `band` ones.
-    val x = col("__graft_hsig_l").bitwiseXOR(col("__graft_hsig_r"))
-    val u1 = x.bitwiseOR(shiftright(x, 1))
-    val u2 = u1.bitwiseOR(shiftright(u1, 2))
-    val u3 = u2.bitwiseOR(shiftright(u2, 4))
-    val flags = u3.bitwiseAND(lit(0x0101010101010101L))
-    // shiftleft() takes a column shift amount only through the SQL
-    // form; the compare multiplies through by 255 instead of dividing
-    // (Column `/` is DOUBLE division) — v == (256^band − 1)/255 has
-    // the unique integer solution v·255 == lowMask
-    val lowMask =
-      expr(s"shiftleft(1L, __graft_band_l * $bandBits) - 1L")
-    val noEarlier =
-      flags.bitwiseAND(lowMask) * lit((1L << bandBits) - 1) === lowMask
-    // NO shuffle pin here, deliberately (contrast the jaccard
-    // rewrite): below the broadcast threshold the probe side keeps its
-    // natural partitioning and the build is bands x sig-width rows
-    // (small); the band explosion skews the size estimate by only the
-    // band factor (8x), bounded enough that the planner's own
-    // threshold decision stays safe. ABOVE the threshold the planner
-    // picks a shuffle join on the band keys — and there AQE's
-    // coalescing must not be allowed to shrink the exchange by BYTES:
-    // the shuffled rows are skinny but each carries a share of the
-    // join's quadratic in-bucket candidate mass, which AQE cannot see
-    // (measured at the sf10 rehearsal: 32 shuffle partitions coalesced
-    // to 4, serializing ~4e9 candidate evaluations onto 4 cores). An
-    // explicit user repartition by the exact join keys is respected by
-    // AQE, satisfies the join's required distribution (no second
-    // exchange), and spreads the bands x 2^bandBits key groups across
-    // the session's full shuffle width.
-    val bigBoth = {
-      val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
-      thr >= 0 && j.left.stats.sizeInBytes > thr &&
-        j.right.stats.sizeInBytes > thr
-    }
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val (lbp, rbp) =
-      if (!bigBoth) (lb, rb)
-      else (lb.repartition(nParts, col("__graft_band_l"),
-              col("__graft_key_l")),
-            rb.repartition(nParts, col("__graft_band_r"),
-              col("__graft_key_r")))
-    val joined = lbp.join(rbp,
-        col("__graft_band_l") === col("__graft_band_r") &&
-          col("__graft_key_l") === col("__graft_key_r") &&
-          noEarlier &&
-          bridge.toColumn(j.condition.get),
-        "inner")
-      .select((j.left.output ++ j.right.output)
-        .map(a => bridge.toColumn(a)): _*)
-    bridge.planOf(joined)
-  }
+/** OPT-IN rewrite of a declarative similarity join into its banded-LSH
+  * physical shape: an inner join whose condition contains
+  * `cosine_sim(a, b) >= t` (a from the left, b from the right) becomes
+  * a hash equi-join on hyperplane-LSH band keys — each side computes a
+  * 16-bit signature at scan time and explodes into 8 × 2-bit band
+  * keys, so only rows colliding in some band are ever paired; the
+  * original condition (cosine threshold included) remains as the
+  * residual filter, and each pair is emitted once, at its smallest
+  * shared band, with no global dedup shuffle.
+  *
+  * This completes the reference's declarative identity — SQL in,
+  * optimized plan out (`DistributedQueryService/QueryService.asmx.cs:
+  * 497-506`) — for the similarity-join extension surface: users write
+  * the O(n²) predicate; the engine plans the banded join that survives
+  * 100 TB (the nested-loop alternative broadcasts a full side and
+  * compares every pair).
+  *
+  * Enabled per session with `spark.graft.cosineRewrite.enabled=true`
+  * and deliberately OFF by default: banding is a recall tradeoff
+  * (a qualifying pair sharing no band is lost — the standard LSH
+  * contract, tunable via the band structure), not a strict
+  * equivalence, so the user must ask for it. */
+case class RewriteCosineThresholdJoin(spark: SparkSession)
+    extends BandedThresholdJoin {
+  private val bits = 16
+  protected val flag = "spark.graft.cosineRewrite.enabled"
+  protected val bands = 8
+  protected val bandBits = bits / bands
+  protected def signature(vec: Expression): Expression =
+    VectorFunctions.HyperplaneSignature(vec, bits)
+
+  /** `cosine_sim(x, y) >= t` / `> t`. */
+  protected def operands(cond: Expression, left: LogicalPlan,
+      right: LogicalPlan): Option[(Expression, Expression)] =
+    splitConjunctivePredicates(cond).iterator.flatMap {
+      case GreaterThanOrEqual(c: CosineSimilarity, Literal(_, DoubleType)) =>
+        oriented(c.left, c.right, left, right)
+      case GreaterThan(c: CosineSimilarity, Literal(_, DoubleType)) =>
+        oriented(c.left, c.right, left, right)
+      case _ => None
+    }.nextOption()
 }
 
 /** OPT-IN rewrite of a declarative text-similarity join into its
@@ -841,175 +831,6 @@ object RewriteJaccardThresholdJoin {
       v._3.set(accessTick.incrementAndGet())
       v
     }
-}
-
-/** OPT-IN rewrite of a declarative similarity join into its banded-LSH
-  * physical shape: an inner join whose condition contains
-  * `cosine_sim(a, b) >= t` (a from the left, b from the right) becomes
-  * a hash equi-join on hyperplane-LSH band keys — each side computes a
-  * 16-bit signature at scan time, explodes into 8 × 2-bit band keys,
-  * and only rows colliding in some band are ever paired; the original
-  * condition (cosine threshold included) remains as the residual
-  * filter. A pair sharing several bands is emitted exactly once, at
-  * its smallest shared band (the canonical-band conjunct checks that
-  * no earlier band collides), so no global dedup shuffle is needed.
-  *
-  * This completes the reference's declarative identity — SQL in,
-  * optimized plan out (`DistributedQueryService/QueryService.asmx.cs:
-  * 497-506`) — for the similarity-join extension surface: users write
-  * the O(n²) predicate; the engine plans the banded join that survives
-  * 100 TB (the nested-loop alternative broadcasts a full side and
-  * compares every pair).
-  *
-  * Enabled per session with `spark.graft.cosineRewrite.enabled=true`
-  * and deliberately OFF by default: banding is a recall tradeoff
-  * (a qualifying pair sharing no band is lost — the standard LSH
-  * contract, tunable via the band structure), not a strict
-  * equivalence, so the user must ask for it. */
-case class RewriteCosineThresholdJoin(spark: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper with ShuffleJoinPin {
-  private val bits = 16
-  private val bands = 8
-  private val bandBits = bits / bands
-  private val bandMask = (1L << bandBits) - 1
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf
-        .get("spark.graft.cosineRewrite.enabled", "false").toBoolean) plan
-    else plan.transformUp {
-      // the __graft_ guard keeps the rule from re-matching its own
-      // output on the optimizer's next fixed-point iteration
-      case j @ Join(left, right, Inner, Some(cond), _)
-          if !cond.references.exists(_.name.startsWith("__graft_")) =>
-        cosineSides(cond, left, right)
-          .map { case (a, b) => rewrite(j, a, b) }
-          .getOrElse(j)
-    }
-  }
-
-  /** The (leftVector, rightVector) of the first conjunct shaped
-    * `cosine_sim(x, y) >= t` / `> t` whose vector sides split cleanly
-    * across the join inputs. */
-  private def cosineSides(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Option[(Expression, Expression)] = {
-    def sides(c: CosineSimilarity): Option[(Expression, Expression)] =
-      if (c.left.references.subsetOf(left.outputSet) &&
-          c.right.references.subsetOf(right.outputSet))
-        Some((c.left, c.right))
-      else if (c.right.references.subsetOf(left.outputSet) &&
-          c.left.references.subsetOf(right.outputSet))
-        Some((c.right, c.left))
-      else None
-    splitConjunctivePredicates(cond).iterator.flatMap {
-      case GreaterThanOrEqual(c: CosineSimilarity, Literal(_, DoubleType)) =>
-        sides(c)
-      case GreaterThan(c: CosineSimilarity, Literal(_, DoubleType)) =>
-        sides(c)
-      case _ => None
-    }.nextOption()
-  }
-
-  /** Salt fan-out: the (band, key) space is only bands × 2^bandBits
-    * = 32 groups, so at corpus scale a key-grouped join serializes
-    * each group's quadratic candidate mass into ONE task — measured
-    * at the sf10 rehearsal, where the whole 200 k-vector join ran on
-    * ~4 of 32 cores behind a handful of stragglers. Salting the probe
-    * side by a hash of its vector and replicating the build side
-    * across all salts multiplies distinct join keys (and hence
-    * schedulable tasks) by `salts` without changing the emitted pair
-    * set — the same replicate-the-other-side pattern as
-    * join_skew_salted. 8 salts × 32 keys = 256 groups keeps every
-    * core busy while the build side's shuffle volume grows only 8×
-    * (rows are skinny: id + vector + sig). Salting engages ONLY in
-    * the bigBoth (shuffle) branch below: in the broadcast branch the
-    * build side already carries the 8× band explode that Catalyst's
-    * stats cannot see (Generate inflation), and compounding a salt
-    * explode would make a side estimated under
-    * autoBroadcastJoinThreshold ~64× larger at build time — the
-    * exact stats-blind overflow the shuffle pin exists to avoid. */
-  private val salts = 8
-
-  private def rewrite(j: Join, aVec: Expression,
-      bVec: Expression): LogicalPlan = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.bridge
-    def banded(plan: LogicalPlan, vec: Expression, side: String) = {
-      val df = bridge.ofRows(spark, plan)
-        .withColumn(s"__graft_sig_$side", bridge.toColumn(
-          VectorFunctions.HyperplaneSignature(vec, bits)))
-      df.withColumn(s"__graft_bk_$side",
-          explode(array((0 until bands).map(bb =>
-            struct(lit(bb).as("band"),
-              shiftright(col(s"__graft_sig_$side"), bb * bandBits)
-                .bitwiseAND(bandMask).as("key"))): _*)))
-        .withColumn(s"__graft_band_$side", col(s"__graft_bk_$side.band"))
-        .withColumn(s"__graft_key_$side", col(s"__graft_bk_$side.key"))
-    }
-    val lb = banded(j.left, aVec, "l")
-    val rb = banded(j.right, bVec, "r")
-    // canonical band — emit a pair only at its smallest shared band —
-    // in PURE integer arithmetic (see RewriteHammingThresholdJoin for
-    // the rationale: the former exists() higher-order conjunct forced
-    // the whole join condition, cosine included, onto the interpreted
-    // path — at the sf10 rehearsal's ~4e10 candidate evaluations that
-    // made the join unfinishable). For 2-bit bands: collapse each band
-    // of sig_l^sig_r to a "differs" flag at bit 2*band, then "all
-    // earlier bands differ" is one mask compare — (4^band − 1)/3 is
-    // the 0b0101…01 pattern with `band` ones.
-    val x = col("__graft_sig_l").bitwiseXOR(col("__graft_sig_r"))
-    val flags = x.bitwiseOR(shiftright(x, 1))
-      .bitwiseAND(lit(0x5555555555555555L))
-    // SQL-form shiftleft for the column shift amount; multiply-through
-    // compare instead of integer division (see the hamming rewrite)
-    val lowMask =
-      expr(s"shiftleft(1L, __graft_band_l * $bandBits) - 1L")
-    val noEarlier =
-      flags.bitwiseAND(lowMask) * lit((1L << bandBits) - 1) === lowMask
-    // NO shuffle pin here, deliberately (contrast the jaccard
-    // rewrite): below the broadcast threshold the probe side keeps its
-    // natural partitioning and the build is bands x sig-width rows
-    // (small) — measured at the sf1 rehearsal, where a key-pinned
-    // shuffle plan ran 25x+ past the broadcast plan's time. ABOVE the
-    // threshold the planner picks a shuffle join — and there the
-    // explicit repartition by the salted join keys stops AQE from
-    // coalescing the exchange by BYTES (the shuffled rows are skinny
-    // but carry the join's quadratic in-bucket candidate mass, which
-    // AQE cannot see; measured at sf10: 32 partitions coalesced to 4,
-    // serializing the whole join onto 4 cores). The salt keeps the
-    // schedulable group count at salts x bands x 2^bandBits = 256
-    // rather than 32.
-    val bigBoth = {
-      val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
-      thr >= 0 && j.left.stats.sizeInBytes > thr &&
-        j.right.stats.sizeInBytes > thr
-    }
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val (lbp, rbp, saltConjunct) =
-      if (!bigBoth) (lb, rb, lit(true))
-      else {
-        // salt columns exist only on this branch (see `salts` doc):
-        // probe side hashed, build side replicated across all salts
-        val lbs = lb.withColumn("__graft_salt_l",
-          pmod(xxhash64(bridge.toColumn(aVec)), lit(salts.toLong)))
-        val rbs = rb.withColumn("__graft_salt_r",
-          explode(array((0 until salts).map(s => lit(s.toLong)): _*)))
-        (lbs.repartition(nParts, col("__graft_band_l"),
-            col("__graft_key_l"), col("__graft_salt_l")),
-          rbs.repartition(nParts, col("__graft_band_r"),
-            col("__graft_key_r"), col("__graft_salt_r")),
-          col("__graft_salt_l") === col("__graft_salt_r"))
-      }
-    val joined = lbp.join(rbp,
-        col("__graft_band_l") === col("__graft_band_r") &&
-          col("__graft_key_l") === col("__graft_key_r") &&
-          saltConjunct &&
-          noEarlier &&
-          bridge.toColumn(j.condition.get),
-        "inner")
-      .select((j.left.output ++ j.right.output)
-        .map(a => bridge.toColumn(a)): _*)
-    bridge.planOf(joined)
-  }
 }
 
 /** Push the LEFT-side conjuncts of a Filter below an [[AsOfJoinPlan]].

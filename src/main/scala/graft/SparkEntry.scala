@@ -2002,7 +2002,7 @@ object SparkEntry {
 
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
     // 8 bands ⇒ guaranteed recall for Hamming ≤ 5 (planted near-dups in
-    // the testdata span Hamming 0–5, measured by graft.DedupRecall)
+    // the testdata span Hamming 0–5, BASELINE.md r1 SimHash banding)
     Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 5, bands = 8)
 
   /** Operational knob for the candidate-pair budget (default 1e8 —

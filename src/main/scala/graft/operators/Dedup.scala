@@ -741,13 +741,8 @@ object Dedup {
       bands: Int = 4, maxBucket: Int = 500): DataFrame = {
     require(64 % bands == 0 && maxHamming < bands,
       "need maxHamming < bands (pigeonhole) and bands | 64")
-    val bandBits = 64 / bands
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
     val banded = sigs.select(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * bandBits).bitwiseAND(mask)
-            .as("bkey"))): _*)).as("bk"))
+      explode(Banding.keys(col("sig"), bands, 64 / bands)).as("bk"))
       .select(col("doc_id"), col("sig"),
         col("bk.band").as("band"), col("bk.bkey").as("bkey"))
     // ONE shuffle (groupBy band key) builds each bucket; HammingPairs
@@ -1083,8 +1078,27 @@ object Dedup {
     math.min(math.floor(estPairs / (1 << 20)) + 1, Int.MaxValue.toDouble)
       .toInt
 
+  /** The embedding-LSH band keys ([[Banding.keys]]) for a 64-bit
+    * hyperplane signature column: 8 bands × 8 bits. Shared between the
+    * batch operator and the streaming twin so the two bandings cannot
+    * drift apart (same discipline as [[minhashBandKeys]]).
+    *
+    * Geometry is the scale axis of this operator: key space per band
+    * is 2^bits, so expected bucket occupancy is N/2^bits per band and
+    * the in-bucket pairwise work is (N/2^bits)² per bucket. The former
+    * 4×4-bit banding had 16 keys per band — occupancy grew LINEARLY
+    * with the corpus (12.5 k members per bucket at the 100× rehearsal)
+    * until the `maxBucket` cap silently evicted 60 % of all vectors
+    * from the report. 8×8 keeps the collision probability for true
+    * near-dups essentially unchanged (p^8 per band ≈ 0.43 at
+    * cosine 0.95, 1-(1-p^8)^8 ≈ 0.99 over 8 bands, vs ≈ 0.985 for
+    * 4×4) while dividing occupancy by 16 — the cap stays dormant two
+    * decades above the driver gate. */
+  private[graft] def embeddingBandKeys(sig: Column): Column =
+    Banding.keys(sig, bands = 8, bandBits = 8)
+
   /** Embedding near-dup: each vector's nearest neighbor by cosine, via
-    * hyperplane-LSH blocking (16-bit signature, band-split 4×4 bits);
+    * hyperplane-LSH blocking (64-bit signature, [[embeddingBandKeys]]);
     * emits (vec_id, nn_id, cosine, is_dup = cosine ≥ threshold), one
     * row per vector that shares ≥1 band — callers wanting hard dedup
     * filter on is_dup.
@@ -1100,28 +1114,6 @@ object Dedup {
     * ≤ 4-rows-per-vector reduce. Degenerate vectors (null/zero-norm)
     * cannot be scored and are skipped; `maxBucket` caps pathological
     * buckets (keep-smallest ids, the shared cap semantics). */
-  /** The embedding-LSH band-key structs for a 64-bit hyperplane
-    * signature column: 8 bands × 8 bits. Shared between the batch
-    * operator and the streaming twin so the two bandings cannot drift
-    * apart (same discipline as [[minhashBandKeys]]).
-    *
-    * Geometry is the scale axis of this operator: key space per band
-    * is 2^bits, so expected bucket occupancy is N/2^bits per band and
-    * the in-bucket pairwise work is (N/2^bits)² per bucket. The former
-    * 4×4-bit banding had 16 keys per band — occupancy grew LINEARLY
-    * with the corpus (12.5 k members per bucket at the 100× rehearsal)
-    * until the `maxBucket` cap silently evicted 60 % of all vectors
-    * from the report. 8×8 keeps the collision probability for true
-    * near-dups essentially unchanged (p^8 per band ≈ 0.43 at
-    * cosine 0.95, 1-(1-p^8)^8 ≈ 0.99 over 8 bands, vs ≈ 0.985 for
-    * 4×4) while dividing occupancy by 16 — the cap stays dormant two
-    * decades above the driver gate. */
-  private[graft] def embeddingBandKeys(sig: org.apache.spark.sql.Column)
-      : Seq[org.apache.spark.sql.Column] =
-    (0 until 8).map(b =>
-      struct(lit(b).as("band"),
-        shiftright(sig, b * 8).bitwiseAND(0xffL).as("bkey")))
-
   def embeddingNearDup(
       embeddings: DataFrame, threshold: Double = 0.95,
       maxBucket: Int = 4096): DataFrame = {
@@ -1129,7 +1121,7 @@ object Dedup {
       .select(col("vec_id"), col("embedding"),
         hyperplane_sig(col("embedding"), 64).as("sig"))
       .select(col("vec_id"), col("embedding"),
-        explode(array(embeddingBandKeys(col("sig")): _*)).as("bk"))
+        explode(embeddingBandKeys(col("sig"))).as("bk"))
       .select(col("vec_id"), col("embedding"),
         col("bk.band").as("band"), col("bk.bkey").as("bkey"))
     val best = banded

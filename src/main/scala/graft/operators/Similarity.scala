@@ -59,10 +59,10 @@ object Similarity {
     * into `bands`; query and corpus vectors sharing any band bucket are
     * scored. Recall is tunable via bits/bands (fewer bits per band →
     * more candidates → higher recall, higher cost). */
-  /* Default bits/bands tuned on the driver testdata (AnnRecall): 2-bit
-   * × 8-band signatures give recall@10 ≈ 0.97 vs brute force even on
-   * near-random embeddings; clustered real embeddings prune far better
-   * at the same setting. */
+  /* Default bits/bands tuned on the driver testdata (BASELINE.md, r1
+   * and the round-14 ANN anchors): 2-bit × 8-band signatures give
+   * recall@10 ≈ 0.97 vs brute force even on near-random embeddings;
+   * clustered real embeddings prune far better at the same setting. */
   def lshTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -72,21 +72,13 @@ object Similarity {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(bits % bands == 0)
     val bandBits = bits / bands
-    // Scala masks shift counts mod 64, so (1L << 64) - 1 would be 0 —
-    // a 64-bit band must mask to ALL bits, not none (bits=64, bands=1
-    // otherwise silently collapsed every vector into one bucket: a
-    // full cross product wearing an LSH label)
-    val mask = if (bandBits >= 64) -1L else (1L << bandBits) - 1
 
     def banded(df: DataFrame, idAs: String, embAs: String,
         sigAs: String): DataFrame =
       df.select(col("vec_id").as(idAs), col("embedding").as(embAs),
         hyperplane_sig(col("embedding"), bits).as(sigAs))
         .select(col(idAs), col(embAs), col(sigAs),
-          explode(array((0 until bands).map(b =>
-            struct(lit(b).as("band"),
-              shiftright(col(sigAs), b * bandBits).bitwiseAND(mask)
-                .as("bkey"))): _*)).as("bk"))
+          explode(Banding.keys(col(sigAs), bands, bandBits)).as("bk"))
         .select(col(idAs), col(embAs), col(sigAs),
           col("bk.band").as("band"), col("bk.bkey").as("bkey"))
 
@@ -103,15 +95,10 @@ object Similarity {
     // embeddings) plus a full exchange of the scored stream for the
     // distinct. At 100 TB the distinct is a candidate-sized shuffle;
     // the canonical band is a scan-stage predicate.
-    val smallestSharedBand = (0 until bands).map { bp =>
-      when(lit(bp) < col("band"),
-        shiftright(col("c_sig").bitwiseXOR(col("q_sig")),
-          bp * bandBits).bitwiseAND(mask) =!= 0)
-        .otherwise(lit(true))
-    }.reduce(_ && _)
     val scored = c.join(broadcast(q), Seq("band", "bkey"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .filter(smallestSharedBand)
+      .filter(Banding.noSharedBandBelow(col("c_sig"), col("q_sig"),
+        col("band"), bands, bandBits))
       .select(col("query_id"), col("neighbor_id"),
         cosine_sim(col("q_emb"), col("c_emb")).as("cosine"))
       .filter(col("cosine").isNotNull) // unscorable ≠ a ranked neighbor

@@ -430,8 +430,7 @@ object DocsStream {
       .select(col("vec_id"), col("embedding"),
         VectorFunctions.hyperplane_sig(col("embedding"), 64).as("sig"))
       .select(col("vec_id"), col("embedding"),
-        explode(array(
-          graft.operators.Dedup.embeddingBandKeys(col("sig")): _*))
+        explode(graft.operators.Dedup.embeddingBandKeys(col("sig")))
           .as("bk"))
       .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
         col("vec_id"), col("embedding"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.functions._
@@ -180,20 +180,48 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  /** The cosine rewrite's fixture: 12 one-hot vectors over 3 axes,
+    * self-joined on `cosine_sim >= 0.9` into (id_a, id_b) pairs. */
+  private def cosineJoin(s: SparkSession): DataFrame = {
+    import s.implicits._
+    def vec(axis: Int): Array[Float] = {
+      val v = new Array[Float](8); v(axis) = 1f; v
+    }
+    val rows = (0 until 12).map(i => (i.toLong, vec(i % 3)))
+    val a = rows.toDF("id_a", "emb_a")
+    val b = rows.toDF("id_b", "emb_b")
+    import graft.functions.VectorFunctions.cosine_sim
+    a.join(b,
+        cosine_sim(col("emb_a"), col("emb_b")) >= 0.9 &&
+          col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+  }
+
+  /** The Hamming rewrite's fixture: four literal signatures — the rule
+    * matches ANY long sides, no coupling to how the signature was
+    * produced — self-joined on `bit_count(sig_a ^ sig_b) <= k`. */
+  private def hammingJoin(s: SparkSession, k: Int): DataFrame = {
+    import s.implicits._
+    val sigs = Seq(
+      (1L, 0L),
+      (2L, 7L),                  // hamming 3 from id 1
+      (3L, 0L),                  // exact dup of id 1
+      (4L, 0x0f0f0f0f0f0f0f0fL)) // far from everything
+      .toDF("id", "sig")
+    val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
+    val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
+    a.join(b,
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= k &&
+          col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+  }
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+
   test("cosine-threshold join rewrites to a banded hash join (opt-in)") {
     withExtSession { s =>
-      import s.implicits._
-      def vec(axis: Int): Array[Float] = {
-        val v = new Array[Float](8); v(axis) = 1f; v
-      }
-      val rows = (0 until 12).map(i => (i.toLong, vec(i % 3)))
-      val a = rows.toDF("id_a", "emb_a")
-      val b = rows.toDF("id_b", "emb_b")
-      import graft.functions.VectorFunctions.cosine_sim
-      def q = a.join(b,
-          cosine_sim(col("emb_a"), col("emb_b")) >= 0.9 &&
-            col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
+      def q = cosineJoin(s)
 
       s.conf.set("spark.graft.cosineRewrite.enabled", "false")
       val exact = q.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -541,21 +569,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
   test("hamming-threshold join rewrites to a banded equi-join, exactly") {
     withExtSession { s =>
-      import s.implicits._
-      // literal signatures — the rule matches ANY long sides, no
-      // coupling to how the signature was produced
-      val sigs = Seq(
-        (1L, 0L),
-        (2L, 7L),                  // hamming 3 from id 1
-        (3L, 0L),                  // exact dup of id 1
-        (4L, 0x0f0f0f0f0f0f0f0fL)) // far from everything
-        .toDF("id", "sig")
-      val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-      val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-      def q = a.join(b,
-          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 3 &&
-            col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
+      def q = hammingJoin(s, 3)
 
       s.conf.set("spark.graft.hammingRewrite.enabled", "false")
       val exact = q.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -577,14 +591,90 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(exact === Seq((1L, 2L), (1L, 3L), (2L, 3L)))
 
       // k >= bands would lose recall — must be left unrewritten
-      def wide = a.join(b,
-          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 9 &&
-            col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
+      def wide = hammingJoin(s, 9)
       assert(wide.queryExecution.executedPlan.toString
         .contains("BroadcastNestedLoopJoin"))
       assert(wide.count() === 3L)
       s.conf.unset("spark.graft.hammingRewrite.enabled")
+    }
+  }
+
+  test("Dedup.hammingPairsFromSigs and the hamming rewrite emit the " +
+      "same pairs") {
+    withExtSession { s =>
+      import s.implicits._
+      val rnd = new scala.util.Random(11)
+      // 30 random signatures, each with a copy 0–4 bit flips away
+      // (4 flips is past k = 3 unless two flips hit one bit)
+      val sigs = (0 until 30).flatMap { i =>
+        val sig = rnd.nextLong()
+        val near = (0 until i % 5)
+          .foldLeft(sig)((acc, _) => acc ^ (1L << rnd.nextInt(64)))
+        Seq((2L * i, sig), (2L * i + 1, near))
+      }.toDF("doc_id", "sig")
+      val operator = pairs(graft.operators.Dedup.hammingPairsFromSigs(
+        sigs, maxHamming = 3, bands = 8).select("id_a", "id_b"))
+      s.conf.set("spark.graft.hammingRewrite.enabled", "true")
+      val a = sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
+      val b = sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
+      val q = a.join(b,
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= 3 &&
+            col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+      assert(!q.queryExecution.executedPlan.toString
+        .contains("NestedLoopJoin"))
+      assert(operator.nonEmpty)
+      assert(pairs(q) === operator)
+      s.conf.unset("spark.graft.hammingRewrite.enabled")
+    }
+  }
+
+  /** (nested-loop rows, rewritten rows, the rewritten query's executed
+    * plan) of `q` under `flag`, with the session's other confs. */
+  private def rewriteVsNestedLoop(s: SparkSession, flag: String,
+      q: () => DataFrame): (Seq[(Long, Long)], Seq[(Long, Long)], String) = {
+    s.conf.set(flag, "false")
+    val exact = pairs(q())
+    s.conf.set(flag, "true")
+    val df = q()
+    val rewritten = pairs(df)
+    s.conf.unset(flag)
+    (exact, rewritten, df.queryExecution.executedPlan.toString)
+  }
+
+  private def bandedFixtures(s: SparkSession) = Seq(
+    ("spark.graft.cosineRewrite.enabled", () => cosineJoin(s)),
+    ("spark.graft.hammingRewrite.enabled", () => hammingJoin(s, 3)))
+
+  test("with broadcast disabled the banded rewrites repartition their " +
+      "band exchange, so AQE cannot coalesce it") {
+    withExtSession { s =>
+      s.conf.set("spark.sql.adaptive.enabled", "true")
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((flag, q) <- bandedFixtures(s)) {
+        val (exact, rewritten, plan) = rewriteVsNestedLoop(s, flag, q)
+        assert(!plan.contains("NestedLoopJoin") &&
+          !plan.contains("CartesianProduct"), s"$flag did not fire:\n$plan")
+        assert(rewritten === exact, flag)
+        assert(plan.contains("REPARTITION_BY_NUM"), s"$flag:\n$plan")
+        assert(!plan.contains("coalesced"), s"$flag:\n$plan")
+      }
+    }
+  }
+
+  test("above the broadcast threshold the banded rewrites shuffle on " +
+      "band keys, salted for cosine only, with the nested-loop rows") {
+    withExtSession { s =>
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      for ((flag, q) <- bandedFixtures(s)) {
+        val (exact, rewritten, plan) = rewriteVsNestedLoop(s, flag, q)
+        assert(rewritten === exact, flag)
+        assert(plan.contains("REPARTITION_BY_NUM"), s"$flag:\n$plan")
+        // 8 x 2-bit bands are 32 key groups, salted 8 ways to 256;
+        // 8 x 8-bit bands are 2048 groups already
+        assert(plan.contains("__graft_salt") ===
+          flag.contains("cosine"), s"$flag:\n$plan")
+      }
     }
   }
 

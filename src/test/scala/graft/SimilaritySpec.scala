@@ -136,6 +136,42 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r.nonEmpty && r.forall(_.getDouble(2) <= 1.0 + 1e-9))
   }
 
+  test("LSH with 3-bit bands (bits=24, bands=8) ranks exactly the pairs " +
+      "sharing a band, each once") {
+    // random 8-dim vectors: 24 x 8 is a width no declared query uses,
+    // so only this pin covers a band width that does not divide 8
+    val rnd = new scala.util.Random(5)
+    val vecs = (0 until 40).map(i =>
+      (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val q = vecs.filter(col("vec_id") % 5 === 0)
+    import graft.functions.VectorFunctions.{cosine_sim, hyperplane_sig}
+    // every (query, corpus) pair with both signatures, scored
+    val all = q.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        hyperplane_sig(col("embedding"), 24).as("qs"))
+      .crossJoin(vecs.select(col("vec_id").as("cid"),
+        col("embedding").as("ce"),
+        hyperplane_sig(col("embedding"), 24).as("cs")))
+      .select(col("qid"), col("cid"), col("qs"), col("cs"),
+        cosine_sim(col("qe"), col("ce")).as("cosine"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4)))
+    def shareBand(a: Long, b: Long) =
+      (0 until 8).exists(band => ((a ^ b) >>> (3 * band) & 7L) == 0)
+    val k = 5
+    val want = all.filter { case (qid, cid, qs, cs, _) =>
+        qid != cid && shareBand(qs, cs) }
+      .groupBy(_._1).toSeq.flatMap { case (qid, ps) =>
+        ps.sortBy(p => (-p._5, p._2)).take(k).zipWithIndex
+          .map { case (p, i) => (qid, p._2, p._5, i + 1) }
+      }.sortBy(r => (r._1, r._4))
+    val got = Similarity.lshTopK(vecs, q, k = k, bits = 24, bands = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getInt(3))).toSeq
+    assert(want.nonEmpty)
+    assert(got === want)
+  }
+
   test("PQ with rerank covering the corpus equals brute force exactly") {
     // the ADC prelim stage cannot drop anything when rerank >= corpus,
     // so the exact-cosine rerank must reproduce brute force verbatim
