@@ -13,10 +13,7 @@ out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 con = duckdb.connect()
 for p in glob.glob(f"{sf_dir}/*.parquet"):
     name = os.path.basename(p)[:-len(".parquet")]
-    # driver testdata is a single file per table; ScaleUp rehearsal
-    # corpora are Spark-written DIRECTORIES of part files
-    src = f"{p}/*.parquet" if os.path.isdir(p) else p
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{src}')")
+    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails, okays, skips = [], [], []

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   *
@@ -90,63 +88,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — e.g.
-    // local-cluster[4,8,8192] runs the identical gate across real
-    // executor JVMs (serialization boundaries, real broadcasts,
-    // executor-side classloading), the multi-JVM rehearsal for code
-    // that must survive a 1000-executor cluster
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      // SPARK_GRAFT_SHUFFLE (dev knob): shuffle partitions default to
-      // the core count — right for the driver's sf0.1 gate — but at a
-      // fixed count the per-task sort size grows linearly with the
-      // corpus until it spills; a real cluster scales this with data
-      // (AQE coalesces the small case back down). The override lets
-      // scale rehearsals measure that effect instead of guessing.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // SPARK_GRAFT_BCAST (dev knob, bytes): like SPARK_GRAFT_SHUFFLE
-      // this models a knob a real cluster turns with scale — the
-      // 64 MB default is sized for the driver's sf0.1 gate, while the
-      // regime-switching operators (pageRank/BFS pick broadcast vs
-      // pinned-layout loops by this threshold) cross it between sf10
-      // and sf30 (the rank frame is N·24 B ≈ 115 MB at sf30), and a
-      // production cluster with multi-GB executors would raise it
-      // rather than pay the pinned regime's per-round edge shuffle.
-      // Scale rehearsals measure both sides of the crossover instead
-      // of guessing.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", (64 << 20).toString))
-      // serialized storage blocks (the pinned-regime graph frames)
-      // compress with lz4: at the sf100 rehearsal the UNcompressed
-      // 1.17 B-row SER edge frame tipped total transient disk past
-      // the box (fill-then-abort); compressed, pagerank completes
-      // with ~20 GB headroom. Deserialized levels (the default
-      // localCheckpoint storage everywhere else) are unaffected, so
-      // the sf0.1 gate pays nothing.
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-    // executor JVMs (any non-local master) need the compiled graft
-    // classes on their classpath — expressions/encoders deserialize
-    // executor-side — and a memory setting that fits the worker size
-    if (!master.startsWith("local[")) {
-      builder
-        .config("spark.executor.extraClassPath",
-          sys.env.getOrElse("SPARK_GRAFT_CLASSES",
-            new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
 
     /** Deterministically release the state a query leaves behind:
       * dataset caches and persisted / localCheckpointed RDD blocks
@@ -193,14 +135,6 @@ object Bench {
       s"unknown bench query: $n"))
 
     run("agg_q1") // warm-up (untimed): JIT, codegen, catalog, file listing
-    // optional extra passes (stderr only) to expose state-accumulation
-    // drift: the LAST pass is the one reported on stdout
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "1").toInt
-    (1 until passes).foreach { p =>
-      val r = subset.map(n => n -> run(n))
-      System.err.println(
-        f"[bench] pass $p total: ${r.map(_._2).filter(_ >= 0).sum}%.3f s")
-    }
     val results = subset.map(n => n -> run(n))
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }

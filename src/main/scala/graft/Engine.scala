@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.plans.PlanJson
 import graft.sources.Tables
@@ -114,32 +115,53 @@ final class Engine(val spark: SparkSession, val sfDir: String) {
 }
 
 object Engine {
-  /** Session defaults chosen for the grading environment (local[32],
-    * single JVM) but expressed the way a 1000-executor cluster would want
-    * them: AQE on (runtime join strategy + skew handling + partition
-    * coalescing), explicit shuffle parallelism, UTC. */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32)
-      : SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft")
+  /** The engine's one session policy, as a conf: every main and the
+    * test suite start from it. The defaults suit one 32-core JVM
+    * (local[32]) but are expressed the way a 1000-executor cluster
+    * would want them: AQE on (runtime join strategy + skew handling +
+    * partition coalescing), explicit shuffle parallelism, UTC. A master
+    * other than `local[n]` starts executor JVMs, which get the compiled
+    * graft classes and a memory size. */
+  def sessionConf(master: String, shufflePartitions: Int): SparkConf = {
+    val conf = new SparkConf(false)
+      .setMaster(master)
+      .setAppName("graft")
       // library sessions carry the full extension surface (SQL
       // functions, as-of strategy, as-of filter pushdown) by default —
       // same wiring a cluster gets from spark.sql.extensions
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .set("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .set("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // Spark's 10 MB default broadcast threshold predates 100+ GB
       // executors; 64 MB lets AQE turn e.g. the dedup verification
       // joins into broadcasts when the build side is genuinely small,
       // while at corpus scale those sides exceed the threshold and the
       // planner correctly keeps shuffle joins.
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
+      .set("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
+      // serialized storage blocks (the pinned-regime graph frames)
+      // compress with lz4: uncompressed, the edge frame of a 1.17 B-row
+      // graph filled a box's transient disk. Deserialized levels (the
+      // default localCheckpoint storage) are unaffected.
+      .set("spark.rdd.compress", "true")
+      .set("spark.sql.adaptive.enabled", "true")
+      .set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .set("spark.sql.adaptive.skewJoin.enabled", "true")
+      .set("spark.sql.session.timeZone", "UTC")
+      .set("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .set("spark.ui.enabled", "false")
+    // executor JVMs deserialize graft expressions and encoders, so they
+    // need the compiled classes on their classpath
+    if (!master.startsWith("local[")) {
+      conf.set("spark.executor.extraClassPath",
+        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
+      conf.set("spark.executor.memory", "6g")
+    }
+    conf
+  }
+
+  def session(master: String = "local[32]", shufflePartitions: Int = 32)
+      : SparkSession = {
+    val spark = SparkSession.builder()
+      .config(sessionConf(master, shufflePartitions))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fault-injection rehearsal (dev tooling, not part of the engine):
   * run one gate query on `local-cluster[4,8,8192]` — four REAL
   * executor JVMs — with the reliable-checkpoint seam on, SIGKILL one
@@ -30,21 +28,9 @@ object FaultDrill {
     val name = args(1)
     val outDir = args(2)
     val killAfterSec = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local-cluster[4,8,8192]")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.memory", "6g")
-      .config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      .config(graft.operators.Iterate.ReliableKey, "true")
-      .config(graft.operators.Iterate.IntervalKey, "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("local-cluster[4,8,8192]", 32)
+    spark.conf.set(graft.operators.Iterate.ReliableKey, "true")
+    spark.conf.set(graft.operators.Iterate.IntervalKey, "1")
     spark.sparkContext.setCheckpointDir("/tmp/graft_fault_ckpt")
     graft.sources.Tables.register(spark, sfDir)
 

@@ -2005,23 +2005,13 @@ object SparkEntry {
     // the testdata span Hamming 0–5, BASELINE.md r1 SimHash banding)
     Dedup.simhashPairs(t(s, dir, "documents"), maxHamming = 5, bands = 8)
 
-  /** Operational knob for the candidate-pair budget (default 1e8 —
-    * sized for one executor-disk's worth of verify-join spill).
-    * Rehearsals raise it to measure the exact un-degraded operator at
-    * corpus scales where the default budget's documented
-    * keep-rarest-grams degrade would engage; the driver gate never
-    * sets it. */
-  private def ngramBudget: Long =
-    sys.env.getOrElse("SPARK_GRAFT_NGRAM_BUDGET", "100000000").toLong
-
   private def qDedupNgram(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccard(t(s, dir, "documents"), pairBudget = ngramBudget)
+    Dedup.ngramJaccard(t(s, dir, "documents"))
 
   private def qDedupNgramDecisions(s: SparkSession, dir: String)
       : DataFrame = {
     val docs = t(s, dir, "documents")
-    Dedup.decisionsFromPairs(docs,
-        Dedup.ngramJaccard(docs, pairBudget = ngramBudget))
+    Dedup.decisionsFromPairs(docs, Dedup.ngramJaccard(docs))
       .orderBy("doc_id")
   }
 

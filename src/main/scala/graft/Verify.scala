@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,7 @@ object Verify {
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default (e.g.
-    // local-cluster[4,8,8192] for the multi-JVM rehearsal — see Bench)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-    if (!master.startsWith("local[")) {
-      builder
-        .config("spark.executor.extraClassPath",
-          sys.env.getOrElse("SPARK_GRAFT_CLASSES",
-            new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Pre-register views once (idempotent) so concurrent queries don't
     // race the catalog, then dump queries through a small thread pool —
@@ -43,8 +22,9 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
+    def selected(name: String): Boolean = subset.forall(_.contains(name))
     val futures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -63,7 +43,9 @@ object Verify {
     // driver's json.load fail and silently zero the round's correctness.
     def q(s: String): String =
       "\"" + graft.plans.PlanJson.jsonEscape(s) + "\""
-    val json = SparkEntry.oracleSql
+    // a subset run writes only its own oracles, so the compare sees
+    // exactly the queries that ran
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   *    `<dir>/<table>.parquet` — a file-stream source must then watch
   *    `<dir>` with a `pathGlobFilter` on the file name (a file path is
   *    not a watchable directory);
-  *  - Spark-written corpora (ScaleUp rehearsals, any real pipeline)
+  *  - Spark-written corpora (any real pipeline)
   *    make `<table>.parquet` a DIRECTORY of part files — the glob
   *    filter on the table name then matches NOTHING (it tests file
   *    names, and the files are `part-*.parquet`), which silently

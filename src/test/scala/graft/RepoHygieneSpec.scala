@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every entry point a developer can run is documented: each object
+  * under `src/main/scala` that declares `def main` is named in
+  * README.md by its full name (`graft.Bench`), and each file under
+  * `scripts/` by its path (`scripts/check_oracle.py`). A main or script
+  * that README does not name is either undocumented or unused; add it
+  * to README's "Dev tooling" section or delete it. */
+class RepoHygieneSpec extends AnyFunSuite {
+
+  private val root = Paths.get("").toAbsolutePath
+  private lazy val readme = Files.readString(root.resolve("README.md"))
+
+  /** README names `name` as a whole token: `graft.Service` is not named
+    * by `graft.ServiceLoadDrill`. */
+  private def named(name: String): Boolean =
+    ("\\Q" + name + "\\E(?!\\w)").r.findFirstIn(readme).nonEmpty
+
+  private def files(dir: String): Seq[Path] = {
+    val walk = Files.walk(root.resolve(dir))
+    try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
+    finally walk.close()
+  }
+
+  private val Package = """(?m)^package\s+([\w.]+)""".r
+  private val Object = """\bobject\s+(\w+)""".r
+  private val Main = """\bdef\s+main\s*\(""".r
+
+  /** Full names of the objects declaring `def main`: each main belongs
+    * to the nearest `object` declared before it in its file. */
+  private def mains(src: String): Seq[String] = {
+    val pkg = Package.findFirstMatchIn(src).map(_.group(1) + ".")
+      .getOrElse("")
+    val objects = Object.findAllMatchIn(src).map(m => m.start -> m.group(1))
+      .toSeq
+    Main.findAllMatchIn(src).toSeq.flatMap(m =>
+      objects.filter(_._1 < m.start).lastOption.map(pkg + _._2)).distinct
+  }
+
+  test("every main under src/main/scala is named in README.md") {
+    val all = files("src/main/scala").filter(_.toString.endsWith(".scala"))
+      .flatMap(p => mains(Files.readString(p)))
+    assert(all.contains("graft.Bench"), s"main scan found only $all")
+    val missing = all.filterNot(named)
+    assert(missing.isEmpty, s"mains README.md does not name: $missing")
+  }
+
+  test("every file under scripts/ is named in README.md") {
+    val all = files("scripts").map(p => root.relativize(p).toString)
+    assert(all.nonEmpty)
+    val missing = all.filterNot(named)
+    assert(missing.isEmpty, s"scripts README.md does not name: $missing")
+  }
+}
