@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpression}
 import org.apache.spark.sql.types._
@@ -12,12 +12,59 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the vector/fingerprint hot paths.
   * These are custom `Expression`s (not Scala UDFs): null-safe, typed,
-  * with hand-written codegen that stays inside whole-stage codegen —
-  * the preference order from SURVEY.md §7.1 for capabilities Spark's
-  * builtin library lacks (the reference itself has no function surface,
-  * `RPC/RPC/RPC.cs:20-28`).
+  * and inside whole-stage codegen — the preference order from
+  * SURVEY.md §7.1 for capabilities Spark's builtin library lacks (the
+  * reference itself has no function surface, `RPC/RPC/RPC.cs:20-28`).
+  *
+  * Two shared pieces carry most of them:
+  *  - The codegen bridge ([[UnaryEvalBridge]], [[BinaryEvalBridge]]):
+  *    Spark generates the children's code and null checks, and the
+  *    body is the expression's own interpreted `nullSafeEval`, called
+  *    through the expression as a reference object. Its result is cast
+  *    with `CodeGenerator.boxedType(dataType)`; a null result sets
+  *    `isNull` only when the expression is nullable, because a
+  *    non-nullable expression's `isNull` is the literal `false`. An
+  *    expression whose per-row loop is worth inlining writes its own
+  *    `doGenCode` instead ([[CosineSimilarity]], [[SimHash64]]).
+  *  - The capped-bucket core ([[BucketGenerator]]) of the six in-bucket
+  *    pair generators: fewer than 2 postings give an empty array and a
+  *    null posting gives null; the postings are sorted by id (stably)
+  *    and cut at the `maxBucket` smallest ids, so the cap does not
+  *    depend on the bucket's layout; pairs are emitted as
+  *    `id_a < id_b`. Each generator adds only its posting decode and
+  *    its pair loop.
   */
 object VectorFunctions {
+
+  /** The codegen bridge's call: `nullSafeEval(args)` on this expression
+    * as a reference object, its result cast into `ev.value`. */
+  trait EvalBridge extends Expression {
+    protected final def evalCall(ctx: CodegenContext, ev: ExprCode,
+        args: String): String = {
+      val ref = ctx.addReferenceObj(nodeName, this, getClass.getName)
+      val cast = s"(${CodeGenerator.boxedType(dataType)})"
+      if (!nullable) s"${ev.value} = $cast $ref.nullSafeEval($args);"
+      else {
+        val r = ctx.freshName("r")
+        s"""Object $r = $ref.nullSafeEval($args);
+           |if ($r == null) { ${ev.isNull} = true; }
+           |else { ${ev.value} = $cast $r; }""".stripMargin
+      }
+    }
+  }
+
+  /** The codegen bridge for one child. */
+  trait UnaryEvalBridge extends UnaryExpression with EvalBridge {
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
+        : ExprCode = nullSafeCodeGen(ctx, ev, v => evalCall(ctx, ev, v))
+  }
+
+  /** The codegen bridge for two children. */
+  trait BinaryEvalBridge extends BinaryExpression with EvalBridge {
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
+        : ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => evalCall(ctx, ev, s"$a, $b"))
+  }
 
   /** Cosine similarity of two float vectors, null if either is null or
     * lengths differ or a norm is 0. Single fused pass — no intermediate
@@ -156,7 +203,7 @@ object VectorFunctions {
     * vector: bit p of the result is the sign of `v · r_p`, where plane
     * `r_p`'s components are [[hyperplaneComponent]] values. */
   case class HyperplaneSignature(child: Expression, bits: Int)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     require(bits > 0 && bits <= 64)
     override def dataType: DataType = LongType
     override def nullable: Boolean = true
@@ -166,11 +213,11 @@ object VectorFunctions {
     // XXH64 calls per row (at 16 bits × 256 dims that was 4096 hashes
     // per vector, identical for every row of the corpus). Sized to the
     // first vector seen; rows with more dims extend it. The codegen
-    // path shares ONE expression instance across all tasks in the JVM
-    // (addReferenceObj), so the cache must publish safely: volatile,
-    // built into a local and assigned once — a concurrent double-build
-    // wastes a few hashes, an unsafely published half-built table
-    // would silently corrupt signatures.
+    // bridge shares ONE expression instance across all tasks in the
+    // JVM, so the cache must publish safely: volatile, built into a
+    // local and assigned once — a concurrent double-build wastes a few
+    // hashes, an unsafely published half-built table would silently
+    // corrupt signatures.
     @transient @volatile private var planes: Array[Array[Double]] = _
     private def planeTable(n: Int): Array[Array[Double]] = {
       val cached = planes
@@ -207,22 +254,6 @@ object VectorFunctions {
       java.lang.Long.valueOf(sig)
     }
 
-    // Interpreted eval only (the per-row work is the multiply-adds;
-    // the plane table is cached per task).
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("hpsig", this,
-        classOf[HyperplaneSignature].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ((Long) $r).longValue(); }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -235,7 +266,7 @@ object VectorFunctions {
     * O(n²) per-row `array_distinct`). Texts shorter than k words yield
     * one shingle of all tokens; all-whitespace yields null. */
   case class ShingleHashes(child: Expression, k: Int)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     require(k >= 1)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = true
@@ -273,21 +304,6 @@ object VectorFunctions {
         s0 += 1
       }
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("shingles", this,
-        classOf[ShingleHashes].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -337,7 +353,7 @@ object VectorFunctions {
     * shorter than n yield one hash of the whole string; empty → null. */
   case class CharNgramHashes(child: Expression, n: Int,
       distinctSorted: Boolean = false)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     require(n >= 1)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = true
@@ -347,21 +363,6 @@ object VectorFunctions {
         input.asInstanceOf[UTF8String].toString, n, distinctSorted)
       if (out == null) null
       else org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("ngrams", this,
-        classOf[CharNgramHashes].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -421,7 +422,7 @@ object VectorFunctions {
     * merge pair rides as literals (captured per training round, the
     * kmeans-centroid pattern), so application is scan-stage. */
   case class BpeMergePair(child: Expression, a: String, b: String)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     override def dataType: DataType =
       ArrayType(StringType, containsNull = false)
     override def nullable: Boolean = true
@@ -448,21 +449,6 @@ object VectorFunctions {
         out.toArray)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bpeMerge", this,
-        classOf[BpeMergePair].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -475,7 +461,7 @@ object VectorFunctions {
     * are (doc_id, signature). Null/empty input → null (docs with no
     * shingles can't be banded). */
   case class MinHashSignature(child: Expression, k: Int)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     require(k >= 1)
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
@@ -500,21 +486,6 @@ object VectorFunctions {
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(mins)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("minhash", this,
-        classOf[MinHashSignature].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -533,7 +504,7 @@ object VectorFunctions {
     * full df join + per-doc window sort (two corpus-wide shuffles) with
     * a per-row sort against a broadcast-sized map. */
   case class PrefixGrams(child: Expression, hotDf: Map[Long, Long],
-      threshold: Double) extends UnaryExpression {
+      threshold: Double) extends UnaryEvalBridge {
     require(threshold > 0 && threshold <= 1)
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
@@ -565,37 +536,114 @@ object VectorFunctions {
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("prefixGrams", this,
-        classOf[PrefixGrams].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** Candidate pairs within one inverted-index bucket, with every
-    * AllPairs/PPJoin prune fused into the generator (Bayardo WWW'07;
-    * Xiao et al. WWW'08 for the index-prefix bound). Input: the
-    * bucket's postings as array<struct<doc_id:long, rn:int, sz:int>>
-    * (rn = 1-based position of the bucket gram in the doc's canonical
-    * (df, gram) order, sz = doc's distinct-gram count). Output: the
-    * array of (id_a < id_b) pairs that survive
-    *  - the bucket cap: postings sorted by doc_id, truncated at
-    *    `maxBucket` — identical semantics to the former
-    *    row_number-over-window cap, without the extra width-N sort
-    *    shuffle (the groupBy that builds the bucket already paid the
-    *    only required shuffle);
+  /** A bucket generator's output rows: sized exactly when the row count
+    * is known up front, grown by doubling otherwise. */
+  final class BucketRows(capacity: Int) {
+    private var rows = new Array[Any](capacity)
+    private var n = 0
+    def +=(row: InternalRow): Unit = {
+      if (n == rows.length) rows = Array.copyOf(rows, math.max(16, 2 * n))
+      rows(n) = row
+      n += 1
+    }
+    def result: ArrayData = new GenericArrayData(
+      if (n == rows.length) rows else Array.copyOf(rows, n))
+  }
+
+  private val idPairType: DataType = ArrayType(StructType(Seq(
+    StructField("id_a", LongType, nullable = false),
+    StructField("id_b", LongType, nullable = false))),
+    containsNull = false)
+
+  /** The capped-bucket core of the six in-bucket pair generators. Input:
+    * one bucket's postings, bare ids (`array<long>`) when
+    * `postingFields` is 0, else structs of that many fields with the
+    * long id in field 0. Fewer than 2 postings give an empty array; a
+    * null posting gives null, as malformed input does everywhere in
+    * this file. The postings are sorted by id — a primitive sort for
+    * bare ids, a stable index sort for structs, so equal ids keep their
+    * input order — and cut at the `maxBucket` smallest: the candidates
+    * a row_number-over-window cap keeps, without its extra posting
+    * sort-shuffle (the groupBy that builds the bucket pays the only
+    * shuffle candidate generation needs). `emit` runs the generator's
+    * pair loop over the capped postings in id order and emits each pair
+    * of distinct ids as `id_a < id_b`. */
+  abstract class BucketGenerator extends UnaryEvalBridge {
+    def maxBucket: Int
+
+    /** Fields of a posting struct; 0 for bare ids. */
+    protected def postingFields: Int
+
+    /** `emit` adds every pair of the capped bucket, so the output is
+      * sized exactly — once m(m−1)/2 is known to fit an array. */
+    protected def emitsAllPairs: Boolean = false
+
+    /** The pair loop over `ids(0 until m)`, ascending; `ps(k)` is the
+      * posting of `ids(k)` (null for bare ids). */
+    protected def emit(ids: Array[Long], ps: Array[InternalRow], m: Int,
+        out: BucketRows): Unit
+
+    override def nullable: Boolean = true
+
+    override final def nullSafeEval(input: Any): Any = {
+      val arr = input.asInstanceOf[ArrayData]
+      val n = arr.numElements()
+      if (n < 2) return new GenericArrayData(Array.empty[Any])
+      var i = 0
+      while (i < n) { if (arr.isNullAt(i)) return null; i += 1 }
+      val m = math.min(n, maxBucket)
+      val (ids, ps) =
+        if (postingFields > 0) sortedPostings(arr, n, m)
+        else {
+          val ids = arr.toLongArray()
+          java.util.Arrays.sort(ids)
+          (ids, null: Array[InternalRow])
+        }
+      // long arithmetic: m*(m-1) overflows Int for m > 65536 and the
+      // misallocated array would crash mid-fill
+      val pairs = m.toLong * (m - 1) / 2
+      require(!emitsAllPairs || pairs <= Int.MaxValue,
+        s"$prettyName: bucket cap $m yields $pairs pairs (> 2^31)")
+      val out = new BucketRows(if (emitsAllPairs) pairs.toInt else 16)
+      emit(ids, ps, m, out)
+      out.result
+    }
+
+    private def sortedPostings(arr: ArrayData, n: Int, m: Int)
+        : (Array[Long], Array[InternalRow]) = {
+      val all = new Array[Long](n)
+      val order = new Array[Integer](n)
+      var i = 0
+      while (i < n) {
+        all(i) = arr.getStruct(i, postingFields).getLong(0)
+        order(i) = i
+        i += 1
+      }
+      java.util.Arrays.sort(order,
+        (a: Integer, b: Integer) => java.lang.Long.compare(all(a), all(b)))
+      val ids = new Array[Long](m)
+      val ps = new Array[InternalRow](m)
+      i = 0
+      while (i < m) {
+        ids(i) = all(order(i))
+        ps(i) = arr.getStruct(order(i), postingFields)
+        i += 1
+      }
+      (ids, ps)
+    }
+  }
+
+  /** The AllPairs/PPJoin pair loop (Bayardo WWW'07; Xiao et al. WWW'08
+    * for the index-prefix bound) of [[BucketPairs]] and
+    * [[VerifiedBucketPairs]]. Postings are (id, rn, x) structs: rn is
+    * the 1-based position of the bucket gram in the doc's canonical
+    * (df, gram) order, and x gives the doc's distinct-gram count — the
+    * count itself, or the doc's sorted gram array when the generator
+    * `verifies`. A capped pair survives
     *  - the size filter: J ≥ t ⇒ t·|a| ≤ |b| ≤ |a|/t;
     *  - the positional filter: the witnessed overlap
     *    min(|a|-rn_a, |b|-rn_b) + 1 must reach α = t/(1+t)·(|a|+|b|).
@@ -603,78 +651,60 @@ object VectorFunctions {
     *    static index-prefix bound ⌈2t/(1+t)·|x|⌉ on the smaller record:
     *    α ≥ 2t/(1+t)·|min| always, so a separate index-prefix check
     *    can never fire when the positional filter passes.)
+    *  - when the generator verifies: distinct ids and an exact Jaccard
+    *    ≥ t − EPS by the early-abandon merge intersect.
     * EPS mirrors PrefixGrams: every real-arithmetic bound is relaxed
     * by 1e-9 in the admit direction, so float evaluation can only let
     * extra candidates through, never drop a true pair. */
-  case class BucketPairs(child: Expression, maxBucket: Int,
-      threshold: Double) extends UnaryExpression {
-    require(maxBucket >= 2 && threshold > 0 && threshold <= 1)
-    private val EPS = 1e-9
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = true
+  abstract class SizeBandedPairs extends BucketGenerator {
+    def threshold: Double
+    protected def verifies: Boolean
+    private final val EPS = 1e-9
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      val ids = new Array[Long](n0)
-      val rns = new Array[Int](n0)
-      val szs = new Array[Int](n0)
-      val idx = new Array[Integer](n0)
-      var i = 0
-      while (i < n0) {
-        if (arr.isNullAt(i)) return null // malformed input yields null
-        val r = arr.getStruct(i, 3)
-        ids(i) = r.getLong(0); rns(i) = r.getInt(1); szs(i) = r.getInt(2)
-        idx(i) = i
-        i += 1
-      }
-      java.util.Arrays.sort(idx,
-        (a: Integer, b: Integer) =>
-          java.lang.Long.compare(ids(a), ids(b)))
-      val m = math.min(n0, maxBucket)
-      // Flatten the sorted prefix into primitive arrays BEFORE the
-      // m²/2 loop: this loop is the measured CPU bound of the whole
-      // exact-jaccard family (the sf30-he event-log profile put 94 %
-      // of a 335 s stage here), and iterating boxed tuples paid an
-      // object dereference + 3 unboxings per candidate check where
-      // three sequential primitive loads suffice.
-      // The cap is taken in doc_id order (layout-independent
-      // truncation, unchanged); the CAPPED prefix is then re-sorted by
-      // SIZE so the upper length bound becomes a BREAK: with sizes
-      // ascending and j > i, sb ≥ sa makes the lower bound
+    override def dataType: DataType = idPairType
+    override protected def postingFields: Int = 3
+
+    override protected def emit(ids: Array[Long], ps: Array[InternalRow],
+        m: Int, out: BucketRows): Unit = {
+      val t = threshold
+      val sz = Array.tabulate(m)(k =>
+        if (verifies) ps(k).getArray(2).numElements() else ps(k).getInt(2))
+      // The cap is taken in id order; the CAPPED prefix is then
+      // re-sorted by SIZE so the upper length bound becomes a BREAK:
+      // with sizes ascending and j > i, sb ≥ sa makes the lower bound
       // (sb ≥ t·sa − EPS) vacuous, and the first j rejected by the
       // upper bound (sa < t·sb − EPS) rejects every later j too — the
       // length filter drops from m²/2 evaluated checks to the pairs
       // inside each size band [t·sa, sa/t]. Pair identity is preserved
-      // by emitting (min id, max id); ordering inside the output array
-      // was never part of the contract (both call sites
-      // explode → distinct). Skipped for tiny buckets — most buckets
-      // in a healthy corpus are a handful of postings, where a boxed
-      // comparator sort costs more than the handful of length checks
-      // it saves; the band pays off where the m²/2 loop does damage.
-      if (m > 16) java.util.Arrays.sort(idx, 0, m,
+      // by emitting (min id, max id); the order inside the output array
+      // is not part of the contract (every caller explodes and dedups).
+      // Tiny buckets skip the re-sort: most buckets in a healthy corpus
+      // are a handful of postings, where a boxed comparator sort costs
+      // more than the few length checks it saves.
+      val banded = m > 16
+      val order = Array.tabulate[Integer](m)(k => k)
+      if (banded) java.util.Arrays.sort(order,
         (a: Integer, b: Integer) => {
-          val c = java.lang.Integer.compare(szs(a), szs(b))
+          val c = java.lang.Integer.compare(sz(a), sz(b))
           if (c != 0) c else java.lang.Long.compare(ids(a), ids(b))
         })
-      val banded = m > 16
+      // Flattened to primitive arrays BEFORE the m²/2 loop: this loop
+      // is the measured CPU bound of the whole exact-jaccard family
+      // (the sf30-he event-log profile put 94 % of a 335 s stage here),
+      // and boxed postings would pay a dereference and unboxings per
+      // candidate check where sequential primitive loads suffice.
       val sIds = new Array[Long](m)
       val sRns = new Array[Int](m)
       val sSzs = new Array[Int](m)
-      i = 0
+      val sGss = if (verifies) new Array[Array[Long]](m) else null
+      var i = 0
       while (i < m) {
-        val p = idx(i)
-        sIds(i) = ids(p); sRns(i) = rns(p); sSzs(i) = szs(p)
+        val o = order(i)
+        sIds(i) = ids(o); sRns(i) = ps(o).getInt(1); sSzs(i) = sz(o)
+        if (sGss != null) sGss(i) = ps(o).getArray(2).toLongArray()
         i += 1
       }
-      val tc = threshold / (1.0 + threshold)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      val tc = t / (1.0 + t)
       i = 0
       while (i < m) {
         val ia = sIds(i); val ra = sRns(i); val sa = sSzs(i)
@@ -683,190 +713,75 @@ object VectorFunctions {
         var inBand = true
         while (j < m && inBand) {
           val sb = sSzs(j)
-          if (banded && sa < threshold * sb - EPS) inBand = false
+          if (banded && sa < t * sb - EPS) inBand = false
           else {
-            if (banded || (sb >= threshold * sa - EPS &&
-                sa >= threshold * sb - EPS)) {
+            if (banded || (sb >= t * sa - EPS && sa >= t * sb - EPS)) {
               val rb = sRns(j)
               val ov = if (slackA < sb - rb) slackA else sb - rb
-              if (ov + 1 >= tc * (sa + sb) - EPS) {
-                val ib = sIds(j)
-                out += (if (ia <= ib)
-                  org.apache.spark.sql.catalyst.InternalRow(ia, ib)
-                else org.apache.spark.sql.catalyst.InternalRow(ib, ia))
-              }
+              val ib = sIds(j)
+              if (ov + 1 >= tc * (sa + sb) - EPS && (sGss == null ||
+                  (ib != ia && jaccardPasses(sGss(i), sGss(j), t))))
+                out += (if (ia <= ib) InternalRow(ia, ib)
+                  else InternalRow(ib, ia))
             }
             j += 1
           }
         }
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
     }
 
-    // per-bucket (not per-row-per-gram) — interpreted eval via reference
-    // object keeps codegen simple without touching the hot path
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bucketPairs", this,
-        classOf[BucketPairs].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
+    /** Early-abandon verification: minOv is the smallest integer count
+      * the final check can accept — c/(sa+sb−c) ≥ t−EPS ⇔
+      * c ≥ (t−EPS)(sa+sb)/(1+t−EPS) — floored by a nano-epsilon so
+      * rounding can only ADMIT an extra merge, never reject a passing
+      * pair (see [[mergeIntersectAtLeast]]). */
+    private def jaccardPasses(ga: Array[Long], gb: Array[Long],
+        t: Double): Boolean = {
+      val sa = ga.length; val sb = gb.length
+      val tReq = t - EPS
+      val minOv = math.ceil(tReq * (sa + sb) / (1.0 + tReq) - 1e-9).toInt
+      val c = mergeIntersectAtLeast(ga, gb, minOv)
+      c >= 0 && c.toDouble / (sa + sb - c).toDouble >= t - EPS
     }
+  }
+
+  /** Candidate pairs within one inverted-index bucket, with every
+    * AllPairs/PPJoin prune of [[SizeBandedPairs]] fused into the
+    * generator. Input: the bucket's postings as
+    * array<struct<doc_id:long, rn:int, sz:int>> (sz = the doc's
+    * distinct-gram count). Output: the (id_a < id_b) pairs that survive
+    * the cap and the size and positional filters. */
+  case class BucketPairs(child: Expression, maxBucket: Int,
+      threshold: Double) extends SizeBandedPairs {
+    require(maxBucket >= 2 && threshold > 0 && threshold <= 1)
+    override protected def verifies: Boolean = false
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** [[BucketPairs]]' verifying sibling for the EXACT declarative
-    * similarity-join rewrite: postings carry each doc's full sorted
-    * gram array, the m²/2 loop applies the same fused length +
-    * positional prunes, and SURVIVORS are verified inline by the
-    * shared sorted-merge intersect — jaccard = c/(|a|+|b|−c), the
-    * bit-exact arithmetic of [[JaccardSim]]. Emitting only verified
-    * pairs is what makes the exact rewrite feasible at scale: the
-    * measured sf1 corpus yields 152 M filter survivors from 2.8e9
-    * in-bucket checks, and materializing those survivors for a
-    * join-back verification (each row carrying two ~2.3 KB gram
-    * arrays) would spill ~400 GB where this loop spends a merge-
-    * intersect per survivor and ships only the final pair ids.
-    * Threshold admits at `jac >= threshold − EPS` — the caller
-    * re-evaluates the ORIGINAL predicate (>= or >) on the joined-back
-    * rows, so the relaxed bound can only add candidates, never drop a
-    * qualifying pair. Input structs: (id: long, rn: int — 1-based
-    * df-order prefix position, gs: sorted distinct gram hashes);
-    * |gs| is derived, not carried. Pairs emit as id_a < id_b, each
-    * bucket's postings sorted by id for layout-independence;
-    * cross-bucket duplicates are the caller's `.distinct()`. */
+  /** The verifying generator for the EXACT declarative similarity-join
+    * rewrite: postings carry each doc's full sorted gram array, the
+    * m²/2 loop applies the fused length + positional prunes, and
+    * SURVIVORS are verified inline by the shared sorted-merge intersect
+    * — jaccard = c/(|a|+|b|−c), the bit-exact arithmetic of
+    * [[JaccardSim]]. Emitting only verified pairs is what makes the
+    * exact rewrite feasible at scale: the measured sf1 corpus yields
+    * 152 M filter survivors from 2.8e9 in-bucket checks, and
+    * materializing those survivors for a join-back verification (each
+    * row carrying two ~2.3 KB gram arrays) would spill ~400 GB where
+    * this loop spends a merge-intersect per survivor and ships only the
+    * final pair ids. Threshold admits at `jac >= threshold − EPS` — the
+    * caller re-evaluates the ORIGINAL predicate (>= or >) on the
+    * joined-back rows, so the relaxed bound can only add candidates,
+    * never drop a qualifying pair. Input structs: (id: long, rn: int,
+    * gs: sorted distinct gram hashes); |gs| is derived, not carried.
+    * Cross-bucket duplicates are the caller's `.distinct()`. */
   case class VerifiedBucketPairs(child: Expression, maxBucket: Int,
-      threshold: Double) extends UnaryExpression {
+      threshold: Double) extends SizeBandedPairs {
     require(maxBucket >= 2 && threshold > 0 && threshold <= 1)
-    private val EPS = 1e-9
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = true
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      val ids = new Array[Long](n0)
-      val rns = new Array[Int](n0)
-      val gss = new Array[Array[Long]](n0)
-      val idx = new Array[Integer](n0)
-      var i = 0
-      while (i < n0) {
-        if (arr.isNullAt(i)) return null // malformed input yields null
-        val r = arr.getStruct(i, 3)
-        ids(i) = r.getLong(0)
-        rns(i) = r.getInt(1)
-        gss(i) = r.getArray(2).toLongArray()
-        idx(i) = i
-        i += 1
-      }
-      java.util.Arrays.sort(idx,
-        (a: Integer, b: Integer) =>
-          java.lang.Long.compare(ids(a), ids(b)))
-      val m = math.min(n0, maxBucket)
-      // Cap in doc_id order (layout-independent truncation), then
-      // re-sort the CAPPED prefix by size — same size-band break as
-      // [[BucketPairs]]: sizes ascending make the lower length bound
-      // vacuous and the upper bound monotone in j, so the first
-      // too-large sb ends the inner scan instead of paying a check
-      // per remaining posting. Flattened to primitive arrays — the
-      // m²/2 prune loop reads these per candidate check, and Integer
-      // index indirection boxes.
-      // tiny buckets skip the re-sort — same rationale as
-      // [[BucketPairs]]: the boxed comparator sort outweighs the few
-      // length checks it saves when m is a handful
-      if (m > 16) java.util.Arrays.sort(idx, 0, m,
-        (a: Integer, b: Integer) => {
-          val c = java.lang.Integer.compare(gss(a).length, gss(b).length)
-          if (c != 0) c else java.lang.Long.compare(ids(a), ids(b))
-        })
-      val banded = m > 16
-      val sIds = new Array[Long](m)
-      val sRns = new Array[Int](m)
-      val sGss = new Array[Array[Long]](m)
-      i = 0
-      while (i < m) {
-        val p = idx(i)
-        sIds(i) = ids(p); sRns(i) = rns(p); sGss(i) = gss(p)
-        i += 1
-      }
-      val tc = threshold / (1.0 + threshold)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      i = 0
-      while (i < m) {
-        val ia = sIds(i); val ra = sRns(i); val ga = sGss(i)
-        val sa = ga.length
-        val slackA = sa - ra
-        var j = i + 1
-        var inBand = true
-        while (j < m && inBand) {
-          val gb = sGss(j); val sb = gb.length
-          if (banded && sa < threshold * sb - EPS) inBand = false
-          else {
-            if (sIds(j) != ia && (banded ||
-                (sb >= threshold * sa - EPS &&
-                  sa >= threshold * sb - EPS))) {
-              val rb = sRns(j)
-              val ov = if (slackA < sb - rb) slackA else sb - rb
-              if (ov + 1 >= tc * (sa + sb) - EPS) {
-                // early-abandon verification: minOv is the smallest
-                // integer count the final check can accept — c/(sa+sb−c)
-                // ≥ t−EPS ⇔ c ≥ (t−EPS)(sa+sb)/(1+t−EPS) — floored by a
-                // nano-epsilon so rounding can only ADMIT an extra
-                // merge, never reject a passing pair (see
-                // mergeIntersectAtLeast)
-                val tReq = threshold - EPS
-                val minOv = math.ceil(
-                  tReq * (sa + sb) / (1.0 + tReq) - 1e-9).toInt
-                val c = mergeIntersectAtLeast(ga, gb, minOv)
-                if (c >= 0 &&
-                    c.toDouble / (sa + sb - c).toDouble >= threshold - EPS) {
-                  val ib = sIds(j)
-                  out += (if (ia <= ib)
-                    org.apache.spark.sql.catalyst.InternalRow(ia, ib)
-                  else org.apache.spark.sql.catalyst.InternalRow(ib, ia))
-                }
-              }
-            }
-            j += 1
-          }
-        }
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    }
-
-    // per-bucket (not per-row-per-gram) — interpreted eval via reference
-    // object keeps codegen simple without touching the hot path
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("verifiedBucketPairs", this,
-        classOf[VerifiedBucketPairs].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
+    override protected def verifies: Boolean = true
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
@@ -886,7 +801,7 @@ object VectorFunctions {
     * match it). O(m) via a monotone deque (equal hashes keep the
     * earliest position, so the front IS the leftmost minimum). */
   case class WinnowedFingerprints(child: Expression, w: Int)
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     require(w >= 1)
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("pos", IntegerType, nullable = false),
@@ -922,155 +837,55 @@ object VectorFunctions {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("winnow", this,
-        classOf[WinnowedFingerprints].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** All (id_a < id_b) pairs within one LSH bucket, given the bucket's
-    * member ids: sort by id, truncate at `maxBucket` (identical
-    * semantics to a row_number-over-window cap without the extra
-    * posting sort-shuffle), emit every pair. The groupBy that builds
-    * the bucket pays the only shuffle candidate generation needs. */
+  /** All pairs within one LSH bucket, given the bucket's member ids. */
   case class CappedPairs(child: Expression, maxBucket: Int)
-      extends UnaryExpression {
+      extends BucketGenerator {
     require(maxBucket >= 2)
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = true
+    override def dataType: DataType = idPairType
+    override protected def postingFields: Int = 0
+    override protected def emitsAllPairs: Boolean = true
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      var ci = 0
-      while (ci < n0) { // toLongArray NPEs on null elements
-        if (arr.isNullAt(ci)) return null
-        ci += 1
-      }
-      val ids = arr.toLongArray()
-      java.util.Arrays.sort(ids)
-      val m = math.min(n0, maxBucket)
-      // long arithmetic: m*(m-1) overflows Int for m > 65536 and the
-      // misallocated array crashes mid-fill
-      val sz = m.toLong * (m - 1) / 2
-      require(sz <= Int.MaxValue,
-        s"capped_pairs: bucket cap $m yields $sz pairs (> 2^31)")
-      val out = new Array[Any](sz.toInt)
-      var k = 0; var i = 0
+    override protected def emit(ids: Array[Long], ps: Array[InternalRow],
+        m: Int, out: BucketRows): Unit = {
+      var i = 0
       while (i < m) {
         var j = i + 1
-        while (j < m) {
-          out(k) = org.apache.spark.sql.catalyst.InternalRow(ids(i), ids(j))
-          k += 1; j += 1
-        }
+        while (j < m) { out += InternalRow(ids(i), ids(j)); j += 1 }
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("cappedPairs", this,
-        classOf[CappedPairs].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  /** [[CappedPairs]] variant for INCREMENTAL dedup: postings carry an
-    * is_new flag (array<struct<doc_id:long, is_new:boolean>>) and only
-    * pairs touching at least one NEW member are emitted — the old×old
-    * pairs were produced when the old epoch was deduplicated, so an
-    * epoch merge must not re-emit (or re-verify) them. Same sort-by-id
-    * bucket cap as every other generator. */
+  /** [[CappedPairs]] for INCREMENTAL dedup: postings carry an is_new
+    * flag (array<struct<doc_id:long, is_new:boolean>>) and only pairs
+    * touching at least one NEW member are emitted — the old×old pairs
+    * were produced when the old epoch was deduplicated, so an epoch
+    * merge must not re-emit (or re-verify) them. */
   case class FlaggedCappedPairs(child: Expression, maxBucket: Int)
-      extends UnaryExpression {
+      extends BucketGenerator {
     require(maxBucket >= 2)
-    override def dataType: DataType = ArrayType(StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = true
+    override def dataType: DataType = idPairType
+    override protected def postingFields: Int = 2
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      val ids = new Array[Long](n0)
-      val isNew = new Array[Boolean](n0)
-      val order = new Array[Integer](n0)
+    override protected def emit(ids: Array[Long], ps: Array[InternalRow],
+        m: Int, out: BucketRows): Unit = {
+      val isNew = Array.tabulate(m)(k => ps(k).getBoolean(1))
       var i = 0
-      while (i < n0) {
-        if (arr.isNullAt(i)) return null // malformed input yields null
-        val r = arr.getStruct(i, 2)
-        ids(i) = r.getLong(0); isNew(i) = r.getBoolean(1)
-        order(i) = Integer.valueOf(i)
-        i += 1
-      }
-      java.util.Arrays.sort(order,
-        java.util.Comparator.comparingLong((x: Integer) => ids(x)))
-      val m = math.min(n0, maxBucket)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      i = 0
       while (i < m) {
-        val oi = order(i)
         var j = i + 1
         while (j < m) {
-          val oj = order(j)
-          if (isNew(oi) || isNew(oj))
-            out += org.apache.spark.sql.catalyst.InternalRow(
-              ids(oi), ids(oj))
+          if (isNew(i) || isNew(j)) out += InternalRow(ids(i), ids(j))
           j += 1
         }
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("flaggedPairs", this,
-        classOf[FlaggedCappedPairs].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -1087,7 +902,7 @@ object VectorFunctions {
     * Lets an aggregate ship BOUNDED bitmaps through an exchange and
     * explode them back to ids AFTER the reduction — the dense-frontier
     * BFS exchange compression ([[graft.operators.Graph.bfsHops]]). */
-  case class BitmapPositions(child: Expression) extends UnaryExpression {
+  case class BitmapPositions(child: Expression) extends UnaryEvalBridge {
     override def dataType: DataType =
       ArrayType(IntegerType, containsNull = false)
     override def nullable: Boolean = true
@@ -1116,18 +931,6 @@ object VectorFunctions {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bitmapPositions", this,
-        classOf[BitmapPositions].getName)
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-           |  $expr.nullSafeEval($v);
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -1139,7 +942,7 @@ object VectorFunctions {
     * zero-extended: bytes of `a` beyond `b`'s length pass through, and
     * bits of `b` beyond `a`'s length have nothing to clear. */
   case class BitmapAndNot(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryEvalBridge {
     override def dataType: DataType = BinaryType
     override def nullable: Boolean = left.nullable || right.nullable
 
@@ -1156,17 +959,6 @@ object VectorFunctions {
       out
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bitmapAndNot", this,
-        classOf[BitmapAndNot].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        s"""
-           |${ev.value} = (byte[]) $expr.nullSafeEval($a, $b);
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildrenInternal(l: Expression,
         r: Expression): Expression = copy(left = l, right = r)
   }
@@ -1174,71 +966,33 @@ object VectorFunctions {
   /** SimHash bucket pairs with the Hamming verification fused in:
     * input is the bucket's array<struct<doc_id:long, sig:long>>; output
     * every (id_a < id_b, hamming = popcount(sig_a ^ sig_b) ≤ maxHamming)
-    * triple after the same sort-by-id bucket cap as [[CappedPairs]].
-    * The whole near-dup check — candidate generation AND verification —
-    * runs inside the bucket stage because the verification needs
-    * nothing but the two 8-byte signatures already in the posting. */
+    * triple. The whole near-dup check — candidate generation AND
+    * verification — runs inside the bucket stage because the
+    * verification needs nothing but the two 8-byte signatures already
+    * in the posting. */
   case class HammingPairs(child: Expression, maxBucket: Int,
-      maxHamming: Int) extends UnaryExpression {
+      maxHamming: Int) extends BucketGenerator {
     require(maxBucket >= 2 && maxHamming >= 0)
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("id_a", LongType, nullable = false),
       StructField("id_b", LongType, nullable = false),
       StructField("hamming", IntegerType, nullable = false))),
       containsNull = false)
-    override def nullable: Boolean = true
+    override protected def postingFields: Int = 2
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      val ids = new Array[Long](n0)
-      val sigs = new Array[Long](n0)
-      val order = new Array[Integer](n0)
+    override protected def emit(ids: Array[Long], ps: Array[InternalRow],
+        m: Int, out: BucketRows): Unit = {
+      val sigs = Array.tabulate(m)(k => ps(k).getLong(1))
       var i = 0
-      while (i < n0) {
-        if (arr.isNullAt(i)) return null // malformed input yields null
-        val r = arr.getStruct(i, 2)
-        ids(i) = r.getLong(0); sigs(i) = r.getLong(1)
-        order(i) = Integer.valueOf(i)
-        i += 1
-      }
-      java.util.Arrays.sort(order,
-        java.util.Comparator.comparingLong((x: Integer) => ids(x)))
-      val m = math.min(n0, maxBucket)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      i = 0
       while (i < m) {
-        val oi = order(i); val ia = ids(oi); val sa = sigs(oi)
         var j = i + 1
         while (j < m) {
-          val oj = order(j)
-          val h = java.lang.Long.bitCount(sa ^ sigs(oj))
-          if (h <= maxHamming)
-            out += org.apache.spark.sql.catalyst.InternalRow(
-              ia, ids(oj), h)
+          val h = java.lang.Long.bitCount(sigs(i) ^ sigs(j))
+          if (h <= maxHamming) out += InternalRow(ids(i), ids(j), h)
           j += 1
         }
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("hammingPairs", this,
-        classOf[HammingPairs].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -1257,7 +1011,7 @@ object VectorFunctions {
     * (not the vectors) is what the candidate scan reads. */
   case class PqEncode(child: Expression,
       codebooks: Seq[Seq[Seq[Double]]], halfNorms: Seq[Seq[Double]])
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     private val m = codebooks.size
     private val subDim = codebooks.head.head.size
     // primitive copies for the hot loop: Seq.apply in the innermost
@@ -1300,21 +1054,6 @@ object VectorFunctions {
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(codes)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("pqEncode", this,
-        classOf[PqEncode].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -1326,7 +1065,7 @@ object VectorFunctions {
     * sequential dot each) is pinned so the SQL oracle's left-nested
     * sum of `list_dot_product`s reproduces it bit-for-bit. */
   case class PqAdc(left: Expression, right: Expression,
-      codebooks: Seq[Seq[Seq[Double]]]) extends BinaryExpression {
+      codebooks: Seq[Seq[Seq[Double]]]) extends BinaryEvalBridge {
     private val m = codebooks.size
     private val subDim = codebooks.head.head.size
     @transient private lazy val cbArr: Array[Array[Array[Double]]] =
@@ -1359,19 +1098,6 @@ object VectorFunctions {
       java.lang.Double.valueOf(s)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("pqAdc", this, classOf[PqAdc].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        s"""
-           |Object $r = $expr.nullSafeEval($a, $b);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ((Double) $r).doubleValue(); }
-         """.stripMargin
-      })
-    }
-
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -1385,64 +1111,43 @@ object VectorFunctions {
     * scorable neighbor — the member's best (cosine DESC, nn_id ASC)
     * neighbor in the bucket. Emits O(m) rows from the O(m²) in-bucket
     * comparisons, so a downstream per-vector reduce sees ≤ bands rows
-    * per vector instead of whole buckets. Sort-by-id bucket cap as in
-    * the other generators. The cosine replicates [[CosineSimilarity]]
-    * bit-for-bit (sequential double accumulation, one divide);
-    * degenerate members (null / zero-norm / length-mismatched vectors)
-    * score null and are skipped. */
+    * per vector instead of whole buckets. The cosine replicates
+    * [[CosineSimilarity]] bit-for-bit (sequential double accumulation,
+    * one divide); degenerate members (null / zero-norm /
+    * length-mismatched vectors) score null and are skipped. */
   case class CosineBucketBest(child: Expression, maxBucket: Int)
-      extends UnaryExpression {
+      extends BucketGenerator {
     require(maxBucket >= 2)
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
       StructField("nn_id", LongType, nullable = false),
       StructField("cosine", DoubleType, nullable = false))),
       containsNull = false)
-    override def nullable: Boolean = true
+    override protected def postingFields: Int = 2
 
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val n0 = arr.numElements()
-      if (n0 < 2)
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          Array.empty[Any])
-      val ids = new Array[Long](n0)
-      val vecs = new Array[Array[Float]](n0)
-      val order = new Array[Integer](n0)
-      var i = 0
-      while (i < n0) {
-        // malformed input (null struct element) yields null, per the
-        // file-wide discipline — not a task-killing NPE
-        if (arr.isNullAt(i)) return null
-        val r = arr.getStruct(i, 2)
-        ids(i) = r.getLong(0)
-        vecs(i) = if (r.isNullAt(1)) null else r.getArray(1).toFloatArray()
-        order(i) = Integer.valueOf(i)
-        i += 1
-      }
-      java.util.Arrays.sort(order,
-        java.util.Comparator.comparingLong((x: Integer) => ids(x)))
-      val m = math.min(n0, maxBucket)
+    override protected def emit(ids: Array[Long], ps: Array[InternalRow],
+        m: Int, out: BucketRows): Unit = {
+      val vecs = Array.tabulate(m)(k =>
+        if (ps(k).isNullAt(1)) null else ps(k).getArray(1).toFloatArray())
       // norms once per member, same accumulation order as
       // CosineSimilarity's nx/ny loops
-      val norms = new Array[Double](n0)
-      i = 0
+      val norms = new Array[Double](m)
+      var i = 0
       while (i < m) {
-        val v = vecs(order(i))
+        val v = vecs(i)
         if (v != null) {
           var s = 0.0; var d = 0
           while (d < v.length) {
             val x = v(d).toDouble; s += x * x; d += 1
           }
-          norms(order(i)) = s
+          norms(i) = s
         }
         i += 1
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
       i = 0
       while (i < m) {
-        val oi = order(i); val vi = vecs(oi)
-        if (vi != null && norms(oi) != 0.0) {
+        val vi = vecs(i)
+        if (vi != null && norms(i) != 0.0) {
           // explicit found flag — an id sentinel (bestId >= 0) would
           // silently drop members whose best neighbor has a negative
           // id (hash-derived ids are negative half the time)
@@ -1451,46 +1156,25 @@ object VectorFunctions {
           var bestCos = Double.NegativeInfinity
           var j = 0
           while (j < m) {
-            if (j != i) {
-              val oj = order(j); val vj = vecs(oj)
-              if (vj != null && vj.length == vi.length &&
-                norms(oj) != 0.0) {
-                var dot = 0.0; var d = 0
-                while (d < vi.length) {
-                  dot += vi(d).toDouble * vj(d).toDouble; d += 1
-                }
-                val cos = dot /
-                  (math.sqrt(norms(oi)) * math.sqrt(norms(oj)))
-                if (!found || cos > bestCos ||
-                  (cos == bestCos && ids(oj) < bestId)) {
-                  bestCos = cos; bestId = ids(oj); found = true
-                }
+            val vj = vecs(j)
+            if (j != i && vj != null && vj.length == vi.length &&
+                norms(j) != 0.0) {
+              var dot = 0.0; var d = 0
+              while (d < vi.length) {
+                dot += vi(d).toDouble * vj(d).toDouble; d += 1
+              }
+              val cos = dot / (math.sqrt(norms(i)) * math.sqrt(norms(j)))
+              if (!found || cos > bestCos ||
+                  (cos == bestCos && ids(j) < bestId)) {
+                bestCos = cos; bestId = ids(j); found = true
               }
             }
             j += 1
           }
-          if (found)
-            out += org.apache.spark.sql.catalyst.InternalRow(
-              ids(oi), bestId, bestCos)
+          if (found) out += InternalRow(ids(i), bestId, bestCos)
         }
         i += 1
       }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("cosineBest", this,
-        classOf[CosineBucketBest].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""
-           |Object $r = $expr.nullSafeEval($v);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} =
-           |  (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -1511,7 +1195,7 @@ object VectorFunctions {
   case class BroadcastJaccard(left: Expression, right: Expression,
       sets: org.apache.spark.broadcast.Broadcast[
         scala.collection.Map[Long, Array[Long]]])
-      extends BinaryExpression {
+      extends BinaryEvalBridge {
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
 
@@ -1524,20 +1208,6 @@ object VectorFunctions {
             c.toDouble / (ga.length + gb.length - c).toDouble)
         case _ => null
       }
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bcastJaccard", this,
-        classOf[BroadcastJaccard].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        s"""
-           |Object $r = $expr.nullSafeEval($a, $b);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ((Double) $r).doubleValue(); }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildrenInternal(
@@ -1554,7 +1224,7 @@ object VectorFunctions {
   case class LongSetFilter(child: Expression,
       members: org.apache.spark.broadcast.Broadcast[
         scala.collection.immutable.Set[Long]])
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     override def dataType: DataType =
       ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = child.nullable
@@ -1576,16 +1246,6 @@ object VectorFunctions {
         keep.toArray)
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("longSetFilter", this,
-        classOf[LongSetFilter].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-           |  $expr.nullSafeEval($a);""".stripMargin
-      })
-    }
-
     override protected def withNewChildInternal(c: Expression)
         : Expression = copy(child = c)
   }
@@ -1605,7 +1265,7 @@ object VectorFunctions {
       members: org.apache.spark.broadcast.Broadcast[
         scala.collection.immutable.Set[
           org.apache.spark.unsafe.types.UTF8String]])
-      extends UnaryExpression {
+      extends UnaryEvalBridge {
     override def dataType: DataType = LongType
     override def nullable: Boolean = child.nullable
 
@@ -1620,15 +1280,6 @@ object VectorFunctions {
         i += 1
       }
       java.lang.Long.valueOf(c)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("bcastMembers", this,
-        classOf[BroadcastMemberCount].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        s"${ev.value} = ((Long) $expr.nullSafeEval($a)).longValue();"
-      })
     }
 
     override protected def withNewChildInternal(c: Expression)
@@ -1769,7 +1420,7 @@ object VectorFunctions {
     * uses, so n_words always agrees with tokenCount, including on
     * Unicode whitespace. Replaces three separate regexp_replace passes
     * under quality scoring; reproduces the regex formulas on ASCII. */
-  case class TextStats(child: Expression) extends UnaryExpression {
+  case class TextStats(child: Expression) extends UnaryEvalBridge {
     override def dataType: DataType = StructType(Seq(
       StructField("n_chars", LongType, nullable = false),
       StructField("n_alnum", LongType, nullable = false),
@@ -1796,16 +1447,6 @@ object VectorFunctions {
       }
       org.apache.spark.sql.catalyst.InternalRow(
         s.length.toLong, alnum, digit, ws, words)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("tstats", this,
-        classOf[TextStats].getName)
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-           |  $expr.nullSafeEval($v);""".stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -2050,22 +1691,12 @@ object VectorFunctions {
     * `trim(regexp_replace(lower(x), '\s+', ' '))` but without two regex
     * engine passes — the normalize step sits under every fingerprint/
     * dedup scan, so it is hot at corpus scale. */
-  case class NormalizeText(child: Expression) extends UnaryExpression {
+  case class NormalizeText(child: Expression) extends UnaryEvalBridge {
     override def dataType: DataType = StringType
 
     override def nullSafeEval(input: Any): Any =
       UTF8String.fromString(
         VectorFunctions.normalizeStringOf(input.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("norm", this,
-        classOf[NormalizeText].getName)
-      nullSafeCodeGen(ctx, ev, v => {
-        s"""${ev.value} = (org.apache.spark.unsafe.types.UTF8String)
-           |  $expr.nullSafeEval($v);""".stripMargin
-      })
-    }
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
@@ -2083,7 +1714,7 @@ object VectorFunctions {
     * cosine rewrite this is a strict equivalence). Null/empty text →
     * null (no gram set to compare). */
   case class JaccardSim(left: Expression, right: Expression, n: Int)
-      extends BinaryExpression {
+      extends BinaryEvalBridge {
     require(n >= 1)
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
@@ -2101,20 +1732,6 @@ object VectorFunctions {
         java.lang.Double.valueOf(
           c.toDouble / (sa.length + sb.length - c).toDouble)
       }
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-        : ExprCode = {
-      val expr = ctx.addReferenceObj("jaccardSim", this,
-        classOf[JaccardSim].getName)
-      val r = ctx.freshName("r")
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        s"""
-           |Object $r = $expr.nullSafeEval($a, $b);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ((Double) $r).doubleValue(); }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildrenInternal(

@@ -310,6 +310,97 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("FlaggedCappedPairs equals the naive capped pairs with a new member") {
+    // the dedup_minhash_increment kernel: pairs among the maxBucket
+    // smallest ids that touch at least one new posting. Ids repeat on
+    // purpose — equal ids keep their input order (stable sort), so
+    // which duplicate survives the cap, and its flag, is pinned too.
+    import graft.functions.VectorFunctions.FlaggedCappedPairs
+    (0 until 40).foreach { i =>
+      val ps = (0 until 3 + i % 12).flatMap(k => (for {
+        id <- Gen.choose(0L, 12L)
+        isNew <- Gen.oneOf(true, false)
+      } yield (id, isNew)).apply(Gen.Parameters.default, Seed(313L * i + k)))
+      val cap = 2 + i % 7
+      val expr = FlaggedCappedPairs(structArray(
+        ps.map { case (id, isNew) => InternalRow(id, isNew) },
+        Seq(StructField("doc_id", LongType),
+          StructField("is_new", BooleanType))), cap)
+      val got = {
+        val r = expr.eval(InternalRow.empty).asInstanceOf[ArrayData]
+        (0 until r.numElements())
+          .map(k => (r.getStruct(k, 2).getLong(0), r.getStruct(k, 2).getLong(1)))
+          .sorted
+      }
+      val capped = ps.sortBy(_._1).take(cap)
+      val want = (for {
+        a <- capped.indices; b <- a + 1 until capped.size
+        if capped(a)._2 || capped(b)._2
+      } yield (capped(a)._1, capped(b)._1)).sorted
+      assert(got === want, s"case $i cap=$cap postings=$ps")
+    }
+  }
+
+  test("every bucket generator keeps the capped-bucket contract") {
+    // One table row per generator: its postings for a list of ids, the
+    // posting struct width, and the id fields of an output row. The
+    // payloads make every in-bucket pair pass the generator's filter,
+    // so the ids that appear are exactly the ids the cap keeps.
+    import graft.functions.VectorFunctions._
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    val t = 0.5
+    def rows(ids: Seq[Long], f: Long => InternalRow, fields: Seq[StructField])
+        : Literal = structArray(ids.map(f), fields)
+    val table: Seq[(String, (Seq[Long], Int) => Expression, Int)] = Seq(
+      ("CappedPairs", (ids, cap) => CappedPairs(Literal(
+        new GenericArrayData(ids.toArray[Any]), ArrayType(LongType)), cap), 2),
+      ("FlaggedCappedPairs", (ids, cap) => FlaggedCappedPairs(rows(ids,
+        InternalRow(_, true), Seq(StructField("doc_id", LongType),
+          StructField("is_new", BooleanType))), cap), 2),
+      ("HammingPairs", (ids, cap) => HammingPairs(rows(ids,
+        InternalRow(_, 0L), Seq(StructField("doc_id", LongType),
+          StructField("sig", LongType))), cap, 0), 2),
+      ("BucketPairs", (ids, cap) => BucketPairs(rows(ids,
+        InternalRow(_, 1, 1), Seq(StructField("doc_id", LongType),
+          StructField("rn", IntegerType), StructField("sz", IntegerType))),
+        cap, t), 2),
+      ("VerifiedBucketPairs", (ids, cap) => VerifiedBucketPairs(rows(ids,
+        InternalRow(_, 1, new GenericArrayData(Array[Any](1L, 2L))),
+        Seq(StructField("id", LongType), StructField("rn", IntegerType),
+          StructField("gs", ArrayType(LongType)))), cap, t), 2),
+      ("CosineBucketBest", (ids, cap) => CosineBucketBest(rows(ids,
+        InternalRow(_, new GenericArrayData(Array[Any](1f, 0f))),
+        Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(FloatType)))), cap), 2))
+    def eval(e: Expression): ArrayData =
+      e.eval(InternalRow.empty).asInstanceOf[ArrayData]
+    table.foreach { case (name, gen, idFields) =>
+      // fewer than 2 postings: an empty array, never null
+      Seq(Seq.empty[Long], Seq(7L)).foreach { ids =>
+        val r = eval(gen(ids, 4))
+        assert(r != null && r.numElements() === 0, s"$name on $ids")
+      }
+      // a null posting anywhere (here past the cap) makes the bucket null
+      val withNull = gen(Seq(3L, 1L, 2L), 2).transformUp {
+        case Literal(a: GenericArrayData, dt) =>
+          Literal(new GenericArrayData(a.array :+ null), dt)
+      }
+      assert(eval(withNull) === null, name)
+      // more than maxBucket postings: only the smallest ids appear, and
+      // every pair is emitted as id_a < id_b
+      val ids = Seq(40L, -5L, 12L, 7L, 99L, 3L, -20L, 64L)
+      val cap = 5
+      val r = eval(gen(ids, cap))
+      val out = (0 until r.numElements()).map { k =>
+        val s = r.getStruct(k, 3)
+        (0 until idFields).map(s.getLong)
+      }
+      assert(out.flatten.toSet === ids.sorted.take(cap).toSet, name)
+      if (name != "CosineBucketBest")
+        assert(out.forall(p => p(0) < p(1)), s"$name: $out")
+    }
+  }
+
   test("persisted index merge ≡ re-derive increment on random corpora " +
       "and random old/new splits") {
     import spark.implicits._

@@ -55,4 +55,37 @@ class RepoHygieneSpec extends AnyFunSuite {
     val missing = all.filterNot(named)
     assert(missing.isEmpty, s"scripts README.md does not name: $missing")
   }
+
+  /** Expressions that call `ctx.addReferenceObj` themselves, as (file,
+    * owning class) pairs. Everything else goes through the codegen
+    * bridge, `VectorFunctions.EvalBridge`: the three text helpers take
+    * a nullable input into a typed helper, BloomMightContain calls its
+    * typed `mightContain`, and BoundLiteral binds a literal's value. */
+  private val referenceObjOwners = Set(
+    "VectorFunctions.scala" -> "EvalBridge",
+    "VectorFunctions.scala" -> "TopTokenFrac",
+    "VectorFunctions.scala" -> "WordBigrams",
+    "VectorFunctions.scala" -> "WordShingles",
+    "BloomJoin.scala" -> "BloomMightContain",
+    "StableCodegen.scala" -> "BoundLiteral")
+
+  private val Decl = ("""(?m)^\s*(?:(?:private|protected|final|sealed|""" +
+    """abstract|case)(?:\[\w+\])?\s+)*(?:class|trait|object)\s+(\w+)""").r
+
+  test("addReferenceObj under src/main/scala is the bridge's or allowlisted") {
+    val calls = files("src/main/scala").filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        val decls = Decl.findAllMatchIn(src).map(m => m.start -> m.group(1))
+          .toSeq
+        "addReferenceObj".r.findAllMatchIn(src).map(m =>
+          p.getFileName.toString ->
+            decls.filter(_._1 < m.start).lastOption.fold("")(_._2)).toSeq
+      }
+    assert(calls.contains("VectorFunctions.scala" -> "EvalBridge"),
+      s"owner scan found only $calls")
+    val stray = calls.filterNot(referenceObjOwners)
+    assert(stray.isEmpty, s"addReferenceObj outside the codegen bridge " +
+      s"(extend UnaryEvalBridge or BinaryEvalBridge instead): $stray")
+  }
 }

@@ -34,8 +34,52 @@ class VectorFunctionsSpec extends AnyFunSuite {
         Array.tabulate(16)(j => (i * 17 + j).toFloat % 5 - 2))
     }
     val df = data.toDF("a", "b")
-    val codegen = df.select(cosine_sim(col("a"), col("b"))).collect()
-      .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
+    // Beside cosine_sim (hand-written codegen), one bridged expression
+    // per result cast of the codegen bridge: ArrayData, InternalRow,
+    // UTF8String, byte[], long and double. Row 3 makes each nullable
+    // one return null; the coalesce children are non-nullable, so
+    // those expressions take the bridge's non-nullable branch.
+    val bridged = Seq[(Int, Array[Long], String, String, Array[Byte],
+        Array[Float])](
+      (0, Array(9L, 2L, 5L), "  The Quick\tfox ", "the quick fox jumps",
+        Array[Byte](7, 1), Array(0.5f, -1f, 2f)),
+      (1, Array(4L, 1L), "A1 b2  c3", "a1 b2 c4", Array[Byte](-1),
+        Array(1f, 1f, 1f)),
+      (2, Array.empty[Long], "", "x", Array.empty[Byte], Array(0f, 0f, 1f)),
+      (3, null, null, null, null, Array.empty[Float]))
+      .toDF("k", "ids", "t", "u", "bm", "v")
+      .repartition(2) // keep the projection out of a LocalRelation fold
+    val noText = coalesce(col("t"), lit(""))
+    val noBm = coalesce(col("bm"), lit(Array[Byte](3)))
+    val exprs = Seq(col("k"),
+      capped_pairs(col("ids"), 2),
+      capped_pairs(when(col("k") === 3, array(lit(1L), lit(null)))
+        .otherwise(col("ids")), 3),
+      text_stats(col("t")), text_stats(noText),
+      normalize_text(col("t")), normalize_text(noText),
+      bitmap_andnot(col("bm"), lit(Array[Byte](3))),
+      bitmap_andnot(noBm, lit(Array[Byte](1))),
+      hyperplane_sig(col("v"), 8),
+      text_jaccard(col("t"), col("u"), 3))
+    def plain(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: org.apache.spark.sql.Row => r.toSeq.map(plain)
+      case s: scala.collection.Seq[_] => s.map(plain)
+      case other => other
+    }
+    def bridgedRows() = bridged.select(exprs: _*).collect()
+      .map(r => r.toSeq.map(plain)).sortBy(_.head.asInstanceOf[Int]).toSeq
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val (codegen, bridgedCodegen) =
+      try {
+        (df.select(cosine_sim(col("a"), col("b"))).collect()
+          .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0)),
+          bridgedRows())
+      } finally {
+        spark.conf.set("spark.sql.codegen.fallback", "true")
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      }
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
@@ -44,10 +88,18 @@ class VectorFunctionsSpec extends AnyFunSuite {
       codegen.zip(interp).foreach { case (x, y) =>
         assert(x == y || (x.isNaN && y.isNaN))
       }
+      assert(bridgedCodegen === bridgedRows())
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
+    // the null row really is null where the expression is nullable,
+    // and never null through the non-nullable branch
+    val nullRow = bridgedCodegen.find(_.head == 3).get
+    Seq(1, 2, 3, 5, 7, 9, 10).foreach(c =>
+      assert(nullRow(c) == null, s"column $c of $nullRow"))
+    Seq(4, 6, 8).foreach(c =>
+      assert(nullRow(c) != null, s"column $c of $nullRow"))
   }
 
   test("simhash64 is order-insensitive and content-sensitive") {
