@@ -23,11 +23,10 @@ import graft.plans.StableCodegen
   * and every session gets, with no per-session setup code:
   *
   *  - the custom Catalyst expressions as SQL functions (`cosine_sim`,
-  *    `simhash64`, `shingle_hashes`, …) — one registry, shared with the
-  *    session-local `VectorFunctions.registerSqlFunctions` path;
-  *  - the as-of-join planner strategy, so [[graft.plans.AsOfJoin]]
-  *    plans are executable without touching
-  *    `spark.experimental.extraStrategies`;
+  *    `simhash64`, `shingle_hashes`, …), one entry each in
+  *    `VectorFunctions.sqlFunctionBuilders`;
+  *  - the as-of-join planner strategy, the only way
+  *    [[graft.plans.AsOfJoin]] plans become executable;
   *  - [[PushFilterThroughAsOfJoin]], the optimizer rule that restores
   *    predicate pushdown across the custom join operator (Catalyst's
   *    own pushdown rules don't know the node, so without this a filter

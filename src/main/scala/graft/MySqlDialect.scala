@@ -78,12 +78,25 @@ package graft
   * UTF8_LCASE collation so `WHERE name = 'ALICE'` matches the rows a
   * ci-collated MySQL would return.
   *
-  * The rewriter is a character-level scanner, not a regex: single- and
-  * double-quoted literals (with `\`-escapes and doubled quotes) and
+  * The rewriter walks one MySQL lexer ([[Scan]]), not a regex: single-
+  * and double-quoted literals (with `\`-escapes and doubled quotes) and
   * backtick identifiers are copied verbatim, so a literal containing
   * `LIMIT 1, 2` or `GROUP_CONCAT(` is never touched. Function
   * arguments are re-scanned recursively, so nested MySQL-isms
   * (`GROUP_CONCAT(DATE_FORMAT(...))`) translate at any depth.
+  *
+  * **Comments** follow MySQL's rules. Text inside `-- …` (to end of
+  * line) and `/* … */` is copied verbatim and is neither audited nor
+  * rewritten; inside the arguments of a call the rewrite re-spells, a
+  * comment becomes one space. MySQL's `#` comment is emitted as `--`,
+  * because Spark's parser rejects `#`. `--` starts a comment only when
+  * whitespace or a control character (or the end of input) follows
+  * it, as in MySQL; otherwise it is two minus signs and is emitted as
+  * `- -` — Spark reads `SELECT 5--3` as `SELECT 5`, MySQL returns 8.
+  * A line comment that ends in `\` gets a space after it, because
+  * Spark would continue the comment onto the next line.
+  * An executable `/*! … */` comment fails loudly: MySQL runs its
+  * contents, Spark would skip them.
   *
   * **Strict-function audit (default ON)**: before rewriting, the
   * statement is scanned for calls to MySQL builtins that are neither
@@ -126,16 +139,6 @@ object MySqlDialect {
   // VERIFIED-IDENTICAL allowlist fails loudly at translate time.
   // Names MySQL doesn't own (Spark-only functions, UDFs) pass — the
   // audit guards MySQL-statement semantics, not Spark's registry.
-
-  /** Function names this module rewrites (see the scanner). */
-  private val interceptedFns: Set[String] = Set(
-    "GROUP_CONCAT", "DATE_FORMAT", "DATE_ADD", "DATE_SUB", "NOW",
-    "FROM_UNIXTIME", "STR_TO_DATE", "CURTIME",
-    // NOW()/CURTIME() keyword synonyms — rewritten with MySQL
-    // precision in both the parenthesized and the bare spelling
-    "CURRENT_TIMESTAMP", "LOCALTIME", "LOCALTIMESTAMP", "CURRENT_TIME",
-    // UTC wall-clock family — exact Spark forms via to_utc_timestamp
-    "UTC_TIMESTAMP", "UTC_DATE", "UTC_TIME")
 
   /** MySQL builtins whose Spark namesake has VERIFIED-identical
     * semantics (SqlDialectSpec pins the non-obvious ones; the rest are
@@ -228,14 +231,9 @@ object MySqlDialect {
     * the strict audit flags bare uses of these with the tailored
     * hints above. The translated bare keywords (CURRENT_TIMESTAMP /
     * LOCALTIME / LOCALTIMESTAMP / CURRENT_TIME and the UTC_* family)
-    * are deliberately NOT here: [[rewrite]] intercepts them like their
-    * parenthesized spellings. */
+    * are deliberately NOT here: their [[translated]] handlers rewrite
+    * them like their parenthesized spellings. */
   private val bareKeywordAudit: Set[String] = Set("CURRENT_USER")
-
-  /** Bare keywords [[rewrite]] translates with MySQL semantics. */
-  private val bareKeywordTranslated: Set[String] = Set(
-    "CURRENT_TIMESTAMP", "LOCALTIME", "LOCALTIMESTAMP", "CURRENT_TIME",
-    "UTC_TIMESTAMP", "UTC_DATE", "UTC_TIME")
 
   /** MySQL 8.0 builtin function-name catalog (public reference-manual
     * inventory: string, numeric, date/time, cast, aggregate, window,
@@ -313,50 +311,27 @@ object MySqlDialect {
     "MASTER_POS_WAIT", "SOURCE_POS_WAIT", "GTID_SUBSET",
     "GTID_SUBTRACT", "WAIT_FOR_EXECUTED_GTID_SET")
 
-  /** Quote-aware scan for called function names (word followed by an
-    * open paren, MySQL's default no-IGNORE_SPACE call shape plus
-    * whitespace tolerance); every hit that is a MySQL builtin outside
-    * the intercepted/verified-identical sets is collected and reported
-    * in ONE loud failure. Bare keyword expressions without parens are
-    * audited too: un-translated keyword-callable names
-    * ([[bareKeywordAudit]]) are flagged unless dot-qualified (a
-    * qualified name is a column reference, never the MySQL keyword);
-    * the [[bareKeywordTranslated]] set passes because [[rewrite]]
-    * intercepts those spellings with MySQL precision. */
+  /** Quote- and comment-aware scan for called function names (word
+    * followed by an open paren, MySQL's default no-IGNORE_SPACE call
+    * shape plus whitespace tolerance); every hit that is a MySQL
+    * builtin outside the [[translated]] and verified-identical sets is
+    * collected and reported in ONE loud failure. Bare keyword
+    * expressions without parens are audited too: un-translated
+    * keyword-callable names ([[bareKeywordAudit]]) are flagged unless
+    * dot-qualified (a qualified name is a column reference, never the
+    * MySQL keyword); the translated bare keywords pass because their
+    * handlers rewrite those spellings with MySQL precision. */
   private def auditFunctions(sql: String): Unit = {
-    val n = sql.length
-    var i = 0
     val bad = scala.collection.mutable.LinkedHashSet.empty[String]
-    def skipQuoted(at: Int, quote: Char): Int = {
-      var k = at + 1
-      while (k < n) {
-        val c = sql.charAt(k)
-        if (c == '\\' && k + 1 < n && quote != '`') k += 2
-        else if (c == quote && k + 1 < n && sql.charAt(k + 1) == quote)
-          k += 2
-        else if (c == quote) return k + 1
-        else k += 1
-      }
-      k
-    }
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(i, c)
-      else if (Character.isLetterOrDigit(c) || c == '_') {
-        val start = i
-        while (i < n && (Character.isLetterOrDigit(sql.charAt(i)) ||
-          sql.charAt(i) == '_')) i += 1
-        val word = sql.substring(start, i).toUpperCase
-        var j = i
-        while (j < n && Character.isWhitespace(sql.charAt(j))) j += 1
-        val isCall = j < n && sql.charAt(j) == '('
-        val dotQualified = start > 0 && sql.charAt(start - 1) == '.'
-        if (isCall && !interceptedFns(word) && !verifiedIdentical(word)
-            && (mysqlBuiltins(word) || word.startsWith("ST_")))
-          bad += word
-        else if (!isCall && !dotQualified && bareKeywordAudit(word))
-          bad += word
-      } else i += 1
+    val sc = new Scan(sql)
+    while (sc.next()) if (sc.isWord) {
+      val word = sc.upper
+      val isCall = sc.openParen >= 0
+      if (isCall && !translated.contains(word) && !verifiedIdentical(word)
+          && (mysqlBuiltins(word) || word.startsWith("ST_")))
+        bad += word
+      else if (!isCall && !sc.qualified && bareKeywordAudit(word))
+        bad += word
     }
     if (bad.nonEmpty) {
       val lines = bad.map { f =>
@@ -398,169 +373,149 @@ object MySqlDialect {
   }
 
   private def rewrite(sql: String): String = {
-    val out = new StringBuilder(sql.length + 16)
-    val n = sql.length
-    var i = 0
-
-    def copyQuoted(quote: Char): Unit = {
-      // leading quote already consumed by caller
-      out.append(quote)
-      i += 1
-      var done = false
-      while (i < n && !done) {
-        val c = sql.charAt(i)
-        if (c == '\\' && i + 1 < n && quote != '`') {
-          out.append(c).append(sql.charAt(i + 1)); i += 2
-        } else if (c == quote && i + 1 < n && sql.charAt(i + 1) == quote) {
-          out.append(c).append(quote); i += 2 // doubled quote escape
-        } else if (c == quote) {
-          out.append(c); i += 1; done = true
-        } else {
-          out.append(c); i += 1
+    val out = new java.lang.StringBuilder(sql.length + 16)
+    val sc = new Scan(sql)
+    while (sc.next()) {
+      if (sc.isComment) {
+        if (sc.char == '#')
+          out.append("--").append(sql, sc.start + 1, sc.end)
+        else out.append(sql, sc.start, sc.end)
+        // Spark carries a line comment past a newline escaped by `\`,
+        // MySQL ends it at the newline
+        if (sql.charAt(sc.end - 1) == '\\' && sc.end < sql.length)
+          out.append(' ')
+      } else if (sc.isWord) {
+        val word = sc.upper
+        if (word == "LIMIT") limitPair(sql, sc.end) match {
+          case Some((offset, count, end)) =>
+            out.append("LIMIT ").append(count).append(" OFFSET ")
+              .append(offset)
+            sc.skipTo(end)
+          case None => out.append(sql, sc.start, sc.end)
+        } else translated.get(word).flatMap { handler =>
+          val open = sc.openParen
+          val close = if (open < 0) -1 else closeOf(sql, open)
+          if (close >= 0) handler(Some(withoutComments(
+            sql.substring(open + 1, close - 1)))).map((_, close))
+          // a bare dot-qualified name (`t.current_timestamp`) is a
+          // column reference, never the keyword
+          else if (sc.qualified) None
+          else handler(None).map((_, sc.end))
+        } match {
+          case Some((text, end)) => out.append(text); sc.skipTo(end)
+          // untranslated word, or a Spark-identical form left verbatim:
+          // the loop keeps scanning its arguments
+          case None => out.append(sql, sc.start, sc.end)
         }
-      }
-    }
-
-    def isWordChar(c: Char): Boolean =
-      Character.isLetterOrDigit(c) || c == '_'
-
-    // index just past the ')' matching the '(' at `open` (quote-aware);
-    // -1 if unbalanced (leave untouched — Spark will report the error)
-    def matchParen(open: Int): Int = {
-      var k = open + 1
-      var depth = 1
-      while (k < n && depth > 0) {
-        val c = sql.charAt(k)
-        if (c == '\'' || c == '"' || c == '`') k = skipQuoted(k, c)
-        else {
-          if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          k += 1
-        }
-      }
-      if (depth == 0) k else -1
-    }
-
-    // index just past a quoted region starting at `at` (which holds the
-    // opening quote)
-    def skipQuoted(at: Int, quote: Char): Int = {
-      var k = at + 1
-      while (k < n) {
-        val c = sql.charAt(k)
-        if (c == '\\' && k + 1 < n && quote != '`') k += 2
-        else if (c == quote && k + 1 < n && sql.charAt(k + 1) == quote)
-          k += 2
-        else if (c == quote) return k + 1
-        else k += 1
-      }
-      k
-    }
-
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') copyQuoted(c)
-      else if (isWordChar(c)) {
-        val start = i
-        while (i < n && isWordChar(sql.charAt(i))) i += 1
-        val word = sql.substring(start, i)
-        if (word.equalsIgnoreCase("LIMIT")) {
-          // try to match the two-argument form: LIMIT <int> , <int>
-          var j = i
-          def skipWs(k0: Int): Int = {
-            var k = k0
-            while (k < n && Character.isWhitespace(sql.charAt(k))) k += 1
-            k
-          }
-          def readInt(k0: Int): (String, Int) = {
-            var k = k0
-            while (k < n && Character.isDigit(sql.charAt(k))) k += 1
-            (sql.substring(k0, k), k)
-          }
-          j = skipWs(j)
-          val (a, j1) = readInt(j)
-          val j2 = skipWs(j1)
-          if (a.nonEmpty && j2 < n && sql.charAt(j2) == ',') {
-            val j3 = skipWs(j2 + 1)
-            val (b, j4) = readInt(j3)
-            if (b.nonEmpty) {
-              out.append("LIMIT ").append(b).append(" OFFSET ").append(a)
-              i = j4
-            } else out.append(word)
-          } else out.append(word)
-        } else if (word.equalsIgnoreCase("GROUP_CONCAT") ||
-            word.equalsIgnoreCase("DATE_FORMAT") ||
-            word.equalsIgnoreCase("DATE_ADD") ||
-            word.equalsIgnoreCase("DATE_SUB") ||
-            word.equalsIgnoreCase("NOW") ||
-            word.equalsIgnoreCase("FROM_UNIXTIME") ||
-            word.equalsIgnoreCase("STR_TO_DATE") ||
-            word.equalsIgnoreCase("CURTIME") ||
-            bareKeywordTranslated(word.toUpperCase)) {
-          val dotQualified = start > 0 && sql.charAt(start - 1) == '.'
-          var j = i
-          while (j < n && Character.isWhitespace(sql.charAt(j))) j += 1
-          val close = if (j < n && sql.charAt(j) == '(') matchParen(j)
-            else -1
-          if (close < 0) {
-            // No parens. The NOW()-synonym keywords are legal MySQL
-            // expressions bare — translate them with MySQL precision
-            // (unless dot-qualified: `t.current_timestamp` is a column
-            // reference). Everything else bare is left verbatim for
-            // Spark to report.
-            if (!dotQualified &&
-                (word.equalsIgnoreCase("CURRENT_TIMESTAMP") ||
-                  word.equalsIgnoreCase("LOCALTIME") ||
-                  word.equalsIgnoreCase("LOCALTIMESTAMP")))
-              out.append(rewriteNow(""))
-            else if (!dotQualified && word.equalsIgnoreCase("CURRENT_TIME"))
-              out.append(rewriteCurtime(""))
-            else if (!dotQualified && word.equalsIgnoreCase("UTC_TIMESTAMP"))
-              out.append(rewriteUtcTimestamp(""))
-            else if (!dotQualified && word.equalsIgnoreCase("UTC_DATE"))
-              out.append(rewriteUtcDate(""))
-            else if (!dotQualified && word.equalsIgnoreCase("UTC_TIME"))
-              out.append(rewriteUtcTime(""))
-            else out.append(word)
-          } else {
-            val inner = sql.substring(j + 1, close - 1)
-            val rewritten: Option[String] =
-              if (word.equalsIgnoreCase("GROUP_CONCAT"))
-                Some(rewriteGroupConcat(inner))
-              else if (word.equalsIgnoreCase("DATE_FORMAT"))
-                Some(rewriteDateFormat(inner))
-              else if (word.equalsIgnoreCase("NOW") ||
-                word.equalsIgnoreCase("CURRENT_TIMESTAMP") ||
-                word.equalsIgnoreCase("LOCALTIME") ||
-                word.equalsIgnoreCase("LOCALTIMESTAMP"))
-                Some(rewriteNow(inner))
-              else if (word.equalsIgnoreCase("FROM_UNIXTIME"))
-                rewriteFromUnixtime(inner)
-              else if (word.equalsIgnoreCase("STR_TO_DATE"))
-                Some(rewriteStrToDate(inner))
-              else if (word.equalsIgnoreCase("CURTIME") ||
-                word.equalsIgnoreCase("CURRENT_TIME"))
-                Some(rewriteCurtime(inner))
-              else if (word.equalsIgnoreCase("UTC_TIMESTAMP"))
-                Some(rewriteUtcTimestamp(inner))
-              else if (word.equalsIgnoreCase("UTC_DATE"))
-                Some(rewriteUtcDate(inner))
-              else if (word.equalsIgnoreCase("UTC_TIME"))
-                Some(rewriteUtcTime(inner))
-              else rewriteDateAddSub(inner,
-                plus = word.equalsIgnoreCase("DATE_ADD"))
-            rewritten match {
-              case Some(r) => out.append(r); i = close
-              case None => out.append(word) // Spark-identical form:
-              // leave verbatim, the main loop keeps scanning the args
-            }
-          }
-        } else out.append(word)
-      } else {
-        out.append(c); i += 1
-      }
+      } else if (sc.char == '-' && sc.end < sql.length &&
+          sql.charAt(sc.end) == '-')
+        out.append("- ") // two minus signs, not a Spark comment
+      else out.append(sql, sc.start, sc.end)
     }
     out.toString
   }
+
+  /** MySQL's two-argument `LIMIT offset, count` after the LIMIT word
+    * that ends at `from`: (offset, count, end of the clause). */
+  private def limitPair(sql: String,
+      from: Int): Option[(String, String, Int)] = {
+    def digitsEnd(k0: Int): Int = {
+      var k = k0
+      while (k < sql.length && Character.isDigit(sql.charAt(k))) k += 1
+      k
+    }
+    val a0 = afterSpaces(sql, from)
+    val a1 = digitsEnd(a0)
+    val comma = afterSpaces(sql, a1)
+    if (a1 == a0 || comma >= sql.length || sql.charAt(comma) != ',') None
+    else {
+      val b0 = afterSpaces(sql, comma + 1)
+      val b1 = digitsEnd(b0)
+      if (b1 == b0) None
+      else Some((sql.substring(a0, a1), sql.substring(b0, b1), b1))
+    }
+  }
+
+  // -------------------------------------------------------------------
+  // The translated names: one table from upper-case name to handler
+  // -------------------------------------------------------------------
+
+  private type Handler = Option[String] => Option[String]
+
+  /** Every name the rewrite translates, with its handler. A handler
+    * takes the call's argument text (comments blanked), or None for a
+    * bare spelling without parens, and returns the Spark text, or None
+    * to leave the word as written. The key set is also the audit's
+    * intercepted set, so a new translated function is one entry. */
+  private[graft] val translated: Map[String, Handler] = {
+    def call(f: String => Option[String]): Handler = _.flatMap(f)
+    def always(f: String => String): Handler = call(a => Some(f(a)))
+    // NOW()/CURTIME() keyword synonyms and the UTC wall-clock family
+    // are legal bare in MySQL and translate like their call spelling
+    def callOrBare(f: String => String): Handler =
+      a => Some(f(a.getOrElse("")))
+    val now = callOrBare(rewriteNow)
+    val curtime = callOrBare(rewriteCurtime)
+    Map(
+      "GROUP_CONCAT" -> always(rewriteGroupConcat),
+      "DATE_FORMAT" -> always(rewriteDateFormat),
+      "DATE_ADD" -> call(rewriteDateAddSub(_, plus = true)),
+      "DATE_SUB" -> call(rewriteDateAddSub(_, plus = false)),
+      "FROM_UNIXTIME" -> call(rewriteFromUnixtime),
+      "STR_TO_DATE" -> always(rewriteStrToDate),
+      "NOW" -> always(rewriteNow),
+      "CURTIME" -> always(rewriteCurtime),
+      "CURRENT_TIMESTAMP" -> now, "LOCALTIME" -> now,
+      "LOCALTIMESTAMP" -> now, "CURRENT_TIME" -> curtime,
+      "UTC_TIMESTAMP" -> callOrBare(fsp => precision("UTC_TIMESTAMP", fsp,
+        s"date_trunc('SECOND', $utcNowExpr)", utcNowExpr)),
+      "UTC_DATE" -> callOrBare(rewriteUtcDate),
+      "UTC_TIME" -> callOrBare(fsp => precision("UTC_TIME", fsp,
+        s"date_format($utcNowExpr, 'HH:mm:ss')",
+        s"date_format($utcNowExpr, 'HH:mm:ss.SSSSSS')")))
+  }
+
+  /** MySQL's fractional-second precision argument: `""` or `"0"` gives
+    * `seconds`, `"6"` gives `micros`; precisions 1..5 have no Spark
+    * truncation and fail loudly. */
+  private def precision(who: String, fsp: String, seconds: String,
+      micros: String, hint: String = ""): String = fsp.trim match {
+    case "" | "0" => seconds
+    case "6" => micros
+    case other => fail(s"$who($other): fractional-second precision " +
+      s"1..5 has no Spark truncation equivalent; use $who() or $who(6)" +
+      hint)
+  }
+
+  /** MySQL NOW() is second-precision; Spark's now() carries
+    * microseconds — truncate so equality/grouping on the value matches
+    * a MySQL replay. NOW(6) is full precision (Spark-identical). */
+  private def rewriteNow(fsp: String): String = precision("NOW", fsp,
+    "date_trunc('SECOND', current_timestamp())", "current_timestamp()",
+    ", or rewrite with date_format manually")
+
+  /** MySQL CURTIME() returns a TIME value whose text form is
+    * `HH:MM:SS`; Spark has no TIME type, so the faithful observable is
+    * that text — rendered second-precision like NOW(). CURTIME(6)
+    * keeps microseconds. */
+  private def rewriteCurtime(fsp: String): String = precision("CURTIME",
+    fsp, "date_format(current_timestamp(), 'HH:mm:ss')",
+    "date_format(current_timestamp(), 'HH:mm:ss.SSSSSS')",
+    ", or rewrite with date_format manually")
+
+  // UTC_TIMESTAMP/UTC_DATE/UTC_TIME — MySQL's UTC wall-clock family.
+  // MySQL returns the UTC wall-clock regardless of the session time
+  // zone; Spark's current_timestamp() renders in the SESSION zone, so
+  // the faithful spelling shifts it with to_utc_timestamp(...,
+  // current_timezone()) (identity when the session already runs UTC).
+  private val utcNowExpr =
+    "to_utc_timestamp(current_timestamp(), current_timezone())"
+
+  private def rewriteUtcDate(argsRaw: String): String =
+    argsRaw.trim match {
+      case "" => s"to_date($utcNowExpr)"
+      case other => fail(s"UTC_DATE($other): UTC_DATE takes no argument")
+    }
 
   // -------------------------------------------------------------------
   // GROUP_CONCAT([DISTINCT] e1 [, e2...] [ORDER BY k [ASC|DESC] [, ...]]
@@ -598,7 +553,7 @@ object MySqlDialect {
         if (!hasPrefixWord(tail0, "BY"))
           fail(s"GROUP_CONCAT: expected BY after ORDER in: $argsRaw")
         var key = tail0.substring("BY".length).trim
-        if (splitTopLevel(key, ',').length > 1)
+        if (splitTopLevel(key).length > 1)
           fail("GROUP_CONCAT ORDER BY with multiple keys is not " +
             s"translated — $help")
         if (endsWithWord(key, "DESC")) {
@@ -612,7 +567,7 @@ object MySqlDialect {
 
     // remaining: one or more concatenated expressions (recursively
     // translated so nested DATE_FORMAT etc. rewrite too)
-    val exprs = splitTopLevel(args, ',').map(e => rewrite(e.trim))
+    val exprs = splitTopLevel(args).map(e => rewrite(e.trim))
     if (exprs.isEmpty || exprs.exists(_.isEmpty))
       fail(s"GROUP_CONCAT needs at least one expression: $argsRaw")
     // MySQL concatenates the expression list per row, then aggregates;
@@ -781,7 +736,7 @@ object MySqlDialect {
   private def exprAndPattern(
       argsRaw: String, who: String,
       forParsing: Boolean = false): (String, String, Boolean, Boolean) = {
-    val parts = splitTopLevel(argsRaw, ',')
+    val parts = splitTopLevel(argsRaw)
     if (parts.length != 2)
       fail(s"$who needs exactly (expr, 'pattern'): $argsRaw")
     val patLit = parts(1).trim
@@ -812,7 +767,7 @@ object MySqlDialect {
     * as MySQL literals), so it is intercepted by name and the pattern
     * token-translated like DATE_FORMAT's. */
   private def rewriteFromUnixtime(argsRaw: String): Option[String] = {
-    if (splitTopLevel(argsRaw, ',').length < 2) None
+    if (splitTopLevel(argsRaw).length < 2) None
     else {
       val (expr, pat, _, _) = exprAndPattern(argsRaw, "FROM_UNIXTIME")
       Some(s"from_unixtime($expr, '$pat')")
@@ -834,18 +789,6 @@ object MySqlDialect {
     else s"to_date($expr, '$pat')"
   }
 
-  /** MySQL CURTIME() returns a TIME value whose text form is
-    * `HH:MM:SS`; Spark has no TIME type, so the faithful observable is
-    * that text — rendered second-precision like NOW(). CURTIME(6)
-    * keeps microseconds; intermediate fsp fails loudly like NOW's. */
-  private def rewriteCurtime(argsRaw: String): String = argsRaw.trim match {
-    case "" | "0" => "date_format(current_timestamp(), 'HH:mm:ss')"
-    case "6" => "date_format(current_timestamp(), 'HH:mm:ss.SSSSSS')"
-    case other => fail(s"CURTIME($other): fractional-second precision " +
-      "1..5 has no Spark truncation equivalent; use CURTIME() or " +
-      "CURTIME(6), or rewrite with date_format manually")
-  }
-
   // -------------------------------------------------------------------
   // DATE_ADD/DATE_SUB(expr, INTERVAL n UNIT) → (expr ± INTERVAL n UNIT)
   // -------------------------------------------------------------------
@@ -861,7 +804,7 @@ object MySqlDialect {
       plus: Boolean): Option[String] = {
     val help = "rewrite with (expr + make_interval(...)) or " +
       "make_dt_interval(...) manually"
-    val parts = splitTopLevel(argsRaw, ',')
+    val parts = splitTopLevel(argsRaw)
     if (parts.length != 2) return None // let Spark report arity
     val second = parts(1).trim
     if (!hasPrefixWord(second, "INTERVAL")) return None // day-count
@@ -893,122 +836,142 @@ object MySqlDialect {
     Some(s"(${rewrite(parts(0).trim)} $op INTERVAL $qty $sparkUnit)")
   }
 
-  /** MySQL NOW() is second-precision; Spark's now() carries
-    * microseconds — truncate so equality/grouping on the value matches
-    * a MySQL replay. NOW(6) is full precision (Spark-identical);
-    * intermediate fsp has no direct Spark spelling. */
-  private def rewriteNow(argsRaw: String): String = argsRaw.trim match {
-    case "" | "0" => "date_trunc('SECOND', current_timestamp())"
-    case "6" => "current_timestamp()"
-    case other => fail(s"NOW($other): fractional-second precision " +
-      "1..5 has no Spark truncation equivalent; use NOW() or NOW(6), " +
-      "or rewrite with date_format manually")
-  }
-
   // -------------------------------------------------------------------
-  // UTC_TIMESTAMP/UTC_DATE/UTC_TIME — MySQL's UTC wall-clock family.
-  // MySQL returns the UTC wall-clock regardless of the session time
-  // zone; Spark's current_timestamp() renders in the SESSION zone, so
-  // the faithful spelling shifts it with to_utc_timestamp(...,
-  // current_timezone()) (identity when the session already runs UTC).
-  // Precision follows the NOW()/CURTIME() discipline: second-truncated
-  // by default, microseconds at fsp 6, loud failure for 1..5.
+  // The one MySQL lexer and the text helpers built on it
   // -------------------------------------------------------------------
 
-  private val utcNowExpr =
-    "to_utc_timestamp(current_timestamp(), current_timezone())"
-
-  private def rewriteUtcTimestamp(argsRaw: String): String =
-    argsRaw.trim match {
-      case "" | "0" => s"date_trunc('SECOND', $utcNowExpr)"
-      case "6" => utcNowExpr
-      case other => fail(s"UTC_TIMESTAMP($other): fractional-second " +
-        "precision 1..5 has no Spark truncation equivalent; use " +
-        "UTC_TIMESTAMP() or UTC_TIMESTAMP(6)")
-    }
-
-  private def rewriteUtcDate(argsRaw: String): String =
-    argsRaw.trim match {
-      case "" => s"to_date($utcNowExpr)"
-      case other => fail(s"UTC_DATE($other): UTC_DATE takes no argument")
-    }
-
-  private def rewriteUtcTime(argsRaw: String): String =
-    argsRaw.trim match {
-      case "" | "0" => s"date_format($utcNowExpr, 'HH:mm:ss')"
-      case "6" => s"date_format($utcNowExpr, 'HH:mm:ss.SSSSSS')"
-      case other => fail(s"UTC_TIME($other): fractional-second " +
-        "precision 1..5 has no Spark truncation equivalent; use " +
-        "UTC_TIME() or UTC_TIME(6)")
-    }
-
-  // -------------------------------------------------------------------
-  // small text utilities (all literal/paren aware)
-  // -------------------------------------------------------------------
-
-  private def isWord(c: Char): Boolean =
+  private def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
 
+  /** MySQL's lexical rules over `s`, walked token by token from
+    * `from`; the audit, the rewrite and every argument helper use this
+    * one copy. A token is a quoted literal or identifier (`'…'`, `"…"`
+    * or `` `…` ``, doubled quotes and, outside backticks, `\`-escapes
+    * stay inside), a comment (`-- …` when whitespace or a control
+    * character follows the dashes, `# …`, `/* … */`), a word (letters,
+    * digits, `_`) or one other character. `depth` is the paren depth
+    * after the current token, counting only parens outside literals
+    * and comments. An executable `/*! … */` comment fails loudly. */
+  private final class Scan(s: String, from: Int = 0) {
+    private val n = s.length
+    /** The current token is `s[start, end)`. */
+    var start: Int = from
+    var end: Int = from
+    var depth = 0
+    private var kind = ' ' // 'q' quoted, 'c' comment, 'w' word, ' ' other
+
+    private def at(k: Int): Char = if (k < n) s.charAt(k) else '\u0000'
+
+    /** Advance to the next token; false at the end of the text. */
+    def next(): Boolean = {
+      start = end
+      if (start >= n) return false
+      val c = s.charAt(start)
+      if (c == '\'' || c == '"' || c == '`') {
+        kind = 'q'
+        var k = start + 1
+        end = n
+        while (k < n) {
+          val d = s.charAt(k)
+          if (d == '\\' && c != '`') k += 2
+          else if (d == c && at(k + 1) == c) k += 2
+          else if (d == c) { end = k + 1; k = n }
+          else k += 1
+        }
+      } else if (isWordChar(c)) {
+        kind = 'w'
+        end = start + 1
+        while (end < n && isWordChar(s.charAt(end))) end += 1
+      } else if (c == '#' || (c == '-' && at(start + 1) == '-' &&
+          at(start + 2) <= ' ')) {
+        kind = 'c'
+        val nl = s.indexOf('\n', start)
+        end = if (nl < 0) n else nl
+      } else if (c == '/' && at(start + 1) == '*') {
+        if (at(start + 2) == '!')
+          fail("executable comment /*! ... */: MySQL runs its contents " +
+            "as part of the statement but Spark would skip them as a " +
+            "comment; remove the /*! and */ markers to run the text, " +
+            "or the whole comment to drop it")
+        kind = 'c'
+        val close = s.indexOf("*/", start + 2)
+        end = if (close < 0) n else close + 2
+      } else {
+        kind = ' '
+        end = start + 1
+        if (c == '(') depth += 1 else if (c == ')') depth -= 1
+      }
+      true
+    }
+
+    /** Resume scanning at `k` (past a span the caller consumed). */
+    def skipTo(k: Int): Unit = end = k
+    def char: Char = s.charAt(start)
+    def isWord: Boolean = kind == 'w'
+    def isComment: Boolean = kind == 'c'
+    def upper: String =
+      s.substring(start, end).toUpperCase(java.util.Locale.ROOT)
+    /** A dot-qualified word (`t.now`) is a column, never a keyword. */
+    def qualified: Boolean = start > 0 && s.charAt(start - 1) == '.'
+    /** Index of the '(' that follows the current token across
+      * whitespace, or -1. */
+    def openParen: Int = {
+      val k = afterSpaces(s, end)
+      if (k < n && s.charAt(k) == '(') k else -1
+    }
+  }
+
+  private def afterSpaces(s: String, from: Int): Int = {
+    var k = from
+    while (k < s.length && Character.isWhitespace(s.charAt(k))) k += 1
+    k
+  }
+
+  /** Index just past the ')' matching the '(' at `open`, or -1 if it
+    * is unbalanced (left untouched — Spark reports the error). */
+  private def closeOf(s: String, open: Int): Int = {
+    val sc = new Scan(s, open)
+    while (sc.next()) if (sc.depth == 0) return sc.end
+    -1
+  }
+
+  /** `s` with each comment replaced by one space: the argument text a
+    * re-spelled call is rebuilt from. */
+  private def withoutComments(s: String): String = {
+    val out = new java.lang.StringBuilder(s.length)
+    val sc = new Scan(s)
+    while (sc.next())
+      if (sc.isComment) out.append(' ') else out.append(s, sc.start, sc.end)
+    out.toString
+  }
+
   private def hasPrefixWord(s: String, w: String): Boolean =
-    s.length >= w.length &&
-      s.substring(0, w.length).equalsIgnoreCase(w) &&
-      (s.length == w.length || !isWord(s.charAt(w.length)))
+    s.regionMatches(true, 0, w, 0, w.length) &&
+      (s.length == w.length || !isWordChar(s.charAt(w.length)))
 
   private def endsWithWord(s: String, w: String): Boolean =
-    s.length >= w.length &&
-      s.substring(s.length - w.length).equalsIgnoreCase(w) &&
-      (s.length == w.length || !isWord(s.charAt(s.length - w.length - 1)))
+    s.regionMatches(true, s.length - w.length, w, 0, w.length) &&
+      (s.length == w.length || !isWordChar(s.charAt(s.length - w.length - 1)))
 
   /** Offset of the first top-level (outside quotes/parens) occurrence
     * of keyword `w` in `s`, or None. */
   private def findTopLevelWord(s: String, w: String): Option[Int] = {
-    var k = 0
-    var depth = 0
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (c == '\'' || c == '"' || c == '`') k = skipLit(s, k, c)
-      else if (c == '(') { depth += 1; k += 1 }
-      else if (c == ')') { depth -= 1; k += 1 }
-      else if (depth == 0 && isWord(c)) {
-        val st = k
-        while (k < s.length && isWord(s.charAt(k))) k += 1
-        if (s.substring(st, k).equalsIgnoreCase(w)) return Some(st)
-      } else k += 1
-    }
+    val sc = new Scan(s)
+    while (sc.next())
+      if (sc.depth == 0 && sc.isWord && sc.upper == w) return Some(sc.start)
     None
   }
 
-  /** Split on a top-level separator, quote- and paren-aware. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
+  /** Split on top-level commas (outside quotes and parens). */
+  private def splitTopLevel(s: String): Seq[String] = {
     val parts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var k = 0
-    var depth = 0
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (c == '\'' || c == '"' || c == '`') {
-        val end = skipLit(s, k, c)
-        cur.append(s.substring(k, end)); k = end
-      } else if (c == '(') { depth += 1; cur.append(c); k += 1 }
-      else if (c == ')') { depth -= 1; cur.append(c); k += 1 }
-      else if (c == sep && depth == 0) { parts += cur.toString; cur.clear(); k += 1 }
-      else { cur.append(c); k += 1 }
+    var from = 0
+    val sc = new Scan(s)
+    while (sc.next()) if (sc.depth == 0 && sc.char == ',') {
+      parts += s.substring(from, sc.start); from = sc.end
     }
-    if (cur.nonEmpty || s.isEmpty) parts += cur.toString
+    parts += s.substring(from)
     parts.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  private def skipLit(s: String, at: Int, quote: Char): Int = {
-    var k = at + 1
-    while (k < s.length) {
-      val c = s.charAt(k)
-      if (c == '\\' && k + 1 < s.length && quote != '`') k += 2
-      else if (c == quote && k + 1 < s.length && s.charAt(k + 1) == quote)
-        k += 2
-      else if (c == quote) return k + 1
-      else k += 1
-    }
-    k
   }
 
   /** Literal text of a single/double-quoted SQL literal (unescapes
@@ -1034,23 +997,9 @@ object MySqlDialect {
     * the collected expression. */
   private def stripParens(s0: String): String = {
     var s = s0.trim
-    var changed = true
-    while (changed) {
-      changed = false
-      if (s.length >= 2 && s.charAt(0) == '(' && s.last == ')') {
-        // only strip when the outer parens actually match each other
-        var depth = 0
-        var matches = true
-        for (k <- s.indices if matches) {
-          if (s.charAt(k) == '(') depth += 1
-          else if (s.charAt(k) == ')') {
-            depth -= 1
-            if (depth == 0 && k != s.length - 1) matches = false
-          }
-        }
-        if (matches) { s = s.substring(1, s.length - 1).trim; changed = true }
-      }
-    }
-    s.toLowerCase.replaceAll("\\s+", "")
+    // only strip when the outer parens actually match each other
+    while (s.startsWith("(") && closeOf(s, 0) == s.length)
+      s = s.substring(1, s.length - 1).trim
+    s.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", "")
   }
 }

@@ -98,7 +98,6 @@ object PlanAudit {
     val prefix = if (args.length > 1) args(1) else ""
     val spark = Engine.session()
     graft.sources.Tables.register(spark, sfDir)
-    graft.plans.AsOfJoin.register(spark)
 
     var flagged = 0
     var failed = 0

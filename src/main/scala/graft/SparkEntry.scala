@@ -732,10 +732,9 @@ object SparkEntry {
   }
 
   private def qSqlCustomFuncs(s: SparkSession, dir: String): DataFrame = {
-    // Custom Catalyst expressions callable from SQL (registered the way
-    // SparkSessionExtensions.injectFunction ships them).
+    // Custom Catalyst expressions callable from SQL, injected into
+    // every session by GraftExtensions.
     Tables.register(s, dir)
-    graft.functions.VectorFunctions.registerSqlFunctions(s)
     s.sql(
       """SELECT d.doc_id,
         |  simhash64(split(lower(d.text), ' ')) AS sim_sig,

@@ -22,7 +22,6 @@ object TimeQuery {
     val reps = if (args.length > 2) args(2).toInt else 3
     val spark = Engine.session()
     graft.sources.Tables.register(spark, sfDir)
-    graft.plans.AsOfJoin.register(spark)
     for (r <- 1 to reps; name <- names) {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()

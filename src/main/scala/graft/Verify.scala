@@ -16,9 +16,6 @@ object Verify {
     // independent Spark jobs overlap instead of serializing scheduler
     // gaps (cuts the per-round correctness wall time ~2×).
     graft.sources.Tables.register(spark, sfDir)
-    // register shared-session extensions before spawning the pool so no
-    // query thread races the check-then-act registration
-    graft.plans.AsOfJoin.register(spark)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)

@@ -104,8 +104,6 @@ object TextFunctions {
 
   // --- Quality scoring -------------------------------------------------
 
-  def charCount(text: Column): Column = length(text).cast("long")
-
   // Ratios are built on the one-pass TextStats census (no regex passes);
   // the formulas are exactly the regexp definitions they replaced:
   // punct = chars not matching [a-z0-9\s] on the lowercased text.

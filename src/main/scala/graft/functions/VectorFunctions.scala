@@ -1841,10 +1841,8 @@ object VectorFunctions {
     case other => sys.error(s"$what must be a literal, got $other")
   }
 
-  /** Name → builder for every custom expression exposed to SQL. The
-    * single source of truth for both registration paths: session-local
-    * ([[registerSqlFunctions]]) and cluster-wide
-    * (`graft.GraftExtensions` via `spark.sql.extensions`). */
+  /** Name → builder for every custom expression exposed to SQL;
+    * `graft.GraftExtensions` injects each into every session. */
   val sqlFunctionBuilders: Seq[(String, Seq[Expression] => Expression)] =
     Seq(
       "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
@@ -1913,13 +1911,4 @@ object VectorFunctions {
         (es => BoundedMinCollect(es(0), litInt(es(1), "max"))),
       "misra_gries" ->
         (es => MisraGriesSketch(es(0), litInt(es(1), "capacity"))))
-
-  /** Expose the custom expressions to SQL (`SELECT cosine_sim(a, b)…`)
-    * on an already-running session — the session-local equivalent of
-    * shipping them through `SparkSessionExtensions.injectFunction`. */
-  def registerSqlFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
-    sqlFunctionBuilders.foreach { case (name, builder) =>
-      org.apache.spark.sql.graft.bridge.registerFunction(
-        spark, name, builder)
-    }
 }

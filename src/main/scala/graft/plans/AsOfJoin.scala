@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
@@ -46,8 +46,9 @@ object AsOfJoin {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Planner strategy (injected via `spark.experimental.extraStrategies`
-    * or `SparkSessionExtensions.injectPlannerStrategy`). */
+  /** Planner strategy, injected into every session by
+    * [[graft.GraftExtensions]] through
+    * `SparkSessionExtensions.injectPlannerStrategy`. */
   object AsOfStrategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case AsOfJoinPlan(l, r, lk, rk, lt, rt, tol, outer) =>
@@ -190,20 +191,9 @@ object AsOfJoin {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Idempotent, thread-safe strategy registration. Verify plans queries
-    * from a thread pool over one shared session, so the check-then-act on
-    * `extraStrategies` must be synchronized (per-session monitor) or the
-    * strategy could be appended twice. Call once up front when driving a
-    * session from multiple threads. */
-  def register(spark: SparkSession): Unit = spark.synchronized {
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-    }
-  }
-
   /** Public API: as-of join two DataFrames. `tolerance` ≤ 0 = unbounded
-    * look-back. Registers the strategy on first use. */
+    * look-back. The session must carry [[graft.GraftExtensions]] (every
+    * `Engine.session` does), which plans the node. */
   def join(
       left: DataFrame,
       right: DataFrame,
@@ -214,7 +204,6 @@ object AsOfJoin {
       toleranceMicros: Long = 0L,
       leftOuter: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val plan = AsOfJoinPlan(
       bridge.planOf(left), bridge.planOf(right),
       bridge.toExpression(leftKey), bridge.toExpression(rightKey),

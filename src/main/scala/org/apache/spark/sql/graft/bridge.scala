@@ -103,16 +103,4 @@ object bridge {
         s.supportsBinaryEquality
       case _ => false
     }
-
-  /** Register a custom Catalyst expression as a session-local SQL
-    * function (`sessionState.functionRegistry` is package-private; this
-    * is the classic-API registration path, same as
-    * `SparkSessionExtensions.injectFunction` uses). */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -521,6 +521,83 @@ class SqlDialectSpec extends AnyFunSuite {
     assert(bad.count() === 0L)
   }
 
+  // -------------------------------------------------------------------
+  // comments and the table of translated names
+  // -------------------------------------------------------------------
+
+  test("comments follow MySQL's rules: copied verbatim and never " +
+      "audited or rewritten, # spelled --, -- only before whitespace, " +
+      "executable /*! */ comments fail loudly") {
+    // an apostrophe inside a comment opens no string literal
+    assert(translate("SELECT a, -- don't\n DATE_FORMAT(d, '%Y') FROM t") ===
+      "SELECT a, -- don't\n date_format(d, 'yyyy') FROM t")
+    val e = intercept[MySqlDialect.UntranslatableSqlException] {
+      translate("SELECT a -- isn't\n, LENGTH(s) FROM t")
+    }
+    assert(e.getMessage.contains("LENGTH"), e.getMessage)
+    // Spark's parser rejects #, so a MySQL # comment is spelled --
+    assert(translate("SELECT a # it's\n, NOW() FROM t LIMIT 1, 2") ===
+      "SELECT a -- it's\n, date_trunc('SECOND', current_timestamp()) " +
+        "FROM t LIMIT 2 OFFSET 1")
+    assert(translate("SELECT a /* it's NOW() */, NOW() FROM t") ===
+      "SELECT a /* it's NOW() */, date_trunc('SECOND', " +
+        "current_timestamp()) FROM t")
+    // MySQL reads -- without whitespace after it as two minus signs;
+    // Spark would read a comment, so the minus signs are split
+    assert(translate("SELECT 5--3 AS x FROM t") ===
+      "SELECT 5- -3 AS x FROM t")
+    assert(spark.sql(translate("SELECT 5--3 AS x")).head().getInt(0) === 8)
+    assert(spark.sql(translate("SELECT 1 AS x # it's\n, 2 AS y"))
+      .columns.toSeq === Seq("x", "y"))
+    // MySQL ends a line comment at the newline even after a backslash;
+    // Spark would carry it onto the next line and drop column y
+    assert(translate("SELECT 1 AS x -- a\\\n, 2 AS y") ===
+      "SELECT 1 AS x -- a\\ \n, 2 AS y")
+    assert(spark.sql(translate("SELECT 1 AS x -- a\\\n, 2 AS y"))
+      .columns.toSeq === Seq("x", "y"))
+    // inside a re-spelled call a comment is one space
+    assert(translate("SELECT DATE_FORMAT(d, /* it's */ '%Y') FROM t") ===
+      "SELECT date_format(d, 'yyyy') FROM t")
+    assert(translate("SELECT GROUP_CONCAT(x -- it's\n) FROM t") ===
+      "SELECT array_join(collect_list(CAST(x AS STRING)), ',') FROM t")
+    // MySQL runs the text of an executable comment; Spark would not
+    intercept[MySqlDialect.UntranslatableSqlException] {
+      translate("SELECT /*!50000 SQL_NO_CACHE */ a FROM t")
+    }
+    intercept[MySqlDialect.UntranslatableSqlException] {
+      translate("SELECT a /*! , b */ FROM t", strictFunctions = false)
+    }
+  }
+
+  test("every translated name passes the strict audit and is " +
+      "rewritten; keyword synonyms are rewritten bare; literals and " +
+      "comments translate to themselves") {
+    val callArgs = Map(
+      "GROUP_CONCAT" -> "x", "DATE_FORMAT" -> "d, '%Y'",
+      "DATE_ADD" -> "d, INTERVAL 1 DAY", "DATE_SUB" -> "d, INTERVAL 1 DAY",
+      "FROM_UNIXTIME" -> "e, '%Y'", "STR_TO_DATE" -> "s, '%Y-%m-%d'",
+      "NOW" -> "", "CURTIME" -> "", "CURRENT_TIMESTAMP" -> "",
+      "LOCALTIME" -> "", "LOCALTIMESTAMP" -> "", "CURRENT_TIME" -> "",
+      "UTC_TIMESTAMP" -> "", "UTC_DATE" -> "", "UTC_TIME" -> "")
+    assert(callArgs.keySet === MySqlDialect.translated.keySet)
+    for ((name, args) <- callArgs; spelled <- Seq(name, name.toLowerCase)) {
+      val sql = s"SELECT $spelled($args) FROM t"
+      assert(translate(sql) !== sql, sql)
+    }
+    val bare = Set("CURRENT_TIMESTAMP", "LOCALTIME", "LOCALTIMESTAMP",
+      "CURRENT_TIME", "UTC_TIMESTAMP", "UTC_DATE", "UTC_TIME")
+    for (name <- callArgs.keys) {
+      val sql = s"SELECT $name FROM t"
+      assert((translate(sql) !== sql) === bare(name), sql)
+    }
+    val inert =
+      """SELECT 'LIMIT 1, 2' AS a, "GROUP_CONCAT(x)" AS b, `NOW()` AS c
+        |  -- LIMIT 1, 2 and NOW() aren't rewritten here
+        |FROM t /* GROUP_CONCAT( LENGTH(s) isn't audited */
+        |WHERE s <> 'LENGTH(' -- GROUP_CONCAT(""".stripMargin
+    assert(translate(inert) === inert)
+  }
+
   test("claimed Spark-identical functions really are: WEEKDAY " +
       "(0=Monday), CURDATE, DATEDIFF argument order, TIMESTAMPDIFF") {
     // 2024-01-01 is a Monday; MySQL WEEKDAY('2024-01-01') = 0,
