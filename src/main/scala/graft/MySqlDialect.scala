@@ -94,7 +94,9 @@ package graft
   * it, as in MySQL; otherwise it is two minus signs and is emitted as
   * `- -` — Spark reads `SELECT 5--3` as `SELECT 5`, MySQL returns 8.
   * A line comment that ends in `\` gets a space after it, because
-  * Spark would continue the comment onto the next line.
+  * Spark would continue the comment onto the next line. A block
+  * comment opener inside a block comment is emitted as `/ *`, because
+  * Spark nests block comments and MySQL ends one at its first closer.
   * An executable `/*! … */` comment fails loudly: MySQL runs its
   * contents, Spark would skip them.
   *
@@ -379,6 +381,8 @@ object MySqlDialect {
       if (sc.isComment) {
         if (sc.char == '#')
           out.append("--").append(sql, sc.start + 1, sc.end)
+        else if (sc.char == '/')
+          out.append(blockComment(sql, sc.start, sc.end))
         else out.append(sql, sc.start, sc.end)
         // Spark carries a line comment past a newline escaped by `\`,
         // MySQL ends it at the newline
@@ -413,6 +417,21 @@ object MySqlDialect {
       else out.append(sql, sc.start, sc.end)
     }
     out.toString
+  }
+
+  /** The block comment `sql[start, end)` spelled so that Spark ends it
+    * where MySQL does. MySQL ends a block comment at its first closer,
+    * while Spark nests them: each opener inside the text is emitted as
+    * `/ *`, and a text ending in a slash gets a space before the closer
+    * (that slash and the closer's star would open a nested comment).
+    * Comment text is never run, so nothing else changes. */
+  private def blockComment(sql: String, start: Int, end: Int): String = {
+    val closed = end - start >= 4 && sql.startsWith("*/", end - 2)
+    val text = sql.substring(start + 2, if (closed) end - 2 else end)
+      .replace("/*", "/ *")
+    if (!closed) "/*" + text
+    else if (text.endsWith("/")) "/*" + text + " */"
+    else "/*" + text + "*/"
   }
 
   /** MySQL's two-argument `LIMIT offset, count` after the LIMIT word

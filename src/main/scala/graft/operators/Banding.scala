@@ -18,7 +18,7 @@ import org.apache.spark.sql.graft.bridge
   * emit it exactly once, at its smallest shared band, with
   * [[noSharedBandBelow]], a scan-stage predicate, instead of a
   * candidate-sized distinct. MinHash banding hashes signature slices
-  * and is a different construction ([[Dedup.minhashBandKeys]]). */
+  * and is a different construction ([[Dedup.bandPostings]]). */
 private[graft] object Banding {
 
   /** All `bandBits` bits set. Scala masks shift counts mod 64, so

@@ -95,7 +95,14 @@ object Decontaminate {
     * remains the no-driver-collect path for pathological eval sizes.
     * Same semantics, same oracle. */
   def overlapBroadcast(train: DataFrame, eval: DataFrame, n: Int = 5,
-      minHits: Long = 1): DataFrame = {
+      minHits: Long = 1): DataFrame =
+    broadcastHits(train, eval, n, minHits).orderBy("doc_id")
+
+  /** [[overlapBroadcast]] unordered, and the kernel of its streaming
+    * twin ([[graft.streaming.DocsStream.runDecontamStream]]): `eval` is
+    * a batch frame collected once, so `train` may be a stream. */
+  private[graft] def broadcastHits(train: DataFrame, eval: DataFrame,
+      n: Int, minHits: Long): DataFrame = {
     require(n >= 1, s"gram width must be >= 1, got $n")
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
     val evalGrams = grams(eval, n).select("g").distinct()
@@ -112,7 +119,6 @@ object Decontaminate {
     train.select(col("doc_id"), hits.as("n_hits"))
       .select(col("doc_id"), col("n_hits"),
         (col("n_hits") >= minHits).as("contaminated"))
-      .orderBy("doc_id")
   }
 
   /** Corpus-wide common-n-gram coverage (the C4-style boilerplate

@@ -34,27 +34,9 @@ object Dedup {
     * long dedup job on a real cluster wants, because the pair frame is
     * the expensive artifact everything downstream reads), then drop the
     * temp cache. */
-  private def finalizePairs(df: DataFrame, sortCols: String*): DataFrame = {
-    val unsorted = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = Iterate.materialize(
-      unsorted.orderBy(sortCols.map(col): _*))
-    unsorted.unpersist(false)
-    out
-  }
-
-  /** The MinHash LSH band-key columns for a signature column `mh`:
-    * band b's key is the hash of its `rows`-wide signature slice.
-    * Shared between the batch operator and the streaming twin so the
-    * two bandings cannot drift apart (the stream ≡ batch oracle
-    * depends on byte-identical keys). */
-  private[graft] def minhashBandKeys(
-      mh: Column, bands: Int, rows: Int): Seq[Column] =
-    (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows)
-        .map(i => element_at(mh, i + 1))
-      struct(lit(b).as("band"), hash(cols: _*).as("bkey"))
-    }
+  private def finalizePairs(df: DataFrame, sortCols: String*): DataFrame =
+    Iterate.cached(df)(unsorted =>
+      Iterate.materialize(unsorted.orderBy(sortCols.map(col): _*)))
 
   /** Driver-collect guard for the broadcast verification path, shared
     * by every caller so the two load-bearing constants cannot drift:
@@ -234,20 +216,79 @@ object Dedup {
           .as("dup_of"))
   }
 
-  /** Per-doc MinHash signature: `numHashes` independent min-hashes over
-    * k-word shingle hashes, one column per hash function. Both the
-    * shingling and the whole signature are computed by custom
-    * expressions inside the scan stage — no explode, no shuffle. */
-  def minhashSignatures(
-      docs: DataFrame, shingleK: Int, numHashes: Int): DataFrame = {
-    val withSig = docs.select(col("doc_id"),
-      minhash_sig(shingle_hashes(col("text"), shingleK), numHashes)
-        .as("mh"))
+  /** Rows per LSH band, `numHashes / bands`: the one divisibility
+    * check of every MinHash operator, batch, index and stream. */
+  private[graft] def rowsPerBand(numHashes: Int, bands: Int): Int = {
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must be divisible by bands ($bands) — " +
+        "a remainder would silently drop hash functions and invalidate " +
+        "the 1-(1-J^r)^b recall math")
+    numHashes / bands
+  }
+
+  /** The one MinHash signature frame: (doc_id, `carried`…, sh, mh), the
+    * k-word shingle multiset `sh` and its `numHashes` min-hashes `mh`,
+    * both custom expressions inside the scan stage (no explode, no
+    * shuffle). Docs without a shingle drop out. Every MinHash operator
+    * (batch, increment, persisted index, audit and stream) builds from
+    * it, so changing shingling or signing changes them together. Not
+    * persisted: the batch callers read it twice and cache it with
+    * [[Iterate.cached]]; the stream cannot. */
+  private[graft] def signatureFrame(docs: DataFrame, shingleK: Int,
+      numHashes: Int, carried: Column*): DataFrame =
+    docs.select((col("doc_id") +: carried) :+
+        shingle_hashes(col("text"), shingleK).as("sh"): _*)
+      .withColumn("mh", minhash_sig(col("sh"), numHashes))
       .filter(col("mh").isNotNull)
-    withSig.select(col("doc_id") +:
+
+  /** The sorted distinct shingle set of a signature frame's `sh`, the
+    * form the exact-Jaccard verifiers intersect. */
+  private[graft] def shingleSet(sh: Column): Column =
+    array_sort(array_distinct(sh))
+
+  /** The exact-Jaccard side table (doc_id, gs) of a signature frame. */
+  private def indexSets(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), shingleSet(col("sh")).as("gs"))
+
+  /** The one MinHash LSH band key: `cols` plus one row per band of a
+    * signature frame, keyed `bk = hash(b, slice…)` over band b's
+    * `rows`-wide signature slice. Folding the band id INTO the key
+    * gives one int column: the batch operators group on it, the
+    * persisted index buckets, groups and joins on it (a bucketed
+    * scan's HashPartitioning then satisfies the aggregate and join
+    * clustering exactly, with no re-shuffle), and the stream keys its
+    * state by it. A cross-band hash collision merely merges two
+    * buckets: candidates become a superset and the exact Jaccard
+    * verification removes the impostors, so recall is unaffected (the
+    * bucket cap binding marginally earlier on a merged bucket is the
+    * usual hot-bucket trade). */
+  private[graft] def bandPostings(sigs: DataFrame, bands: Int, rows: Int,
+      cols: Column*): DataFrame =
+    sigs.select(cols :+ explode(array((0 until bands).map { b =>
+      hash(lit(b) +: (b * rows until (b + 1) * rows)
+        .map(i => element_at(col("mh"), i + 1)): _*)
+    }: _*)).as("bk"): _*)
+
+  /** The one capped candidate stage over (doc_id, bk) postings: ONE
+    * shuffle (groupBy `bk`) builds each bucket from its `maxBucket`
+    * smallest ids, CappedPairs emits its (id_a < id_b) pairs with the
+    * hot-bucket cap applied inside the generator, and a pair meeting
+    * in several bands is kept once. */
+  private def cappedCandidates(postings: DataFrame,
+      maxBucket: Int): DataFrame =
+    postings.groupBy("bk")
+      .agg(bounded_min_collect(col("doc_id"), maxBucket).as("ids"))
+      .select(explode(capped_pairs(col("ids"), maxBucket)).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .distinct()
+
+  /** Per-doc MinHash signature: `numHashes` independent min-hashes over
+    * k-word shingle hashes, one column per hash function. */
+  def minhashSignatures(
+      docs: DataFrame, shingleK: Int, numHashes: Int): DataFrame =
+    signatureFrame(docs, shingleK, numHashes).select(col("doc_id") +:
       (0 until numHashes).map(i =>
         element_at(col("mh"), i + 1).as(s"h$i")): _*)
-  }
 
   /** MinHash + LSH near-dup pairs with exact-Jaccard verification.
     *
@@ -255,8 +296,8 @@ object Dedup {
     * J ≥ 0.8 (P(candidate) = 1-(1-J^4)^8 = 0.9996 at J=0.8). Stages:
     *  1. shingles + signatures fused into the scan stage (custom
     *     expressions — ZERO shuffle);
-    *  2. band keys → explode → self-join per (band, key) bucket with a
-    *     bucket-size cap (bounded fan-out);
+    *  2. band keys → explode → one groupBy per band bucket with a
+    *     bucket-size cap (bounded fan-out, [[cappedCandidates]]);
     *  3. exact Jaccard on candidates via shingle-set array intersection
     *     (two narrow joins, shuffles proportional to candidate count).
     */
@@ -267,55 +308,22 @@ object Dedup {
       bands: Int = 8,
       threshold: Double = 0.8,
       maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands) — " +
-        "a remainder would silently drop hash functions and invalidate " +
-        "the 1-(1-J^r)^b recall math")
-    val rows = numHashes / bands
-    // One scan-stage pass computes shingle multiset + whole signature
-    // (custom expressions, no shuffle); persisted because it feeds both
-    // the banding join and the exact-Jaccard verification. Released
-    // before returning (see the localCheckpoint at the end). At 100 TB
-    // this is the table you'd WRITE once (bucketed by band key) and
+    val rows = rowsPerBand(numHashes, bands)
+    // cached: the signature frame feeds both the banding and the
+    // exact-Jaccard verification. At 100 TB this is the table you'd
+    // WRITE once (bucketed by band key, [[writeMinhashIndex]]) and
     // reuse across incremental dedup runs.
-    // signature derivation shared verbatim with the persisted-index
-    // family (indexSignatures) — changing shingling or signing changes
-    // the batch operator, build, append and merge together
-    val sigs = indexSignatures(docs, shingleK, numHashes)
-
-    // band key = hash of the band's signature slice (construction
-    // shared with the streaming twin — see minhashBandKeys)
-    val buckets = sigs
-      .select(col("doc_id"),
-        explode(array(minhashBandKeys(col("mh"), bands, rows): _*))
-          .as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
-    // Candidates: ONE shuffle (groupBy band key) builds each bucket,
-    // CappedPairs emits its (id_a < id_b) pairs with the hot-bucket
-    // cap applied inside the generator — replaces the former
-    // row_number cap window + bucket self-join (two more posting
-    // shuffles) with the same candidate set.
-    val candidates = buckets
-      .groupBy("band", "bkey")
-      .agg(bounded_min_collect(col("doc_id"), maxBucket).as("ids"))
-      .select(explode(capped_pairs(col("ids"), maxBucket)).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
-
-    // exact shingle-set Jaccard per candidate via the shared
-    // size-guarded verifier. The guard must hold BEFORE anything has
-    // materialized `sigs`, so it derives from the accurately-known
-    // parquet source size with a conservative expansion margin: the
-    // shingle multiset carries one 8-byte hash per word, which bounds
-    // its bytes by ~8× the (compressed) text bytes for any realistic
-    // corpus — overshooting only flips to the shuffle path early,
-    // never to an oversized driver collect.
-    val sets = indexSets(sigs)
-    val pairs = verifiedJaccardPairs(sets, candidates, threshold,
-      setsFitOnDriver(docs))
-    sigs.unpersist(false)
-    pairs
+    Iterate.cached(signatureFrame(docs, shingleK, numHashes)) { sigs =>
+      // The size guard must hold BEFORE anything has materialized
+      // `sigs`, so it derives from the accurately-known parquet source
+      // size with a conservative expansion margin (see setsFitOnDriver)
+      // — overshooting only flips to the shuffle path early, never to
+      // an oversized driver collect.
+      verifiedJaccardPairs(indexSets(sigs),
+        cappedCandidates(bandPostings(sigs, bands, rows, col("doc_id")),
+          maxBucket),
+        threshold, setsFitOnDriver(docs))
+    }
   }
 
   /** INCREMENTAL MinHash-LSH epoch merge: near-dup pairs between a NEW
@@ -341,123 +349,53 @@ object Dedup {
       bands: Int = 8,
       threshold: Double = 0.8,
       maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
-    val sigs = indexSignatures(docs, shingleK, numHashes,
-      Seq("is_new" -> isNew))
-    val buckets = sigs
-      .select(col("doc_id"), col("is_new"),
-        explode(array(minhashBandKeys(col("mh"), bands, rows): _*))
-          .as("bk"))
-      .select(col("doc_id"), col("is_new"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
-    // ASYMMETRIC hot-bucket cap: new members sort first (pri 0), so a
-    // capped bucket keeps EVERY increment posting (up to the cap) plus
-    // the smallest old ids — the same old-side-only cap the persisted
-    // index merge applies. A plain min-doc_id cap under append-only
-    // monotone ids systematically evicted exactly the new rows this
-    // operator exists to match (new ids are always the largest).
-    // bounded_min_collect orders lexicographically over the leading
-    // LONG fields, so (pri, doc_id) ties break by doc_id — which old
-    // (and, past the cap, which new) ids survive is deterministic,
-    // not partition-arrival-order-dependent.
-    val candidates = buckets
-      .groupBy("band", "bkey")
-      .agg(bounded_min_collect(
-        struct(when(col("is_new"), 0L).otherwise(1L).as("pri"),
-          col("doc_id"), col("is_new")), maxBucket).as("ps0"))
-      .select(explode(flagged_capped_pairs(expr(
-        "transform(ps0, x -> struct(x.doc_id AS doc_id, " +
-          "x.is_new AS is_new))"), maxBucket)).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
-    val sets = indexSets(sigs)
-    val pairs = verifiedJaccardPairs(sets, candidates, threshold,
-      setsFitOnDriver(docs))
-    sigs.unpersist(false)
-    pairs
-  }
-
-  /** Single-column LSH bucket keys: band b's key is `hash(b, slice…)`,
-    * folding the band id INTO the key so the persisted index can
-    * bucket, group and join on ONE column — a bucketed scan's
-    * HashPartitioning then satisfies the aggregate/join clustering
-    * exactly, with no re-shuffle. A cross-band hash collision merely
-    * merges two buckets: candidates become a superset and the exact
-    * Jaccard verification removes the impostors, so recall is
-    * unaffected (the bucket cap binding marginally earlier on a merged
-    * bucket is the same hot-bucket trade [[minhashLsh]] already makes). */
-  private[graft] def minhashBucketKeys(
-      mh: Column, bands: Int, rows: Int): Seq[Column] =
-    (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows)
-        .map(i => element_at(mh, i + 1))
-      hash(lit(b) +: cols: _*)
+    val rows = rowsPerBand(numHashes, bands)
+    Iterate.cached(signatureFrame(docs, shingleK, numHashes,
+        isNew.as("is_new"))) { sigs =>
+      // ASYMMETRIC hot-bucket cap: new members sort first (pri 0), so a
+      // capped bucket keeps EVERY increment posting (up to the cap) plus
+      // the smallest old ids — the same old-side-only cap the persisted
+      // index merge applies. A plain min-doc_id cap under append-only
+      // monotone ids systematically evicted exactly the new rows this
+      // operator exists to match (new ids are always the largest).
+      // bounded_min_collect orders lexicographically over the leading
+      // LONG fields, so (pri, doc_id) ties break by doc_id — which old
+      // (and, past the cap, which new) ids survive is deterministic,
+      // not partition-arrival-order-dependent.
+      val candidates =
+        bandPostings(sigs, bands, rows, col("doc_id"), col("is_new"))
+          .groupBy("bk")
+          .agg(bounded_min_collect(
+            struct(when(col("is_new"), 0L).otherwise(1L).as("pri"),
+              col("doc_id"), col("is_new")), maxBucket).as("ps0"))
+          .select(explode(flagged_capped_pairs(expr(
+            "transform(ps0, x -> struct(x.doc_id AS doc_id, " +
+              "x.is_new AS is_new))"), maxBucket)).as("p"))
+          .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+          .distinct()
+      verifiedJaccardPairs(indexSets(sigs), candidates, threshold,
+        setsFitOnDriver(docs))
     }
+  }
 
   /** Write the PERSISTED minhash-LSH dedup index for a corpus — the
     * table a 100 TB ingest pipeline builds once and then merges every
     * epoch's increment against ([[minhashIndexMerge]]), instead of
     * re-deriving the full corpus's signatures per run (what
     * [[minhashLshIncrement]] does). Two bucketed tables:
-    *  - `<prefix>_postings` (bk, doc_id), bucketed AND sorted by `bk`
-    *    (the folded band key, [[minhashBucketKeys]]) — candidate
-    *    generation reads it pre-clustered, zero index-side shuffle;
+    *  - `<prefix>_postings` (doc_id, bk), bucketed AND sorted by `bk`
+    *    (the band key, [[bandPostings]]) — candidate generation reads
+    *    it pre-clustered, zero index-side shuffle;
     *  - `<prefix>_sets` (doc_id, gs), bucketed by `doc_id` — the exact
     *    Jaccard verifier's side table.
     * Signatures are computed in the scan stage (custom expressions);
     * the only shuffles are the two bucketed writes themselves — the
     * exchange you pay ONCE so every later epoch doesn't. */
-  /** Signature frame shared by the whole persisted-index family — ONE
-    * derivation of (doc_id, shingle set, minhash signature), persisted
-    * because every caller reads it twice (postings + sets); callers
-    * unpersist. Changing shingling or signing here changes build,
-    * append and merge together — they cannot drift apart. */
-  private def indexSignatures(docs: DataFrame, shingleK: Int,
-      numHashes: Int, extra: Seq[(String, Column)] = Nil): DataFrame =
-    docs.select((col("doc_id") +:
-        extra.map { case (n, c) => c.as(n) }) :+
-        shingle_hashes(col("text"), shingleK).as("sh"): _*)
-      .withColumn("mh", minhash_sig(col("sh"), numHashes))
-      .filter(col("mh").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** The index's two physical relations, derived from [[indexSignatures]]:
-    * band-key postings and sorted shingle sets. */
-  private def indexPostings(sigs: DataFrame, bands: Int,
-      rows: Int): DataFrame =
-    sigs.select(col("doc_id"),
-      explode(array(minhashBucketKeys(col("mh"), bands, rows): _*))
-        .as("bk"))
-  private def indexSets(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"),
-      array_sort(array_distinct(col("sh"))).as("gs"))
-
   def writeMinhashIndex(docs: DataFrame, prefix: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      buckets: Int = 32): Unit = {
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
-    val sigs = indexSignatures(docs, shingleK, numHashes)
-    // the two independent table writes overlap (Layout.inParallel)
-    // instead of serializing. The shared signature cache needs no
-    // pre-materialization job: the block manager serializes concurrent
-    // computes of the same cached partition (the second writer blocks
-    // on the block lock and then reads the built block), so the first
-    // writer to reach a partition builds it exactly once. The r15
-    // standalone count() paid a whole extra driver job per build for a
-    // race that cannot duplicate work — alternated 4-round A/B on this
-    // query (fresh JVM each run): no-count/parallel 5.12/5.18/5.72/5.72
-    // vs count/parallel 5.16/5.75/6.19/5.91 vs serial (the r14 shape)
-    // 5.71/6.09/7.42/8.20 — the no-count overlap wins every round.
-    graft.sources.Layout.inParallel(
-      () => graft.sources.Layout.writeBucketed(
-        indexPostings(sigs, bands, rows), s"${prefix}_postings", "bk",
-        buckets),
-      () => graft.sources.Layout.writeBucketed(
-        indexSets(sigs), s"${prefix}_sets", "doc_id", buckets))
-    sigs.unpersist(false)
-  }
+      buckets: Int = 32): Unit =
+    writeIndex(docs, prefix, shingleK, numHashes, bands, buckets,
+      graft.sources.Layout.writeBucketed)
 
   /** APPEND an increment's signatures into an existing persisted index
     * (same bucket spec — Spark validates it), closing the ingest loop:
@@ -467,19 +405,36 @@ object Dedup {
     * shuffles ONLY the increment (into the index's bucketing). */
   def appendToMinhashIndex(newDocs: DataFrame, prefix: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      buckets: Int = 32): Unit = {
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
-    val sigs = indexSignatures(newDocs, shingleK, numHashes)
-    // no pre-count: block-level cache locks serialize the shared
-    // signature build (see writeMinhashIndex)
-    graft.sources.Layout.inParallel(
-      () => graft.sources.Layout.appendBucketed(
-        indexPostings(sigs, bands, rows), s"${prefix}_postings", "bk",
-        buckets),
-      () => graft.sources.Layout.appendBucketed(
-        indexSets(sigs), s"${prefix}_sets", "doc_id", buckets))
-    sigs.unpersist(false)
+      buckets: Int = 32): Unit =
+    writeIndex(newDocs, prefix, shingleK, numHashes, bands, buckets,
+      graft.sources.Layout.appendBucketed)
+
+  /** The index-writing body of [[writeMinhashIndex]] (`write` =
+    * `Layout.writeBucketed`) and [[appendToMinhashIndex]]
+    * (`Layout.appendBucketed`): the postings and set tables from one
+    * cached signature frame. The two table writes overlap
+    * (Layout.inParallel) instead of serializing, and the shared cache
+    * needs no pre-materialization job: the block manager serializes
+    * concurrent computes of the same cached partition (the second
+    * writer blocks on the block lock and then reads the built block),
+    * so the first writer to reach a partition builds it exactly once.
+    * The r15 standalone count() paid a whole extra driver job per build
+    * for a race that cannot duplicate work — alternated 4-round A/B on
+    * this query (fresh JVM each run): no-count/parallel
+    * 5.12/5.18/5.72/5.72 vs count/parallel 5.16/5.75/6.19/5.91 vs
+    * serial (the r14 shape) 5.71/6.09/7.42/8.20 — the no-count overlap
+    * wins every round. */
+  private def writeIndex(docs: DataFrame, prefix: String, shingleK: Int,
+      numHashes: Int, bands: Int, buckets: Int,
+      write: (DataFrame, String, String, Int) => Unit): Unit = {
+    val rows = rowsPerBand(numHashes, bands)
+    Iterate.cached(signatureFrame(docs, shingleK, numHashes)) { sigs =>
+      graft.sources.Layout.inParallel(
+        () => write(bandPostings(sigs, bands, rows, col("doc_id")),
+          s"${prefix}_postings", "bk", buckets),
+        () => write(indexSets(sigs), s"${prefix}_sets", "doc_id",
+          buckets))
+    }
   }
 
   /** Epoch merge against the PERSISTED index: near-dup pairs between a
@@ -498,40 +453,33 @@ object Dedup {
   def minhashIndexMerge(newDocs: DataFrame, prefix: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
+    val rows = rowsPerBand(numHashes, bands)
     val spark = newDocs.sparkSession
-    val sigs = indexSignatures(newDocs, shingleK, numHashes)
-    val np = indexPostings(sigs, bands, rows)
-    // old buckets pre-aggregated ON the bucketed layout (no exchange)
-    val oldBuckets = spark.table(s"${prefix}_postings")
-      .groupBy("bk")
-      .agg(bounded_min_collect(col("doc_id"), maxBucket).as("old_ids"))
-    // new×old candidates: one join per touched bucket, fan-out ≤ cap
-    val newOld = np.join(oldBuckets, Seq("bk"))
-      .select(col("doc_id").as("nid"), explode(col("old_ids")).as("oid"))
-      .filter(col("nid") =!= col("oid"))
-      .select(least(col("nid"), col("oid")).as("id_a"),
-        greatest(col("nid"), col("oid")).as("id_b"))
-    // new×new candidates: the increment against itself, capped as in
-    // the batch operator (old×old pairs belong to the previous epoch)
-    val newNew = np.groupBy("bk")
-      .agg(bounded_min_collect(col("doc_id"), maxBucket).as("ids"))
-      .select(explode(capped_pairs(col("ids"), maxBucket)).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-    val candidates = newOld.unionByName(newNew).distinct()
-    // verification: persisted set table ∪ the increment's sets; BOTH
-    // sides of the size guard carry the conservative 8× expansion
-    // margin — the written table's parquet stats are real on-disk
-    // bytes, but snappy-compressed sorted longs expand several-fold
-    // into JVM map entries when collected, same as any source
-    val oldSets = spark.table(s"${prefix}_sets")
-    val newSets = indexSets(sigs)
-    val pairs = verifiedJaccardPairs(
-      oldSets.unionByName(newSets), candidates, threshold,
-      setsFitOnDriver(oldSets, newDocs))
-    sigs.unpersist(false)
-    pairs
+    Iterate.cached(signatureFrame(newDocs, shingleK, numHashes)) { sigs =>
+      val np = bandPostings(sigs, bands, rows, col("doc_id"))
+      // old buckets pre-aggregated ON the bucketed layout (no exchange)
+      val oldBuckets = spark.table(s"${prefix}_postings")
+        .groupBy("bk")
+        .agg(bounded_min_collect(col("doc_id"), maxBucket).as("old_ids"))
+      // new×old candidates: one join per touched bucket, fan-out ≤ cap
+      val newOld = np.join(oldBuckets, Seq("bk"))
+        .select(col("doc_id").as("nid"), explode(col("old_ids")).as("oid"))
+        .filter(col("nid") =!= col("oid"))
+        .select(least(col("nid"), col("oid")).as("id_a"),
+          greatest(col("nid"), col("oid")).as("id_b"))
+      // new×new candidates: the increment against itself, capped as in
+      // the batch operator (old×old pairs belong to the previous epoch)
+      val candidates =
+        newOld.unionByName(cappedCandidates(np, maxBucket)).distinct()
+      // verification: persisted set table ∪ the increment's sets; BOTH
+      // sides of the size guard carry the conservative 8× expansion
+      // margin — the written table's parquet stats are real on-disk
+      // bytes, but snappy-compressed sorted longs expand several-fold
+      // into JVM map entries when collected, same as any source
+      val oldSets = spark.table(s"${prefix}_sets")
+      verifiedJaccardPairs(oldSets.unionByName(indexSets(sigs)),
+        candidates, threshold, setsFitOnDriver(oldSets, newDocs))
+    }
   }
 
   /** Exact Jaccard for EVERY given (id_a, id_b) candidate pair — the
@@ -547,10 +495,10 @@ object Dedup {
     * semantics cannot drift. */
   def verifyJaccard(
       docs: DataFrame, candidates: DataFrame, shingleK: Int): DataFrame = {
-    val sets = docs
-      .select(col("doc_id"), array_sort(array_distinct(
-        shingle_hashes(col("text"), shingleK))).as("gs"))
-      .filter(col("gs").isNotNull)
+    // the signature frame's shingle sets (a shingle-less doc has no row
+    // there and joins as the empty set below); the signature width is
+    // irrelevant, one hash keeps it cheap
+    val sets = indexSets(signatureFrame(docs, shingleK, 1))
     val emptyArr = array().cast("array<bigint>")
     candidates
       .join(sets.select(col("doc_id").as("id_a"), col("gs").as("gs_a")),
@@ -848,225 +796,226 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold")
     // Per-doc DISTINCT gram array built inside the scan stage
     // (array_distinct hashes 64-bit elements — no corpus-wide distinct
-    // shuffle). Persisted because it feeds the stop-gram model, prefix
-    // selection, and the gram-set verification; released before
-    // returning (see the localCheckpoint at the end).
-    val base = docs.select(col("doc_id"),
-      char_ngram_set(normalize_text(col("text")), n).as("gs"))
-      .filter(col("gs").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hotDf = PrefixFilter.stopGramModel(base, col("doc_id"), col("gs"),
-      stopGramModelSize)
-    val keyed = base.select(col("doc_id").as("__graft_id"),
-      col("gs").as("__graft_gs"))
+    // shuffle). Cached because it feeds the stop-gram model, prefix
+    // selection, and the gram-set verification; released when the
+    // verified pairs are materialized.
+    Iterate.cached(docs.select(col("doc_id"),
+        char_ngram_set(normalize_text(col("text")), n).as("gs"))
+        .filter(col("gs").isNotNull)) { base =>
+      val hotDf = PrefixFilter.stopGramModel(base, col("doc_id"), col("gs"),
+        stopGramModelSize)
+      val keyed = base.select(col("doc_id").as("__graft_id"),
+        col("gs").as("__graft_gs"))
 
-    // NOT persisted (tried r16, reverted): the histogram job and the
-    // candidates job both consume these postings, but caching them
-    // only converts a shuffle-free scan-stage recompute (explode +
-    // per-row sort over the already-cached `base`) into a cache
-    // write + read — measured a wash at sf0.1 AND sf1 (mins 7.25 vs
-    // 7.18 / 15.3 vs 14.5, inside the box's wave band), and at corpus
-    // scale a TB-wide postings spill costs more than the CPU pass it
-    // saves. The exact-order postings below are different in kind:
-    // THEIR recompute re-pays corpus-wide shuffles, so they stay cached.
-    val prefixModel = PrefixFilter.modelPostings(keyed, hotDf, threshold)
-    // Candidate-volume guard: the per-bucket cap alone bounds a TASK,
-    // not the JOB (see pairBudget above), so the TOTAL candidate mass
-    // is estimated FIRST from the exact candidate-mass histogram, and
-    // the effective cap halves until the bound
-    // Σ_g min(m_g, cap)(min(m_g, cap) − 1)/2 fits `pairBudget`, with a
-    // rarest-first df-ceiling as the second degrade stage when halving
-    // alone cannot fit (see dMax below). On healthy corpora the
-    // estimate is far under budget and the cap (and therefore the
-    // output) is untouched; on pathological ones the operator degrades
-    // the way the cap already documents — keep-smallest-ids per bucket,
-    // a recall/volume trade — instead of failing the job. The histogram
-    // is exact and deterministic, so the chosen cap (and the output)
-    // is layout-independent.
-    // The histogram is a bounded plan-time driver query (≤64 rows out)
-    // whose input size is driver-known (the postings derive from the
-    // already-cached `base`), so it runs statically at the
-    // stats-derived width — AQE would contribute one extra stage job +
-    // driver barrier per exchange (measured r16: the hist cascade was
-    // 4 jobs and ~0.5 s of gaps at sf0.1) and its runtime coalescing
-    // would pick the same width this derivation does.
-    def histOf(p: DataFrame): Array[PrefixFilter.MassBand] =
-      Iterate.staticBoundedLoop(p.sparkSession,
-          p.queryExecution.optimizedPlan.stats.sizeInBytes) { sc =>
-        PrefixFilter.collectBands(PrefixFilter.massHistogram(p.on(sc)))
-      }
-    val histModel = histOf(prefixModel)
-
-    // The exact order, when the model order's estimate would engage the
-    // degrade machinery: its smaller true mass often needs NO degrade
-    // where the model order would have dropped bands. Gated on a
-    // SATURATED model as well — the fixed-vocabulary sf1 corpus has
-    // real mass, the degrade is the correct answer there, and
-    // re-ranking cannot shrink it.
-    //
-    // DF-CAP NOTE (round 14 — the "grams above a df cap generate no
-    // candidates, pairs route to a residual tier" hypothesis,
-    // examined and REFUTED for this generator; DedupSpec pins the
-    // classification; the measured masses are in BASELINE.md's
-    // round-14 df-cap decomposition, the diagnostic that took them in
-    // git history, commit 350458e):
-    //  1. OCCUPANCY IDENTITY — a bucket's occupancy occ(g) = #docs
-    //     whose prefix contains g is a pure function of the global
-    //     order and the threshold. A df cap only decides whether a
-    //     bucket EMITS; Σ_g C(occ(g),2) is cap-invariant given the
-    //     order, so capping re-routes mass, it cannot remove any.
-    //  2. RESIDUAL CLASSIFICATION — under the df-ASC order every
-    //     ≤D-df gram ranks before every >D-df gram, so doc d's
-    //     prefix (length p_d = sz_d − ceil(t·sz_d) + 1) contains a
-    //     >D gram iff its ≤D-gram count < p_d, i.e. iff its >D-gram
-    //     count ≥ ceil(t·sz_d): the doc is ≥t-fraction hot
-    //     ("residual", boilerplate-dominated). Hot buckets therefore
-    //     hold ONLY residual docs — there is no cap to protect
-    //     ordinary docs with, because ordinary docs never post hot.
-    //  3. COVERAGE — a true pair's smallest shared prefix gram lies
-    //     in both prefixes (prefix lemma); if it is hot, BOTH members
-    //     are residual by (2). So the exact split a cap could buy is
-    //     cold-buckets + a residual×residual tier — whose bucket mass
-    //     by (1)+(2) IS the hot-bucket mass. Savings would require a
-    //     structurally different algorithm for R, and the measured
-    //     corpora give it nothing to do: under the exact order at
-    //     sf10-he/sf30-he the >D mass is ~zero at every D and
-    //     residualDocs ≈ 0 — the real mass sits in MEDIUM-df buckets,
-    //     the intrinsic Σ C(df,2) that pairBudget bounds. Under the
-    //     MODEL order the hot mass is mis-RANKING (unknown grams at
-    //     df=1-by-hash), which the exact-order switch already
-    //     removes. The constructive lever this math leaves: the
-    //     sparse-branch order crossover at high density (bucket mass
-    //     grows superlinearly, ranking cost linearly in postings) —
-    //     see the rewrite's gate and BASELINE round-14.
-    val (prefix, hist, exactPersisted) =
-      if (PrefixFilter.exactOrder(docs.sparkSession,
-          saturated = hotDf.size >= stopGramModelSize,
-          overBudget = PrefixFilter.estPairs(histModel, maxPrefixBucket) >
-            pairBudget)) {
-        // persisted: the ranked postings feed both the histogram job
-        // and the candidates job; released at the end with `base` (the
-        // verifier materializes pairs eagerly)
-        val pEx = PrefixFilter.exactPostings(keyed, threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (pEx, histOf(pEx), Some(pEx))
-      } else (prefixModel, histModel, None)
-    def estPairs(c: Long): Double = PrefixFilter.estPairs(hist, c)
-    // Measured decision curve on the rehearsal corpora — the binding
-    // cost is the VERIFY join, whose rows carry both docs' full gram
-    // arrays (~KB each), so the budget must bound candidates tightly
-    // enough that candidate_count × array_bytes fits executor disks
-    // (est over-counts the post-distinct actual ~10-30×, measured at
-    // sf1 and sf10): sf0.1 est(5000)=2.8e7 → untouched, output
-    // identical; sf1 est(5000)=2.8e9 → cap 128; sf10 est(5000)=3.9e10
-    // (35M candidates at cap 156 spilled ~85 GB of verify sort and
-    // filled the disk) → cap 128, ~1e7 candidates, bounded verify.
-    var effCap = maxPrefixBucket
-    while (effCap > 64 && estPairs(effCap) > pairBudget)
-      effCap = math.max(64, effCap / 2)
-    // Cap-halving bottoms out at 64 without fitting the budget when the
-    // mass lives in MANY medium-hot grams rather than a few monsters
-    // (measured at the high-entropy sf10 rehearsal: est(64) = 2.1e8 on
-    // a 1e8 budget — the budget was SOFT exactly when it mattered, and
-    // the verify join's ~KB-wide rows turned the overrun into a full
-    // disk). The second degrade stage bounds the mass within a small
-    // constant of the budget at any corpus degeneracy (strict for the
-    // fully-admitted bands; the partial band is sized by expected
-    // mass — see below): a df-ceiling from the same histogram — admit
-    // whole log2 buckets RAREST-GRAMS-FIRST while their cumulative
-    // capped mass fits, then drop every gram bucket past the first
-    // overflow. Rare-first is the AllPairs-optimal order: true near-dup
-    // pairs co-occur in RARE grams (a 0.7-Jaccard pair shares its
-    // rarest prefix grams), so the hottest buckets — the ones a
-    // degenerate corpus inflates — carry the least recall per
-    // candidate. Deterministic (exact histogram → same dMax on any
-    // layout); Long.MaxValue = disabled on every corpus whose floor
-    // mass fits, which includes every healthy one.
-    // The first band that overflows is admitted PARTIALLY — a
-    // deterministic xxhash64(g) per-mille draw sized so the admitted
-    // fraction's expected mass fills the remaining budget (per-gram
-    // mass inside one log2 band varies ≤4×, so the realized mass is
-    // within a small constant of the target; the estimate itself
-    // over-counts the post-distinct actual ~10-30×). Without partial
-    // admission the ceiling has a cliff: a corpus whose RAREST
-    // non-singleton band alone exceeds the budget (millions of
-    // 2-posting twin grams, say) would get dMax=1 and silently emit
-    // ZERO pairs where the budget could have funded thousands of true
-    // ones. Layout-independent: the draw keys on the gram value.
-    val (dMax: Long, bandHi: Long, bandPpm: Long) =
-      if (estPairs(effCap) <= pairBudget) (Long.MaxValue, 0L, 0L)
-      else {
-        var cum = 0.0
-        var d = 1L
-        var hi = 0L
-        var ppm = 0L
-        var stop = false
-        for (h <- hist if !stop) {
-          val mass = PrefixFilter.bandMass(effCap)(h)
-          if (cum + mass <= pairBudget) { cum += mass; d = (2L << h.b) - 1 }
-          else {
-            if (mass > 0) {
-              hi = (2L << h.b) - 1
-              // floor at 1 ppm: when the overflowing band's mass exceeds
-              // 1e6× the remaining budget the truncation would admit
-              // NOTHING, re-creating (at extreme degeneracy) the
-              // zero-output cliff partial admission exists to remove —
-              // any nonzero remaining budget admits a nonzero fraction
-              ppm =
-                if (pairBudget > cum)
-                  math.max(1L, ((pairBudget - cum) / mass * 1000000L).toLong)
-                else 0L
-            }
-            stop = true
-          }
+      // NOT persisted (tried r16, reverted): the histogram job and the
+      // candidates job both consume these postings, but caching them
+      // only converts a shuffle-free scan-stage recompute (explode +
+      // per-row sort over the already-cached `base`) into a cache
+      // write + read — measured a wash at sf0.1 AND sf1 (mins 7.25 vs
+      // 7.18 / 15.3 vs 14.5, inside the box's wave band), and at corpus
+      // scale a TB-wide postings spill costs more than the CPU pass it
+      // saves. The exact-order postings below are different in kind:
+      // THEIR recompute re-pays corpus-wide shuffles, so they stay cached.
+      val prefixModel = PrefixFilter.modelPostings(keyed, hotDf, threshold)
+      // Candidate-volume guard: the per-bucket cap alone bounds a TASK,
+      // not the JOB (see pairBudget above), so the TOTAL candidate mass
+      // is estimated FIRST from the exact candidate-mass histogram, and
+      // the effective cap halves until the bound
+      // Σ_g min(m_g, cap)(min(m_g, cap) − 1)/2 fits `pairBudget`, with a
+      // rarest-first df-ceiling as the second degrade stage when halving
+      // alone cannot fit (see dMax below). On healthy corpora the
+      // estimate is far under budget and the cap (and therefore the
+      // output) is untouched; on pathological ones the operator degrades
+      // the way the cap already documents — keep-smallest-ids per bucket,
+      // a recall/volume trade — instead of failing the job. The histogram
+      // is exact and deterministic, so the chosen cap (and the output)
+      // is layout-independent.
+      // The histogram is a bounded plan-time driver query (≤64 rows out)
+      // whose input size is driver-known (the postings derive from the
+      // already-cached `base`), so it runs statically at the
+      // stats-derived width — AQE would contribute one extra stage job +
+      // driver barrier per exchange (measured r16: the hist cascade was
+      // 4 jobs and ~0.5 s of gaps at sf0.1) and its runtime coalescing
+      // would pick the same width this derivation does.
+      def histOf(p: DataFrame): Array[PrefixFilter.MassBand] =
+        Iterate.staticBoundedLoop(p.sparkSession,
+            p.queryExecution.optimizedPlan.stats.sizeInBytes) { sc =>
+          PrefixFilter.collectBands(PrefixFilter.massHistogram(p.on(sc)))
         }
-        (d, hi, ppm)
-      }
+      val histModel = histOf(prefixModel)
 
-    // Candidate generation: the shared bucket loop (observed max
-    // prefix bucket on the driver testdata at sf0.1: 263 vs the 5000
-    // cap), with the df-ceiling as its bucket admission — it reads the
-    // posting count out of the SAME aggregate that builds the bucket,
-    // zero extra jobs or shuffles.
-    //
-    // Verification via the shared size-guarded verifier; the guard can
-    // use the REAL materialized cache stats here, because the hotDf
-    // model job above has already materialized `base`.
-    val m = col("__graft_m")
-    val candidates = PrefixFilter.bucketPairs(prefix, effCap, threshold,
-        admit = m <= dMax || (m <= bandHi &&
-          pmod(xxhash64(col("__graft_g")), lit(1000000L)) < bandPpm))
-      .select(col("__graft_id_a").as("id_a"), col("__graft_id_b").as("id_b"))
-      .distinct()
-    val setsSmall = !forceShuffleVerify(docs.sparkSession) &&
-      base.queryExecution.optimizedPlan.stats.sizeInBytes < (256L << 20)
-    // Broadcast-verify regime only: the candidate pipeline's reduce —
-    // the bucket-pair loop — is CPU-DENSE (each skinny posting byte
-    // fans out into up to effCap pair checks), so byte-based
-    // post-shuffle coalescing under-parallelizes it by exactly that
-    // CPU-per-byte ratio (measured r16 at sf0.1: AQE coalesced the
-    // ~5 MB posting shuffle to 5 tasks of 0.37 s on a 32-core box).
-    // The driver already holds the exact work bound — the histogram's
-    // capped candidate-mass estimate — so the exchange width comes
-    // from it: ~2²⁰ estimated pair checks per task (bucket loops
-    // cover ~1e8 checks/s/core measured; the estimate over-counts the
-    // realized candidates 10–30×, so a task lands at ~10–50 ms of
-    // loop plus its share of distinct+verify). Scale-adaptive: the
-    // mass grows with the corpus, the width clamps at the session
-    // setting. Confined to setsSmall, where the verifier is a
-    // broadcast map lookup — the shuffle-verify path joins the
-    // corpus-wide gram-set table and must keep AQE's runtime sizing.
-    val pairs = if (setsSmall) {
-      Iterate.staticWidth(docs.sparkSession,
-          pairCheckWidth(estPairs(effCap))) { sc =>
-        verifiedJaccardPairs(base.on(sc), candidates.on(sc), threshold,
-          setsSmall, textVerify = Some((docs.on(sc), n)))
-      }.on(docs.sparkSession)
-    } else verifiedJaccardPairs(base, candidates, threshold, setsSmall,
-      textVerify = Some((docs, n)))
-    exactPersisted.foreach(_.unpersist(false))
-    base.unpersist(false)
-    pairs
+      // The exact order, when the model order's estimate would engage the
+      // degrade machinery: its smaller true mass often needs NO degrade
+      // where the model order would have dropped bands. Gated on a
+      // SATURATED model as well — the fixed-vocabulary sf1 corpus has
+      // real mass, the degrade is the correct answer there, and
+      // re-ranking cannot shrink it.
+      //
+      // DF-CAP NOTE (round 14 — the "grams above a df cap generate no
+      // candidates, pairs route to a residual tier" hypothesis,
+      // examined and REFUTED for this generator; DedupSpec pins the
+      // classification; the measured masses are in BASELINE.md's
+      // round-14 df-cap decomposition, the diagnostic that took them in
+      // git history, commit 350458e):
+      //  1. OCCUPANCY IDENTITY — a bucket's occupancy occ(g) = #docs
+      //     whose prefix contains g is a pure function of the global
+      //     order and the threshold. A df cap only decides whether a
+      //     bucket EMITS; Σ_g C(occ(g),2) is cap-invariant given the
+      //     order, so capping re-routes mass, it cannot remove any.
+      //  2. RESIDUAL CLASSIFICATION — under the df-ASC order every
+      //     ≤D-df gram ranks before every >D-df gram, so doc d's
+      //     prefix (length p_d = sz_d − ceil(t·sz_d) + 1) contains a
+      //     >D gram iff its ≤D-gram count < p_d, i.e. iff its >D-gram
+      //     count ≥ ceil(t·sz_d): the doc is ≥t-fraction hot
+      //     ("residual", boilerplate-dominated). Hot buckets therefore
+      //     hold ONLY residual docs — there is no cap to protect
+      //     ordinary docs with, because ordinary docs never post hot.
+      //  3. COVERAGE — a true pair's smallest shared prefix gram lies
+      //     in both prefixes (prefix lemma); if it is hot, BOTH members
+      //     are residual by (2). So the exact split a cap could buy is
+      //     cold-buckets + a residual×residual tier — whose bucket mass
+      //     by (1)+(2) IS the hot-bucket mass. Savings would require a
+      //     structurally different algorithm for R, and the measured
+      //     corpora give it nothing to do: under the exact order at
+      //     sf10-he/sf30-he the >D mass is ~zero at every D and
+      //     residualDocs ≈ 0 — the real mass sits in MEDIUM-df buckets,
+      //     the intrinsic Σ C(df,2) that pairBudget bounds. Under the
+      //     MODEL order the hot mass is mis-RANKING (unknown grams at
+      //     df=1-by-hash), which the exact-order switch already
+      //     removes. The constructive lever this math leaves: the
+      //     sparse-branch order crossover at high density (bucket mass
+      //     grows superlinearly, ranking cost linearly in postings) —
+      //     see the rewrite's gate and BASELINE round-14.
+      // The prefix postings and their histogram. The exact-order
+      // postings are cached: they feed both the histogram job and the
+      // candidates job.
+      def withPostings(body: (DataFrame, Array[PrefixFilter.MassBand]) =>
+          DataFrame): DataFrame =
+        if (PrefixFilter.exactOrder(docs.sparkSession,
+            saturated = hotDf.size >= stopGramModelSize,
+            overBudget = PrefixFilter.estPairs(histModel, maxPrefixBucket) >
+              pairBudget))
+          Iterate.cached(PrefixFilter.exactPostings(keyed, threshold))(p =>
+            body(p, histOf(p)))
+        else body(prefixModel, histModel)
+      withPostings { (prefix, hist) =>
+        def estPairs(c: Long): Double = PrefixFilter.estPairs(hist, c)
+        // Measured decision curve on the rehearsal corpora — the binding
+        // cost is the VERIFY join, whose rows carry both docs' full gram
+        // arrays (~KB each), so the budget must bound candidates tightly
+        // enough that candidate_count × array_bytes fits executor disks
+        // (est over-counts the post-distinct actual ~10-30×, measured at
+        // sf1 and sf10): sf0.1 est(5000)=2.8e7 → untouched, output
+        // identical; sf1 est(5000)=2.8e9 → cap 128; sf10 est(5000)=3.9e10
+        // (35M candidates at cap 156 spilled ~85 GB of verify sort and
+        // filled the disk) → cap 128, ~1e7 candidates, bounded verify.
+        var effCap = maxPrefixBucket
+        while (effCap > 64 && estPairs(effCap) > pairBudget)
+          effCap = math.max(64, effCap / 2)
+        // Cap-halving bottoms out at 64 without fitting the budget when the
+        // mass lives in MANY medium-hot grams rather than a few monsters
+        // (measured at the high-entropy sf10 rehearsal: est(64) = 2.1e8 on
+        // a 1e8 budget — the budget was SOFT exactly when it mattered, and
+        // the verify join's ~KB-wide rows turned the overrun into a full
+        // disk). The second degrade stage bounds the mass within a small
+        // constant of the budget at any corpus degeneracy (strict for the
+        // fully-admitted bands; the partial band is sized by expected
+        // mass — see below): a df-ceiling from the same histogram — admit
+        // whole log2 buckets RAREST-GRAMS-FIRST while their cumulative
+        // capped mass fits, then drop every gram bucket past the first
+        // overflow. Rare-first is the AllPairs-optimal order: true near-dup
+        // pairs co-occur in RARE grams (a 0.7-Jaccard pair shares its
+        // rarest prefix grams), so the hottest buckets — the ones a
+        // degenerate corpus inflates — carry the least recall per
+        // candidate. Deterministic (exact histogram → same dMax on any
+        // layout); Long.MaxValue = disabled on every corpus whose floor
+        // mass fits, which includes every healthy one.
+        // The first band that overflows is admitted PARTIALLY — a
+        // deterministic xxhash64(g) per-mille draw sized so the admitted
+        // fraction's expected mass fills the remaining budget (per-gram
+        // mass inside one log2 band varies ≤4×, so the realized mass is
+        // within a small constant of the target; the estimate itself
+        // over-counts the post-distinct actual ~10-30×). Without partial
+        // admission the ceiling has a cliff: a corpus whose RAREST
+        // non-singleton band alone exceeds the budget (millions of
+        // 2-posting twin grams, say) would get dMax=1 and silently emit
+        // ZERO pairs where the budget could have funded thousands of true
+        // ones. Layout-independent: the draw keys on the gram value.
+        val (dMax: Long, bandHi: Long, bandPpm: Long) =
+          if (estPairs(effCap) <= pairBudget) (Long.MaxValue, 0L, 0L)
+          else {
+            var cum = 0.0
+            var d = 1L
+            var hi = 0L
+            var ppm = 0L
+            var stop = false
+            for (h <- hist if !stop) {
+              val mass = PrefixFilter.bandMass(effCap)(h)
+              if (cum + mass <= pairBudget) { cum += mass; d = (2L << h.b) - 1 }
+              else {
+                if (mass > 0) {
+                  hi = (2L << h.b) - 1
+                  // floor at 1 ppm: when the overflowing band's mass exceeds
+                  // 1e6× the remaining budget the truncation would admit
+                  // NOTHING, re-creating (at extreme degeneracy) the
+                  // zero-output cliff partial admission exists to remove —
+                  // any nonzero remaining budget admits a nonzero fraction
+                  ppm =
+                    if (pairBudget > cum)
+                      math.max(1L,
+                        ((pairBudget - cum) / mass * 1000000L).toLong)
+                    else 0L
+                }
+                stop = true
+              }
+            }
+            (d, hi, ppm)
+          }
+
+        // Candidate generation: the shared bucket loop (observed max
+        // prefix bucket on the driver testdata at sf0.1: 263 vs the 5000
+        // cap), with the df-ceiling as its bucket admission — it reads the
+        // posting count out of the SAME aggregate that builds the bucket,
+        // zero extra jobs or shuffles.
+        //
+        // Verification via the shared size-guarded verifier; the guard can
+        // use the REAL materialized cache stats here, because the hotDf
+        // model job above has already materialized `base`.
+        val m = col("__graft_m")
+        val candidates = PrefixFilter.bucketPairs(prefix, effCap, threshold,
+            admit = m <= dMax || (m <= bandHi &&
+              pmod(xxhash64(col("__graft_g")), lit(1000000L)) < bandPpm))
+          .select(col("__graft_id_a").as("id_a"),
+            col("__graft_id_b").as("id_b"))
+          .distinct()
+        val setsSmall = !forceShuffleVerify(docs.sparkSession) &&
+          base.queryExecution.optimizedPlan.stats.sizeInBytes < (256L << 20)
+        // Broadcast-verify regime only: the candidate pipeline's reduce —
+        // the bucket-pair loop — is CPU-DENSE (each skinny posting byte
+        // fans out into up to effCap pair checks), so byte-based
+        // post-shuffle coalescing under-parallelizes it by exactly that
+        // CPU-per-byte ratio (measured r16 at sf0.1: AQE coalesced the
+        // ~5 MB posting shuffle to 5 tasks of 0.37 s on a 32-core box).
+        // The driver already holds the exact work bound — the histogram's
+        // capped candidate-mass estimate — so the exchange width comes
+        // from it: ~2²⁰ estimated pair checks per task (bucket loops
+        // cover ~1e8 checks/s/core measured; the estimate over-counts the
+        // realized candidates 10–30×, so a task lands at ~10–50 ms of
+        // loop plus its share of distinct+verify). Scale-adaptive: the
+        // mass grows with the corpus, the width clamps at the session
+        // setting. Confined to setsSmall, where the verifier is a
+        // broadcast map lookup — the shuffle-verify path joins the
+        // corpus-wide gram-set table and must keep AQE's runtime sizing.
+        if (setsSmall) {
+          Iterate.staticWidth(docs.sparkSession,
+              pairCheckWidth(estPairs(effCap))) { sc =>
+            verifiedJaccardPairs(base.on(sc), candidates.on(sc), threshold,
+              setsSmall, textVerify = Some((docs.on(sc), n)))
+          }.on(docs.sparkSession)
+        } else verifiedJaccardPairs(base, candidates, threshold, setsSmall,
+          textVerify = Some((docs, n)))
+      }
+    }
   }
 
   /** [[ngramJaccard]]'s candidate-exchange width for `estPairs`
@@ -1081,7 +1030,7 @@ object Dedup {
   /** The embedding-LSH band keys ([[Banding.keys]]) for a 64-bit
     * hyperplane signature column: 8 bands × 8 bits. Shared between the
     * batch operator and the streaming twin so the two bandings cannot
-    * drift apart (same discipline as [[minhashBandKeys]]).
+    * drift apart (same discipline as [[bandPostings]]).
     *
     * Geometry is the scale axis of this operator: key space per band
     * is 2^bits, so expected bucket occupancy is N/2^bits per band and

@@ -72,6 +72,17 @@ object Iterate {
     else df.localCheckpoint(true)
   }
 
+  /** Run `body` over `df` persisted MEMORY_AND_DISK, and release the
+    * cache when `body` exits, also when it throws. The one cache policy
+    * of the operators: a frame that feeds several consumers lives
+    * exactly as long as the call. `body` must not hand back a lazy plan
+    * that still reads the cache — return a [[materialize]]d frame, or
+    * `Unit`. */
+  def cached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(c) finally c.unpersist(false)
+  }
+
   /** Chained-style [[materialize]]: `df.materialized()` reads like the
     * raw `.localCheckpoint(true)` it replaces at the one-shot
     * materialization sites (round-invariant loop preps, verified-pair

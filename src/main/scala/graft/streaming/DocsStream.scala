@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.VectorFunctions
-import graft.functions.VectorFunctions.{minhash_sig, shingle_hashes}
 
 /** Streaming deduplication over a documents stream: the incremental
   * twin of [[graft.operators.Dedup.minhashLsh]].
   *
   * Each arriving document is shingled and MinHash-signed in the scan
-  * stage (same custom expressions as the batch path), exploded into
-  * its LSH band keys, and routed to per-(band, bucket) state via
+  * stage (the batch operators' signature frame), exploded into its LSH
+  * band keys (the one folded `bk` that batch and the persisted index
+  * use too), and routed to per-`bk` state via
   * `flatMapGroupsWithState` — the same shape a 100 TB incremental
   * pipeline needs: the dedup index lives as keyed streaming state
   * (RocksDB-backed on a real cluster), new documents only ever compare
@@ -30,7 +30,7 @@ import graft.functions.VectorFunctions.{minhash_sig, shingle_hashes}
   */
 object DocsStream {
 
-  case class BandedDoc(band: Int, bkey: Int, doc_id: Long, gs: Array[Long])
+  case class BandedDoc(bk: Int, doc_id: Long, gs: Array[Long])
   case class PairOut(id_a: Long, id_b: Long, jaccard: Double)
   case class Member(id: Long, gs: Array[Long])
   case class BucketState(members: List[Member])
@@ -68,27 +68,17 @@ object DocsStream {
       threshold: Double = 0.8,
       maxBucket: Int = 1000): Dataset[PairOut] = {
     import spark.implicits._
-    require(numHashes % bands == 0)
-    val rows = numHashes / bands
-    val sigs = docs.select(col("doc_id"),
-        shingle_hashes(col("text"), shingleK).as("sh"))
-      .withColumn("mh", minhash_sig(col("sh"), numHashes))
-      .filter(col("mh").isNotNull)
-      .withColumn("gs", array_sort(array_distinct(col("sh"))))
-    // banding construction SHARED with the batch operator — the
-    // stream ≡ batch guarantee depends on byte-identical band keys
-    val bandKeys =
-      graft.operators.Dedup.minhashBandKeys(col("mh"), bands, rows)
-    sigs
-      .select(col("doc_id"), col("gs"),
-        explode(array(bandKeys: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
-        col("doc_id"), col("gs"))
+    import graft.operators.Dedup
+    // signature frame and band key SHARED with the batch operators —
+    // the stream ≡ batch guarantee depends on byte-identical band keys
+    val rows = Dedup.rowsPerBand(numHashes, bands)
+    Dedup.bandPostings(Dedup.signatureFrame(docs, shingleK, numHashes),
+        bands, rows, col("doc_id"), Dedup.shingleSet(col("sh")).as("gs"))
       .as[BandedDoc]
-      .groupByKey(d => (d.band, d.bkey))
+      .groupByKey(_.bk)
       .flatMapGroupsWithState[BucketState, PairOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Int), batch: Iterator[BandedDoc],
+        (_: Int, batch: Iterator[BandedDoc],
          state: GroupState[BucketState]) =>
           var members = state.getOption.map(_.members).getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[PairOut]
@@ -260,28 +250,6 @@ object DocsStream {
       readDocsStream(spark, sfDir), shards, capacity), sinkName)
   }
 
-  /** Streaming decontamination: the incremental twin of
-    * [[graft.operators.Decontaminate.overlap]]. The eval/benchmark
-    * gram set is STATIC and tiny by construction (it's a benchmark),
-    * so the stream side stays STATELESS: each arriving doc counts its
-    * own (distinct) grams against a REAL `sparkContext.broadcast` set
-    * in the scan stage — shipped once per executor, O(1) membership
-    * per gram, not a plan-embedded literal array re-walked per row —
-    * no streaming aggregation, no keyed state, no watermark, and
-    * per-doc results are emittable the moment the doc arrives. This is
-    * the 100 TB shape: the only thing that grows is the stream, and
-    * the per-row cost is O(|doc grams|). Stream output ≡ the batch
-    * operator row-for-row (same oracle). */
-  def decontamStream(docs: DataFrame, evalGrams: Seq[String],
-      n: Int = 5, minHits: Long = 1): DataFrame = {
-    val bc = graft.functions.VectorFunctions.broadcastStringSet(
-      docs.sparkSession, evalGrams)
-    val hits = graft.functions.VectorFunctions.broadcast_member_count(
-      graft.functions.TextFunctions.wordShingles(col("text"), n), bc)
-    docs.select(col("doc_id"), hits.as("n_hits"),
-      (hits >= minHits).as("contaminated"))
-  }
-
   /** Stateless streaming twin of the model-based quality filter: the
     * captured linear model (5 doubles, epoch-static — retraining is a
     * batch job, scoring is not) rides the plan as literals, so each
@@ -319,24 +287,28 @@ object DocsStream {
     (sinkName, model)
   }
 
-  /** Drive [[decontamStream]] synchronously to completion: eval side =
-    * docs with doc_id % 17 = 0 and doc_id < 100000 (read once, batch —
-    * the scale-invariant fixed benchmark set, matching the batch
-    * decontam queries and their shared oracle), stream side = every
-    * doc outside the % 17 family. Returns the memory-sink name. */
+  /** Streaming decontamination, the incremental twin of
+    * [[graft.operators.Decontaminate.overlapBroadcast]], driven
+    * synchronously to completion. The eval/benchmark gram set is
+    * STATIC and tiny by construction (it's a benchmark), so the stream
+    * side stays STATELESS: each arriving doc counts its own (distinct)
+    * grams against a real broadcast set in the scan stage
+    * ([[graft.operators.Decontaminate.broadcastHits]], the batch
+    * kernel) — no streaming aggregation, no keyed state, no watermark,
+    * and per-doc results are emittable the moment the doc arrives.
+    * Eval side = docs with doc_id % 17 = 0 and doc_id < 100000 (read
+    * once, batch — the scale-invariant fixed benchmark set, matching
+    * the batch decontam queries and their shared oracle), stream side =
+    * every doc outside the % 17 family. Returns the sink name. */
   def runDecontamStream(spark: SparkSession, sfDir: String,
       sinkName: String = "docs_decontam"): String = {
-    import graft.functions.TextFunctions.wordShingles
-    val evalGrams = spark.read
-      .parquet(s"$sfDir/documents.parquet")
+    val eval = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 17 === 0 && col("doc_id") < 100000)
-      .select(explode(wordShingles(col("text"), 5)).as("g"))
-      .distinct()
-      .collect().map(_.getString(0)).toSeq
     val stream = readDocsStream(spark, sfDir)
       .filter(col("doc_id") % 17 =!= 0)
     StreamSource.runToFileSink(spark,
-      decontamStream(stream, evalGrams), sinkName)
+      graft.operators.Decontaminate.broadcastHits(stream, eval, n = 5,
+        minHits = 1), sinkName)
   }
 
   /** Streaming twin of the declarative data-quality gate: the

@@ -409,6 +409,15 @@ class DedupSpec extends AnyFunSuite {
     assert(merged.contains((1L, 3L)) && merged.contains((1L, 5L)))
   }
 
+  test("a failed index merge releases its cached signature frame") {
+    spark.catalog.clearCache()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Dedup.minhashIndexMerge(docs, "spec_no_such_index")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failed merge left a cached frame behind")
+  }
+
   test("connected components collapse chains to the component minimum") {
     val chainDocs = (1L to 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     // path 1-2-3-4 plus isolated 5, 6: one-round star contraction maps

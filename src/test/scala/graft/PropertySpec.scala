@@ -434,6 +434,40 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("minhashLsh ≡ an increment whose every row is new, under a " +
+      "binding bucket cap") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    val words = ("alpha beta gamma delta epsilon zeta eta theta iota " +
+      "kappa lambda mu nu xi omicron pi rho sigma tau").split(" ")
+    (0 until 3).foreach { it =>
+      val rnd = new scala.util.Random(17 + it)
+      def text(): Seq[String] =
+        Seq.fill(25)(words(rnd.nextInt(words.length)))
+      // 4 planted clusters of 4 identical copies and one one-word
+      // mutation, plus 8 random docs, under shuffled ids: every band
+      // bucket of a cluster holds at least 4 postings, over the cap of 3
+      val texts = (0 until 4).flatMap { _ =>
+        val t = text()
+        Seq.fill(4)(t.mkString(" ")) :+
+          t.updated(rnd.nextInt(t.length), "zulu").mkString(" ")
+      } ++ Seq.fill(8)(text().mkString(" "))
+      val docs = rnd.shuffle(texts.indices.map(_.toLong)).zip(texts)
+        .toDF("doc_id", "text")
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .toSet
+      val batch = rowsOf(Dedup.minhashLsh(docs, threshold = 0.5,
+        maxBucket = 3))
+      val allNew = rowsOf(Dedup.minhashLshIncrement(docs, lit(true),
+        threshold = 0.5, maxBucket = 3))
+      assert(batch === allNew, s"iteration $it")
+      val uncapped = rowsOf(Dedup.minhashLsh(docs, threshold = 0.5))
+      assert(batch.nonEmpty && batch.subsetOf(uncapped) &&
+        batch.size < uncapped.size, s"the cap did not bind: iteration $it")
+    }
+  }
+
   test("decontamination ≡ naive distinct-gram intersection on random " +
       "corpora and random eval splits") {
     import spark.implicits._

@@ -72,20 +72,39 @@ class RepoHygieneSpec extends AnyFunSuite {
   private val Decl = ("""(?m)^\s*(?:(?:private|protected|final|sealed|""" +
     """abstract|case)(?:\[\w+\])?\s+)*(?:class|trait|object)\s+(\w+)""").r
 
-  test("addReferenceObj under src/main/scala is the bridge's or allowlisted") {
-    val calls = files("src/main/scala").filter(_.toString.endsWith(".scala"))
+  /** (file, owning class) of each match of `pattern` in the sources
+    * under `src/main/scala`. */
+  private def owners(pattern: String): Seq[(String, String)] =
+    files("src/main/scala").filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
         val decls = Decl.findAllMatchIn(src).map(m => m.start -> m.group(1))
           .toSeq
-        "addReferenceObj".r.findAllMatchIn(src).map(m =>
+        pattern.r.findAllMatchIn(src).map(m =>
           p.getFileName.toString ->
             decls.filter(_._1 < m.start).lastOption.fold("")(_._2)).toSeq
       }
+
+  test("addReferenceObj under src/main/scala is the bridge's or allowlisted") {
+    val calls = owners("addReferenceObj")
     assert(calls.contains("VectorFunctions.scala" -> "EvalBridge"),
       s"owner scan found only $calls")
     val stray = calls.filterNot(referenceObjOwners)
     assert(stray.isEmpty, s"addReferenceObj outside the codegen bridge " +
       s"(extend UnaryEvalBridge or BinaryEvalBridge instead): $stray")
+  }
+
+  /** The operators' one cache policy is `Iterate.cached`, which
+    * releases the cache when its scope exits, also on failure. The
+    * Jaccard join rewrite persists at plan time and a listener releases
+    * the frame after the query runs. */
+  test(".persist( under src/main/scala is Iterate.cached's or the " +
+      "Jaccard rewrite's") {
+    val calls = owners("""\.persist\(""")
+    val allowed = Seq("Iterate.scala" -> "Iterate",
+      "GraftExtensions.scala" -> "RewriteJaccardThresholdJoin")
+    assert(calls.sorted === allowed.sorted,
+      "persist outside Iterate.cached (cache through it instead): " +
+        calls.diff(allowed))
   }
 }

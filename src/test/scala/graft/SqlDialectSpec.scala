@@ -569,6 +569,17 @@ class SqlDialectSpec extends AnyFunSuite {
     }
   }
 
+  test("a block comment ends at its first */ as in MySQL, though " +
+      "Spark nests block comments") {
+    val sql = "SELECT 1 AS a /* x /* y */, 2 AS b /* z */, 3 AS c"
+    assert(translate(sql) ===
+      "SELECT 1 AS a /* x / * y */, 2 AS b /* z */, 3 AS c")
+    assert(spark.sql(translate(sql)).columns.toSeq === Seq("a", "b", "c"))
+    // a comment text ending in / would open a nested comment in Spark
+    assert(spark.sql(translate("SELECT 1 AS a /* x /*/, 2 AS b"))
+      .columns.toSeq === Seq("a", "b"))
+  }
+
   test("every translated name passes the strict audit and is " +
       "rewritten; keyword synonyms are rewritten bare; literals and " +
       "comments translate to themselves") {
