@@ -540,6 +540,36 @@ object DumpPlans {
         |aggregate shape as the parquet path — the source swaps, the
         |plan above it does not.""".stripMargin)
 
+  /** Ids that a run numbers from JVM-wide counters. Each group is the
+    * number, renumbered from 0 by first appearance in the plan, so two
+    * attributes of one name stay apart. */
+  private val numbered = Seq(
+    """#(\d+)""".r, // expression ids
+    """plan_id=(\d+)""".r,
+    """RDD\[(\d+)\]""".r,
+    """Broadcast\((\d+)\)""".r)
+  private val uuid =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+  // a lambda's JVM-generated class suffix and identity hash
+  private val lambda = """\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r
+
+  /** `plan` with its run-specific text made reproducible: expression,
+    * plan, RDD and broadcast ids renumbered, temp-path UUIDs written
+    * `<uuid>` and lambda names cut to `$Lambda`. A regeneration with no
+    * plan change then rewrites no line of PLANS.md. */
+  private[graft] def mask(plan: String): String = {
+    import scala.util.matching.Regex.quoteReplacement
+    val renumbered = numbered.foldLeft(plan) { (text, id) =>
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      id.replaceAllIn(text, m => quoteReplacement(
+        m.matched.patch(m.start(1) - m.start,
+          seen.getOrElseUpdate(m.group(1), seen.size).toString,
+          m.group(1).length)))
+    }
+    lambda.replaceAllIn(uuid.replaceAllIn(renumbered, "<uuid>"),
+      quoteReplacement("$Lambda"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
@@ -551,12 +581,14 @@ object DumpPlans {
         |Regenerate with `sbt "runMain graft.DumpPlans"`. Each section:
         |why this is the plan we want at 100 TB, then the actual
         |`explain("formatted")` output (plans are data-size-independent
-        |in shape; AQE refines exchanges at runtime).
+        |in shape; AQE refines exchanges at runtime). Expression, plan,
+        |RDD and broadcast ids are renumbered from 0 in each plan, so
+        |a regeneration changes only the lines whose plan changed.
         |""".stripMargin)
     entries.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = mask(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       sb.append(s"\n## $name\n\n$why\n\n```\n$plan```\n")
     }
     java.nio.file.Files.writeString(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.bridge
 import graft.plans.PlanJson
 import graft.sources.Tables
 
@@ -20,12 +21,13 @@ final case class QueryResult(
     * which never pull an unbounded result onto the driver. */
   def rows: Array[Row] = df.collect()
 
-  /** At most `limit` rows — the limit is pushed into the plan
-    * (`TakeOrderedAndProject`/`CollectLimit`), so the driver never
-    * holds more than `limit` rows regardless of result size. (Named
-    * `rowsLimited`, not an overload of `rows` — `rows(n)` would be
-    * ambiguous with indexing into the parity array.) */
-  def rowsLimited(limit: Int): Array[Row] = df.limit(limit).collect()
+  /** At most `limit` rows, taken from `df`'s own plan by a bounded
+    * take that scans partitions incrementally (`bridge.takeRows`), so
+    * the driver never holds more than `limit` rows regardless of
+    * result size and nothing is planned again. (Named `rowsLimited`,
+    * not an overload of `rows` — `rows(n)` would be ambiguous with
+    * indexing into the parity array.) */
+  def rowsLimited(limit: Int): Array[Row] = bridge.takeRows(df, limit)
 
   /** Stream the result one partition at a time — driver memory is
     * bounded by the largest partition, not the result. */
@@ -50,12 +52,11 @@ final case class QueryResult(
   def executeWithStats(): (Array[Row], String) =
     executeWithStats(Int.MaxValue)
 
-  /** Bounded variant: collects at most `limit` rows (the limit node
-    * joins the executed plan, so the stats walk reports what actually
-    * ran). */
+  /** Bounded variant: collects at most `limit` rows with the bounded
+    * take of [[rowsLimited]], so the stats walk reports the plan `df`
+    * planned and ran. */
   def executeWithStats(limit: Int): (Array[Row], String) = {
-    val frame = if (limit == Int.MaxValue) df else df.limit(limit)
-    val out = frame.collect()
+    val out = if (limit == Int.MaxValue) df.collect() else rowsLimited(limit)
     def esc(s: String) = PlanJson.jsonEscape(s)
     // AQE wraps subtrees in QueryStageExec / AdaptiveSparkPlanExec whose
     // real subplan hangs off a dedicated field, not `children` — unwrap
@@ -73,7 +74,7 @@ final case class QueryResult(
           s"""{"node":"${esc(p.nodeName)}","rows":$rowsMetric,""" +
             s""""children":$kids}"""
       }
-    (out, walk(frame.queryExecution.executedPlan))
+    (out, walk(df.queryExecution.executedPlan))
   }
 }
 

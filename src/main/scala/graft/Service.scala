@@ -3,6 +3,7 @@ package graft
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.graft.bridge
 import graft.plans.PlanJson
 
 /** The reference's delivery surface, rebuilt: an HTTP endpoint that
@@ -28,8 +29,8 @@ import graft.plans.PlanJson
   * The body is either a form (`sql=…&limit=…`) or raw SQL text. Row
   * payloads are ALWAYS limit-bounded (default 1000): the service is the
   * obvious entry point, so the obvious path must be the scale-safe one
-  * — `limit` caps driver materialization via a plan-side limit, never
-  * an unbounded collect. */
+  * — `limit` caps driver materialization with a bounded take on the
+  * request's own plan, never an unbounded collect. */
 final class Service(engine: Engine, port: Int = 0,
     defaultLimit: Int = 1000,
     poolSize: Int = Service.defaultPoolSize) {
@@ -134,12 +135,13 @@ final class Service(engine: Engine, port: Int = 0,
   }
 
   /** (schema JSON array, rows JSON array, row count), limit-bounded.
-    * Row JSON comes from Spark's own `toJSON` (per-row objects with
-    * correct type rendering and escaping) — the limit is applied
-    * BEFORE collection, so the driver never holds more. */
+    * The rows are taken from the plan `df` has already planned (for
+    * `/query`, the plan the response shows), at most `limit` of them,
+    * and written as Spark's `toJSON` writes them (`bridge.takeJson`),
+    * so the driver never holds more and no second Dataset is planned. */
   private def rowsJson(df: org.apache.spark.sql.DataFrame,
       limit: Int): (String, String, Int) = {
-    val rows = df.limit(limit).toJSON.collect()
+    val rows = bridge.takeJson(df, limit)
     val schema = df.schema.fieldNames
       .map(f => "\"" + PlanJson.jsonEscape(f) + "\"")
       .mkString("[", ",", "]")

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.bridge
 
 /** Sustained-concurrency load drill for the HTTP delivery surface —
   * the axis the reference actually shipped (an ASP.NET query service,
@@ -39,9 +41,11 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * Usage: ServiceLoadDrill <sfDir> [clients] [perClient] [poolSize]
   *        [cpuPhaseReqs (default 100, 0 disables)]
   * Emits one JSON line (route percentiles, QPS, validation counts,
-  * per-route CPU-per-request, and `compiles`: the classes Spark's
-  * codegen compiled during the concurrent phase, and per route during
-  * the CPU phase — a shape that compiles per key shows here);
+  * per-route CPU-per-request, `compiles`: the classes Spark's codegen
+  * compiled during the concurrent phase, and per route during the CPU
+  * phase — a shape that compiles per key shows here — and per route
+  * `jobs_per_req`: the Spark jobs one request of the shape started in
+  * the CPU phase);
   * exits 1 on any validation failure or HTTP/transport error. */
 object ServiceLoadDrill {
 
@@ -155,6 +159,16 @@ object ServiceLoadDrill {
     (0 until 8).foreach(i => fire(warmClient, 0, i, timed = false))
 
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobCount = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobCount.incrementAndGet()
+    })
+    // jobs started so far, once their events have reached the listener
+    def jobs: Long = {
+      bridge.drainListeners(spark.sparkContext)
+      jobCount.get
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
     val compiles0 = compiles
     val t0 = System.nanoTime()
@@ -185,8 +199,9 @@ object ServiceLoadDrill {
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val routeLabels =
       Seq("point_spj", "key_agg", "dialect_page", "explain_join")
-    // (route, cpu ms, wall ms, classes compiled over both samples)
-    val routeCpu: Seq[(String, Double, Double, Long)] =
+    // (route, cpu ms, wall ms, classes compiled over both samples,
+    // jobs per request over both samples)
+    val routeCpu: Seq[(String, Double, Double, Long, Double)] =
       if (cpuPhaseReqs <= 0) Seq.empty
       else {
         val cl = HttpClient.newHttpClient()
@@ -209,8 +224,9 @@ object ServiceLoadDrill {
         // with lower CPU) rather than independent minima, so the
         // reported (cpu, wall) corresponds to a run that actually
         // happened.
-        def sample(): Seq[(String, Double, Double, Long)] =
+        def sample(): Seq[(String, Double, Double, Long, Long)] =
           routeLabels.zipWithIndex.map { case (label, shape) =>
+            val j0 = jobs
             val w0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
             val k0 = compiles
             (0 until cpuPhaseReqs).foreach(j =>
@@ -218,11 +234,13 @@ object ServiceLoadDrill {
             val wall = (System.nanoTime() - w0) / 1e9
             val cpu = (osBean.getProcessCpuTime - c0) - idlePerSec * wall
             (label, cpu / cpuPhaseReqs / 1e6, wall * 1000 / cpuPhaseReqs,
-              compiles - k0)
+              compiles - k0, jobs - j0)
           }
         val (s1, s2) = (sample(), sample())
-        s1.zip(s2).map { case ((l, c1, w1, k1), (_, c2, w2, k2)) =>
-          if (c2 < c1) (l, c2, w2, k1 + k2) else (l, c1, w1, k1 + k2)
+        s1.zip(s2).map { case ((l, c1, w1, k1, j1), (_, c2, w2, k2, j2)) =>
+          val perReq = (j1 + j2).toDouble / (2 * cpuPhaseReqs)
+          if (c2 < c1) (l, c2, w2, k1 + k2, perReq)
+          else (l, c1, w1, k1 + k2, perReq)
         }
       }
 
@@ -251,10 +269,12 @@ object ServiceLoadDrill {
         f""""max_ms":${a.last / 1e6}%.1f$drift}"""
     }.mkString(",")
     val total = clients * perClient
-    val cpuJson = routeCpu.map { case (label, cpuMs, wallMs, compiled) =>
-      f""""$label":{"n":$cpuPhaseReqs,"samples":2,"compiles":$compiled,""" +
-        f""""cpu_ms_per_req":$cpuMs%.1f,""" +
-        f""""wall_ms_per_req":$wallMs%.1f}"""
+    val cpuJson = routeCpu.map {
+      case (label, cpuMs, wallMs, compiled, jobsPerReq) =>
+        f""""$label":{"n":$cpuPhaseReqs,"samples":2,"compiles":$compiled,""" +
+          f""""jobs_per_req":$jobsPerReq%.2f,""" +
+          f""""cpu_ms_per_req":$cpuMs%.1f,""" +
+          f""""wall_ms_per_req":$wallMs%.1f}"""
     }.mkString(",")
     println(
       f"""{"drill":"service_load","sf_dir":"$sfDir","clients":$clients,""" +

@@ -1,11 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, In, InSet, LeafExpression, Literal, Predicate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BaseLimitExec, FilterExec, GlobalLimitExec, LocalLimitExec, SparkPlan}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, TimestampType}
+
+import graft.functions.VectorFunctions.UnaryEvalBridge
 
 /** Physical-plan rule that makes the Java Spark generates for a query
   * depend on the query's shape only, so that requests of one shape
@@ -17,6 +19,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Flo
   *    writes into the Java text (string and decimal literals already
   *    go through the `references` array). Each comparison literal in a
   *    `FilterExec` condition becomes a [[BoundLiteral]];
+  *  - `InSet` over an int, short, byte or date column (Catalyst's
+  *    `OptimizeIn` form of an `IN` list of more than 10 values), whose
+  *    codegen writes the values as the case labels of a `switch`. Each
+  *    such `InSet` in a `FilterExec` condition becomes a [[BoundInSet]],
+  *    whose code reads the set through the `references` array, as
+  *    `InSet` already does for bigint and string columns;
   *  - limit counters, which `BaseLimitExec` names `_limit_counter_<n>`
   *    from a JVM-wide sequence, so even a repeated limited query
   *    compiles anew. Each limit node becomes an
@@ -49,11 +57,19 @@ object StableCodegen extends Rule[SparkPlan] {
     condition.transformUp {
       case c: BinaryComparison => c.withNewChildren(c.children.map(bind))
       case in: In => in.copy(list = in.list.map(bind))
+      case s: InSet if s.hset.nonEmpty && switchable(s.child.dataType) =>
+        BoundInSet(s.child, s.hset)
     }
 
   private def bind(e: Expression): Expression = e match {
     case Literal(v, t) if v != null && bindable(t) => BoundLiteral(v, t)
     case other => other
+  }
+
+  /** The types whose `InSet` Spark can generate as a `switch`. */
+  private def switchable(t: DataType): Boolean = t match {
+    case IntegerType | ShortType | ByteType | DateType => true
+    case _ => false
   }
 
   private def bindable(t: DataType): Boolean = t match {
@@ -87,6 +103,28 @@ case class BoundLiteral(value: Any, dataType: DataType)
       f => s"$f = $ref.${javaType}Value();", forceInline = true)
     ExprCode.forNonNullValue(JavaCode.global(field, dataType))
   }
+}
+
+/** An `InSet` whose generated code tests membership in the value set
+  * through the codegen bridge (the expression itself, held in the
+  * `references` array) instead of a `switch` over the values, so the
+  * source does not depend on them. Evaluates, prints, renders as SQL
+  * and canonicalizes exactly as the (non-empty) `InSet` it replaces. */
+case class BoundInSet(child: Expression, hset: Set[Any])
+    extends UnaryEvalBridge with Predicate {
+  private lazy val inSet = InSet(child, hset)
+  private lazy val hasNull = hset.contains(null)
+
+  override def nullable: Boolean = inSet.nullable
+  override def nullSafeEval(value: Any): Any =
+    if (hset.contains(value)) true else if (hasNull) null else false
+  override def toString: String = inSet.toString
+  override def simpleString(maxFields: Int): String =
+    inSet.simpleString(maxFields)
+  override def sql: String = inSet.sql
+  override lazy val canonicalized: Expression = inSet.canonicalized
+  override protected def withNewChildInternal(c: Expression): BoundInSet =
+    copy(child = c)
 }
 
 /** Spark's limit nodes with the codegen counter named by `ordinal`, the

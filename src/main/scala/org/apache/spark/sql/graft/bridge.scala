@@ -94,6 +94,62 @@ object bridge {
       org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
       CodegenCacheEntries.toString)
 
+  /** At most `n` rows of `df`, run from the physical plan of `df`'s own
+    * `QueryExecution`: no second Dataset is built, so nothing is
+    * analyzed, optimized or planned again, and the plan that ran is the
+    * plan `df` shows. `executeTake` scans partitions incrementally, as
+    * `CollectLimit` does (under AQE, `AdaptiveSparkPlanExec.executeTake`
+    * runs the final plan's). The run is one SQL execution carrying
+    * `df`'s `QueryExecution`, so `QueryExecutionListener`s see it as a
+    * `collect`. A negative `n` fails with Spark's own analysis error
+    * for `df.limit(n)`. */
+  private def take(df: org.apache.spark.sql.DataFrame, n: Int)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    if (n < 0) df.limit(n) // throws Spark's error for a negative limit
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeTake(n)
+    }
+  }
+
+  /** [[take]], decoded with the frame's own row encoder, as
+    * `df.limit(n).collect()` decodes. */
+  def takeRows(df: org.apache.spark.sql.DataFrame, n: Int)
+      : Array[org.apache.spark.sql.Row] = {
+    val fromRow = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
+      .exprEnc.resolveAndBind(df.queryExecution.analyzed.output)
+      .createDeserializer()
+    take(df, n).map(fromRow)
+  }
+
+  /** [[take]], one JSON object per row, written by the generator and
+    * options `Dataset.toJSON` uses, so the strings are those of
+    * `df.limit(n).toJSON.collect()`: null fields omitted, dates,
+    * timestamps and escaping alike. */
+  def takeJson(df: org.apache.spark.sql.DataFrame, n: Int): Array[String] = {
+    val rows = take(df, n)
+    val writer = new java.io.CharArrayWriter()
+    val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(
+      df.schema, writer,
+      new org.apache.spark.sql.catalyst.json.JSONOptions(
+        Map.empty[String, String],
+        df.queryExecution.sparkSession.sessionState.conf.sessionLocalTimeZone))
+    try rows.map { row =>
+      writer.reset()
+      gen.write(row)
+      gen.flush()
+      writer.toString
+    } finally gen.close()
+  }
+
+  /** Block until every event posted so far has reached the context's
+    * listeners (package-private `LiveListenerBus.waitUntilEmpty`), so a
+    * job count read next includes the jobs already run. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** True iff a string type still compares binary (UTF8_BINARY) —
     * `StringType.supportsBinaryEquality` is private[sql]; graft's
     * ci-collation rule needs it to wrap each comparison exactly once. */

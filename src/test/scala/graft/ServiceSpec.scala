@@ -2,7 +2,14 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Iterate
+import graft.plans.PlanJson
 
 /** The delivery-surface contract over a REAL socket: SQL goes in as an
   * HTTP POST, the reference's envelope (both plans + statistics + rows)
@@ -12,8 +19,12 @@ class ServiceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val engine = new Engine(spark, TestSpark.sfDir)
 
-  private def withService(f: (HttpClient, Int) => Unit): Unit = {
-    val svc = new Service(engine, port = 0)
+  private def withService(f: (HttpClient, Int) => Unit): Unit =
+    withServiceOf(engine)(f)
+
+  private def withServiceOf(eng: Engine)(f: (HttpClient, Int) => Unit)
+      : Unit = {
+    val svc = new Service(eng, port = 0)
     val port = svc.start()
     try f(HttpClient.newHttpClient(), port)
     finally svc.stop()
@@ -25,6 +36,124 @@ class ServiceSpec extends AnyFunSuite {
       HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path"))
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString()).body()
+
+  private def form(sql: String, limit: Int): String =
+    "sql=" + java.net.URLEncoder.encode(sql, "UTF-8") + s"&limit=$limit"
+
+  // (SQL, route limit): each case's rows must come back as
+  // `df.limit(limit).toJSON.collect()` renders them
+  private val bodyCases: Seq[(String, Int)] = Seq(
+    "SELECT o_orderkey, o_custkey FROM orders ORDER BY o_orderkey " +
+      "LIMIT 7 OFFSET 3" -> 1000,
+    // about 6000 rows in several range partitions: the take crosses
+    // partitions and must keep their order
+    "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
+      "ORDER BY l_orderkey DESC, l_linenumber" -> 2000,
+    "SELECT o_orderstatus, count(*) AS n, sum(o_totalprice) AS total " +
+      "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus" -> 1000,
+    "SELECT count(*) AS n, max(o_orderdate) AS last FROM orders" -> 1000,
+    "SELECT c_custkey FROM customer WHERE c_custkey < 0" -> 1000,
+    "SELECT c_custkey, CASE WHEN c_custkey % 3 = 0 THEN NULL " +
+      "ELSE c_name END AS name, NULL AS nothing, " +
+      "CAST(NULL AS DOUBLE) AS x FROM customer ORDER BY c_custkey " +
+      "LIMIT 10" -> 1000,
+    "SELECT o_orderkey, o_orderdate, " +
+      "CAST(o_orderdate AS TIMESTAMP) + INTERVAL 90 MINUTES AS ts, " +
+      "CAST(o_totalprice AS DECIMAL(12, 2)) AS price, " +
+      "DATE '1200-06-15' AS old_day, " +
+      "TIMESTAMP '1969-12-31 23:59:59.123456' AS old_ts, " +
+      "CAST(-0.5 AS DECIMAL(38, 18)) AS wide FROM orders " +
+      "ORDER BY o_orderkey LIMIT 5" -> 1000,
+    "SELECT 'say \"hi\" \\\\ it\\'s' AS q, " +
+      "'naïve café — 東京 😀' AS u, " +
+      "concat('tab', char(9), 'nl', char(10), 'bell', char(7)) AS ctl, " +
+      "n_name AS `col \"name\"` FROM nation ORDER BY n_nationkey" -> 3,
+    "SELECT c_custkey, c_name FROM customer ORDER BY c_custkey " +
+      "LIMIT 50" -> 10,
+    "SELECT n_nationkey, n_name FROM nation LIMIT 20" -> 5)
+
+  test("/getData and /query rows are byte-identical to " +
+      "df.limit(n).toJSON, with and without partition coalescing") {
+    def check(eng: Engine): Unit = withServiceOf(eng) { (c, port) =>
+      bodyCases.foreach { case (sql, n) =>
+        val want = eng.getData(sql).limit(n).toJSON.collect()
+        val schema = eng.getData(sql).schema.fieldNames
+          .map(f => "\"" + PlanJson.jsonEscape(f) + "\"")
+          .mkString("[", ",", "]")
+        val tail = s""""schema":$schema,"rows":""" +
+          want.mkString("[", ",", "]") + s""","rowCount":${want.length}}"""
+        assert(post(c, port, "/getData", form(sql, n)) === "{" + tail, sql)
+        val q = post(c, port, "/query", form(sql, n))
+        assert(q.startsWith("{\"originalPlan\"") && q.endsWith("," + tail),
+          s"$sql\n${q.takeRight(300)}")
+      }
+    }
+    check(engine)
+    // four range partitions instead of one coalesced partition
+    Iterate.scoped(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { s =>
+      check(new Engine(s, TestSpark.sfDir))
+    }
+  }
+
+  test("a negative limit is still Spark's own error") {
+    withService { (c, port) =>
+      val sql = "SELECT c_custkey FROM customer"
+      val want = intercept[Exception](engine.getData(sql).limit(-1))
+        .getMessage
+      for (route <- Seq("/getData", "/query"))
+        assert(post(c, port, route, form(sql, -1)) ===
+          s"""{"error":"${PlanJson.jsonEscape(want)}"}""", route)
+    }
+  }
+
+  test("a warm point lookup via /getData runs one Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    withService { (c, port) =>
+      def lookup(k: Int) = post(c, port, "/getData",
+        s"SELECT c_custkey, c_name FROM customer WHERE c_custkey = $k")
+      assert(lookup(7).endsWith("\"rowCount\":1}"))
+      bridge.drainListeners(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(lookup(8).endsWith("\"rowCount\":1}"))
+        bridge.drainListeners(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get === 1)
+    }
+  }
+
+  test("/query optimizes one plan: the rows run the plan the body shows") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = seen.add(qe)
+    }
+    withService { (c, port) =>
+      val sql = "SELECT o_orderstatus, count(*) AS n FROM orders " +
+        "WHERE o_custkey > 10 GROUP BY o_orderstatus ORDER BY n DESC"
+      post(c, port, "/query", form(sql, 1000))
+      bridge.drainListeners(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val body = try {
+        val b = post(c, port, "/query", form(sql, 1000))
+        bridge.drainListeners(spark.sparkContext)
+        b
+      } finally spark.listenerManager.unregister(listener)
+      assert(seen.size === 1, "one execution per request")
+      val qe = seen.peek()
+      assert(body.contains(
+        s"""{"originalPlan":${PlanJson.toJson(qe.analyzed)},""" +
+          s""""optimizedPlan":${PlanJson.toJson(qe.optimizedPlan)},"""),
+        body.take(300))
+    }
+  }
 
   test("POST /query returns the full envelope: plans, stats, rows") {
     withService { (c, port) =>
@@ -201,5 +330,18 @@ class ServiceSpec extends AnyFunSuite {
     val (limited, stats) = r.executeWithStats(5)
     assert(limited.length === 5)
     assert(stats.contains("\"node\"")) // the walk saw the executed plan
+  }
+
+  test("QueryResult's bounded forms take from the frame's own plan") {
+    val r = engine.query(
+      "SELECT o_orderkey, o_orderdate, o_totalprice FROM orders " +
+        "ORDER BY o_orderkey")
+    val want = r.df.limit(6).collect()
+    assert(r.rowsLimited(6) === want)
+    val (rows, stats) = r.executeWithStats(6)
+    assert(rows === want)
+    // the walk reports r.df's plan: its sort, not a top-k over it
+    assert(stats.contains("\"node\":\"Sort\""), stats)
+    assert(!stats.contains("TakeOrdered"), stats)
   }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Iterate
-import graft.plans.{BoundLiteral, OrdinalGlobalLimitExec, OrdinalLocalLimitExec, StableCodegen}
+import graft.plans.{BoundInSet, BoundLiteral, OrdinalGlobalLimitExec, OrdinalLocalLimitExec, StableCodegen}
 
 /** [[graft.plans.StableCodegen]]: a Service request shape compiles its
   * classes once, whatever key it carries, and the rule changes neither
@@ -149,6 +149,44 @@ class StableCodegenSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(bs.nonEmpty, s"$c: no bound literal in the executed plan")
         assert(got === want, c)
       }
+    }
+  }
+
+  test("an IN list of more than 10 int or date values compiles once " +
+      "per shape and returns the rows of an interpreted run") {
+    val dir = java.nio.file.Files.createTempDirectory("stable-inset").toString
+    val id = col("id")
+    spark.range(0, 400, 1, 4).select(
+      when(id % 17 =!= 0, (id - 100).cast("int")).as("i"),
+      date_add(lit(java.time.LocalDate.of(2024, 1, 1)),
+        (id % 150).cast("int")).as("d"))
+      .write.mode("overwrite").parquet(dir)
+    def ints(k: Int): Seq[Any] = (0 until 12).map(j => k + 7 * j)
+    def days(k: Int): Seq[Any] =
+      (0 until 12).map(j => java.time.LocalDate.of(2024, 1, 1 + k + 2 * j))
+    def run(s: SparkSession, c: String, vs: Seq[Any])
+        : (Seq[String], Seq[BoundInSet]) = {
+      val df = s.read.parquet(dir).where(col(c).isin(vs: _*))
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      (rows, collect(df.queryExecution.executedPlan) {
+        case f: FilterExec => f.condition
+      }.flatMap(_.collect { case b: BoundInSet => b }))
+    }
+    for ((c, values) <- Seq("i" -> ints _, "d" -> days _)) {
+      run(spark, c, values(0))
+      val compiled = (1 to 3).map { k =>
+        val before = compiles
+        val (got, bound) = run(spark, c, values(k))
+        val n = compiles - before
+        val (want, _) = Iterate.scoped(spark,
+          "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run(_, c, values(k)))
+        assert(want.nonEmpty, s"$c set $k selects nothing")
+        assert(got === want, s"$c set $k")
+        assert(bound.size === 1, s"$c set $k: no bound set in the plan")
+        n
+      }
+      assert(compiled === Seq(0L, 0L, 0L), s"classes compiled per new $c set")
     }
   }
 
