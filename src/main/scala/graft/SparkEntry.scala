@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.operators.Iterate
 import graft.operators.Iterate.MaterializeOps
+import scala.jdk.CollectionConverters._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1749,7 +1750,7 @@ object SparkEntry {
     val seed = TextFunctions.qualityScore(col("text")) >= 0.72
     val model = graft.operators.QualityModel.train(d, col("text"), seed,
       col("doc_id"))
-    qmLrModel.set(model)
+    capture("quality_model_lr")(qmLrOracleSql(model))
     graft.operators.QualityModel.scoreAll(d, col("text"), model)
       .select(col("doc_id"), seed.as("label"),
         col("score_micros"), col("pred"))
@@ -2146,15 +2147,8 @@ object SparkEntry {
       s, dir, "stream_embdedup_sink", maxBucket = 4096)
     val sinkDf = s.table(sink)
     val base = s.createDataFrame(sinkDf.rdd, sinkDf.schema)
-    base.groupBy("vec_id")
-      // max over (cosine, -nn_id) is (cosine DESC, nn_id ASC) — the
-      // batch operator's exact tie-break, no window needed
-      .agg(max(struct(col("cosine"), (-col("nn_id")).as("negid")))
-        .as("m"))
-      .select(col("vec_id"), (-col("m.negid")).as("nn_id"),
-        col("m.cosine").as("cosine"),
-        (col("m.cosine") >= 0.95).as("is_dup"))
-      .orderBy("vec_id")
+    // the batch operator's own reduce, so the tie-break is its exact one
+    Dedup.bestNeighbor(base, threshold = 0.95).orderBy("vec_id")
   }
 
   private def qClusterKmeans(s: SparkSession, dir: String): DataFrame = {
@@ -2165,7 +2159,7 @@ object SparkEntry {
     // argmax with the exact centroid literals this run used.
     val e = t(s, dir, "embeddings")
     val cents = Similarity.trainCentroids(e, nCentroids = 8)
-    kmeansModel.set(cents)
+    capture("cluster_kmeans")(kmeansOracleSql(cents))
     graft.operators.Clustering.assign(e, cents)
   }
 
@@ -2177,7 +2171,7 @@ object SparkEntry {
     // embedding spaces cluster far more tightly.
     val e = t(s, dir, "embeddings")
     val cents = Similarity.trainCentroids(e, nCentroids = 8)
-    semanticModel.set(cents)
+    capture("dedup_semantic")(semanticPairsOracleSql(cents))
     graft.operators.Clustering.semanticPairs(e, cents, threshold = 0.4)
   }
 
@@ -2189,7 +2183,8 @@ object SparkEntry {
     // family).
     val e = t(s, dir, "embeddings")
     val cents = Similarity.trainCentroids(e, nCentroids = 8)
-    semanticDecModel.set(cents)
+    capture("dedup_semantic_decisions")(
+      semanticDecisionsOracleSql(cents))
     graft.operators.Clustering.semanticDecisions(
       e, cents, threshold = 0.4)
   }
@@ -2224,7 +2219,7 @@ object SparkEntry {
     // smaller probe fraction.
     val cents = Similarity.trainCentroids(
       t(s, dir, "embeddings"), nCentroids = 16)
-    ivfModel.set(cents)
+    capture("sim_topk_ivf")(ivfOracleSql(cents))
     Similarity.ivfTopK(
       t(s, dir, "embeddings"), annQueries(s, dir), k = 10,
       nCentroids = 16, nProbe = 12, model = Some(cents))
@@ -2240,7 +2235,7 @@ object SparkEntry {
     // corpus instead of all of it.
     val e = t(s, dir, "embeddings")
     val cents = Similarity.trainCentroids(e, nCentroids = 16)
-    ivfIdxModel.set(cents)
+    capture("sim_topk_ivf_indexed")(ivfOracleSql(cents))
     Similarity.writeIvfIndex(e, cents, "ivfidx")
     Similarity.ivfTopKFromIndex(
       s, "ivfidx", annQueries(s, dir), cents, k = 10, nProbe = 12)
@@ -2256,7 +2251,7 @@ object SparkEntry {
     // codebooks buy a smaller rerank set than cb=16 needed.
     val pq = Similarity.trainPq(
       t(s, dir, "embeddings"), codebookSize = 32).get
-    pqModel.set(pq)
+    capture("sim_topk_pq")(pqOracleSql(pq))
     Similarity.pqTopK(t(s, dir, "embeddings"), annQueries(s, dir),
       k = 10, codebookSize = 32, rerank = 128, model = Some(pq))
   }
@@ -2272,7 +2267,7 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val cents = Similarity.trainCentroids(e, nCentroids = 16)
     val pq = Similarity.trainPq(e, codebookSize = 32).get
-    ivfpqModels.set((cents, pq))
+    capture("sim_topk_ivfpq")(ivfPqOracleSql(cents, pq))
     Similarity.ivfPqTopK(e, annQueries(s, dir), k = 10,
       nCentroids = 16, nProbe = 12, rerank = 192,
       ivfModel = Some(cents), pqModel = Some(pq))
@@ -2401,7 +2396,7 @@ object SparkEntry {
     // batch twin, and stream output ≡ batch row-for-row.
     val (sink, model) = graft.streaming.DocsStream
       .runQualityFilterStream(s, dir, "stream_quality_sink")
-    qmLrStreamModel.set(model)
+    capture("stream_quality_filter")(qmLrOracleSql(model))
     s.table(sink).orderBy("doc_id")
   }
 
@@ -4460,72 +4455,26 @@ object SparkEntry {
        |  (sqrt(list_dot_product($a, $a)) *
        |   sqrt(list_dot_product($b, $b)))""".stripMargin
 
-  /** The IVF centroid model captured by the last `sim_topk_ivf` query
-    * run in this JVM. `Verify` runs every query BEFORE dumping
-    * `oracleSql`, so the oracle embeds exactly the centroids the
-    * assignment used; if the query never ran the entry is omitted and
-    * the driver records a rows-only check (the status quo). */
-  /** Logistic quality-filter model captured by `quality_model_lr` —
-    * same capture-then-lazily-export contract as [[ivfModel]]. */
-  private[graft] val qmLrModel = new java.util.concurrent.atomic
-    .AtomicReference[graft.operators.QualityModel.Model](null)
+  /** Each model-capturing query's oracle, keyed by query name and
+    * built lazily from the model that query's run trained (IVF
+    * centroids, PQ codebooks, k-means centroids, logistic
+    * coefficients). `Verify` runs every query BEFORE dumping
+    * [[oracleSql]], so each oracle embeds exactly the model its run
+    * used; a query that never ran has no entry, so nothing checks
+    * its rows against an oracle. Concurrent because Verify runs queries
+    * concurrently. */
+  private val captured =
+    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
 
-  /** Model captured by the STREAMING quality filter run — separate ref
-    * because Verify runs queries concurrently. */
-  private[graft] val qmLrStreamModel = new java.util.concurrent.atomic
-    .AtomicReference[graft.operators.QualityModel.Model](null)
-
-  private[graft] val ivfModel =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Seq[Float]]](null)
-
-  /** The PQ model captured by the last `sim_topk_pq` run — same
-    * capture-then-lazily-export contract as [[ivfModel]]. */
-  private[graft] val pqModel =
-    new java.util.concurrent.atomic.AtomicReference[Similarity.PqModel](null)
-
-  /** Centroids + PQ model captured by the last `sim_topk_ivfpq` run. */
-  private[graft] val ivfpqModels = new java.util.concurrent.atomic
-    .AtomicReference[(Seq[Seq[Float]], Similarity.PqModel)](null)
-
-  /** Centroids captured by `cluster_kmeans` / `dedup_semantic` /
-    * `dedup_semantic_decisions` — one ref per query because Verify runs
-    * queries concurrently (training is deterministic, so the models are
-    * equal; the refs just keep each query's capture race-free). */
-  /** Centroids captured by `sim_topk_ivf_indexed` (same oracle builder
-    * as the in-memory IVF — the persisted index changes I/O, not
-    * semantics). */
-  private[graft] val ivfIdxModel =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Seq[Float]]](null)
-  private[graft] val kmeansModel =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Seq[Float]]](null)
-  private[graft] val semanticModel =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Seq[Float]]](null)
-  private[graft] val semanticDecModel =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Seq[Float]]](null)
+  private def capture(name: String)(oracle: => String): Unit =
+    captured.put(name, () => oracle)
 
   /** IVF-PQ oracle: the IVF assignment/probe CTEs and the PQ
     * encode/ADC expressions composed — candidates are (probed cluster)
     * ∩ (ADC top-64), final ranking exact cosine. */
   private def ivfPqOracleSql(
-      cents: Seq[Seq[Float]], pq: Similarity.PqModel): String = {
-    val rows = cents.zipWithIndex.map { case (c, i) =>
-      val lst = c.map(f => dlit(f.toDouble))
-        .mkString("CAST([", ",", "] AS DOUBLE[])")
-      s"($i, $lst)"
-    }.mkString(",\n    ")
-    s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed
-       |              FROM embeddings),
-       |cents AS (SELECT * FROM (VALUES
-       |    $rows) t(cid, ce)),
-       |scores AS (SELECT vec_id, ed, cid,
-       |        coalesce(${cosineSql("ed", "ce")}, -2.0) AS score
-       |      FROM base, cents),
-       |ranked AS (SELECT vec_id, ed, cid, row_number() OVER (
-       |        PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
-       |      FROM scores),
-       |assign AS (SELECT vec_id AS neighbor_id, ed AS ce2,
-       |        cid AS cluster_id
-       |      FROM ranked WHERE rn = 1),
+      cents: Seq[Seq[Float]], pq: Similarity.PqModel): String =
+    s"""WITH ${ivfAssignCtes(cents)},
        |enc AS (SELECT vec_id,
        |    ${pqCodesExpr(pq)} AS codes
        |  FROM base),
@@ -4537,19 +4486,24 @@ object SparkEntry {
        |  JOIN enc e ON e.vec_id = a.neighbor_id
        |  JOIN probes p ON a.cluster_id = p.cluster_id
        |    AND a.neighbor_id <> p.query_id),
-       |pre AS (SELECT query_id, neighbor_id, ce2, qe, row_number() OVER (
+       |${adcRerankSql("ce2", 192)}""".stripMargin
+
+  /** The PQ oracles' shared tail over `cand(query_id, neighbor_id,
+    * <ce>, qe, adc)`: the top-`rerank` ADC prelim, the exact-cosine
+    * rerank and the top 10 (Similarity.adcRerankTopK). */
+  private def adcRerankSql(ce: String, rerank: Int): String =
+    s"""pre AS (SELECT query_id, neighbor_id, $ce, qe, row_number() OVER (
        |    PARTITION BY query_id ORDER BY adc DESC, neighbor_id)
        |    AS prelim FROM cand),
        |s AS (SELECT query_id, neighbor_id,
-       |    ${cosineSql("qe", "ce2")} AS cosine
-       |  FROM pre WHERE prelim <= 192),
+       |    ${cosineSql("qe", ce)} AS cosine
+       |  FROM pre WHERE prelim <= $rerank),
        |r AS (SELECT query_id, neighbor_id, cosine,
        |    CAST(row_number() OVER (PARTITION BY query_id
        |      ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
        |  FROM s)
        |SELECT query_id, neighbor_id, cosine, rank FROM r
        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
-  }
 
   /** PQ oracle: codebooks and their half-norms exported as double
     * literals, then the whole pipeline — per-subspace argmax encode,
@@ -4600,18 +4554,7 @@ object SparkEntry {
        |    e.ed AS ce, q.qe,
        |    $adc AS adc
        |  FROM enc e, q WHERE e.vec_id <> q.query_id),
-       |pre AS (SELECT query_id, neighbor_id, ce, qe, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY adc DESC, neighbor_id)
-       |    AS prelim FROM cand),
-       |s AS (SELECT query_id, neighbor_id,
-       |    ${cosineSql("qe", "ce")} AS cosine
-       |  FROM pre WHERE prelim <= 128),
-       |r AS (SELECT query_id, neighbor_id, cosine,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-       |  FROM s)
-       |SELECT query_id, neighbor_id, cosine, rank FROM r
-       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+       |${adcRerankSql("ce", 128)}""".stripMargin
   }
 
   /** DuckDB re-derivation of `XXH64.hashUnsafeBytes(token, seed 42)` —
@@ -6210,42 +6153,16 @@ object SparkEntry {
     // identical CASE labeling (positive cut, dup exclusion, negative
     // band) — roles are a pure function of already-bit-equal scores.
     "sim_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id,
-        |             CAST(embedding AS DOUBLE[]) AS qe
-        |           FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 2000),
-        |c AS (SELECT vec_id AS neighbor_id,
-        |        CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |        list_dot_product(qe, ce) /
-        |          (sqrt(list_dot_product(qe, qe)) *
-        |           sqrt(list_dot_product(ce, ce))) AS cosine
-        |      FROM c JOIN q ON neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |        CAST(row_number() OVER (PARTITION BY query_id
-        |          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-        |      FROM s)
+      s"""$bruteForceScoreCtes
+        |$rankCte
         |SELECT query_id, neighbor_id, cosine, rank,
         |  CASE WHEN rank <= 4 THEN 'positive'
         |       WHEN cosine >= 0.95 THEN 'dup_skip'
         |       ELSE 'hard_negative' END AS role
         |FROM r WHERE rank <= 12 ORDER BY query_id, rank""".stripMargin,
     "sim_topk_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id,
-        |             CAST(embedding AS DOUBLE[]) AS qe
-        |           FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 2000),
-        |c AS (SELECT vec_id AS neighbor_id,
-        |        CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |        list_dot_product(qe, ce) /
-        |          (sqrt(list_dot_product(qe, qe)) *
-        |           sqrt(list_dot_product(ce, ce))) AS cosine
-        |      FROM c JOIN q ON neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |        CAST(row_number() OVER (PARTITION BY query_id
-        |          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-        |      FROM s)
-        |SELECT query_id, neighbor_id, cosine, rank FROM r
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+      s"""$bruteForceScoreCtes
+        |$top10Sql""".stripMargin,
     // LSH ANN: the 16-bit hyperplane signature is re-derived bit-exactly
     // (plane literals from VectorFunctions.hyperplaneComponent), then the
     // 8-band × 2-bit banding, bucket join, cosine and top-k recomputed.
@@ -6264,12 +6181,7 @@ object SparkEntry {
          |        ${cosineSql("qe", "ce")} AS cosine
          |      FROM cb JOIN qb ON cb.band = qb.band AND cb.bkey = qb.bkey
          |        AND neighbor_id <> query_id),
-         |r AS (SELECT query_id, neighbor_id, cosine,
-         |        CAST(row_number() OVER (PARTITION BY query_id
-         |          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-         |      FROM s)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+         |$top10Sql""".stripMargin
     },
     // Declarative cosine-threshold join: the oracle re-derives the
     // BANDED semantics the opt-in optimizer rewrite plans — signature,
@@ -8322,23 +8234,7 @@ object SparkEntry {
         |      * (h - ph) / (nh - ph)) AS BIGINT)
         |    END AS BIGINT) AS interp_micros
         |FROM wnd ORDER BY hour, event_type""".stripMargin,
-  ) ++ Option(ivfModel.get).map(c => "sim_topk_ivf" -> ivfOracleSql(c)) ++
-    Option(ivfIdxModel.get).map(c =>
-      "sim_topk_ivf_indexed" -> ivfOracleSql(c)) ++
-    Option(pqModel.get).map(pq => "sim_topk_pq" -> pqOracleSql(pq)) ++
-    Option(ivfpqModels.get).map { case (c, pq) =>
-      "sim_topk_ivfpq" -> ivfPqOracleSql(c, pq)
-    } ++
-    Option(kmeansModel.get).map(c =>
-      "cluster_kmeans" -> kmeansOracleSql(c)) ++
-    Option(semanticModel.get).map(c =>
-      "dedup_semantic" -> semanticPairsOracleSql(c)) ++
-    Option(semanticDecModel.get).map(c =>
-      "dedup_semantic_decisions" -> semanticDecisionsOracleSql(c)) ++
-    Option(qmLrModel.get).map(m =>
-      "quality_model_lr" -> qmLrOracleSql(m)) ++
-    Option(qmLrStreamModel.get).map(m =>
-      "stream_quality_filter" -> qmLrOracleSql(m))
+  ) ++ captured.asScala.map { case (name, oracle) => name -> oracle() }
 
   /** DuckDB re-derivation of the captured logistic quality filter:
     * the four features exactly as the text_quality oracle derives them
@@ -8509,37 +8405,75 @@ object SparkEntry {
   /** IVF oracle: centroid model exported as double literals (exact
     * float→double widening), then the assignment argmax, nProbe=12 probe
     * ranking, probed-cluster scan and top-k all recomputed in SQL. */
-  private def ivfOracleSql(cents: Seq[Seq[Float]]): String = {
-    val rows = cents.zipWithIndex.map { case (c, i) =>
-      val lst = c.map(f => dlit(f.toDouble))
-        .mkString("CAST([", ",", "] AS DOUBLE[])")
-      s"($i, $lst)"
-    }.mkString(",\n    ")
-    s"""WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed
-       |              FROM embeddings),
-       |cents AS (SELECT * FROM (VALUES
-       |    $rows) t(cid, ce)),
-       |scores AS (SELECT vec_id, ed, cid,
-       |        coalesce(${cosineSql("ed", "ce")}, -2.0) AS score
-       |      FROM base, cents),
-       |ranked AS (SELECT vec_id, ed, cid, row_number() OVER (
-       |        PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
-       |      FROM scores),
-       |assign AS (SELECT vec_id AS neighbor_id, ed AS ce2,
-       |        cid AS cluster_id
-       |      FROM ranked WHERE rn = 1),
+  private def ivfOracleSql(cents: Seq[Seq[Float]]): String =
+    s"""WITH ${ivfAssignCtes(cents)},
        |probes AS (SELECT vec_id AS query_id, ed AS qe, cid AS cluster_id
        |      FROM ranked WHERE vec_id % 50 = 0 AND vec_id < 2000 AND rn <= 12),
        |s AS (SELECT DISTINCT query_id, neighbor_id,
        |        ${cosineSql("qe", "ce2")} AS cosine
        |      FROM assign a JOIN probes p ON a.cluster_id = p.cluster_id
        |        AND a.neighbor_id <> p.query_id),
-       |r AS (SELECT query_id, neighbor_id, cosine,
-       |        CAST(row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
-       |      FROM s)
+       |$top10Sql""".stripMargin
+
+  /** The brute-force oracles' CTEs: every (query, corpus) pair of the
+    * fixed query batch scored by exact cosine (`s`). Shared by
+    * sim_topk_bruteforce and sim_hard_negatives, which rank the same
+    * pairs. */
+  private def bruteForceScoreCtes: String =
+    s"""WITH q AS (SELECT vec_id AS query_id,
+       |             CAST(embedding AS DOUBLE[]) AS qe
+       |           FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 2000),
+       |c AS (SELECT vec_id AS neighbor_id,
+       |        CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
+       |s AS (SELECT query_id, neighbor_id,
+       |        list_dot_product(qe, ce) /
+       |          (sqrt(list_dot_product(qe, qe)) *
+       |           sqrt(list_dot_product(ce, ce))) AS cosine
+       |      FROM c JOIN q ON neighbor_id <> query_id),""".stripMargin
+
+  /** The oracle twin of Similarity.rankTopK over `s(query_id,
+    * neighbor_id, cosine)`: each query's neighbors ranked by (cosine
+    * DESC, neighbor_id) as `r`. */
+  private def rankCte: String =
+    """r AS (SELECT query_id, neighbor_id, cosine,
+      |        CAST(row_number() OVER (PARTITION BY query_id
+      |          ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank
+      |      FROM s)""".stripMargin
+
+  /** [[rankCte]] cut to the top 10 — the exact-cosine top-k oracles'
+    * common tail. */
+  private def top10Sql: String =
+    s"""$rankCte
        |SELECT query_id, neighbor_id, cosine, rank FROM r
        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+
+  /** The IVF oracles' corpus assignment: [[centroidScoreCtes]], then
+    * each vector's argmax cluster (`assign`, rn = 1) over the per-vector
+    * centroid ranking (`ranked`, which the probe lists reuse). */
+  private def ivfAssignCtes(cents: Seq[Seq[Float]]): String =
+    s"""${centroidScoreCtes(cents)},
+       |ranked AS (SELECT vec_id, ed, cid, row_number() OVER (
+       |        PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
+       |      FROM scores),
+       |assign AS (SELECT vec_id AS neighbor_id, ed AS ce2,
+       |        cid AS cluster_id
+       |      FROM ranked WHERE rn = 1)""".stripMargin
+
+  /** The oracle twin of Similarity.centroidScores: the centroid model
+    * as exact float→double literals (`cents`) and every vector's
+    * cosine to every centroid, zero-norm floored to −2 (`scores`). */
+  private def centroidScoreCtes(cents: Seq[Seq[Float]]): String = {
+    val rows = cents.zipWithIndex.map { case (c, i) =>
+      c.map(f => dlit(f.toDouble))
+        .mkString(s"($i, CAST([", ",", "] AS DOUBLE[]))")
+    }.mkString(",\n    ")
+    s"""base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed
+       |              FROM embeddings),
+       |cents AS (SELECT * FROM (VALUES
+       |    $rows) t(cid, ce)),
+       |scores AS (SELECT vec_id, ed, cid,
+       |        coalesce(${cosineSql("ed", "ce")}, -2.0) AS score
+       |      FROM base, cents)""".stripMargin
   }
 
   /** Shared by the batch and streaming decontamination queries: exact
@@ -8714,25 +8648,13 @@ object SparkEntry {
     * centroid literals → per-vector scores → argmax row (rn = 1, ties
     * on the lowest cluster id — exactly Similarity.withCluster's
     * array_position argmax). */
-  private def kmeansAssignCtes(cents: Seq[Seq[Float]]): String = {
-    val rows = cents.zipWithIndex.map { case (c, i) =>
-      val lst = c.map(f => dlit(f.toDouble))
-        .mkString("CAST([", ",", "] AS DOUBLE[])")
-      s"($i, $lst)"
-    }.mkString(",\n    ")
-    s"""base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ed
-       |              FROM embeddings),
-       |cents AS (SELECT * FROM (VALUES
-       |    $rows) t(cid, ce)),
-       |scores AS (SELECT vec_id, ed, cid,
-       |        coalesce(${cosineSql("ed", "ce")}, -2.0) AS score
-       |      FROM base, cents),
+  private def kmeansAssignCtes(cents: Seq[Seq[Float]]): String =
+    s"""${centroidScoreCtes(cents)},
        |ranked AS (SELECT vec_id, ed, cid, score, row_number() OVER (
        |        PARTITION BY vec_id ORDER BY score DESC, cid) AS rn
        |      FROM scores),
        |assign AS (SELECT vec_id, ed, cid AS cluster_id, score
        |      FROM ranked WHERE rn = 1)""".stripMargin
-  }
 
   private def kmeansOracleSql(cents: Seq[Seq[Float]]): String =
     s"""WITH ${kmeansAssignCtes(cents)}

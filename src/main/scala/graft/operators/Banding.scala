@@ -5,13 +5,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, ShiftLeft
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import graft.functions.VectorFunctions.hyperplane_sig
 
 /** Signature banding, the one implementation behind every operator
   * that splits a long signature into `bands` slices of `bandBits` bits
-  * and pairs rows sharing a slice: [[Similarity.lshTopK]],
-  * [[Dedup.hammingPairsFromSigs]], [[Dedup.embeddingBandKeys]] (and
-  * through it the streaming embedding dedup), and the Hamming and
-  * cosine join rewrites ([[graft.RewriteHammingThresholdJoin]],
+  * and pairs rows sharing a slice: [[Similarity.lshTopK]] and the
+  * embedding dedup, batch and streaming ([[Dedup.embeddingBands]]),
+  * through the banded frame [[embeddingBands]];
+  * [[Dedup.hammingPairsFromSigs]]; and the Hamming and cosine join
+  * rewrites ([[graft.RewriteHammingThresholdJoin]],
   * [[graft.RewriteCosineThresholdJoin]]) through [[thresholdJoin]].
   *
   * A pair sharing several bands meets in each of them; joining callers
@@ -39,6 +41,19 @@ private[graft] object Banding {
       struct(lit(b).as("band"),
         shiftright(sig, b * bandBits).bitwiseAND(mask).as("bkey"))): _*)
   }
+
+  /** The one banded-vector frame, `(vec_id, embedding, sig, band,
+    * bkey)`: each row of `embeddings` once per band of its
+    * `bands · bandBits`-bit hyperplane signature `sig` ([[keys]]). */
+  def embeddingBands(embeddings: DataFrame, bands: Int,
+      bandBits: Int): DataFrame =
+    embeddings
+      .select(col("vec_id"), col("embedding"),
+        hyperplane_sig(col("embedding"), bands * bandBits).as("sig"))
+      .select(col("vec_id"), col("embedding"), col("sig"),
+        explode(keys(col("sig"), bands, bandBits)).as("bk"))
+      .select(col("vec_id"), col("embedding"), col("sig"),
+        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
 
   /** True when no band below `band` holds equal bits in `sigA` and
     * `sigB`: joined on band `band`'s key, the pair is emitted there and

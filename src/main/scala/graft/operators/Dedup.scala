@@ -1027,10 +1027,10 @@ object Dedup {
     math.min(math.floor(estPairs / (1 << 20)) + 1, Int.MaxValue.toDouble)
       .toInt
 
-  /** The embedding-LSH band keys ([[Banding.keys]]) for a 64-bit
-    * hyperplane signature column: 8 bands × 8 bits. Shared between the
-    * batch operator and the streaming twin so the two bandings cannot
-    * drift apart (same discipline as [[bandPostings]]).
+  /** The embedding-LSH banded frame ([[Banding.embeddingBands]]): a
+    * 64-bit hyperplane signature in 8 bands × 8 bits. Shared between
+    * the batch operator and the streaming twin so the two bandings
+    * cannot drift apart (same discipline as [[bandPostings]]).
     *
     * Geometry is the scale axis of this operator: key space per band
     * is 2^bits, so expected bucket occupancy is N/2^bits per band and
@@ -1043,52 +1043,50 @@ object Dedup {
     * cosine 0.95, 1-(1-p^8)^8 ≈ 0.99 over 8 bands, vs ≈ 0.985 for
     * 4×4) while dividing occupancy by 16 — the cap stays dormant two
     * decades above the driver gate. */
-  private[graft] def embeddingBandKeys(sig: Column): Column =
-    Banding.keys(sig, bands = 8, bandBits = 8)
+  private[graft] def embeddingBands(embeddings: DataFrame): DataFrame =
+    Banding.embeddingBands(embeddings, bands = 8, bandBits = 8)
+
+  /** Each vector's best neighbor over (vec_id, nn_id, cosine)
+    * candidate rows, as (vec_id, nn_id, cosine, is_dup = cosine ≥
+    * `threshold`). Max over (cosine, −nn_id) is exactly (cosine DESC,
+    * nn_id ASC), deterministic without a window. Shared by
+    * [[embeddingNearDup]]'s cross-band reduce and the streaming twin's
+    * epoch-close reduce over its improvement sink, so the two reports
+    * cannot drift. */
+  private[graft] def bestNeighbor(cands: DataFrame,
+      threshold: Double): DataFrame =
+    cands.groupBy("vec_id")
+      .agg(max(struct(col("cosine"), (-col("nn_id")).as("negid"))).as("m"))
+      .select(col("vec_id"), (-col("m.negid")).as("nn_id"),
+        col("m.cosine").as("cosine"),
+        (col("m.cosine") >= threshold).as("is_dup"))
 
   /** Embedding near-dup: each vector's nearest neighbor by cosine, via
-    * hyperplane-LSH blocking (64-bit signature, [[embeddingBandKeys]]);
-    * emits (vec_id, nn_id, cosine, is_dup = cosine ≥ threshold), one
-    * row per vector that shares ≥1 band — callers wanting hard dedup
-    * filter on is_dup.
+    * hyperplane-LSH blocking ([[embeddingBands]]); emits (vec_id,
+    * nn_id, cosine, is_dup = cosine ≥ threshold), one row per vector
+    * that shares ≥1 band — callers wanting hard dedup filter on is_dup.
     *
     * Same fused shape as the other candidate generators: ONE shuffle
     * (groupBy band key) builds each bucket with a bounded collect,
     * [[graft.functions.VectorFunctions.CosineBucketBest]] scores the
     * bucket and emits only each member's best in-bucket neighbor
     * (O(m) rows from O(m²) comparisons), and a skinny per-vector
-    * max-struct reduce picks the winner across bands. Replaces the
-    * former persist + banded self-join + distinct + full window — two
-    * large shuffles and a cache — with one posting shuffle and one
+    * [[bestNeighbor]] reduce picks the winner across bands. Replaces
+    * the former persist + banded self-join + distinct + full window —
+    * two large shuffles and a cache — with one posting shuffle and one
     * ≤ 4-rows-per-vector reduce. Degenerate vectors (null/zero-norm)
     * cannot be scored and are skipped; `maxBucket` caps pathological
     * buckets (keep-smallest ids, the shared cap semantics). */
   def embeddingNearDup(
       embeddings: DataFrame, threshold: Double = 0.95,
       maxBucket: Int = 4096): DataFrame = {
-    val banded = embeddings
-      .select(col("vec_id"), col("embedding"),
-        hyperplane_sig(col("embedding"), 64).as("sig"))
-      .select(col("vec_id"), col("embedding"),
-        explode(embeddingBandKeys(col("sig"))).as("bk"))
-      .select(col("vec_id"), col("embedding"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val best = banded
+    val best = embeddingBands(embeddings)
       .groupBy("band", "bkey")
       .agg(bounded_min_collect(
         struct(col("vec_id"), col("embedding")), maxBucket).as("ps"))
       .select(explode(cosine_bucket_best(col("ps"), maxBucket)).as("p"))
       .select(col("p.vec_id").as("vec_id"), col("p.nn_id").as("nn_id"),
         col("p.cosine").as("cosine"))
-    // winner across bands: max over (cosine, -nn_id) is exactly
-    // (cosine DESC, nn_id ASC) — deterministic without a window
-    finalizePairs(
-      best.groupBy("vec_id")
-        .agg(max(struct(col("cosine"), (-col("nn_id")).as("negid")))
-          .as("m"))
-        .select(col("vec_id"), (-col("m.negid")).as("nn_id"),
-          col("m.cosine").as("cosine"),
-          (col("m.cosine") >= threshold).as("is_dup")),
-      "vec_id")
+    finalizePairs(bestNeighbor(best, threshold), "vec_id")
   }
 }

@@ -52,20 +52,13 @@ object QualityModel {
     * else leaves the cluster.
     *
     * Scale contract: the corpus is touched by exactly ONE bounded
-    * Spark job — a TakeOrdered selecting the `sampleN` rows with the
-    * smallest `xxhash64` of the caller's UNIQUE row key (the
-    * [[Similarity.trainCentroids]] discipline — it hashes vec_id, not
-    * the vector). Hashing the key, not the projected row, matters
-    * twice: duplicate-heavy corpora (boilerplate pages share one
-    * (label, features) value by the thousands) would otherwise
-    * collapse the sample onto a few duplicate groups, and equal sort
-    * keys at the limit boundary would make the selection
-    * layout-dependent. LBFGS then iterates over the driver-local
-    * sample, so training cost is independent of corpus size —
-    * previously every iteration was a full corpus pass, the classic
-    * scale-killer for a filter that should cost one projection. A
-    * 4096-row sample is far past the statistical needs of a 4-feature
-    * linear model. */
+    * Spark job, [[Sampling.smallestByHash]] over the caller's UNIQUE
+    * row key (the sample the vector models train on too). LBFGS then
+    * iterates over the driver-local sample, so training cost is
+    * independent of corpus size — previously every iteration was a
+    * full corpus pass, the classic scale-killer for a filter that
+    * should cost one projection. A 4096-row sample is far past the
+    * statistical needs of a 4-feature linear model. */
   def train(docs: DataFrame, text: Column, label: Column, key: Column,
       sampleN: Int = 4096): Model = {
     import org.apache.spark.ml.classification.LogisticRegression
@@ -77,9 +70,8 @@ object QualityModel {
     // with a NULL label or NULL feature (null text) carry no training
     // signal and would NPE the Row getters — dropped after selection
     // so the sample stays key-deterministic.
-    val sample: Array[(Double, Seq[Double], String)] = docs
-      .orderBy(xxhash64(key), key)
-      .limit(sampleN)
+    val sample: Array[(Double, Seq[Double], String)] = Sampling
+      .smallestByHash(docs, key, sampleN)
       .select(label.cast("double").as("label"),
         array(features(text).map(_._2.cast("double")): _*).as("f"),
         key.cast("string").as("k"))

@@ -22,6 +22,16 @@ object Sampling {
   /** Stable bucket in [0, 10000) for a key column. */
   def hashBucket(key: Column): Column = pmod(xxhash64(key), lit(Buckets))
 
+  /** The one deterministic fixed-size training sample: the `n` rows
+    * with the smallest (xxhash64(key), key). Hashing a UNIQUE key, not
+    * the row, keeps duplicate-heavy data from collapsing the sample
+    * onto a few duplicate groups, and the key tie-break makes the
+    * selection total, so it is the same on every layout. Plans as ONE
+    * bounded TakeOrderedAndProject job; [[Similarity.trainCentroids]],
+    * [[Similarity.trainPq]] and [[QualityModel.train]] train on it. */
+  def smallestByHash(df: DataFrame, key: Column, n: Int): DataFrame =
+    df.orderBy(xxhash64(key), key).limit(n)
+
   /** Deterministic sample: keep a row iff its key's bucket falls below
     * fraction*10000. Same key ⇒ same decision, forever. */
   def sampleByHash(df: DataFrame, key: Column, fraction: Double): DataFrame = {

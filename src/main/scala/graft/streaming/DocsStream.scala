@@ -364,7 +364,7 @@ object DocsStream {
     * [[graft.operators.Dedup.embeddingNearDup]]. Vectors are
     * hyperplane-signed in the scan stage (same custom expression as
     * batch), exploded onto the SAME 8×8-bit band keys
-    * (`Dedup.embeddingBandKeys` — shared so the bandings cannot
+    * (`Dedup.embeddingBands` — shared so the bandings cannot
     * drift), and routed to per-(band, bucket) state. Each arriving
     * vector scores against its bucket's members with the scalar
     * replica of the codegen'd cosine
@@ -398,14 +398,8 @@ object DocsStream {
   def embeddingPairsStream(spark: SparkSession, embeddings: DataFrame,
       maxBucket: Int = Int.MaxValue): Dataset[EmbPairOut] = {
     import spark.implicits._
-    val banded = embeddings
-      .select(col("vec_id"), col("embedding"),
-        VectorFunctions.hyperplane_sig(col("embedding"), 64).as("sig"))
-      .select(col("vec_id"), col("embedding"),
-        explode(graft.operators.Dedup.embeddingBandKeys(col("sig")))
-          .as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bkey").as("bkey"),
-        col("vec_id"), col("embedding"))
+    val banded = graft.operators.Dedup.embeddingBands(embeddings)
+      .select("band", "bkey", "vec_id", "embedding")
       .as[EmbDoc]
     banded
       .groupByKey(d => (d.band, d.bkey))

@@ -613,6 +613,61 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Lloyd core ≡ a naive textbook Lloyd for both metrics, on random " +
+      "vectors, a zero-norm row, an emptied cluster and a short sample") {
+    import graft.operators.Similarity.{lloyd, CosineMetric, L2Metric}
+    type V = Seq[Double]
+    def cos(a: V, b: V): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
+      }
+      if (na == 0 || nb == 0) -2.0 else d / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def l2(a: V, b: V): Double =
+      a.indices.foldLeft(0.0) { (s, i) => s + (a(i) - b(i)) * (a(i) - b(i)) }
+    // seeds = the first k rows; each round: nearest centroid (lowest id
+    // on ties), then each centroid moves to its members' mean, an empty
+    // cluster keeping its centroid
+    def naive(sample: Seq[V], k: Int, iters: Int,
+        nearest: (V, Seq[V]) => Int): Seq[V] =
+      (0 until iters).foldLeft(sample.take(k)) { (cents, _) =>
+        val owner = sample.map(nearest(_, cents))
+        cents.indices.map { c =>
+          val members = sample.zip(owner).collect { case (v, `c`) => v }
+          if (members.isEmpty) cents(c)
+          else members.transpose.map(_.foldLeft(0.0)(_ + _) / members.size)
+        }
+      }
+    val byCos = (v: V, cs: Seq[V]) =>
+      cs.indices.maxBy(c => (cos(v, cs(c)), -c))
+    val byL2 = (v: V, cs: Seq[V]) =>
+      cs.indices.minBy(c => (l2(v, cs(c)), c))
+    def check(sample: Seq[V], k: Int, what: String): Unit = {
+      val arr = sample.map(_.toArray).toArray
+      assert(lloyd(arr, k, 6, CosineMetric).map(_.toSeq).toSeq ===
+        naive(sample, k, 6, byCos), s"cosine: $what")
+      assert(lloyd(arr, k, 6, L2Metric).map(_.toSeq).toSeq ===
+        naive(sample, k, 6, byL2), s"L2: $what")
+    }
+    (0 until 4).foreach { it =>
+      val rnd = new scala.util.Random(29 + it)
+      check(Seq.fill(60)(Seq.fill(5)(rnd.nextGaussian())), 4, s"random $it")
+    }
+    val rnd = new scala.util.Random(7)
+    val rows = Seq.fill(20)(Seq.fill(3)(rnd.nextGaussian()))
+    check(Seq(0.0, 0.0, 0.0) +: rows, 3, "zero-norm row")
+    // seed 1 duplicates seed 0, so the first-best tie-break never
+    // assigns it a member and it must keep its seed
+    val dup = rows.take(3) ++ rows.take(3) ++ rows.drop(3)
+    check(rows.head +: dup, 4, "duplicate seeds")
+    assert(naive(rows.head +: dup, 4, 1, byL2)(1) == rows.head,
+      "the duplicate-seed case must empty cluster 1")
+    check(rows.take(3), 5, "sample smaller than k")
+    assert(lloyd(rows.take(3).map(_.toArray).toArray, 5, 6, L2Metric)
+      .length == 3)
+  }
+
   test("packing manifest ≡ naive in-memory concat-then-chunk on " +
       "random corpora and parameters") {
     import spark.implicits._

@@ -107,4 +107,25 @@ class RepoHygieneSpec extends AnyFunSuite {
       "persist outside Iterate.cached (cache through it instead): " +
         calls.diff(allowed))
   }
+
+  /** One implementation per vector-pipeline step: the model-capturing
+    * queries record their oracles in one table, the models train on
+    * one deterministic sample, and the top-k paths rank through one
+    * window (plus the PQ paths' ADC prelim). */
+  test("no AtomicReference model capture in SparkEntry") {
+    assert(owners("AtomicReference").filter(_._1 == "SparkEntry.scala")
+      .isEmpty, "capture models with SparkEntry.capture instead")
+  }
+
+  test("orderBy(xxhash64( is Sampling.smallestByHash's alone") {
+    assert(owners("""orderBy\(xxhash64\(""") === Seq("Sampling.scala" ->
+      "Sampling"), "train on Sampling.smallestByHash instead")
+  }
+
+  test("Window.partitionBy(\"query_id\") is only Similarity's ranker and " +
+      "ADC prelim") {
+    assert(owners("""Window\.partitionBy\("query_id"\)""").map(_._1) ===
+      Seq("Similarity.scala", "Similarity.scala"),
+      "rank top-k through Similarity.rankTopK instead")
+  }
 }

@@ -172,6 +172,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("LSH rejects bits that do not split into equal bands, naming " +
+      "both values") {
+    val e = intercept[IllegalArgumentException](
+      Similarity.lshTopK(corpus, corpus, bits = 16, bands = 3))
+    assert(e.getMessage.contains("16 bits") &&
+      e.getMessage.contains("3 bands"), e.getMessage)
+  }
+
   test("PQ with rerank covering the corpus equals brute force exactly") {
     // the ADC prelim stage cannot drop anything when rerank >= corpus,
     // so the exact-cosine rerank must reproduce brute force verbatim
@@ -292,15 +300,12 @@ class SimilaritySpec extends AnyFunSuite {
       array(cos(col("id")).cast("float"), sin(col("id")).cast("float"),
         lit(0.5f)).as("embedding"))
     val top16 = big.orderBy(col("rel").desc, col("vec_id").asc).limit(16)
-    spark.conf.set("spark.graft.mmr.maxCandidates", "16")
-    try {
-      val capped = Similarity.mmrRerank(big, k = 5).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
-      val exact = Similarity.mmrRerank(top16, k = 5).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
-      assert(capped.toSeq === exact.toSeq && capped.length == 5)
-      // every selection came from the enforced top-16 window
-      assert(capped.forall(_._2 < 16))
-    } finally spark.conf.unset("spark.graft.mmr.maxCandidates")
+    val capped = Similarity.mmrRerank(big, k = 5, maxCandidates = 16)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
+    val exact = Similarity.mmrRerank(top16, k = 5).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
+    assert(capped.toSeq === exact.toSeq && capped.length == 5)
+    // every selection came from the enforced top-16 window
+    assert(capped.forall(_._2 < 16))
   }
 }
