@@ -2815,33 +2815,33 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  private def qGraphPagerank(s: SparkSession, dir: String): DataFrame = {
-    // Exact-integer PageRank over the customer↔supplier order graph
-    // (edge when a customer's order contains a line from the
-    // supplier; both directions, so the walk is undirected). Fixed 5
-    // iterations of scaled-long floor-division rank flow
-    // (operators/Graph.scala) — reproducible at any parallelism, so
-    // the oracle can unroll the identical 5 iterations as chained
-    // CTEs and hash-match the raw ranks.
+  /** The customer↔supplier order graph of graph_pagerank and
+    * graph_bfs: (nodes, edges), an edge when a customer's order
+    * contains a line from the supplier, in both directions. Node ids
+    * are 2·custkey for customers and 2·suppkey+1 for suppliers. */
+  private def orderGraph(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val o = t(s, dir, "orders")
     val li = t(s, dir, "lineitem")
     val pairs = o.join(li, o("o_orderkey") === li("l_orderkey"))
       .select((col("o_custkey") * 2).cast("long").as("c"),
         (col("l_suppkey") * 2 + 1).cast("long").as("sp"))
       .distinct()
-    // both directions via ONE explode over the pair subtree — the
-    // self-union form read the join+distinct twice (no exchange reuse
-    // across the differently-projected branches; measured r16, the
-    // duplicated subtree was ~1 s of the query's prep at sf0.1); same
-    // rows, order-insensitive downstream (r15's assoc_rules shape)
-    val edges = pairs.select(explode(array(
-        struct(col("c").as("src"), col("sp").as("dst")),
-        struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     val nodes = t(s, dir, "customer")
       .select((col("c_custkey") * 2).cast("long").as("id"))
       .unionByName(t(s, dir, "supplier")
         .select((col("s_suppkey") * 2 + 1).cast("long").as("id")))
+    (nodes, graft.operators.Graph.bothDirections(pairs, "c", "sp"))
+  }
+
+  private def qGraphPagerank(s: SparkSession, dir: String): DataFrame = {
+    // Exact-integer PageRank over the customer↔supplier order graph
+    // (both directions, so the walk is undirected). Fixed 5
+    // iterations of scaled-long floor-division rank flow
+    // (operators/Graph.scala) — reproducible at any parallelism, so
+    // the oracle can unroll the identical 5 iterations as chained
+    // CTEs and hash-match the raw ranks.
+    val (nodes, edges) = orderGraph(s, dir)
     graft.operators.Graph.pageRank(nodes, edges, iters = 5)
       .select(col("id").as("node_id"),
         when(pmod(col("id"), lit(2L)) === 0, lit("customer"))
@@ -2954,15 +2954,8 @@ object SparkEntry {
       .select(col("e.a").as("a"), col("e.b").as("b"))
     val und = und0.select(least(col("a"), col("b")).as("a"),
       greatest(col("a"), col("b")).as("b")).distinct()
-    // one explode instead of a self-union: the union's two branches
-    // re-ran the whole 4-way chain+hub construction and its distinct
-    // (no exchange reuse across projections); same rows (r16)
-    val edges = und.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    graft.operators.Graph.labelPropagation(
-        ids.select(col("i").as("id")), edges, iters = 4)
+    graft.operators.Graph.labelPropagation(ids.select(col("i").as("id")),
+        graft.operators.Graph.bothDirections(und, "a", "b"), iters = 4)
       .orderBy("id")
   }
 
@@ -3871,31 +3864,13 @@ object SparkEntry {
   }
 
   private def qGraphBfs(s: SparkSession, dir: String): DataFrame = {
-    // Multi-source BFS over the customer↔supplier order graph (same
-    // build as graph_pagerank): minimum hops from the nation-0
+    // Multi-source BFS over the customer↔supplier order graph
+    // ([[orderGraph]], as graph_pagerank): minimum hops from the nation-0
     // customers, 4 rounds. Frontier-only expansion per round — see
     // Graph.bfsHops. Deterministic by construction (hop counts are
     // integers, first-reach = min), so the oracle unrolls the same 4
     // frontier steps as chained CTEs and takes min(hop) per node.
-    val o = t(s, dir, "orders")
-    val li = t(s, dir, "lineitem")
-    val pairs = o.join(li, o("o_orderkey") === li("l_orderkey"))
-      .select((col("o_custkey") * 2).cast("long").as("c"),
-        (col("l_suppkey") * 2 + 1).cast("long").as("sp"))
-      .distinct()
-    // both directions via ONE explode over the pair subtree — the
-    // self-union form read the join+distinct twice (no exchange reuse
-    // across the differently-projected branches; measured r16, the
-    // duplicated subtree was ~1 s of the query's prep at sf0.1); same
-    // rows, order-insensitive downstream (r15's assoc_rules shape)
-    val edges = pairs.select(explode(array(
-        struct(col("c").as("src"), col("sp").as("dst")),
-        struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val nodes = t(s, dir, "customer")
-      .select((col("c_custkey") * 2).cast("long").as("id"))
-      .unionByName(t(s, dir, "supplier")
-        .select((col("s_suppkey") * 2 + 1).cast("long").as("id")))
+    val (nodes, edges) = orderGraph(s, dir)
     val seeds = t(s, dir, "customer")
       .filter(col("c_nationkey") === 0)
       .select((col("c_custkey") * 2).cast("long").as("id"))

@@ -110,9 +110,11 @@ object Association {
     * key-partitioned shuffles, no self-join, and the support attaches
     * run broadcast against the frequent-pair table.
     * [[frequentPairsFrom]] remains the zero-collect path for
-    * unbounded item catalogs. */
+    * unbounded item catalogs. `pairAggTargetRows` is the pair
+    * aggregate's per-task keyspace budget (see the sizing note below). */
   def frequentPairsFused(sets: DataFrame, itemMinSupport: Long,
-      pairMinSupport: Long): DataFrame = {
+      pairMinSupport: Long, pairAggTargetRows: Long = 4000000L)
+      : DataFrame = {
     import graft.functions.VectorFunctions
     val spark = sets.sparkSession
     val itemN = sets.select(explode(col("items")).as("item"))
@@ -149,8 +151,6 @@ object Association {
       .head.getLong(0)
     val freqCount = freq.value.size.toLong
     val parts = spark.sessionState.conf.numShufflePartitions
-    val perPart = spark.conf
-      .get("spark.graft.assoc.pairAggTargetRows", "4000000").toLong
     // sparse ⇔ the mean pair can repeat < 2×: BigInt — C(2M, 2)
     // overflows nothing but caution is free
     val sparse =
@@ -162,11 +162,11 @@ object Association {
         pruned, Int.MaxValue)).as("p"))
       .select(col("p.id_a").as("a_item"), col("p.id_b").as("b_item"))
     val pairSrc =
-      if (sparse && mass / math.max(1, parts) > perPart) {
+      if (sparse && mass / math.max(1, parts) > pairAggTargetRows) {
         // partitions scale with the measured mass (what AQE/a real
         // cluster does), capped so task count stays schedulable
         val p = math.max(parts.toLong,
-          math.min(mass / perPart + 1, 4096L)).toInt
+          math.min(mass / pairAggTargetRows + 1, 4096L)).toInt
         exploded.repartition(p, col("a_item"), col("b_item"))
       } else exploded
     val pairs = pairSrc

@@ -560,49 +560,25 @@ object Dedup {
     * only ever decrease, so the component-sum fixpoint test is exact.
     * Rounds needed = the pair graph's path diameter — near-dup
     * clusters are stars/short chains in practice, so 2–3 rounds;
-    * `maxIter` bounds adversarial chains. Every round's frame is
-    * localCheckpointed (eager) so the plan stays constant-size instead
-    * of doubling per iteration. Throws `IllegalStateException` if the
+    * `maxIter` bounds adversarial chains. The rounds run through
+    * [[Iterate.rounds]], which materializes every round's frame so the
+    * plan stays constant-size instead of doubling per iteration.
+    * Throws `IllegalStateException` if the
     * fixpoint is not reached within `maxIter` rounds — silently
     * returning partial labels would violate the documented
     * minimum-id-in-component contract with no signal. */
   def connectedComponents(docs: DataFrame, pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
-    // two regimes, the pageRank/BFS/LPA discipline: a doc frame whose
-    // PLAN ESTIMATE fits the broadcast threshold lets every round
-    // hint its label join broadcast explicitly. Statistics-based —
-    // zero driver jobs (a count() gate was measurable against the
-    // whole loop at small scale); an unknown estimate (huge default)
-    // leaves the hint off and the unhinted AQE shape is unchanged.
-    val bcastThreshold =
-      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // the doc frame's plan estimate picks the regime (see
+    // Iterate.broadcastRegime): in the broadcast regime every round's
+    // label join is hinted broadcast
+    val s = docs.sparkSession
     val docsSizeEst = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = bcastThreshold > 0 && docsSizeEst <= BigInt(bcastThreshold)
-    def run(): DataFrame = {
+    val small = Iterate.broadcastRegime(s, docsSizeEst)
     val hint: DataFrame => DataFrame =
       if (small) org.apache.spark.sql.functions.broadcast(_) else identity
-    // src confined to the doc universe ONCE (pairs from this module
-    // always satisfy it; the hoist makes the operator safe for any
-    // caller): the per-round fold below merges neighbor minima and
-    // current labels through one aggregate keyed on doc_id, so a src
-    // outside `docs` must never mint a group. dst stays implicitly
-    // confined by the per-round inner label join.
-    // both directions via ONE explode over the pair relation instead
-    // of a self-union: the union form read `pairs` twice — cheap when
-    // the caller passes a materialized frame, but a full double
-    // derivation for an arbitrary unmaterialized pair plan (no
-    // exchange reuse across the two differently-projected branches;
-    // the r15 assoc_rules finding, applied here r16). Same multiset.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst")),
-        struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .join(hint(docs.select(col("doc_id").as("src"))), Seq("src"),
-        "left_semi")
-      .materialized() // re-read every round
-    val labels0 = docs.select(col("doc_id"), col("doc_id").as("comp"))
-      .materialized()
+    val (edges, labels0, _) = Graph.initLabels(docs.select(col("doc_id")),
+      Graph.bothDirections(pairs, "id_a", "id_b"), "comp", hint)
     // decimal sum: overflow-proof fixpoint metric at any corpus size
     // (empty input sums to null → normalize to 0 so an empty docs
     // table converges on the first round instead of NPEing)
@@ -612,20 +588,22 @@ object Dedup {
       if (d == null) java.math.BigDecimal.ZERO else d
     }
     var prevSum = labelSum(labels0)
-    var iter = 0
     var converged = false
-    // loop-only static scope: prep above (pair union, semi-join,
-    // initial labels) keeps AQE; with `small` the per-round label join
-    // is hinted broadcast, so each round's exchanges are the two
-    // N-bounded min aggregates — plan them once at the state-derived
-    // width (see Iterate.staticBoundedLoop)
-    def loop(edges: DataFrame, labels0: DataFrame): DataFrame = {
-    var labels = labels0
     // maxIter label-CHANGING rounds plus one confirming round: a graph
     // whose path diameter is exactly maxIter changes the sum in every
     // budgeted round and needs round maxIter+1 to observe no change —
-    // correct labels must not be rejected at the budget boundary
-    while (!converged && iter < maxIter + 1) {
+    // correct labels must not be rejected at the budget boundary.
+    // Labels only ever decrease, so an unchanged sum is the fixpoint.
+    // In the broadcast regime the rounds' shuffles are the N-bounded
+    // min aggregates, planned at the doc-estimate width.
+    val labels = Iterate.rounds(s, edges, labels0, maxIter + 1,
+        staticBytes = Option.when(small)(docsSizeEst),
+        until = { next =>
+          val nextSum = labelSum(next)
+          converged = nextSum.compareTo(prevSum) == 0
+          prevSum = nextSum
+          converged
+        }) { (edges, labels) =>
       val nbr = edges.join(hint(labels), edges("dst") === labels("doc_id"))
         .groupBy("src").agg(min(col("comp")).as("nbr_comp"))
       // fold neighbor minima and current labels through ONE aggregate:
@@ -634,24 +612,10 @@ object Dedup {
       // (src ⊆ doc universe by the prep confinement, and every doc
       // contributes its current label, so the key set is exactly the
       // universe)
-      val next = Iterate.materialize(
-        nbr.select(col("src").as("doc_id"), col("nbr_comp").as("comp"))
-          .unionByName(labels)
-          .groupBy("doc_id").agg(min(col("comp")).as("comp")), iter)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      iter += 1
+      nbr.select(col("src").as("doc_id"), col("nbr_comp").as("comp"))
+        .unionByName(labels)
+        .groupBy("doc_id").agg(min(col("comp")).as("comp"))
     }
-    labels
-    }
-    val labels =
-      if (small)
-        Iterate.staticBoundedLoop(docs.sparkSession, docsSizeEst) { sc =>
-          loop(edges.on(sc), labels0.on(sc))
-        }.on(docs.sparkSession)
-      else loop(edges, labels0)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: min-label propagation did not converge " +
@@ -661,8 +625,6 @@ object Dedup {
     labels.select(col("doc_id"),
       (col("doc_id") === col("comp")).as("keep"),
       when(col("doc_id") =!= col("comp"), col("comp")).as("dup_of"))
-    }
-    run()
   }
 
   /** SimHash near-dup pairs: 64-bit token-level SimHash (custom codegen'd

@@ -6,10 +6,11 @@ import Iterate.MaterializeOps
 
 /** Distributed graph analytics on edge tables.
   *
-  * Sibling of [[Dedup.connectedComponents]]: the same
-  * iterate-join-checkpoint skeleton, extended from unweighted min-label
-  * propagation to weighted rank flow. Everything is EXACT scaled-integer
-  * arithmetic — float PageRank is accumulation-order-dependent, so two
+  * Sibling of [[Dedup.connectedComponents]]: pageRank, label
+  * propagation and connected components share one iteration skeleton
+  * in [[Iterate]] (the regime gate [[Iterate.broadcastRegime]], the
+  * round driver [[Iterate.rounds]]); each keeps its own round body.
+  * Everything is EXACT scaled-integer arithmetic — float PageRank is accumulation-order-dependent, so two
   * engines (or two shuffle layouts of the same engine) would never
   * hash-agree on the result; with ranks as scaled longs and floor
   * division pinned at every step, the fixed-iteration ranks are a pure
@@ -38,8 +39,8 @@ object Graph {
     * Two measured regimes (the skyline-gate discipline: plan shape
     * follows a measured bound, not a guess — we already hold N on the
     * driver):
-    *  - **Broadcast regime** (N·24 bytes fits the session's broadcast
-    *    threshold): the RAW edge frame is checkpointed once with no
+    *  - **Broadcast regime** ([[Iterate.broadcastRegime]] at N·24
+    *    bytes): the RAW edge frame is checkpointed once with no
     *    shuffle and no sort — out-degree rides on the BROADCAST rank
     *    frame (id, outdeg, rank), so every round is one map-side probe
     *    of the cached edges plus the skinny inflow aggregate, which a
@@ -75,33 +76,15 @@ object Graph {
     val n = nodes.select("id").count()
     require(n > 0, "pageRank: empty node set")
     val base = 15L * scale / (100L * n)
-    val bcastThreshold = nodes.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold
-    val bcastRanks = bcastThreshold > 0 && n * 24 <= bcastThreshold
-    def loop(e: DataFrame, ranks0: DataFrame,
-        step: (DataFrame, DataFrame) => DataFrame,
-        big: Boolean): DataFrame = {
-      var ranks = ranks0
-      var it = 0
-      while (it < iters) {
-        ranks = Iterate.materialize(step(e, ranks), it, big)
-        it += 1
-      }
-      ranks
-    }
-    if (bcastRanks) {
-      // Prep runs under normal AQE planning (the caller's edge
-      // construction can be an arbitrary join tree); the LOOP is then
-      // static-planned at the N-derived exchange width — r15 measured
-      // plain static planning (session partition count) 2× worse and
-      // AQE-on ~0.3 s/round of stage-barrier jobs; the N-derived
-      // count is AQE's own coalescing answer without the per-round
-      // re-planning jobs (see Iterate.staticBoundedLoop).
+    val s = nodes.sparkSession
+    if (Iterate.broadcastRegime(s, BigInt(n) * 24)) {
+      // prep keeps AQE (the caller's edge construction can be any join
+      // tree); the rounds plan statically at the N-derived width (see
+      // Iterate.staticBoundedLoop)
       val (e, ranks0) = prepareRankBroadcast(nodes, edges, scale / n)
-      Iterate.staticBoundedLoop(nodes.sparkSession, BigInt(n) * 24) { sc =>
-        loop(e.on(sc), ranks0.on(sc), rankStepBroadcast(_, _, base),
-          big = false)
-      }.on(nodes.sparkSession).select(col("id"), col("rank"))
+      Iterate.rounds(s, e, ranks0, iters,
+          staticBytes = Some(BigInt(n) * 24))(rankStepBroadcast(_, _, base))
+        .select(col("id"), col("rank"))
     } else {
       // pinned regime ⇒ the rank frame crossed the broadcast
       // threshold ⇒ the frames this loop materializes are big: store
@@ -109,8 +92,8 @@ object Graph {
       // prepareRank's frames come bound to its AQE-off scope, so the
       // rounds built on them plan there too.
       val (eDeg, ranks0) = prepareRank(nodes, edges, scale / n)
-      loop(eDeg, ranks0, rankStep(_, _, base), big = true)
-        .on(nodes.sparkSession)
+      Iterate.rounds(s, eDeg, ranks0, iters, big = true)(
+        rankStep(_, _, base))
     }
   }
 
@@ -375,84 +358,79 @@ object Graph {
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
       iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    // two regimes, the pageRank/BFS discipline: when the node frame's
-    // PLAN ESTIMATE already fits the session's broadcast threshold,
-    // the per-round label join carries an explicit broadcast hint (an
-    // N-row frame whose source estimate fits stays fitting). The gate
-    // reads optimizer statistics — zero driver jobs (a count() here
-    // was measurable against the whole loop at small scale) — and an
-    // unknown estimate (huge default) simply leaves the hint off, so
-    // the fallback is exactly the unhinted shape where AQE picks the
-    // strategy from runtime sizes.
-    val bcastThreshold =
-      nodes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // the node frame's plan estimate picks the regime (see
+    // Iterate.broadcastRegime): in the broadcast regime every label
+    // join is hinted broadcast
+    val s = nodes.sparkSession
     val nodesSizeEst = nodes.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = bcastThreshold > 0 && nodesSizeEst <= BigInt(bcastThreshold)
-    def run(): DataFrame = {
-    val hint: DataFrame => DataFrame =
-      if (small) broadcast(_) else identity
-    val nodeIds = nodes.select(col("id").cast("long"))
-    // src confined to the node universe ONCE, round-invariantly (the
-    // same hoist as pageRank's dst confinement): the per-round argmax
-    // below folds the keep-own-label fallback into the aggregate via
-    // zero-count skeleton rows, so a src outside `nodes` must never
-    // mint a group. (dst confinement stays implicit: the label join
-    // is inner against the node-universe label frame.)
-    val eRaw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .join(hint(nodeIds.select(col("id").as("src"))), Seq("src"),
-        "left_semi")
-    // estimated before the checkpoint: a checkpointed frame can report
-    // the huge default size
-    val edgesSizeEst = eRaw.queryExecution.optimizedPlan.stats.sizeInBytes
-    val e = eRaw.materialized()
-    val labels0 = nodeIds
-      .withColumn("lbl", col("id"))
-      .materialized()
-    // loop-only static scope: prep above (edge construction, initial
-    // labels) keeps AQE; with `small` every loop join is hinted
-    // broadcast, so the rounds' exchanges are the (node, label) count
-    // and the argmax aggregates. The count's keys grow with the EDGES
-    // (a node with d in-neighbors can carry d distinct labels), so the
-    // static width follows the larger of the node and edge estimates
-    // (see Iterate.staticBoundedLoop)
-    def loop(e: DataFrame, labels0: DataFrame): DataFrame = {
-    var labels = labels0
-    var it = 0
-    while (it < iters) {
-      val counts = e
-        .join(hint(labels.select(col("id"), col("lbl"))),
-          e("dst") === col("id"))
-        .groupBy(e("src").as("nid"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-      // argmax by (count desc, label asc) via lexicographic struct
-      // min. The keep-own-label fallback rides the SAME aggregate as
-      // zero-count skeleton rows (one per node, its current label):
-      // any real neighbor entry (cnt ≥ 1 ⇒ -cnt < 0) outranks the
-      // skeleton, and an isolated node's only entry IS its skeleton —
-      // the former per-round N-row fold-back left join (and its
-      // broadcast build) did exactly this, one whole join later.
-      labels = Iterate.materialize(
+    val small = Iterate.broadcastRegime(s, nodesSizeEst)
+    val hint: DataFrame => DataFrame = if (small) broadcast(_) else identity
+    val (e, labels0, edgesSizeEst) = initLabels(
+      nodes.select(col("id").cast("long")),
+      edges.select(col("src").cast("long"), col("dst").cast("long")),
+      "lbl", hint)
+    // in the broadcast regime the rounds' exchanges are the (node,
+    // label) count and the argmax aggregates. The count's keys grow
+    // with the EDGES (a node with d in-neighbors can carry d distinct
+    // labels), so the static width follows the larger of the node and
+    // edge estimates (see Iterate.staticBoundedLoop)
+    Iterate.rounds(s, e, labels0, iters,
+        staticBytes = Option.when(small)(nodesSizeEst.max(edgesSizeEst))) {
+      (e, labels) =>
+        val counts = e
+          .join(hint(labels.select(col("id"), col("lbl"))),
+            e("dst") === col("id"))
+          .groupBy(e("src").as("nid"), col("lbl"))
+          .agg(count(lit(1)).as("cnt"))
+        // argmax by (count desc, label asc) via lexicographic struct
+        // min. The keep-own-label fallback rides the SAME aggregate as
+        // zero-count skeleton rows (one per node, its current label):
+        // any real neighbor entry (cnt ≥ 1 ⇒ -cnt < 0) outranks the
+        // skeleton, and an isolated node's only entry IS its skeleton —
+        // the former per-round N-row fold-back left join (and its
+        // broadcast build) did exactly this, one whole join later.
         counts.select(col("nid"), col("lbl"), col("cnt"))
           .unionByName(labels.select(col("id").as("nid"), col("lbl"),
             lit(0L).as("cnt")))
           .groupBy("nid")
           .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l")))
             .as("b"))
-          .select(col("nid").as("id"), col("b.l").as("lbl")),
-        it)
-      it += 1
+          .select(col("nid").as("id"), col("b.l").as("lbl"))
     }
-    labels
-    }
-    if (small)
-      Iterate.staticBoundedLoop(nodes.sparkSession,
-          nodesSizeEst.max(edgesSizeEst)) { sc =>
-        loop(e.on(sc), labels0.on(sc))
-      }.on(nodes.sparkSession)
-    else loop(e, labels0)
-    }
-    run()
   }
+
+  /** The prep label propagation and [[Dedup.connectedComponents]]
+    * share: `edges` (`src`, `dst`) with `src` confined to the id
+    * universe, and the initial labels (id, `label` = id), both
+    * materialized. `universe` is the one-column id frame. The src
+    * confinement happens once, round-invariantly: each round folds a
+    * zero-count or current-label skeleton row per node into the same
+    * aggregate as the neighbor rows, so a src outside the universe
+    * must never mint a group. dst stays implicitly confined by the
+    * per-round inner label join. Also returns the confined edges' plan
+    * estimate, read before the checkpoint (a checkpointed frame can
+    * report Spark's huge default size). */
+  private[graft] def initLabels(universe: DataFrame, edges: DataFrame,
+      label: String, hint: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, BigInt) = {
+    val id = universe.columns.head
+    val e = edges.join(hint(universe.select(col(id).as("src"))), Seq("src"),
+      "left_semi")
+    val edgesSizeEst = e.queryExecution.optimizedPlan.stats.sizeInBytes
+    (e.materialized(), universe.withColumn(label, col(id)).materialized(),
+      edgesSizeEst)
+  }
+
+  /** Both directions of each (`a`, `b`) row as (`src`, `dst`), from ONE
+    * explode over `df`. A self-union would read `df` twice, and with no
+    * exchange reuse across its two differently-projected branches an
+    * unmaterialized `df` (a join, a distinct) runs twice (measured r16:
+    * ~1 s of graph_pagerank's prep at sf0.1). Same multiset of rows. */
+  def bothDirections(df: DataFrame, a: String, b: String): DataFrame =
+    df.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** Multi-source BFS: minimum hop count from a seed set, bounded by
     * `maxHops` rounds. Frontier expansion only — each round joins the
@@ -464,21 +442,24 @@ object Graph {
     * same iteration discipline as [[pageRank]]/[[labelPropagation]]).
     * Nodes unreached within the budget keep a null distance; seeds not
     * present in `nodes` are ignored.
+    *
+    * `denseFactor` sets where a pinned-regime round switches to the
+    * dense-frontier bitmap path (see below); `0` sends every pinned
+    * round down it, a negative value disables it.
     */
   def bfsHops(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
+      maxHops: Int, denseFactor: Long = 1365): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50, "maxHops must be in [1, 50]")
     import graft.functions.VectorFunctions
     // two measured regimes, like [[pageRank]]: a node universe whose
-    // (id, hops) frame fits the broadcast threshold means every
+    // (id, hops) frame passes Iterate.broadcastRegime means every
     // frontier does too (frontier ⊆ nodes) — rounds are map-side
-    // joins under normal AQE planning. Past the threshold, the
-    // pinned-layout regime pre-buckets the edge frame by the loop
-    // join key (src) so only the frontier ever shuffles, and a
-    // per-round count (an O(1) job on the already-materialized
-    // frontier) still broadcasts the early, small frontiers.
-    val bcastThreshold =
-      nodes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    // joins under normal AQE planning. Past it, the pinned-layout
+    // regime pre-buckets the edge frame by the loop join key (src) so
+    // only the frontier ever shuffles, and a per-round count (an O(1)
+    // job on the already-materialized frontier) still broadcasts the
+    // early, small frontiers.
+    val s = nodes.sparkSession
     // one bounded (1-row) driver job: N picks the regime; min(id)
     // gates the dense-frontier bitmap path (bucket math needs positive
     // ids) and max(id) sizes its bucket count
@@ -489,7 +470,7 @@ object Graph {
     val n = nStats.getLong(0)
     val minId = if (nStats.isNullAt(1)) 1L else nStats.getLong(1)
     val maxId = if (nStats.isNullAt(2)) 1L else nStats.getLong(2)
-    val nodesSmall = bcastThreshold > 0 && n * 16 <= bcastThreshold
+    val nodesSmall = Iterate.broadcastRegime(s, BigInt(n) * 16)
     // Dense-frontier regime (pinned only): once the frontier's
     // expected expansion (|frontier|·avgdeg) dwarfs the whole
     // bitmap universe, the per-round reached-set `distinct` is the
@@ -512,12 +493,10 @@ object Graph {
     // mostly-empty 32 KB bucket bitmap per touched bucket per task
     // would ship ~1365× MORE bytes than the rows it replaces — the
     // crossover below is exactly that byte ratio (32768-byte bucket
-    // over a ~24 B id row), overridable so rehearsals (and the
-    // spec) can measure both sides of the boundary; negative
-    // disables the bitmap machinery entirely (no edge count, no
-    // visited mask).
-    val denseFactor = edges.sparkSession.conf
-      .get("spark.graft.bfs.denseFactor", "1365").toLong
+    // over a ~24 B id row), the `denseFactor` default, which
+    // rehearsals (and the spec) override to measure both sides of the
+    // boundary; negative disables the bitmap machinery entirely (no
+    // edge count, no visited mask).
     val bShift = 18
     val bBits = 1 << bShift
     val bitmapRows = (maxId - 1) / bBits + 1
@@ -588,8 +567,8 @@ object Graph {
         val f = frontier.select(col("id").as("_fid"))
         val fCount =
           if (nodesSmall) 0L else frontier.count()
-        val fSmall = nodesSmall || (bcastThreshold > 0 &&
-          fCount * 16 <= bcastThreshold)
+        val fSmall =
+          nodesSmall || Iterate.broadcastRegime(s, BigInt(fCount) * 16)
         val dense = useBitmaps &&
           fCount * avgDeg > parts.toLong * bitmapRows * denseFactor
         val reached = Iterate.materialize(
@@ -672,14 +651,14 @@ object Graph {
       val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
       val raise =
         if (minId >= 1L && denseFactor >= 0L && bitmapRows * 2 >
-            nodes.sparkSession.conf.get(fbKey, "128").toLong)
+            s.conf.get(fbKey, "128").toLong)
           Seq(fbKey -> (bitmapRows * 2).toString)
         else Nil
-      Iterate.pinnedLayout(nodes.sparkSession) { pl =>
+      Iterate.pinnedLayout(s) { pl =>
         Iterate.scoped(pl, raise: _*) { sc =>
           run(nodes.on(sc), edges.on(sc), seeds.on(sc), pinned = true)
         }
-      }.on(nodes.sparkSession)
+      }.on(s)
     }
   }
 }

@@ -72,6 +72,53 @@ object Iterate {
     else df.localCheckpoint(true)
   }
 
+  /** The one broadcast-regime gate of the iterative operators: true iff
+    * `s`'s broadcast threshold is on and a state frame bounded by
+    * `stateBytes` fits it. Each caller passes the bound its plan rests
+    * on: pageRank N·24 bytes (id, outdeg, rank), BFS N·16 (id, hops)
+    * and per-round frontier·16, label propagation and connected
+    * components the node or doc frame's plan estimate. A plan estimate
+    * costs no driver job, and an unknown one (Spark's huge default)
+    * fails the gate, leaving the unhinted AQE shape. */
+  def broadcastRegime(s: SparkSession, stateBytes: BigInt): Boolean = {
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && stateBytes <= threshold
+  }
+
+  /** The one round driver of the iterative operators (pageRank, label
+    * propagation, connected components). Round `r` (from 0) is
+    * `step(fixed, state)` materialized through
+    * `materialize(_, r, big)`; the driver stops after `maxRounds`
+    * rounds or as soon as `until` holds for the round just
+    * materialized. `fixed` is the round-invariant frame (the cached
+    * edges) and `state0` the initial state.
+    *
+    * `staticBytes` is `Some(bound)` in the broadcast regime: the rounds
+    * then plan in [[staticBoundedLoop]] at that bound, with `fixed`
+    * and `state0` re-bound to its scope (prep stays under AQE). `None`
+    * runs the rounds in the scope the inputs are bound to (the pinned
+    * regime's, or the caller's). The result comes back bound to `s`. */
+  def rounds(s: SparkSession, fixed: DataFrame, state0: DataFrame,
+      maxRounds: Int, big: Boolean = false,
+      staticBytes: Option[BigInt] = None,
+      until: DataFrame => Boolean = _ => false)(
+      step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def loop(fixed: DataFrame, state0: DataFrame): DataFrame = {
+      var state = state0
+      var r = 0
+      var done = false
+      while (!done && r < maxRounds) {
+        state = materialize(step(fixed, state), r, big)
+        done = until(state)
+        r += 1
+      }
+      state
+    }
+    staticBytes.fold(loop(fixed, state0)) { bytes =>
+      staticBoundedLoop(s, bytes)(sc => loop(fixed.on(sc), state0.on(sc)))
+    }.on(s)
+  }
+
   /** Run `body` over `df` persisted MEMORY_AND_DISK, and release the
     * cache when `body` exits, also when it throws. The one cache policy
     * of the operators: a frame that feeds several consumers lives

@@ -1,6 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{
+  QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.apache.spark.sql.types.StructType
 
 /** File-stream source over one table of a testdata/rehearsal dir,
@@ -49,18 +53,34 @@ object StreamSource {
     * the shape a production pipeline sinks to anyway — and the
     * downstream epoch-close aggregation reads it back as an ordinary
     * parquet table. The explicit read schema covers the zero-row
-    * stream (no part files to infer from). */
+    * stream (no part files to infer from).
+    *
+    * The query runs in a clone of the starting session. With an
+    * artifact state of its own, each run's tasks got a new classloader
+    * and recompiled every generated class (the codegen cache is keyed
+    * by classloader), so the clone takes the starting session's state:
+    * `onQueryStarted` runs on the stream thread before the first batch. */
   def runToFileSink(spark: SparkSession, ds: org.apache.spark.sql.Dataset[_],
       sinkName: String): String = {
     val df = ds.toDF()
     val dir = java.nio.file.Files
       .createTempDirectory(s"graft_sink_$sinkName").toString
-    val q = df.writeStream
+    val s = df.sparkSession
+    val share = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        Option(s.streams.get(e.id)).foreach(q =>
+          bridge.shareArtifacts(s, bridge.streamSession(q)))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    s.streams.addListener(share)
+    val q = try df.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", s"$dir/data")
       .option("checkpointLocation", s"$dir/chk")
       .start()
+    finally s.streams.removeListener(share)
     q.processAllAvailable()
     q.stop()
     spark.read.schema(df.schema).parquet(s"$dir/data")

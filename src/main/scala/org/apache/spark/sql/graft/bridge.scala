@@ -48,15 +48,31 @@ object bridge {
     * same classloader-keyed cache that [[sizeCodegenCache]] sizes. */
   def cloneSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession = {
-    val parent = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val clone = parent.cloneSession()
+    val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+    shareArtifacts(spark, clone)
+    clone
+  }
+
+  /** Run `clone`'s jobs under `parent`'s job-artifact state (see
+    * [[cloneSession]]). The clone's lazy state is read first, so no
+    * later first read can rebuild it. */
+  def shareArtifacts(parent: org.apache.spark.sql.SparkSession,
+      clone: org.apache.spark.sql.SparkSession): Unit = {
+    val Seq(p, c) = Seq(parent, clone).map(_.asInstanceOf[
+      org.apache.spark.sql.classic.SparkSession].sessionState.artifactManager)
     val state = classOf[org.apache.spark.sql.artifact.ArtifactManager]
       .getDeclaredField("state")
     state.setAccessible(true)
-    state.set(clone.sessionState.artifactManager,
-      parent.sessionState.artifactManager.state)
-    clone
+    c.state
+    state.set(c, p.state)
   }
+
+  /** The clone of the starting session a streaming query runs in. */
+  def streamSession(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : org.apache.spark.sql.SparkSession =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+      .StreamingQueryWrapper].streamingQuery.sparkSessionForStream
 
   /** Capacity the engine gives Spark's compiled-class cache,
     * `spark.sql.codegen.cache.maxEntries` (Spark's default: 100).

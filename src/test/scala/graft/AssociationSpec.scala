@@ -107,20 +107,18 @@ class AssociationSpec extends AnyFunSuite {
     val default = Association.frequentPairsFused(sets, 2L, 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
-    val key = "spark.graft.assoc.pairAggTargetRows"
-    spark.conf.set(key, "1") // any real mass exceeds 1 row/task
-    try {
-      val bounded = Association.frequentPairsFused(sets, 2L, 1L)
-      val plan = bounded.queryExecution.executedPlan.toString
-      // the engaged path shuffles RAW pair rows into hash(a_item,
-      // b_item) partitions BEFORE any aggregate runs on them
-      assert(plan.contains("hashpartitioning(a_item"),
-        s"expected an explicit pair-key repartition:\n$plan")
-      val got = bounded.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-      assert(got === default,
-        "bounded-keyspace plan must not change the pair counts")
-    } finally spark.conf.unset(key)
+    // any real mass exceeds 1 row/task
+    val bounded = Association.frequentPairsFused(sets, 2L, 1L,
+      pairAggTargetRows = 1)
+    val plan = bounded.queryExecution.executedPlan.toString
+    // the engaged path shuffles RAW pair rows into hash(a_item,
+    // b_item) partitions BEFORE any aggregate runs on them
+    assert(plan.contains("hashpartitioning(a_item"),
+      s"expected an explicit pair-key repartition:\n$plan")
+    val got = bounded.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    assert(got === default,
+      "bounded-keyspace plan must not change the pair counts")
   }
 
   test("reliable-checkpoint mode: both association regimes emit " +

@@ -290,17 +290,11 @@ class GraphSpec extends AnyFunSuite {
     // must be value-identical too: denseFactor=0 forces every pinned
     // round down the bitmap path
     val (bfsFast2, bfsBitmap) = both {
-      val wasDense = spark.conf.getOption("spark.graft.bfs.denseFactor")
-      spark.conf.set("spark.graft.bfs.denseFactor", "0")
-      try Graph.bfsHops(nodes.toDF("id"), edges.toDF("src", "dst"),
-          Seq(1L, 7L).toDF("id"), 4)
+      Graph.bfsHops(nodes.toDF("id"), edges.toDF("src", "dst"),
+          Seq(1L, 7L).toDF("id"), 4, denseFactor = 0)
         .collect()
         .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
         .toSet
-      finally wasDense match {
-        case Some(v) => spark.conf.set("spark.graft.bfs.denseFactor", v)
-        case None => spark.conf.unset("spark.graft.bfs.denseFactor")
-      }
     }
     assert(bfsFast2 === bfsBitmap,
       "dense bitmap-frontier rounds must reproduce the row-path hops")
@@ -520,10 +514,11 @@ class GraphSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       // no broadcast → pinned regime; denseFactor 0 → every round dense
-      Iterate.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.graft.bfs.denseFactor" -> "0") { sc =>
-        Graph.bfsHops(ids.toDF("id").on(sc), edges.toDF("src", "dst").on(sc),
-          Seq(ids.head).toDF("id").on(sc), 4).collect()
+      Iterate.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        sc =>
+          Graph.bfsHops(ids.toDF("id").on(sc),
+            edges.toDF("src", "dst").on(sc), Seq(ids.head).toDF("id").on(sc),
+            4, denseFactor = 0).collect()
       }
       // listener events arrive in order: once this query's end is seen,
       // every BFS execution's has been too

@@ -454,6 +454,103 @@ class PlanQualitySpec extends AnyFunSuite {
       s"the N-row rank frame must ship at most once per round:\n$p")
   }
 
+  /** Executed plans of the label rounds `body` runs, captured by a
+    * listener: a round is a localCheckpoint over a Union (the neighbor
+    * rows and the per-node skeleton or current labels); prep
+    * materializations have no Union. */
+  private def roundPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan,
+      UnionExec}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" &&
+            qe.executedPlan.exists(_.isInstanceOf[UnionExec]))
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.bridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  /** One broadcast-regime label round: static (no AQE), `exchanges`
+    * hash exchanges all `width` wide, and one broadcast hash join whose
+    * build side is the label frame (column `label`). */
+  private def assertLabelRound(p: org.apache.spark.sql.execution.SparkPlan,
+      exchanges: Int, width: Int, label: String): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    assert(!p.exists(_.isInstanceOf[AdaptiveSparkPlanExec]),
+      s"rounds plan statically:\n$p")
+    val shuffles = p.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length == exchanges, s"hash exchanges:\n$p")
+    assert(shuffles.forall(_.outputPartitioning.numPartitions == width),
+      s"static width $width:\n$p")
+    val joins = p.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.length == 1, s"one label join per round:\n$p")
+    val builds = p.collect { case b: BroadcastExchangeExec => b }
+    assert(builds.length == 1 && builds.head.output.exists(_.name == label),
+      s"the label frame is the one broadcast build:\n$p")
+  }
+
+  test("labelPropagation rounds: static at the edge-derived width, two " +
+      "hash exchanges, the label join broadcast") {
+    import graft.operators.{Graph, Iterate}
+    import Iterate.MaterializeOps
+    import spark.implicits._
+    val nodes = (1L to 40L).toDF("id")
+    val edges = (for (a <- 1L to 40L; b <- 1L to 40L if a != b)
+      yield (a, b)).toDF("src", "dst")
+    // an advisory size that the edge estimate fills three times
+    val advisory = (edges.queryExecution.optimizedPlan.stats.sizeInBytes +
+      2) / 3
+    val plans = roundPlans {
+      Iterate.scoped(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+          -> advisory.toString) { sc =>
+        Graph.labelPropagation(nodes.on(sc), edges.on(sc), 3).collect()
+      }
+    }
+    assert(plans.length == 3, s"one plan per round: ${plans.length}")
+    // the (node, label) count and the argmax aggregate
+    plans.foreach(assertLabelRound(_, exchanges = 2, width = 3, "lbl"))
+  }
+
+  test("connectedComponents rounds: static at the doc-derived width, " +
+      "one hash exchange after round 0, the label join broadcast") {
+    import graft.operators.{Dedup, Iterate}
+    import Iterate.MaterializeOps
+    import spark.implicits._
+    val docs = (1L to 60L).toDF("doc_id")
+    val pairs = (1L to 59L).filter(_ % 10 != 0).map(i => (i, i + 1))
+      .toDF("id_a", "id_b")
+    val advisory = (docs.queryExecution.optimizedPlan.stats.sizeInBytes +
+      1) / 2
+    val plans = roundPlans {
+      Iterate.scoped(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+          -> advisory.toString) { sc =>
+        Dedup.connectedComponents(docs.on(sc), pairs.on(sc)).collect()
+      }
+    }
+    // chains of 10: 9 label-changing rounds and one confirming round
+    assert(plans.length == 10, s"one plan per round: ${plans.length}")
+    // round 0 shuffles for the neighbor min and the fold aggregate;
+    // later rounds fold into the previous labels' hash(doc_id) layout,
+    // which the checkpoint keeps, so only the neighbor min shuffles
+    plans.zipWithIndex.foreach { case (p, r) =>
+      assertLabelRound(p, exchanges = if (r == 0) 2 else 1, width = 2,
+        "comp")
+    }
+  }
+
   test("PlanAudit allowlist: a deliberately degenerate plan flags as " +
       "UNADJUDICATED; adjudicated (query, tag) pairs pass; the same " +
       "query with a tag outside its class fails") {

@@ -739,6 +739,122 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** `run` on the shared session (broadcast threshold at its default:
+    * the broadcast regime) and in a scope with the threshold at -1 (the
+    * unhinted regime). */
+  private def bothRegimes[T](
+      run: org.apache.spark.sql.SparkSession => T): Seq[T] =
+    Seq(run(spark), graft.operators.Iterate.scoped(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(run))
+
+  /** Random directed edges over ids 1..n plus `extra` edges, some with
+    * a phantom endpoint (id 1000, outside the universe). */
+  private def randomEdges(rnd: scala.util.Random, n: Int,
+      extra: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    (0 until n * 2).map(_ => (1L + rnd.nextInt(n), 1L + rnd.nextInt(n)))
+      .filter { case (a, b) => a != b } ++
+      Seq((1L, 1000L), (1000L, 2L)) ++ extra
+
+  test("labelPropagation ≡ the sequential synchronous-round reference on " +
+      "random graphs, in both regimes") {
+    import spark.implicits._
+    import graft.operators.Iterate.MaterializeOps
+    val rnd = new scala.util.Random(23)
+    (1 to 3).foreach { it =>
+      // ids n+1..n+3 are isolated; a chain n+4 → … → n+4+iters spans
+      // exactly `iters` hops
+      val n = 8 + rnd.nextInt(10)
+      val iters = 1 + rnd.nextInt(4)
+      val chain = (0 until iters).map(i =>
+        ((n + 4 + i).toLong, (n + 5 + i).toLong))
+      val nodes = (1L to (n + 4 + iters).toLong).toSeq
+      val edges = randomEdges(rnd, n, chain)
+      // every node adopts its in-neighbors' most frequent label (ties to
+      // the smallest); edges touching an id outside `nodes` count for
+      // nothing, and a node with no neighbor keeps its label
+      val universe = nodes.toSet
+      val live = edges.filter { case (a, b) =>
+        universe(a) && universe(b) }
+      var labels = nodes.map(v => v -> v).toMap
+      for (_ <- 1 to iters) {
+        labels = nodes.map { v =>
+          val nbr = live.collect { case (`v`, d) => labels(d) }
+          v -> (if (nbr.isEmpty) labels(v)
+            else nbr.groupBy(identity).toSeq
+              .minBy { case (l, ls) => (-ls.size, l) }._1)
+        }.toMap
+      }
+      bothRegimes { s =>
+        graft.operators.Graph.labelPropagation(nodes.toDF("id").on(s),
+            edges.toDF("src", "dst").on(s), iters)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }.zip(Seq("broadcast", "unhinted")).foreach { case (got, regime) =>
+        assert(got === labels, s"iteration $it n=$n iters=$iters $regime")
+      }
+    }
+  }
+
+  test("connectedComponents ≡ the sequential min-label fixpoint on " +
+      "random graphs, in both regimes, and rejects a chain past maxIter") {
+    import spark.implicits._
+    import graft.operators.Iterate.MaterializeOps
+    val rnd = new scala.util.Random(29)
+    (1 to 3).foreach { it =>
+      // ids n+1..n+3 are isolated; the chain n+4 — … — n+4+maxIter has
+      // path diameter exactly maxIter, the longest the budget accepts
+      val n = 8 + rnd.nextInt(10)
+      val maxIter = 3 + rnd.nextInt(3)
+      val chain = (0 until maxIter).map(i =>
+        ((n + 4 + i).toLong, (n + 5 + i).toLong))
+      val docs = (1L to (n + 4 + maxIter).toLong).toSeq
+      val pairs = randomEdges(rnd, n / 2, chain)
+      val universe = docs.toSet
+      val live = pairs.filter { case (a, b) => universe(a) && universe(b) }
+        .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      var comp = docs.map(v => v -> v).toMap
+      var changed = true
+      while (changed) {
+        val next = docs.map(v => v -> (comp(v) +: live.collect {
+          case (`v`, d) => comp(d) }).min).toMap
+        changed = next != comp
+        comp = next
+      }
+      // the random part must need no more rounds than the chain
+      val rounds = docs.map { v =>
+        var d = 0
+        var frontier = Set(v)
+        var seen = Set(v)
+        while (!seen(comp(v))) {
+          frontier = live.collect { case (a, b) if frontier(a) => b }.toSet
+            .diff(seen)
+          seen ++= frontier
+          d += 1
+        }
+        d
+      }.max
+      assert(rounds == maxIter, s"iteration $it: fixture needs $rounds rounds")
+      val want = comp.map { case (v, c) => v -> (v == c, if (v == c) -1L
+        else c) }
+      bothRegimes { s =>
+        graft.operators.Dedup.connectedComponents(docs.toDF("doc_id").on(s),
+            pairs.toDF("id_a", "id_b").on(s), maxIter)
+          .collect().map(r => r.getLong(0) -> (r.getBoolean(1),
+            if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
+      }.zip(Seq("broadcast", "unhinted")).foreach { case (got, regime) =>
+        assert(got === want, s"iteration $it n=$n maxIter=$maxIter $regime")
+      }
+      // one more hop than the budget: no fixpoint within maxIter rounds
+      val longer = chain :+ ((n + 4 + maxIter).toLong, (n + 5 + maxIter).toLong)
+      bothRegimes { s =>
+        intercept[IllegalStateException] {
+          graft.operators.Dedup.connectedComponents(
+            (docs :+ (n + 5 + maxIter).toLong).toDF("doc_id").on(s),
+            longer.toDF("id_a", "id_b").on(s), maxIter)
+        }
+      }
+    }
+  }
+
   test("histogram quantile state: merge ≡ cold and the envelope holds " +
       "on random corpora and bin widths") {
     import spark.implicits._

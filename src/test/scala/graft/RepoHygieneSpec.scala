@@ -128,4 +128,23 @@ class RepoHygieneSpec extends AnyFunSuite {
       Seq("Similarity.scala", "Similarity.scala"),
       "rank top-k through Similarity.rankTopK instead")
   }
+
+  /** One regime gate and one edge symmetrizer for the iterative
+    * operators. */
+  test("autoBroadcastJoinThreshold is read under operators/ only by " +
+      "Iterate.broadcastRegime and Banding") {
+    val operators = files("src/main/scala/graft/operators")
+      .map(_.getFileName.toString).toSet
+    val reads = owners("""\.autoBroadcastJoinThreshold\b""")
+      .filter { case (file, _) => operators(file) }
+    assert(reads.sorted === Seq("Banding.scala" -> "Banding",
+      "Iterate.scala" -> "Iterate"),
+      "gate a broadcast regime through Iterate.broadcastRegime instead")
+  }
+
+  test("the both-directions edge explode is Graph.bothDirections' alone") {
+    assert(owners("""explode\(array\(\s*struct\(col\([^)]*\)""" +
+      """\.as\("src"\)""") === Seq("Graph.scala" -> "Graph"),
+      "symmetrize edges through Graph.bothDirections instead")
+  }
 }

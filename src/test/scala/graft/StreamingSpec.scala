@@ -231,6 +231,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
+  test("a stateful stream run again compiles no generated class anew: " +
+      "its tasks share the starting session's classloader") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Spark keys its codegen cache by classloader; a stream session with
+    // a job-artifact state of its own gets a new executor classloader on
+    // every run and recompiles what the previous run compiled
+    def compiles(sink: String): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.streaming.DocsStream.runExactDedupStream(
+        spark, TestSpark.sfDir, sink)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val cold = compiles("spec_warm_exact_1")
+    val warm = compiles("spec_warm_exact_2")
+    assert(warm <= 1, s"the second run compiled $warm classes (first: $cold)")
+  }
+
   test("streaming decontamination equals the batch operator row-for-row") {
     import org.apache.spark.sql.functions.col
     val sink = graft.streaming.DocsStream.runDecontamStream(
