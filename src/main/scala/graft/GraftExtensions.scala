@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, BitwiseCount, BitwiseXor, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, BitwiseCount, BitwiseXor, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{CosineSimilarity, JaccardSim}
-import graft.operators.{Banding, PrefixFilter}
+import graft.operators.Banding
 import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
+import graft.plans.JaccardCandidates.{JaccardCandidatesPlan, JaccardStrategy}
 import graft.plans.StableCodegen
 
 /** The library's cluster-wide integration point: set
@@ -25,8 +26,9 @@ import graft.plans.StableCodegen
   *  - the custom Catalyst expressions as SQL functions (`cosine_sim`,
   *    `simhash64`, `shingle_hashes`, …), one entry each in
   *    `VectorFunctions.sqlFunctionBuilders`;
-  *  - the as-of-join planner strategy, the only way
-  *    [[graft.plans.AsOfJoin]] plans become executable;
+  *  - the as-of-join and Jaccard-candidate planner strategies, the
+  *    only way [[graft.plans.AsOfJoin]] and
+  *    [[graft.plans.JaccardCandidates]] plans become executable;
   *  - [[PushFilterThroughAsOfJoin]], the optimizer rule that restores
   *    predicate pushdown across the custom join operator (Catalyst's
   *    own pushdown rules don't know the node, so without this a filter
@@ -56,6 +58,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name), builder))
     }
     ext.injectPlannerStrategy(_ => AsOfStrategy)
+    ext.injectPlannerStrategy(_ => JaccardStrategy)
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = StableCodegen
     })
@@ -289,93 +292,14 @@ case class RewriteCosineThresholdJoin(spark: SparkSession)
   * no pair at a loss-free bucket cap, so the rewritten join returns
   * exactly the rows of the nested-loop original. Opt-in
   * (`spark.graft.jaccardRewrite.enabled=true`) because replanning a
-  * user's predicate should still be a visible choice, not magic. */
+  * user's predicate should still be a visible choice, not magic.
+  *
+  * The rule is a pure tree rewrite and reads no data: the candidate
+  * stage, whose regime depends on the corpus, is a
+  * [[graft.plans.JaccardCandidates]] node that measures the corpus
+  * when the join executes. */
 case class RewriteJaccardThresholdJoin(spark: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper with ShuffleJoinPin {
-
-  // Memos for the rule's two bounded driver jobs (the stop-gram df
-  // model and the candidate-mass histogram): the optimizer re-runs
-  // this rule on EVERY re-optimization of a plan containing the
-  // predicate — each derived Dataset, explain() call, stats access,
-  // and twice per single optimize (the operator-optimization rule set
-  // runs both before and after filter inference) — and without the
-  // memo each firing would re-pay both corpus-scale jobs. The maps
-  // live on the COMPANION OBJECT, not the instance: injected rule
-  // builders are re-invoked on every optimizer execution (Optimizer
-  // .batches is a def), so an instance field would silently scope the
-  // memo to one optimize pass. Companion storage is weak-keyed BY
-  // SESSION (see the object) so a stopped session's plans/FileIndex
-  // don't outlive it; within a session the values are pure functions
-  // of (resolved plan, data): keyed by the
-  // CANONICALIZED inputs (structural plan equality normalizes
-  // exprIds, so the same Dataset re-derived re-uses its entry) PLUS a
-  // data fingerprint over the leaf relations (file listing signature
-  // for file scans, instance identity for in-memory/other leaves —
-  // see [[dataFingerprint]]): maxOcc is a CORRECTNESS bound
-  // (bounded_min_collect / bucket_pairs truncate buckets past it), so
-  // a canonically-equal plan whose underlying data changed mid-session
-  // (overwrite + catalog refresh) must MISS rather than silently drop
-  // candidates from a stale too-small maxOcc. Crude overflow guard:
-  // clear past 32 entries — a JVM juggling 32+ distinct jaccard-join
-  // inputs re-trains, it never grows unboundedly.
-  private def modelCache = RewriteJaccardThresholdJoin.forSession(spark)._1
-  private def statsCache = RewriteJaccardThresholdJoin.forSession(spark)._2
-
-  /** Cheap driver-side data signature for the memo keys above.
-    * InMemoryFileIndex-backed scans fingerprint the index's CACHED
-    * listing (path/len/modtime per file — the exact file set the scan
-    * will read, at zero listing cost); other FileIndex types use
-    * index-instance identity (see inline note — their listFiles
-    * re-lists, and refresh/re-plan rebuilds the instance anyway);
-    * `spark.catalog.refreshTable`/`refreshByPath` swap in a
-    * re-listed index and thus a new fingerprint either way. Non-file leaves
-    * (InMemoryRelation's immutable cache, JDBC, LocalRelation) fall
-    * back to relation-instance identity: a re-read builds a new
-    * instance, while the one genuinely unfingerprintable case — an
-    * external writer mutating bytes in place under an UNREFRESHED
-    * index — is stale for the scan itself, not just the memo. */
-  private def dataFingerprint(plans: LogicalPlan*): Seq[Any] =
-    plans.flatMap(_.collectLeaves().map {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation =>
-            fs.location match {
-              // listing-signature ONLY where listFiles returns the
-              // already-cached listing (the gate's spark.read path).
-              // Other FileIndex types — CatalogFileIndex above all —
-              // build a FRESH full listing (metastore + filesystem)
-              // on EVERY listFiles call, and the fingerprint runs per
-              // rule firing including cache hits: that would re-add a
-              // per-explain driver stall the memo exists to remove.
-              // Their index INSTANCE is rebuilt by refresh/re-plan,
-              // so identity is a safe (miss-more, never stale)
-              // fingerprint there.
-              case im: org.apache.spark.sql.execution.datasources
-                  .InMemoryFileIndex =>
-                // order-mixing FNV-style fold over the PATH-SORTED
-                // listing (listFiles order is not guaranteed stable).
-                // An XOR fold here was cancellable — two offsetting
-                // file changes (swapped equal-length contents with
-                // touched mtimes, A.len+=k / B.len-=k) could collide,
-                // and this key guards maxOcc, a CORRECTNESS bound
-                // whose stale hit silently drops join candidates.
-                val files = im.listFiles(Nil, Nil).flatMap(_.files)
-                  .sortBy(_.getPath.toString)
-                (files.length, files.foldLeft(-3750763034362895579L) {
-                  (acc, f) =>
-                    var h = acc
-                    h = (h ^ f.getPath.toString.hashCode) * 1099511628211L
-                    h = (h ^ f.getLen) * 1099511628211L
-                    h = (h ^ f.getModificationTime) * 1099511628211L
-                    h
-                })
-              case other => System.identityHashCode(other)
-            }
-          case rel => System.identityHashCode(rel)
-        }
-      case leaf => System.identityHashCode(leaf)
-    })
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!spark.conf
@@ -398,8 +322,8 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
         : Option[(Expression, Expression, Int, Double)] =
       // PrefixGrams requires 0 < t <= 1; a degenerate threshold
       // (t <= 0 selects everything, t > 1 nothing) would throw inside
-      // the optimizer for a query that executes fine unrewritten —
-      // leave those joins alone.
+      // the candidate stage for a query that executes fine unrewritten
+      // — leave those joins alone.
       if (t <= 0.0 || t > 1.0) None
       else if (js.left.references.subsetOf(left.outputSet) &&
           js.right.references.subsetOf(right.outputSet))
@@ -417,6 +341,25 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     }.nextOption()
   }
 
+  /** The rewritten shape is the operator family's fused-bucket
+    * pipeline, generalized to arbitrary join inputs through CONTENT
+    * identity. A posting-level equi-join enumerates Σ_g df(g)² row
+    * pairs (5.6e9 at the sf1 gate) and ground for 25+ minutes; the
+    * bucket loop covers the same candidate checks in under 30 s.
+    *  1. id := xxhash64(join text) per side, so the candidate stage
+    *     runs once per distinct text, and the back-join restores the
+    *     full row multiplicity. A 64-bit collision between different
+    *     texts could only drop pairs of one of them (~n²/2⁶⁵ for n
+    *     distinct texts).
+    *  2. the distinct texts of BOTH sides → the [[JaccardCandidatesPlan]]
+    *     candidate stage, which picks its regime when it runs.
+    *  3. the candidates verify once per distinct text pair, in one
+    *     orientation, then explode to both orientations plus the
+    *     identity pairs id→id (equal-text rows, which the id_a < id_b
+    *     stage never emits), back-join to the original rows, and the
+    *     ORIGINAL condition re-evaluates on every surviving row pair,
+    *     so the final filter stays authoritative (>= vs >, extra
+    *     conjuncts, exact float semantics). */
   private def rewrite(j: Join, aText: Expression, bText: Expression,
       n: Int, t: Double): LogicalPlan = {
     import org.apache.spark.sql.functions._
@@ -424,59 +367,6 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     def grams(text: Expression) =
       bridge.toColumn(VectorFunctions.CharNgramHashes(
         VectorFunctions.NormalizeText(text), n, distinctSorted = true))
-    // Stop-gram model, trained HERE with one bounded job before the
-    // rewritten plan is returned, on the left input's rows. Measured
-    // at the sf1 gate: under an EMPTY model the 50k-doc corpus ground
-    // for 25+ minutes (a corpus-hot gram whose hash lands low sits in
-    // nearly every prefix and contributes |docs(g)|² candidates); with
-    // the trained model the same query answers in seconds.
-    // Model capacity: fixed 64k in production; conf-overridable so
-    // unit-scale specs can SATURATE the model (a handful of docs
-    // never reaches 64k grams) and drive the auto crossover gate.
-    val modelSize = spark.conf
-      .get("spark.graft.jaccardRewrite.modelSize", (1 << 16).toString)
-      .toInt
-    val hotDf: Map[Long, Long] = {
-      if (modelCache.size > 32) modelCache.clear()
-      modelCache.getOrElseUpdate(
-        (j.left.canonicalized, aText.canonicalized, n, modelSize,
-          dataFingerprint(j.left)),
-        PrefixFilter.stopGramModel(bridge.ofRows(spark, j.left),
-          bridge.toColumn(aText), grams(aText), modelSize))
-    }
-    // The rewritten shape is the operator family's fused-bucket
-    // pipeline, generalized to arbitrary join inputs through CONTENT
-    // identity — because the naive alternative measurably dies: a
-    // posting-level equi-join enumerates Σ_g df(g)² row pairs
-    // (5.6e9 at the sf1 gate even with the trained model), and a join
-    // operator cannot iterate pairs anywhere near the ~1e8/s/core an
-    // in-memory bucket loop gets — the former join shape ground for
-    // 25+ minutes at sf1 while the bucket loop covers the same 2.8e9
-    // candidate checks in under 30 s measured. Shape:
-    //   1. id := xxhash64(join text) per side — CONTENT identity, so
-    //      the candidate stage runs once per distinct text while the
-    //      back-join restores full row multiplicity exactly (every
-    //      left row with text-hash a × every right row with text-hash
-    //      b, precisely the original join's output for that text
-    //      pair). A 64-bit hash collision between different texts
-    //      could only DROP pairs of one of the colliding texts
-    //      (~n²/2⁶⁵ for n distinct texts — negligible below billions
-    //      of distinct texts; the operator API is the knob past that).
-    //   2. distinct (text) docs from BOTH sides → [[PrefixFilter]]
-    //      prefix postings → the bucket loop, in one of two measured
-    //      regimes (chosen by the candidate-mass histogram — see
-    //      below): SPARSE buckets collect skinny postings and defer
-    //      verification to step 3; DENSE buckets carry the gram arrays
-    //      so VerifiedBucketPairs rejects inline and only true pairs
-    //      reach step 3.
-    //   3. verified id pairs (+ both orientations + the identity
-    //      pairs id→id, which cover equal-text row pairs the
-    //      id_a < id_b generator never emits) back-join to the
-    //      original rows, and the ORIGINAL join condition re-evaluates
-    //      on every surviving row pair — output-sized work that makes
-    //      the final filter authoritative (>= vs >, extra conjuncts,
-    //      exact float semantics) rather than trusting the
-    //      generator's relaxed-EPS admission.
     // .distinct() would inject a Deduplicate node, which only the
     // "Replace Operators" batch (already past) lowers to an Aggregate —
     // surviving to planning it is an internal error. Build the
@@ -498,169 +388,21 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     val base = docs.select(col("__graft_id"),
         grams(bridge.toExpression(col("__graft_text"))).as("__graft_gs"))
       .filter(col("__graft_gs").isNotNull)
-    val skinny = PrefixFilter.modelPostings(base, hotDf, t)
-    // Candidate-mass stats, collected from the shared histogram (one
-    // bounded driver job, memoized). Decides which of two exact-recall
-    // candidate shapes ships less data:
-    //
-    //  - SPARSE (realistic gram entropy): postings shuffle skinny,
-    //    buckets emit length+position-PRUNED candidate pairs with no
-    //    verification payload, and the back-join below — which
-    //    re-evaluates the ORIGINAL predicate on every row pair
-    //    anyway — is the verifier. Shipped mass ≈ estPairs · 2 row
-    //    widths.
-    //  - DENSE (degenerate corpora: bounded gram universe, candidate
-    //    mass ≫ corpus): every posting carries its doc's full gram
-    //    array so VerifiedBucketPairs rejects in-bucket and only
-    //    TRUE pairs ever reach the back-join. Shipped mass ≈
-    //    postings · gram-array width (8·|d| bytes).
-    //
-    // The former always-dense shape was measured unshippable at the
-    // 100× rehearsal on REALISTIC entropy: 500 k docs × ~0.3·|d|
-    // prefix postings × ~2.4 KB arrays ≈ 105 GB into one groupBy
-    // shuffle — quadratic in doc length, dead at 100 TB — while the
-    // same corpus's pruned-candidate mass is a few GB. The degenerate
-    // regime is the mirror image (152 M survivors at sf1 would make
-    // the back-join the ~400 GB stage), so neither shape dominates:
-    // measure, then choose. estPairs over-counts the post-distinct
-    // realized candidates ~10–30× (measured, BASELINE round 8) and
-    // the sparse back-join pays ~2 text widths per candidate vs the
-    // dense shuffle's 8 bytes/gram per posting — risk-balanced at
-    // estPairs ≤ 16·postings, overridable for rehearsals/specs via
-    // spark.graft.jaccardRewrite.estFactor (0 forces dense).
-    def statsOf(hist: Array[PrefixFilter.MassBand]) =
-      (hist.map(_.sm1).sum.toLong,
-        PrefixFilter.estPairs(hist, Long.MaxValue),
-        PrefixFilter.maxOccupancy(hist))
-    val (nPostings, estPairs, maxOcc) = {
-      if (statsCache.size > 32) statsCache.clear()
-      // modelSize is part of the key: skinny postings are built from
-      // the hot-gram model, so stats measured under one model —
-      // including maxOcc, a CORRECTNESS bound on the sparse bucket
-      // cap — must not be reused after a model-capacity change.
-      statsCache.getOrElseUpdate(
-        (j.left.canonicalized, j.right.canonicalized,
-          aText.canonicalized, bText.canonicalized, n, t, modelSize,
-          dataFingerprint(j.left, j.right)),
-        statsOf(PrefixFilter.collectBands(
-          PrefixFilter.massHistogram(skinny))))
-    }
-    val estFactor = spark.conf
-      .get("spark.graft.jaccardRewrite.estFactor", "16").toDouble
-    def wantExactDf(quadratic: Boolean): Boolean = PrefixFilter.exactOrder(
-      spark, saturated = hotDf.size >= modelSize, overBudget = quadratic)
-    // The sparse branch's bucket cap is a CORRECTNESS bound (it must
-    // be ≥ the true max bucket occupancy or the collect truncates and
-    // drops candidates) — the memoized maxOcc was measured on the
-    // MODEL-order postings, so the exact-order postings need their own
-    // (memoized under a marked key; same bounded driver job shape).
-    // When the memo is COLD the ranked postings would otherwise run
-    // TWICE — once for this plan-time cap job and again by the query
-    // itself — paying the corpus-wide df groupBy + join + per-doc
-    // window shuffles both times. So the cold path persists the frame
-    // across both consumers and releases it after the triggering
-    // query's execution (the rule itself has no post-execution hook; a
-    // one-shot listener is the release point — see
-    // [[RewriteJaccardThresholdJoin.unpersistAfterNextExecution]]).
-    def exactPostsAndCap(): (org.apache.spark.sql.DataFrame, Int) = {
-      val key = ("__graft_exactDf", j.left.canonicalized,
-        j.right.canonicalized, aText.canonicalized, bText.canonicalized,
-        n, t, dataFingerprint(j.left, j.right))
-      statsCache.get(key) match {
-        case Some(hit) => (PrefixFilter.exactPostings(base, t), hit._3)
-        case None =>
-          val rx = PrefixFilter.exactPostings(base, t).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val capDf = PrefixFilter.massHistogram(rx)
-          val stats = statsOf(PrefixFilter.collectBands(capDf))
-          statsCache.putIfAbsent(key, stats)
-          // The trigger's QueryExecution is resolved from the
-          // EXECUTION_ID_KEY local property, which the action that
-          // invoked this rule set around its planning; the cap job's
-          // collect above restored it on exit.
-          val triggerId = Option(spark.sparkContext.getLocalProperty(
-              org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY))
-            .flatMap(s => Option(org.apache.spark.sql.execution
-              .SQLExecution.getQueryExecution(s.toLong)))
-            .map(_.id)
-          RewriteJaccardThresholdJoin.unpersistAfterNextExecution(
-            spark, rx, capDf.queryExecution.id, triggerId)
-          (rx, stats._3)
-      }
-    }
-
-    val verified =
-      if (estPairs <= estFactor * nPostings) {
-        // SPARSE regime: skinny postings, deferred verification. The
-        // exact order pays here only past a measured DENSITY CROSSOVER
-        // (two same-day alternated event-logged A/Bs, CPU-attributed):
-        //  - sf10-he (est/postings = 2.15e8/4.35e7 ≈ 4.9): wash-to-
-        //    loss — total CPU {3107,4101} s exact vs {3050,2926} model.
-        //    The bucket loop drops 2080→~870 CPU-s with the 5.8× mass
-        //    cut, but the two ranking shuffles cost ~1.9k CPU-s, and
-        //    the loop's fused prunes (early abandon + size bands)
-        //    reject leaked candidates at near-zero per-pair cost.
-        //  - sf30-he (est/postings = 1.03e9/1.30e8 ≈ 7.9, true-order
-        //    mass 1.06e8 = 9.7× cut): exact order WINS — total CPU
-        //    {6695,7376} s vs {14588,8985}, wall {259,288} s vs
-        //    {547,367}, bucket-loop spill 23.8→8.5 GiB. Past this
-        //    density the loop's per-candidate cost is no longer
-        //    near-zero (its buffers spill), so cutting 0.9e9 of
-        //    candidate mass buys far more than the ~2.6k CPU-s of
-        //    ranking. At 100 TB this crossover is the difference
-        //    between a bounded stage and a spill storm.
-        // Auto engages the exact order when the model is saturated
-        // AND the model-order estimate crosses sparseExactRatio ×
-        // postings — default 6, the geometric midpoint of the measured
-        // bracket (4.9 no-pay, 7.9 pay); overridable per session.
-        val sparseExactRatio = spark.conf
-          .get("spark.graft.jaccardRewrite.sparseExactRatio", "6")
-          .toDouble
-        val (posts, cap) =
-          if (wantExactDf(estPairs > sparseExactRatio * nPostings))
-            exactPostsAndCap()
-          else (skinny, maxOcc)
-        PrefixFilter.bucketPairs(posts, cap, t)
-      } else {
-        // DENSE regime (mass ≫ postings by construction — wantExactDf
-        // needs no extra mass condition): every posting carries its
-        // doc's gram array for inline verification. Under the exact
-        // order the skinny ranks are computed first and the wide gs
-        // array still ships exactly once, attached AFTER ranking by
-        // content id — the round-9 quadratic-mass cliff stays closed.
-        val densePosts =
-          if (wantExactDf(quadratic = true))
-            PrefixFilter.exactPostings(base, t)
-              .join(base, Seq("__graft_id"))
-          else PrefixFilter.modelPostings(base, hotDf, t, "__graft_gs")
-        densePosts
-          .groupBy("__graft_g")
-          .agg(collect_list(struct(col("__graft_id").as("id"),
-            col("__graft_rn").as("rn"),
-            col("__graft_gs").as("gs"))).as("__graft_ps"))
-          .select(explode(VectorFunctions.verified_bucket_pairs(
-            col("__graft_ps"), 1 << 30, t)).as("__graft_p"))
-          .select(col("__graft_p.id_a").as("__graft_id_a"),
-            col("__graft_p.id_b").as("__graft_id_b"))
-      }
-    val candD = distinctAll(verified)
-    // CONTENT-level verification, ONE orientation. The profiled
-    // sf10-he run spent ~90 % of its wall time (two ~130 s stages in
-    // the event log) shipping 440 M candidate-pair rows WITH text
-    // payload through the row-level back-join and evaluating the
-    // jaccard residual once per orientation — everything else
-    // (postings, bucket loops, dedup aggregate) totalled ~30 s.
-    // Jaccard is symmetric and the candidate ids ARE content hashes,
-    // so the threshold conjunct is decidable here, per DISTINCT text
-    // pair, in a single orientation: half the shipped pair-text mass,
-    // half the predicate evaluations, and the row-level back-join
-    // below then joins only the VERIFIED (output-sized) pair set —
-    // its formerly-dominant exchanges become no-ops. `>= t` admits a
-    // superset of a strict `>` original (never drops a qualifying
-    // pair); the untouched original condition still re-evaluates on
-    // every output row pair, so admission stays authoritative at the
-    // row level exactly as before. Dense-mode candidates arrive
-    // already verified and just pass through (output-sized cost).
+    val leftGrams = bridge.ofRows(spark, j.left).select(
+      bridge.toColumn(aText).as("__graft_text"), grams(aText).as("__graft_gs"))
+    val candD = bridge.ofRows(spark, JaccardCandidatesPlan(
+      Seq("__graft_id_a", "__graft_id_b").map(AttributeReference(_, LongType,
+        nullable = false)()),
+      bridge.planOf(base), bridge.planOf(leftGrams), t)(spark))
+    // CONTENT-level verification, ONE orientation: the profiled
+    // sf10-he run spent ~90 % of its wall time shipping candidate
+    // pairs WITH text payload through the row-level back-join and
+    // evaluating the residual once per orientation. Jaccard is
+    // symmetric and the ids are content hashes, so the threshold is
+    // decided here per distinct text pair, and the back-join below
+    // joins only the verified pairs. `>= t` admits a superset of a
+    // strict `>` original; the original condition still decides
+    // every output row.
     val txtCols = docs.select(col("__graft_id"), col("__graft_text"))
     val vPairs = candD
       .join(txtCols.select(col("__graft_id").as("__graft_id_a"),
@@ -708,128 +450,6 @@ case class RewriteJaccardThresholdJoin(spark: SparkSession)
     pinShuffleJoin(
       LProject((j.left.output ++ j.right.output).map(a => a), filtered))
   }
-}
-
-object RewriteJaccardThresholdJoin {
-  // see the scaladoc at the instance accessors: memos for the rule's
-  // two bounded driver jobs, keyed by canonicalized plans + data
-  // fingerprint. The OUTER map is weak-keyed by SparkSession: the
-  // canonicalized plan keys retain LogicalRelations, which retain
-  // their FileIndex (a listing of potentially millions of FileStatus)
-  // and owning session — a JVM-global map would keep every STOPPED
-  // session's state reachable until 33 distinct joins forced a
-  // clear(). Weak keying gives exactly the intended lifetime: the
-  // memo survives rule-instance churn (builders re-run per optimize)
-  // for as long as the session itself is alive, and becomes
-  // collectable with it.
-  private val memosBySession = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    (scala.collection.concurrent.TrieMap[Any, Map[Long, Long]],
-      scala.collection.concurrent.TrieMap[Any, (Long, Double, Int)],
-      java.util.concurrent.atomic.AtomicLong)]()
-
-  /** Release `df`'s persisted blocks on the TRIGGERING query's own
-    * completion (`triggerId` — the execution whose optimization ran
-    * the rewrite rule, i.e. the persist's intended consumer) or any
-    * execution NEWER than the cap job's (`afterId`). The id guards
-    * exist because the listener bus is ASYNCHRONOUS and FIFO: at
-    * registration time the queue can still hold end events from
-    * executions OLDER than the cap job — the rule's own plan-time
-    * driver jobs (model train, stats collect) and whatever query ran
-    * before — and a loose guard (the r15 `!=`) let any such STALE
-    * event fire the one-shot and unpersist the ranked postings
-    * BEFORE the triggering query consumed them, silently re-paying
-    * the corpus-wide df groupBy + join + window shuffles the persist
-    * exists to avoid (GiB at rehearsal scale). Correctness was never
-    * at stake — only 2× the ranking work on an unlucky dispatch.
-    * `triggerId` is resolved by the CALLER from the
-    * `SQLExecution.EXECUTION_ID_KEY` local property (set for the
-    * action whose planning invoked the rule); when the plan is built
-    * outside an action (explain-only), there is no trigger execution
-    * and the `> afterId` arm alone releases — worst case the one
-    * bounded frame stays cached until a later execution or session
-    * end; accepted. */
-  private[graft] def unpersistAfterNextExecution(
-      spark: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame,
-      afterId: Long,
-      triggerId: Option[Long]): Unit = {
-    val lm = spark.listenerManager
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      private val done = new java.util.concurrent.atomic.AtomicBoolean()
-      private def fire(qe: org.apache.spark.sql.execution.QueryExecution)
-          : Unit =
-        if ((triggerId.contains(qe.id) || qe.id > afterId) &&
-            done.compareAndSet(false, true)) {
-          try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => }
-          lm.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = fire(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = fire(qe)
-    }
-    lm.register(l)
-  }
-
-  // Monotonic access clock for the LRU bound below (WeakHashMap has no
-  // access order of its own).
-  private val accessTick = new java.util.concurrent.atomic.AtomicLong()
-
-  private[graft] def forSession(s: org.apache.spark.sql.SparkSession) =
-    memosBySession.synchronized {
-      // Weak keying alone is DEFEATED here: the values' TrieMap keys
-      // hold canonicalized plans that retain LogicalRelation →
-      // HadoopFsRelation, whose sparkSession field strongly references
-      // the map's key — a value→key path that pins every entry
-      // (including FileIndex listings of potentially millions of
-      // FileStatus) forever. So evict explicitly: purge entries whose
-      // context has stopped on every access from a live session. A
-      // JVM churning sessions (test suites, notebook servers) then
-      // retains at most the stopped sessions since the last lookup.
-      val it = memosBySession.entrySet().iterator()
-      while (it.hasNext) {
-        val k = it.next().getKey
-        if (k != null && k.sparkContext.isStopped) it.remove()
-      }
-      // The stopped-context purge cannot see CHILD sessions of a live
-      // context — and the query surface mints one per similarity-join
-      // call (an `Iterate.scoped` session carries the rewrite flag), so a
-      // long-lived service would still accumulate an entry (plan keys
-      // + trained models) per call. The memo is a cache, eviction
-      // costs only a recompute: bound the map at 64 sessions and evict
-      // LEAST-RECENTLY-USED first (each entry carries an access tick).
-      // Under the child-session-per-call pattern the short-lived
-      // children are exactly the cold tail, so the hot parent's memo
-      // survives the bound instead of being dropped at hash-order whim.
-      if (memosBySession.size() > 64) {
-        val victims = new java.util.ArrayList[
-          (Long, org.apache.spark.sql.SparkSession)]()
-        val it2 = memosBySession.entrySet().iterator()
-        while (it2.hasNext) {
-          val e = it2.next()
-          if ((e.getKey ne s) && e.getKey != null)
-            victims.add((e.getValue._3.get(), e.getKey))
-        }
-        victims.sort((a, b) => java.lang.Long.compare(a._1, b._1))
-        var vi = 0
-        while (memosBySession.size() > 64 && vi < victims.size()) {
-          memosBySession.remove(victims.get(vi)._2)
-          vi += 1
-        }
-      }
-      var v = memosBySession.get(s)
-      if (v == null) {
-        v = (scala.collection.concurrent.TrieMap.empty,
-          scala.collection.concurrent.TrieMap.empty,
-          new java.util.concurrent.atomic.AtomicLong())
-        memosBySession.put(s, v)
-      }
-      v._3.set(accessTick.incrementAndGet())
-      v
-    }
 }
 
 /** Push the LEFT-side conjuncts of a Filter below an [[AsOfJoinPlan]].

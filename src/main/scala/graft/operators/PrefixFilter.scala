@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import graft.functions.BoundedMinCollect.bounded_min_collect
-import graft.functions.VectorFunctions.{bucket_pairs, prefix_grams}
+import graft.functions.VectorFunctions.{bucket_pairs, prefix_grams,
+  verified_bucket_pairs}
 
 /** AllPairs/PPJoin prefix-filter candidate generation for a Jaccard
   * threshold t (Bayardo et al., WWW'07), the one implementation behind
@@ -156,4 +157,80 @@ private[graft] object PrefixFilter extends graft.ShuffleJoinPin {
         .as("__graft_p"))
       .select(col("__graft_p.id_a").as("__graft_id_a"),
         col("__graft_p.id_b").as("__graft_id_b"))
+
+  /** The candidate stage of the `text_jaccard` join rewrite, run when
+    * the join executes ([[graft.plans.JaccardCandidates]]): the
+    * distinct `(__graft_id_a < __graft_id_b)` candidate pairs of
+    * `base`, and the executed plan that produced them (shown by the
+    * join's explain once it has run). `leftGrams` (`__graft_text`,
+    * `__graft_gs`) is the join's left input, which trains the
+    * stop-gram model; under an empty model the sf1 corpus ground for
+    * 25+ minutes on corpus-hot grams, with the model it took seconds.
+    *
+    * The candidate-mass histogram of the model-order postings picks
+    * which of two exact-recall shapes ships less data:
+    *  - SPARSE (realistic gram entropy, estimated pairs ≤ `estFactor` ×
+    *    postings): skinny postings, buckets emit length- and
+    *    position-pruned pairs, and the rewrite's verification above
+    *    this stage rejects the false ones. An always-dense shape was
+    *    measured unshippable on realistic entropy at the 100×
+    *    rehearsal (~105 GB of gram arrays into one shuffle).
+    *  - DENSE (degenerate corpora, candidate mass ≫ corpus): every
+    *    posting carries its doc's gram array, so
+    *    `verified_bucket_pairs` rejects in the bucket and only true
+    *    pairs leave it (152 M survivors at sf1 would otherwise make the
+    *    verification the ~400 GB stage).
+    * `estFactor` (`spark.graft.jaccardRewrite.estFactor`, default 16;
+    * 0 forces dense) balances the estimate's measured 10–30×
+    * over-count against the sparse path's two text widths per pair.
+    *
+    * The exact order ([[exactOrder]]) engages in the sparse regime past
+    * `spark.graft.jaccardRewrite.sparseExactRatio` (default 6) ×
+    * postings: the geometric midpoint of the measured bracket, 4.9 at
+    * sf10-he (a wash: the ranking shuffles cost what the smaller mass
+    * saves) and 7.9 at sf30-he (total CPU halved, bucket-loop spill
+    * 23.8 → 8.5 GiB). Its postings are cached for the cap histogram and
+    * the bucket loop, and the candidates are materialized before the
+    * cache is released. In the dense regime the skinny ranks come
+    * first and the gram array joins once, after ranking.
+    * `spark.graft.jaccardRewrite.modelSize` (default 64k) lets specs
+    * saturate the model. */
+  def joinCandidates(base: DataFrame, leftGrams: DataFrame, t: Double)
+      : (DataFrame, org.apache.spark.sql.execution.SparkPlan) = {
+    val s = base.sparkSession
+    def conf(key: String, default: String) = s.conf.get(key, default).toDouble
+    val modelSize =
+      conf("spark.graft.jaccardRewrite.modelSize", (1 << 16).toString).toInt
+    val hotDf = stopGramModel(leftGrams, col("__graft_text"),
+      col("__graft_gs"), modelSize)
+    val skinny = modelPostings(base, hotDf, t)
+    val hist = collectBands(massHistogram(skinny))
+    val nPostings = hist.map(_.sm1).sum
+    val est = estPairs(hist, Long.MaxValue)
+    def wantExactDf(overBudget: Boolean) = exactOrder(s,
+      saturated = hotDf.size >= modelSize, overBudget = overBudget)
+    def produced(pairs: DataFrame) = (pairs, pairs.queryExecution.executedPlan)
+    if (est > conf("spark.graft.jaccardRewrite.estFactor", "16") * nPostings) {
+      val posts =
+        if (wantExactDf(overBudget = true))
+          exactPostings(base, t).join(base, Seq("__graft_id"))
+        else modelPostings(base, hotDf, t, "__graft_gs")
+      produced(posts.groupBy("__graft_g")
+        .agg(collect_list(struct(col("__graft_id").as("id"),
+          col("__graft_rn").as("rn"),
+          col("__graft_gs").as("gs"))).as("__graft_ps"))
+        .select(explode(verified_bucket_pairs(col("__graft_ps"), 1 << 30, t))
+          .as("__graft_p"))
+        .select(col("__graft_p.id_a").as("__graft_id_a"),
+          col("__graft_p.id_b").as("__graft_id_b"))
+        .distinct())
+    } else if (wantExactDf(est >
+        conf("spark.graft.jaccardRewrite.sparseExactRatio", "6") * nPostings))
+      Iterate.cached(exactPostings(base, t)) { ranked =>
+        val pairs = bucketPairs(ranked,
+          maxOccupancy(collectBands(massHistogram(ranked))), t).distinct()
+        (Iterate.materialize(pairs), pairs.queryExecution.executedPlan)
+      }
+    else produced(bucketPairs(skinny, maxOccupancy(hist), t).distinct())
+  }
 }

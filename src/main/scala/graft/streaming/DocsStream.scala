@@ -350,6 +350,14 @@ object DocsStream {
   case class EmbBucketState(members: List[EmbMember])
   case class EmbPairOut(vec_id: Long, nn_id: Long, cosine: Double)
 
+  /** [[embeddingPairsStream]]'s state encoder, built once. The
+    * `spark.implicits` encoder is agnostic, and each run converted it
+    * to an expression encoder whose `List` serializer numbered its
+    * lambda variable afresh; the state projection's Java then differed
+    * in that id, and compiled anew on every warm run. */
+  private lazy val embStateEncoder = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[EmbBucketState]()
+
   /** Streaming read of the embeddings table (file source). */
   def readEmbeddingsStream(spark: SparkSession, sfDir: String)
       : DataFrame = {
@@ -447,7 +455,7 @@ object DocsStream {
           }
           state.update(EmbBucketState(members))
           out.iterator
-      }
+      }(embStateEncoder, implicitly[org.apache.spark.sql.Encoder[EmbPairOut]])
   }
 
   /** Drive [[embeddingPairsStream]] synchronously to completion over

@@ -365,18 +365,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(!autoModel.queryExecution.executedPlan.toString
         .contains("Window"))
-      // the stats memo must be keyed by model capacity: skinny
-      // postings are built FROM the model, and the memoized maxOcc is
-      // a correctness bound on the sparse bucket cap — reusing stats
-      // measured under the 64k model for the 4-entry model's buckets
-      // could truncate them and silently drop pairs. The two model
-      // sizes exercised above must therefore have produced two
-      // distinct stats entries for this same join shape.
-      val statsKeys = RewriteJaccardThresholdJoin.forSession(s)._2
-        .keySet.collect { case p: Product => p }
-      assert(statsKeys.exists(_.productIterator.contains(4)) &&
-        statsKeys.exists(_.productIterator.contains(1 << 16)),
-        s"stats memo not keyed by modelSize: $statsKeys")
       s.conf.unset("spark.graft.jaccardRewrite.sparseExactRatio")
       s.conf.unset("spark.graft.jaccardRewrite.modelSize")
       s.conf.unset("spark.graft.jaccardRewrite.estFactor")
@@ -431,7 +419,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       var pairs = 0
       s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
       try {
-        for (mode <- Seq("off", "on")) {
+        for (mode <- Seq("off", "on", "auto")) {
           s.conf.set("spark.graft.jaccard.exactDfOrder", mode)
           val op = rows(Dedup.ngramJaccard(docs, n = 8, threshold = t,
             pairBudget = Long.MaxValue))
@@ -459,23 +447,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("jaccard rewrite memo misses when the underlying data changes " +
-      "(stale maxOcc must not truncate buckets)") {
+  test("jaccard rewrite stays exact after its data is overwritten " +
+      "and refreshed") {
     withExtSession { s =>
       import s.implicits._
-      // The rule memoizes (nPostings, estPairs, maxOcc) keyed by the
-      // canonicalized plan — and maxOcc is a CORRECTNESS bound
-      // (bounded_min_collect keeps maxOcc postings per bucket). A
-      // reused Dataset whose files are overwritten + refreshed keeps a
-      // canonically-identical plan over NEW data: without the data
-      // fingerprint in the key, corpus A's maxOcc=2 would truncate
-      // corpus B's depth-6 buckets and silently drop pairs.
+      // One reused Dataset whose files are overwritten and refreshed
+      // plans a canonically identical join over new data. The bucket
+      // cap (bounded_min_collect keeps that many postings per bucket)
+      // must come from the new corpus: corpus A's cap of 2 would
+      // truncate corpus B's depth-6 buckets and drop pairs.
       val dir = java.nio.file.Files
-        .createTempDirectory("graft_fp_memo").toString + "/docs"
+        .createTempDirectory("graft_jaccard_refresh").toString + "/docs"
       val base = "the quick brown fox jumps over the lazy dog while " +
         "the cat watches from the fence with great interest"
-      // corpus A: two unrelated docs — every gram df=1, memoized
-      // maxOcc lands on its floor of 2
+      // corpus A: two unrelated docs — every gram df=1, so the bucket
+      // cap lands on its floor of 2
       Seq(
         (1L, base),
         (2L, "completely different text about catalyst optimizer " +
@@ -490,10 +476,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
             col("id_a") < col("id_b"))
         .select("id_a", "id_b")
       s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
-      assert(q.collect().isEmpty) // populates the memo for corpus A
+      assert(q.collect().isEmpty)
       // corpus B at the SAME path: six near-dup variants — every
-      // shared gram's posting list is 6 deep, far past corpus A's
-      // memoized bound
+      // shared gram's posting list is 6 deep, far past corpus A's cap
       (1L to 6L).map(i => (i, base + s" variant number $i"))
         .toDF("id", "text").write.mode("overwrite").parquet(dir)
       docs.queryExecution.analyzed.refresh() // re-list the FileIndex
@@ -505,41 +490,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s.conf.unset("spark.graft.jaccardRewrite.enabled")
       assert(exact.size === 15, s"corpus B should be all-pairs: $exact")
       assert(rewritten === exact)
-    }
-  }
-
-  test("memo-map bound evicts least-recently-used sessions: the hot " +
-      "parent survives >64 child-session mints, the cold tail does not") {
-    withExtSession { s =>
-      val parent = s.newSession()
-      val parentMemo = RewriteJaccardThresholdJoin.forSession(parent)._1
-      parentMemo.put("hot-parent-marker", Map(1L -> 1L))
-      // The documented service pattern: a short-lived child session
-      // per similarity call, the parent touched on every call. Keep
-      // strong references so WeakHashMap GC can't explain evictions.
-      val children = scala.collection.mutable.ArrayBuffer
-        .empty[SparkSession]
-      val firstChild = s.newSession()
-      children += firstChild
-      val firstChildMemo =
-        RewriteJaccardThresholdJoin.forSession(firstChild)._1
-      (1 to 100).foreach { _ =>
-        val child = s.newSession()
-        children += child
-        RewriteJaccardThresholdJoin.forSession(child)
-        RewriteJaccardThresholdJoin.forSession(parent) // stays hot
-      }
-      // The bound fired (the single-access first child was evicted:
-      // its memo was re-minted empty on re-lookup) ...
-      assert(!(RewriteJaccardThresholdJoin
-        .forSession(firstChild)._1 eq firstChildMemo),
-        "cold first child should have been evicted by the 64 bound")
-      // ... but the hot parent kept its memo — blind hash-order
-      // eviction would have dropped it with near certainty over 100
-      // overflow rounds.
-      assert(RewriteJaccardThresholdJoin.forSession(parent)._1
-        .get("hot-parent-marker").contains(Map(1L -> 1L)),
-        "LRU must keep the most-recently-used parent session's memo")
     }
   }
 
@@ -564,6 +514,179 @@ class GraftExtensionsSpec extends AnyFunSuite {
         text_jaccard(col("text_a"), col("text_b"), 3) > 1.0).count()
       assert(none === 0L)
       s.conf.unset("spark.graft.jaccardRewrite.enabled")
+    }
+  }
+
+  /** A `text_jaccard >= 0.6` self-join of `docs` (id, text) into
+    * (id_a, id_b) pairs. */
+  private def jaccardJoin(docs: DataFrame): DataFrame = {
+    import graft.functions.VectorFunctions.text_jaccard
+    val a = docs.select(col("id").as("id_a"), col("text").as("text_a"))
+    val b = docs.select(col("id").as("id_b"), col("text").as("text_b"))
+    a.join(b,
+        text_jaccard(col("text_a"), col("text_b"), 8) >= 0.6 &&
+          col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+  }
+
+  /** 24 docs no earlier query has read: twelve near-dup variants of one
+    * sentence and twelve fillers, every text tagged with `tag` and a
+    * fresh salt. */
+  private def freshCorpus(s: SparkSession, tag: String): DataFrame = {
+    import s.implicits._
+    val salt = s"$tag ${System.nanoTime()}"
+    val base = "the quick brown fox jumps over the lazy dog while " +
+      "the cat watches from the fence with great interest today"
+    ((1L to 12L).map(i => (i, s"$base variant $i $salt")) ++
+      (13L to 24L).map(i => (i, s"filler document number $i with some " +
+        s"shared vocabulary about foxes and dogs $salt")))
+      .toDF("id", "text")
+  }
+
+  /** The Spark jobs started while `body` runs. */
+  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    bridge.drainListeners(s.sparkContext)
+    s.sparkContext.addSparkListener(listener)
+    try {
+      body
+      bridge.drainListeners(s.sparkContext)
+    } finally s.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** The ids of the RDDs persisted now, leaving out local checkpoints
+    * (materialized outputs, released with the plans that read them). */
+  private def cachedRdds(s: SparkSession): Set[Int] =
+    s.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !rdd.isCheckpointed => id
+    }.toSet
+
+  test("no graft optimizer rule starts a Spark job") {
+    withExtSession { s =>
+      import s.implicits._
+      def ciJoin() = Seq((1L, "Alice"), (2L, "BOB")).toDF("id", "name")
+        .join(Seq(("alice", 10)).toDF("rname", "v"),
+          col("name") === col("rname"))
+      val fixtures = Seq[(String, String, () => DataFrame)](
+        ("spark.graft.cosineRewrite.enabled", "true", () => cosineJoin(s)),
+        ("spark.graft.hammingRewrite.enabled", "true",
+          () => hammingJoin(s, 3)),
+        ("spark.graft.jaccardRewrite.enabled", "true",
+          () => jaccardJoin(freshCorpus(s, "plan-time jobs"))),
+        ("spark.graft.mysqlCollation", "ci", () => ciJoin()))
+      for ((key, value, q) <- fixtures) {
+        s.conf.set(key, value)
+        try {
+          var plan = ""
+          val jobs = jobsDuring(s) {
+            val df = q()
+            df.queryExecution.optimizedPlan
+            plan = df.queryExecution.executedPlan.toString
+            df.explain()
+          }
+          assert(!plan.contains("NestedLoopJoin"), s"$key did not fire:\n$plan")
+          assert(jobs === 0, s"$key=$value: $jobs jobs before execution")
+        } finally s.conf.unset(key)
+      }
+      s.conf.set("spark.graft.mysqlCollation", "ci")
+      try assert(ciJoin().count() === 1L)
+      finally s.conf.unset("spark.graft.mysqlCollation")
+    }
+  }
+
+  test("an executed jaccard rewrite trains its model and collects its " +
+      "histogram once per execution") {
+    withExtSession { s =>
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case st: org.apache.spark.sql.execution.ui
+              .SparkListenerSQLExecutionStart => seen.add(st.details)
+          case _ =>
+        }
+      }
+      // the SQL executions one run of `df` starts, by the stage step
+      // that started them
+      def stepsOf(df: DataFrame): Map[String, Int] = {
+        seen.clear()
+        bridge.drainListeners(s.sparkContext)
+        s.sparkContext.addSparkListener(listener)
+        try {
+          pairs(df)
+          bridge.drainListeners(s.sparkContext)
+        } finally s.sparkContext.removeSparkListener(listener)
+        val details = seen.toArray(Array.empty[String]).toSeq
+        Seq("stopGramModel", "collectBands").map(step =>
+          step -> details.count(_.contains(s"PrefixFilter$$.$step"))).toMap
+      }
+      val docs = freshCorpus(s, "execution-time stage")
+      s.conf.set("spark.graft.jaccardRewrite.enabled", "false")
+      val exact = pairs(jaccardJoin(docs))
+      s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
+      try {
+        for (run <- 1 to 2) {
+          val df = jaccardJoin(docs)
+          assert(stepsOf(df) ===
+            Map("stopGramModel" -> 1, "collectBands" -> 1), s"run $run")
+          assert(pairs(df) === exact)
+        }
+        assert(exact.nonEmpty)
+      } finally s.conf.unset("spark.graft.jaccardRewrite.enabled")
+    }
+  }
+
+  test("explaining a jaccard rewrite under the exact order leaves no " +
+      "cached frame") {
+    withExtSession { s =>
+      val before = cachedRdds(s)
+      s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
+      s.conf.set("spark.graft.jaccardRewrite.estFactor", "1e18") // sparse
+      s.conf.set("spark.graft.jaccard.exactDfOrder", "on")
+      try {
+        jaccardJoin(freshCorpus(s, "explain only")).explain()
+        bridge.drainListeners(s.sparkContext)
+        assert(cachedRdds(s) -- before === Set.empty)
+      } finally {
+        s.conf.unset("spark.graft.jaccardRewrite.enabled")
+        s.conf.unset("spark.graft.jaccardRewrite.estFactor")
+        s.conf.unset("spark.graft.jaccard.exactDfOrder")
+      }
+    }
+  }
+
+  test("two jaccard rewrites running at once on one session each return " +
+      "their nested-loop rows and leave no cached frame") {
+    withExtSession { s =>
+      val corpora = Seq("thread one", "thread two").map(freshCorpus(s, _))
+      val exact = corpora.map(d => pairs(jaccardJoin(d)))
+      val before = cachedRdds(s)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
+      try {
+        // the default order, then the cached exact-order postings
+        for (order <- Seq("auto", "on")) {
+          s.conf.set("spark.graft.jaccard.exactDfOrder", order)
+          val runs = corpora.map(d => pool.submit(
+            new java.util.concurrent.Callable[Seq[(Long, Long)]] {
+              def call() = pairs(jaccardJoin(d))
+            }))
+          assert(runs.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES)) ===
+            exact, s"exactDfOrder=$order")
+          assert(cachedRdds(s) -- before === Set.empty, s"exactDfOrder=$order")
+        }
+        assert(exact.forall(_.nonEmpty))
+      } finally {
+        pool.shutdown()
+        s.conf.unset("spark.graft.jaccardRewrite.enabled")
+        s.conf.unset("spark.graft.jaccard.exactDfOrder")
+      }
     }
   }
 
@@ -715,96 +838,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
         p.filter(col("value") > 30), su, p("user_id"), su("s_user"),
         p("ts"), su("s_ts")).count()
       assert(joined.count() === expected && expected > 0)
-    }
-  }
-
-  test("cold-path exact-order postings release after the TRIGGERING " +
-      "query's own completion (r15: the != guard — a > guard never " +
-      "fired on the rewritten query, whose execution predates the " +
-      "cap job)") {
-    withExtSession { s =>
-      import s.implicits._
-      // fresh data values ⇒ fresh statsCache key ⇒ the COLD path runs
-      // (persist + release listener), even if earlier tests warmed
-      // the memo for their own corpora
-      val salt = System.nanoTime()
-      val docs = (1L to 24L).map(i => (i, s"release spec doc $i " +
-        s"salt $salt shared words about foxes and dogs and fences"))
-        .toDF("id", "text")
-      val a = docs.select(col("id").as("id_a"), col("text").as("text_a"))
-      val b = docs.select(col("id").as("id_b"), col("text").as("text_b"))
-      import graft.functions.VectorFunctions.text_jaccard
-      def q = a.join(b,
-          text_jaccard(col("text_a"), col("text_b"), 8) >= 0.6 &&
-            col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      s.conf.set("spark.graft.jaccardRewrite.enabled", "true")
-      s.conf.set("spark.graft.jaccardRewrite.estFactor", "1e18") // sparse
-      s.conf.set("spark.graft.jaccard.exactDfOrder", "on")
-      try {
-        q.collect() // the triggering query; its completion must release
-        // the listener bus is asynchronous — poll for the persisted
-        // ranked-postings blocks to drain back to the pre-query set
-        val deadline = System.currentTimeMillis + 30000
-        def leaked = s.sparkContext.getPersistentRDDs.keySet -- before
-        while (leaked.nonEmpty && System.currentTimeMillis < deadline)
-          Thread.sleep(100)
-        assert(leaked.isEmpty,
-          s"exact-order postings still persisted after the triggering " +
-            s"query completed: RDDs ${leaked.mkString(",")}")
-      } finally {
-        s.conf.unset("spark.graft.jaccardRewrite.enabled")
-        s.conf.unset("spark.graft.jaccardRewrite.estFactor")
-        s.conf.unset("spark.graft.jaccard.exactDfOrder")
-      }
-    }
-  }
-
-  test("release listener survives a stale end event from an execution " +
-      "OLDER than the cap job (r16: the r15 != guard fired on any such " +
-      "queued event and unpersisted the postings before the triggering " +
-      "query consumed them)") {
-    withExtSession { s =>
-      import s.implicits._
-      // the frame whose persist the listener protects
-      val posted = (1L to 8L).toDF("v")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      posted.count()
-      assert(posted.storageLevel.useMemory)
-      // id order mirrors the real race: the STALE execution's
-      // QueryExecution is constructed first (lowest id — in the real
-      // path it is a preceding bench query or this rule's own
-      // plan-time driver jobs), then the TRIGGERING query's (the
-      // rewrite runs inside its optimization), then the cap job's
-      val stale = (1L to 3L).toDF("a")
-      val trigger = (1L to 3L).toDF("b")
-      val cap = (1L to 3L).toDF("c")
-      cap.collect() // the cap job itself completes first, as in the rule
-      assert(stale.queryExecution.id < cap.queryExecution.id &&
-        trigger.queryExecution.id < cap.queryExecution.id)
-      RewriteJaccardThresholdJoin.unpersistAfterNextExecution(
-        s, posted, cap.queryExecution.id, Some(trigger.queryExecution.id))
-      // a stale (older-id, non-trigger) execution completes AFTER the
-      // listener registered — the exact dispatch the r15 guard lost to
-      stale.collect()
-      // the bus is async: give the stale event time to dispatch, then
-      // require the persist SURVIVED it
-      val staleDeadline = System.currentTimeMillis + 2000
-      while (posted.storageLevel.useMemory &&
-          System.currentTimeMillis < staleDeadline)
-        Thread.sleep(50)
-      assert(posted.storageLevel.useMemory,
-        "stale end event from an older execution released the persist " +
-          "before the triggering query ran")
-      // the triggering query's own completion is the release point
-      trigger.collect()
-      val deadline = System.currentTimeMillis + 30000
-      while (posted.storageLevel.useMemory &&
-          System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-      assert(!posted.storageLevel.useMemory,
-        "triggering query's completion did not release the persist")
     }
   }
 

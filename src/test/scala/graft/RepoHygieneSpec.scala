@@ -94,15 +94,11 @@ class RepoHygieneSpec extends AnyFunSuite {
       s"(extend UnaryEvalBridge or BinaryEvalBridge instead): $stray")
   }
 
-  /** The operators' one cache policy is `Iterate.cached`, which
-    * releases the cache when its scope exits, also on failure. The
-    * Jaccard join rewrite persists at plan time and a listener releases
-    * the frame after the query runs. */
-  test(".persist( under src/main/scala is Iterate.cached's or the " +
-      "Jaccard rewrite's") {
+  /** The one cache policy is `Iterate.cached`, which releases the
+    * cache when its scope exits, also on failure. */
+  test(".persist( under src/main/scala is Iterate.cached's") {
     val calls = owners("""\.persist\(""")
-    val allowed = Seq("Iterate.scala" -> "Iterate",
-      "GraftExtensions.scala" -> "RewriteJaccardThresholdJoin")
+    val allowed = Seq("Iterate.scala" -> "Iterate")
     assert(calls.sorted === allowed.sorted,
       "persist outside Iterate.cached (cache through it instead): " +
         calls.diff(allowed))

@@ -248,6 +248,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(warm <= 1, s"the second run compiled $warm classes (first: $cold)")
   }
 
+  test("the embedding stream run again compiles no generated class " +
+      "anew: its state encoder is built once") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // a state encoder derived per run numbers its List serializer's
+    // lambda variable afresh, and the state projection's Java with it
+    def compiles(sink: String): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.streaming.DocsStream.runEmbeddingDedupStream(
+        spark, TestSpark.sfDir, sink)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val runs = (1 to 3).map(i => compiles(s"spec_warm_emb_$i"))
+    assert(runs.last === 0, s"compiles per run: ${runs.mkString(", ")}")
+  }
+
   test("streaming decontamination equals the batch operator row-for-row") {
     import org.apache.spark.sql.functions.col
     val sink = graft.streaming.DocsStream.runDecontamStream(
