@@ -1,11 +1,11 @@
 package graft
 
-/** Dev tool: regenerate PLANS.md — formatted physical plans for the
-  * headline queries with scale commentary. Run:
+/** Dev tool: regenerate PLANS.md — formatted physical plans for
+  * selected catalog queries with scale commentary. Run:
   * `sbt "runMain graft.DumpPlans"`. */
 object DumpPlans {
 
-  private val entries: Seq[(String, String)] = Seq(
+  private[graft] val entries: Seq[(String, String)] = Seq(
     "agg_q1" ->
       """TPC-H Q1 shape. The shipdate predicate is in `PushedFilters`
         |(evaluated inside the parquet reader), ReadSchema carries only
@@ -576,7 +576,7 @@ object DumpPlans {
     val spark = Engine.session()
     val sb = new StringBuilder
     sb.append(
-      """# PLANS — physical plans of headline queries (sf0.001)
+      """# PLANS — physical plans of selected catalog queries (sf0.001)
         |
         |Regenerate with `sbt "runMain graft.DumpPlans"`. Each section:
         |why this is the plan we want at 100 TB, then the actual

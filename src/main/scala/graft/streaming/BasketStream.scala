@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -40,6 +41,12 @@ object BasketStream {
     StreamSource.table(spark, sfDir, "lineitem", schema)
   }
 
+  /** [[pairsStream]]'s state encoder, built once: a `spark.implicits`
+    * encoder for a collection state is converted anew on each run, and
+    * its state projection compiles anew on every warm run (see
+    * `DocsStream.bucketStateEncoder`). */
+  private lazy val seenStateEncoder = ExpressionEncoder[Set[Long]]()
+
   def pairsStream(spark: SparkSession, items: DataFrame)
       : Dataset[BasketUpdate] = {
     import spark.implicits._
@@ -61,7 +68,7 @@ object BasketStream {
           }
           state.update(seen)
           out.result().iterator
-      }
+      }(seenStateEncoder, implicitly[Encoder[BasketUpdate]])
   }
 
   /** Drive [[pairsStream]] to completion; returns the sink name. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -36,6 +37,14 @@ object DocsStream {
   case class BucketState(members: List[Member])
   case class FpDoc(doc_id: Long, fp: String)
   case class DecisionOut(doc_id: Long, keep: Boolean, dup_of: Option[Long])
+
+  /** [[minhashPairsStream]]'s state encoder, built once. The
+    * `spark.implicits` encoder is agnostic, and each run converted it
+    * to an expression encoder whose collection serializer numbered its
+    * lambda variable afresh; the state projection's Java then differed
+    * in that id, and compiled anew on every warm run. Every stateful
+    * stream whose state holds a collection builds its encoder once. */
+  private lazy val bucketStateEncoder = ExpressionEncoder[BucketState]()
 
   /** Streaming read of the documents table (file source). */
   def readDocsStream(spark: SparkSession, sfDir: String): DataFrame = {
@@ -114,7 +123,7 @@ object DocsStream {
           }
           state.update(BucketState(members))
           out.iterator
-      }
+      }(bucketStateEncoder, implicitly[Encoder[PairOut]])
   }
 
   /** Incremental EXACT dedup: the streaming twin of
@@ -188,6 +197,10 @@ object DocsStream {
   case class TokShard(shard: Int, tok: String)
   case class HHCand(shard: Int, tok: String, est: Long)
 
+  /** [[heavyHitterCandidatesStream]]'s state encoder, built once like
+    * [[bucketStateEncoder]]. */
+  private lazy val hhStateEncoder = ExpressionEncoder[Map[String, Long]]()
+
   /** Streaming heavy-hitter CANDIDATE tracking: per-shard Misra–Gries
     * summaries held as keyed streaming state. Tokens are sharded by
     * `xxhash64(tok) mod shards`, so every occurrence of a token lands
@@ -235,13 +248,13 @@ object DocsStream {
           }
           state.update(m.toMap)
           m.iterator.map { case (tok, est) => HHCand(shard, tok, est) }
-      }
+      }(hhStateEncoder, implicitly[Encoder[HHCand]])
   }
 
   /** Drive [[heavyHitterCandidatesStream]] synchronously to completion
     * over the parquet documents dir (memory sink); returns the sink
     * name. The caller runs the exact rescore over the closed epoch —
-    * see SparkEntry's stream_heavy_hitters. */
+    * see the stream_heavy_hitters catalog row. */
   def runHeavyHitterStream(spark: SparkSession, sfDir: String,
       sinkName: String = "docs_heavy_hitters",
       shards: Int = 8, capacity: Int = 64): String = {
@@ -350,13 +363,9 @@ object DocsStream {
   case class EmbBucketState(members: List[EmbMember])
   case class EmbPairOut(vec_id: Long, nn_id: Long, cosine: Double)
 
-  /** [[embeddingPairsStream]]'s state encoder, built once. The
-    * `spark.implicits` encoder is agnostic, and each run converted it
-    * to an expression encoder whose `List` serializer numbered its
-    * lambda variable afresh; the state projection's Java then differed
-    * in that id, and compiled anew on every warm run. */
-  private lazy val embStateEncoder = org.apache.spark.sql.catalyst.encoders
-    .ExpressionEncoder[EmbBucketState]()
+  /** [[embeddingPairsStream]]'s state encoder, built once like
+    * [[bucketStateEncoder]]. */
+  private lazy val embStateEncoder = ExpressionEncoder[EmbBucketState]()
 
   /** Streaming read of the embeddings table (file source). */
   def readEmbeddingsStream(spark: SparkSession, sfDir: String)
@@ -455,7 +464,7 @@ object DocsStream {
           }
           state.update(EmbBucketState(members))
           out.iterator
-      }(embStateEncoder, implicitly[org.apache.spark.sql.Encoder[EmbPairOut]])
+      }(embStateEncoder, implicitly[Encoder[EmbPairOut]])
   }
 
   /** Drive [[embeddingPairsStream]] synchronously to completion over

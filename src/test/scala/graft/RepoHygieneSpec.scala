@@ -73,9 +73,10 @@ class RepoHygieneSpec extends AnyFunSuite {
     """abstract|case)(?:\[\w+\])?\s+)*(?:class|trait|object)\s+(\w+)""").r
 
   /** (file, owning class) of each match of `pattern` in the sources
-    * under `src/main/scala`. */
-  private def owners(pattern: String): Seq[(String, String)] =
-    files("src/main/scala").filter(_.toString.endsWith(".scala"))
+    * under `dir`. */
+  private def owners(pattern: String, dir: String = "src/main/scala")
+      : Seq[(String, String)] =
+    files(dir).filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val src = Files.readString(p)
         val decls = Decl.findAllMatchIn(src).map(m => m.start -> m.group(1))
@@ -105,12 +106,18 @@ class RepoHygieneSpec extends AnyFunSuite {
   }
 
   /** One implementation per vector-pipeline step: the model-capturing
-    * queries record their oracles in one table, the models train on
-    * one deterministic sample, and the top-k paths rank through one
-    * window (plus the PQ paths' ADC prelim). */
+    * queries record their oracles through `Query.Capture`, the
+    * models train on one deterministic sample, and the top-k paths rank
+    * through one window (plus the PQ paths' ADC prelim). The queries
+    * live under `graft/catalog/`, with `SparkEntry` as their facade. */
   test("no AtomicReference model capture in SparkEntry") {
-    assert(owners("AtomicReference").filter(_._1 == "SparkEntry.scala")
-      .isEmpty, "capture models with SparkEntry.capture instead")
+    val catalog = "src/main/scala/graft/catalog"
+    assert(owners("""\bcaptured\(""", catalog).nonEmpty,
+      "the catalog scan found no model-capturing row")
+    val stray = owners("AtomicReference", catalog) ++
+      owners("AtomicReference").filter(_._1 == "SparkEntry.scala")
+    assert(stray.isEmpty, "capture models with Query.Capture instead: " +
+      stray)
   }
 
   test("orderBy(xxhash64( is Sampling.smallestByHash's alone") {

@@ -248,19 +248,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(warm <= 1, s"the second run compiled $warm classes (first: $cold)")
   }
 
-  test("the embedding stream run again compiles no generated class " +
-      "anew: its state encoder is built once") {
+  test("a stateful stream's third run compiles no class anew") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    // a state encoder derived per run numbers its List serializer's
-    // lambda variable afresh, and the state projection's Java with it
-    def compiles(sink: String): Long = {
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      graft.streaming.DocsStream.runEmbeddingDedupStream(
-        spark, TestSpark.sfDir, sink)
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    import graft.streaming.{BasketStream, DocsStream}
+    // a state encoder derived per run numbers its collection
+    // serializer's lambda variable afresh, and the state projection's
+    // Java with it
+    val runners = Seq[(String,
+        (org.apache.spark.sql.SparkSession, String, String) => String)](
+      "embedding" -> ((s, d, sink) =>
+        DocsStream.runEmbeddingDedupStream(s, d, sink)),
+      "minhash" -> ((s, d, sink) => DocsStream.runMinhashStream(s, d, sink)),
+      "heavy_hitters" -> ((s, d, sink) =>
+        DocsStream.runHeavyHitterStream(s, d, sink)),
+      "assoc" -> ((s, d, sink) => BasketStream.runPairsStream(s, d, sink)))
+    for ((name, run) <- runners) {
+      def compiles(sink: String): Long = {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        run(spark, TestSpark.sfDir, sink)
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      }
+      val runs = (1 to 3).map(i => compiles(s"spec_warm_${name}_$i"))
+      assert(runs.last === 0,
+        s"$name: compiles per run: ${runs.mkString(", ")}")
     }
-    val runs = (1 to 3).map(i => compiles(s"spec_warm_emb_$i"))
-    assert(runs.last === 0, s"compiles per run: ${runs.mkString(", ")}")
   }
 
   test("streaming decontamination equals the batch operator row-for-row") {
